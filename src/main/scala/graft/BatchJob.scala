@@ -2,12 +2,13 @@ package graft
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.BatchPipeline._
 import graft.ingest.Parsers.{CsvSpec, FwSpec}
 import graft.ingest.{BatchConfig, RecData}
+import graft.operators.RowBatches
 
 /** The reference's one public API, re-expressed:
   * `processFile(filePath, options, jobService, cb)`
@@ -129,9 +130,10 @@ object BatchJob {
     // The try opens IMMEDIATELY after the run-row insert: a missing input
     // file or an AnalysisException thrown while CONSTRUCTING the pipeline
     // (textSource/parse/route) must also finalize the run as FAILED, not
-    // leave it stuck at PROCESSING v1. The persisted frames are tracked in
-    // vars so the finally can unpersist whichever ones exist.
-    var routed: DataFrame = null
+    // leave it stuck at PROCESSING v1. The stored routed records and the
+    // REST results are tracked in vars so the finally can release whichever
+    // exist.
+    var stored: RowBatches = null
     var restResults: Option[DataFrame] = None
     try {
       val lines = textSource(spark, filePath)
@@ -140,13 +142,15 @@ object BatchJob {
         case Parser.Fw(spec)  => parseFw(lines, spec)
         case Parser.Custom(names, types, fn) => parseCustom(lines, names, types)(fn)
       }
-      routed = route(parsed)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Every sink reads the routed records, so they are parsed once and
+      // kept as packed UnsafeRow batches, filled by the first write.
+      stored = RowBatches.persist(route(parsed))
+      val routed = stored.frame
       // The REST channel (P11): POST each SUCCESS-parsed record's JSON; its
       // per-record HTTP outcome then drives the status rows and run counters,
       // exactly like the reference counts `statusCode === 200`
       // (lib/batchProcessing.js:679,700). Persisted because both the status
-      // sink and the counters consume it — recomputing would re-send.
+      // sink and the HTTP-200 count read it — recomputing would re-send.
       restResults = sinks.rest.map { ro =>
         val dataCols = parsed.columns
           .filterNot(Set("_file", "_rec_id", "_error").contains).map(col)
@@ -167,21 +171,30 @@ object BatchJob {
           .withColumn("run_id", lit(runId))
           .write.mode("append").jdbc(j.url, j.table, props)
       }
-      sinks.statusPath.foreach { p =>
-        statusWithHttp(batchStatus(routed, config.batchResultLogItems), restResults)
-          .withColumn("run_id", lit(runId)).write.mode("append").parquet(p)
+      // The run counters ride the status write: an Observation on the
+      // routed records, taken before batchStatus drops the IGNORED ones. A
+      // run without a status sink counts them in a noop write instead.
+      val outcome = Observation()
+      val counted = routed.observe(outcome,
+        count(when(col("statusText") === "SUCCESS", 1)).as("SUCCESS"),
+        count(when(col("statusText") === "FAILED", 1)).as("FAILED"),
+        count(when(col("statusText") === "IGNORED", 1)).as("IGNORED"))
+      sinks.statusPath match {
+        case Some(p) =>
+          statusWithHttp(batchStatus(counted, config.batchResultLogItems), restResults)
+            .withColumn("run_id", lit(runId)).write.mode("append").parquet(p)
+        case None => counted.write.format("noop").mode("overwrite").save()
       }
-      val counts = routed.groupBy(col("statusText")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val parsedOk = counts.getOrElse("SUCCESS", 0L)
+      val counts = outcome.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+      val parsedOk = counts("SUCCESS")
       val httpOk = restResults.map(_.filter(col("status_code") === 200).count())
       val end = System.currentTimeMillis()
       val summary = RunSummary(
         runId, filePath,
-        totalRecordCount = parsedOk + counts.getOrElse("FAILED", 0L),
+        totalRecordCount = parsedOk + counts("FAILED"),
         successCount = httpOk.getOrElse(parsedOk),
-        failureCount = counts.getOrElse("FAILED", 0L) + httpOk.map(parsedOk - _).getOrElse(0L),
-        ignoredCount = counts.getOrElse("IGNORED", 0L),
+        failureCount = counts("FAILED") + httpOk.map(parsedOk - _).getOrElse(0L),
+        ignoredCount = counts("IGNORED"),
         startTimeMillis = start, endTimeMillis = end, durationMillis = end - start)
       runStore.foreach { st =>
         st.update(runId, runVersion.get) { row =>
@@ -213,9 +226,9 @@ object BatchJob {
         }
         throw e
     } finally {
-      // guard: a construction-phase failure may leave either frame unbuilt
+      // guard: a construction-phase failure may leave either one unbuilt
       restResults.foreach(_.unpersist())
-      if (routed != null) routed.unpersist()
+      if (stored != null) stored.release()
     }
   }
 }

@@ -71,6 +71,14 @@ object Bench {
       .foreach(_.unpersist(blocking = true))
   }
 
+  /** Write `line` plus a newline to `file`. `Files.write` throws on a failed
+    * write (a `PrintWriter` swallows it), so a stale file from an earlier
+    * run is never left looking current.
+    */
+  private def writeLine(file: String, line: String): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(file),
+      (line + System.lineSeparator).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // session shape (master, shuffle partitions, confs, top-k rewrite) is
@@ -206,8 +214,7 @@ object Bench {
       .mkString("{", ",", "}")
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","basis":"noop-materialize","queries":$detailQs,"rows":$detailRows,"runs":$detailRuns,"row_drift":$drifted,"harness_drift":$driftJson,"sf":"$sfDir"}"""
-    val out = new java.io.PrintWriter("BENCH_DETAIL.json")
-    try out.println(detail) finally out.close()
+    writeLine("BENCH_DETAIL.json", detail)
     val sfName = new java.io.File(sfDir).getName // basename: every char counts
     // 176+ queries no longer fit one ~1800-char line even at 1-decimal
     // precision (round 7 died on exactly this require and lost its bench
@@ -264,8 +271,7 @@ object Bench {
     // time" trails it). The file is the recovery path that cannot be
     // damaged by any log framing. Additions only — what is timed and what
     // is printed are unchanged.
-    val lineOut = new java.io.PrintWriter("BENCH_LINE.json")
-    try lineOut.println(line) finally lineOut.close()
+    writeLine("BENCH_LINE.json", line)
     println(line)
     spark.stop()
   }

@@ -152,8 +152,9 @@ object BatchPipeline {
         .when(col("_error").isNotNull, lit("FAILED"))
         .otherwise(lit("SUCCESS")))
 
-  /** Split the routed frame. Spark computes these as three filters over one
-    * cached/scanned source — no shuffle.
+  /** Split the routed frame: three filters over one source (in
+    * [[graft.BatchJob.processFile]], the routed records stored as packed
+    * row batches) — no shuffle.
     */
   def successes(routed: DataFrame): DataFrame = routed.filter(col("statusText") === "SUCCESS")
   def failures(routed: DataFrame): DataFrame  = routed.filter(col("statusText") === "FAILED")

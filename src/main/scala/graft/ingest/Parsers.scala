@@ -54,42 +54,51 @@ object Parsers {
     else if (s == "Infinity" || s == "+Infinity") Some(Double.PositiveInfinity)
     else if (s == "-Infinity") Some(Double.NegativeInfinity)
     else {
-      def radix(prefix: String, r: Int): Option[Double] =
-        if (s.length > prefix.length && s.toLowerCase.startsWith(prefix))
-          try Some(java.lang.Long.parseLong(s.substring(prefix.length), r).toDouble)
+      val lower = s.toLowerCase
+      val radix =
+        if (lower.startsWith("0x")) 16 else if (lower.startsWith("0b")) 2
+        else if (lower.startsWith("0o")) 8 else 0
+      // A failed radix literal is NaN in JS — it must not fall through to
+      // parseDouble, which would accept hex-float forms like "0x1.8p1".
+      if (radix != 0) {
+        if (s.length > 2)
+          try Some(java.lang.Long.parseLong(s.substring(2), radix).toDouble)
           catch { case _: NumberFormatException => None }
         else None
-      radix("0x", 16).orElse(radix("0b", 2)).orElse(radix("0o", 8)).orElse {
-        val lower = s.toLowerCase
-        // A failed radix literal is NaN in JS — it must not fall through to
-        // parseDouble, which would accept hex-float forms like "0x1.8p1".
-        if (lower.startsWith("0x") || lower.startsWith("0b") || lower.startsWith("0o")) None
-        else {
-          // JS rejects trailing garbage ("12abc"), leading/trailing signs are
-          // fine; Java's Double.parseDouble accepts a trailing d/f suffix that
-          // JS does not, so reject alpha suffixes explicitly.
-          val last = s.charAt(s.length - 1)
-          if (last == 'd' || last == 'D' || last == 'f' || last == 'F') None
-          else
-            try {
-              val d = java.lang.Double.parseDouble(s)
-              // parseDouble accepts the literal "NaN"/"+NaN"/"-NaN"; JS's
-              // isNaN check makes those a 'did not match type number' error.
-              if (d.isNaN) None else Some(d)
-            } catch { case _: NumberFormatException => None }
-        }
+      } else {
+        // JS rejects trailing garbage ("12abc"), leading/trailing signs are
+        // fine; Java's Double.parseDouble accepts a trailing d/f suffix that
+        // JS does not, so reject alpha suffixes explicitly.
+        val last = s.charAt(s.length - 1)
+        if (last == 'd' || last == 'D' || last == 'f' || last == 'F') None
+        else
+          try {
+            val d = java.lang.Double.parseDouble(s)
+            // parseDouble accepts the literal "NaN"/"+NaN"/"-NaN"; JS's
+            // isNaN check makes those a 'did not match type number' error.
+            if (d.isNaN) None else Some(d)
+          } catch { case _: NumberFormatException => None }
       }
     }
   }
+
+  /** A declared type as [[coerce]] matches it: lower-cased and trimmed.
+    * Specs resolve theirs once, not per field of every record.
+    */
+  private def resolveType(declaredType: String): String = declaredType.toLowerCase.trim
 
   /** Coerce one raw field per the declared type. Left = error message.
     * `rawForMsg` is the ORIGINAL (untrimmed) token: the reference reports
     * `fValue1`, the pre-trim value, in type errors (`lib/parsers.js:116,127`).
     */
   def coerce(raw: String, declaredType: String, errPrefix: String, posInfo: String = "",
-             rawForMsg: String = null): Either[String, FieldValue] = {
+             rawForMsg: String = null): Either[String, FieldValue] =
+    coerceResolved(raw, resolveType(declaredType), errPrefix, posInfo, rawForMsg)
+
+  private def coerceResolved(raw: String, resolvedType: String, errPrefix: String, posInfo: String,
+                             rawForMsg: String): Either[String, FieldValue] = {
     val msgVal = if (rawForMsg == null) raw else rawForMsg
-    declaredType.toLowerCase.trim match {
+    resolvedType match {
       case "string" => Right(SVal(raw))
       case "number" =>
         jsNumber(raw).map(NVal(_): FieldValue).toRight(
@@ -125,6 +134,8 @@ object Parsers {
         s"'${headers.mkString(",")}'. (options.csvHeaders - can be comma-separated " +
         "string, string-array or object)")
     types.foreach(t => require(t.nonEmpty, "parseCSV: empty csvHeaderDataTypes"))
+    private[ingest] val resolvedTypes: Vector[String] =
+      types.fold(Vector.fill(headers.length)("string"))(_.map(resolveType))
   }
 
   /** Quote-aware tokenizer for the comma-delimiter path. Mirrors
@@ -226,8 +237,7 @@ object Parsers {
         while (i < nH) {
           if (error.isEmpty && i < tokens.length) {
             val raw = tokens(i).trim // lib/parsers.js:97
-            val typ = spec.types.map(_(i)).getOrElse("string")
-            coerce(raw, typ, "parseCSV", rawForMsg = tokens(i)) match {
+            coerceResolved(raw, spec.resolvedTypes(i), "parseCSV", "", tokens(i)) match {
               case Right(v)  => out += Some(v)
               case Left(err) => error = Some(err); out += None
             }
@@ -249,6 +259,8 @@ object Parsers {
     require(fieldType != null && fieldType.nonEmpty, s"parseFW: Header type is missing")
     require(startPosition >= 1, s"parseFW: Header startPosition is missing")
     require(endPosition >= startPosition, s"parseFW: Header endPosition is missing")
+    private[ingest] val resolvedType: String = resolveType(fieldType)
+    private[ingest] val posInfo: String = s" at position $startPosition,$endPosition"
   }
 
   final case class FwSpec(fields: Vector[FwField]) {
@@ -273,7 +285,7 @@ object Parsers {
           val fieldStr = rec.substring(f.startPosition - 1, f.endPosition)
           // FW strings are NOT trimmed (lib/parsers.js:250); number/boolean
           // coercion trims internally exactly like JS Number()/toLowerCase.
-          coerce(fieldStr, f.fieldType, "parseFW", s" at position ${f.startPosition},${f.endPosition}") match {
+          coerceResolved(fieldStr, f.resolvedType, "parseFW", f.posInfo, null) match {
             case Right(v)  => out += Some(v)
             case Left(err) => error = Some(err); out += None
           }

@@ -21,4 +21,13 @@ object GraftPlanBridge {
   def expressionOf(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     ExpressionUtils.expression(c)
+
+  /** A DataFrame over an RDD of rows already in Catalyst's internal form
+    * (the `private[sql]` `internalCreateDataFrame`). No logic.
+    */
+  def internalCreateDataFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.functions._
 
@@ -122,4 +123,65 @@ class BatchJobSpec extends SparkTestBase {
         BatchJob.Parser.Csv(CsvSpec(Vector.empty)))
     }
   }
+
+  /** What a call could leave behind: persisted RDDs and cached plans. The
+    * cache manager's entry count is `private[sql]` in Scala but a public
+    * method in bytecode, so it is read reflectively.
+    */
+  private def leftovers(): (Set[Int], Int) = {
+    val cm = spark.sharedState.cacheManager
+    (spark.sparkContext.getPersistentRDDs.keySet.toSet,
+      cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int])
+  }
+
+  test("processFile: parses each line once and leaves nothing persisted") {
+    val dir = Files.createTempDirectory("graft-job-once")
+    val in = dir.resolve("batch.txt")
+    Files.write(in, (1 to 200).map(i => if (i % 7 == 0) "skip" else s"v$i").mkString("\n").getBytes)
+    // counted in a static, driver-side object: local mode runs the tasks in
+    // this JVM, and a counter captured by the closure would be a copy
+    val parser = BatchJob.Parser.Custom(Seq("v"), Seq("string"), rd => {
+      BatchJobSpec.parseCalls.incrementAndGet()
+      if (rd.rec == "skip") (None, None) else (Some(Seq(rd.rec)), None)
+    })
+    val before = leftovers()
+    BatchJobSpec.parseCalls.set(0)
+    // target, status and run sinks: every sink reads the routed records
+    val summary = BatchJob.processFile(spark, in.toString, parser, BatchJob.Sinks(
+      targetPath = Some(dir.resolve("target").toString),
+      statusPath = Some(dir.resolve("status").toString),
+      runPath = Some(dir.resolve("runs").toString)))
+    assert(BatchJobSpec.parseCalls.get == 200, "the custom parser must run once per input line")
+    assert(summary.totalRecordCount == 172 && summary.ignoredCount == 28)
+    assert(leftovers() == before)
+    // no status sink: the counters come from a noop write, still one parse
+    BatchJobSpec.parseCalls.set(0)
+    val s2 = BatchJob.processFile(spark, in.toString, parser,
+      BatchJob.Sinks(targetPath = Some(dir.resolve("target").toString)))
+    assert(BatchJobSpec.parseCalls.get == 200)
+    assert(s2.successCount == 172 && s2.ignoredCount == 28)
+    assert(leftovers() == before)
+  }
+
+  test("processFile: a failed target write leaves nothing persisted and marks the run FAILED") {
+    val dir = Files.createTempDirectory("graft-job-fail")
+    val in = dir.resolve("batch.csv")
+    Files.write(in, (1 to 30).map(i => s"k$i,$i").mkString("\n").getBytes)
+    val notADir = Files.write(dir.resolve("target"), "a regular file".getBytes)
+    val runs = dir.resolve("runs").toString
+    val before = leftovers()
+    intercept[Exception] {
+      BatchJob.processFile(spark, in.toString,
+        BatchJob.Parser.Csv(CsvSpec(Vector("key", "n"), Some(Vector("string", "number")))),
+        BatchJob.Sinks(targetPath = Some(notADir.toString),
+          statusPath = Some(dir.resolve("status").toString), runPath = Some(runs)))
+    }
+    assert(leftovers() == before)
+    val run = new graft.ingest.BatchRunStore(spark, runs).currentAll().collect()
+    assert(run.length == 1 && run.head.status == "FAILED" && run.head.version == 2L)
+  }
+}
+
+object BatchJobSpec {
+  val parseCalls = new AtomicLong()
 }

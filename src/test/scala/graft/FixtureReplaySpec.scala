@@ -5,17 +5,23 @@ import org.apache.spark.sql.functions._
 import graft.ingest.BatchPipeline._
 import graft.ingest.Parsers._
 
-/** Replays the reference's own test fixtures (read-only at /root/reference)
-  * through the fidelity pipeline — the routing/count semantics its E2E suite
-  * asserts (`test/test.js:255-262,415-431,936-953`), checked on the real
-  * bytes.
+/** Replays the reference's three 100-line test fixtures through the
+  * fidelity pipeline — the routing/count semantics its E2E suite asserts
+  * (`test/test.js:255-262,415-431,936-953`).
+  *
+  * The fixtures live in `src/test/resources/reference/`, rebuilt from
+  * FIXTURES.md §1. `batch-100.csv` (`B0001,"C00,0001"` … `B0100,"C00,0100"`)
+  * and `fwbatch-100.fwv` (`B0001C00,0001` …) are fully pinned there, so
+  * their bytes are the reference's. `batch-100.txt` is NOT a copy of the
+  * reference's file: FIXTURES.md pins only its shape (100 lines of 79
+  * chars, `<key:39> <value:39>`, line 1 = `1` and 38 zeros, twice), and
+  * the committed file is rebuilt from that shape — line n holds `n`
+  * right-padded with zeros to 39 digits, twice.
   */
 class FixtureReplaySpec extends SparkTestBase {
 
-  private val ref = "/root/reference/test"
-
   test("batch-100.csv: quote-aware CSV with embedded commas, 100 SUCCESS") {
-    val ds = textSource(spark, s"$ref/batch-100.csv")
+    val ds = textSource(spark, referenceFixture("batch-100.csv"))
     val spec = CsvSpec(headers = Vector("key", "value")) // all-string default
     val routed = route(parseCsv(ds, spec))
     assert(routed.count() == 100)
@@ -26,7 +32,7 @@ class FixtureReplaySpec extends SparkTestBase {
   }
 
   test("fwbatch-100.fwv: fixed-width positions 1-5/6-13, 100 SUCCESS") {
-    val ds = textSource(spark, s"$ref/fwbatch-100.fwv")
+    val ds = textSource(spark, referenceFixture("fwbatch-100.fwv"))
     val spec = FwSpec(Vector(
       FwField("key", "string", 1, 5),
       FwField("value", "string", 6, 13)))
@@ -38,7 +44,7 @@ class FixtureReplaySpec extends SparkTestBase {
   }
 
   test("batch-100.txt: 79-char lines as FW number fields (test/test.js:936-953)") {
-    val ds = textSource(spark, s"$ref/batch-100.txt")
+    val ds = textSource(spark, referenceFixture("batch-100.txt"))
     val spec = FwSpec(Vector(
       FwField("key", "number", 1, 39),
       FwField("value", "number", 41, 79)))
@@ -52,7 +58,7 @@ class FixtureReplaySpec extends SparkTestBase {
   }
 
   test("batch-100.csv through the full runCsvJob slice reproduces the summary shape") {
-    val ds = textSource(spark, s"$ref/batch-100.csv")
+    val ds = textSource(spark, referenceFixture("batch-100.csv"))
     val spec = CsvSpec(headers = Vector("key", "value"))
     val (_, status, summary) = runCsvJob(spark, ds, spec)
     val s = summary.collect().head

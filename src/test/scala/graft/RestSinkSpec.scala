@@ -193,7 +193,7 @@ class RestSinkSpec extends SparkTestBase {
     withServer(body => "\"key\":\"B\\d*[02468]\"".r.findFirstIn(body).isDefined) { (base, state) =>
       val out = java.nio.file.Files.createTempDirectory("rest-e2e").toString
       val summary = BatchJob.processFile(
-        spark, "/root/reference/test/batch-100.csv",
+        spark, referenceFixture("batch-100.csv"),
         BatchJob.Parser.Csv(CsvSpec(headers = Vector("key", "value"))),
         BatchJob.Sinks(
           statusPath = Some(s"$out/status"),

@@ -22,4 +22,11 @@ object SparkTestBase {
 trait SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
   def sfDir: String = SparkTestBase.sfDir
+
+  /** Path of one of the reference's 100-line test fixtures, committed under
+    * `src/test/resources/reference/` (see FixtureReplaySpec for how each
+    * was rebuilt).
+    */
+  def referenceFixture(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/reference/$name").toURI).toString
 }

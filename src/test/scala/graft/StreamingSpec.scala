@@ -291,7 +291,7 @@ class StreamingSpec extends SparkTestBase {
       val tmp = Files.createTempDirectory("graft-stream-job")
       val inDir = Files.createDirectory(tmp.resolve("in"))
       val all = Files.readAllLines(
-        java.nio.file.Paths.get("/root/reference/test/batch-100.csv"))
+        java.nio.file.Paths.get(referenceFixture("batch-100.csv")))
       Files.write(inDir.resolve("part1.csv"), all.subList(0, 60))
       val opts = RestOptions(appBaseUrl = Some(base), modelApi = Some("/api/TestData"),
         method = Some("POST"), minTimeMillis = 0, maxConcurrent = 78)
@@ -313,7 +313,7 @@ class StreamingSpec extends SparkTestBase {
       // the batch side over the same fixture + same failure mix is the oracle
       withStubServer(fail) { base2 =>
         val summary = BatchJob.processFile(
-          spark, "/root/reference/test/batch-100.csv",
+          spark, referenceFixture("batch-100.csv"),
           BatchJob.Parser.Csv(spec),
           BatchJob.Sinks(rest = Some(RestOptions(appBaseUrl = Some(base2),
             modelApi = Some("/api/TestData"), method = Some("POST"),
@@ -355,7 +355,7 @@ class StreamingSpec extends SparkTestBase {
       val tmp = Files.createTempDirectory("graft-stream-replay")
       val inDir = Files.createDirectory(tmp.resolve("in"))
       val all = Files.readAllLines(
-        java.nio.file.Paths.get("/root/reference/test/batch-100.csv"))
+        java.nio.file.Paths.get(referenceFixture("batch-100.csv")))
       Files.write(inDir.resolve("part1.csv"), all.subList(0, 40))
       val opts = RestOptions(appBaseUrl = Some(base), modelApi = Some("/api/TestData"),
         method = Some("POST"), minTimeMillis = 0, maxConcurrent = 80)
