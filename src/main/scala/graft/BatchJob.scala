@@ -2,6 +2,8 @@ package graft
 
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -213,8 +215,8 @@ object BatchJob {
       // PUT always fires and carries the error text
       // (lib/batchProcessing.js:548). Mirror that: mark FAILED with the
       // error before rethrowing, so a crashed job never leaves the run
-      // stuck at PROCESSING v1. The status write itself is best-effort —
-      // the original failure is what propagates.
+      // stuck at PROCESSING v1. The original failure is what propagates; a
+      // failed FAILED-row write rides along on it as a suppressed exception.
       case e: Throwable =>
         val end = System.currentTimeMillis()
         runStore.foreach { st =>
@@ -222,7 +224,7 @@ object BatchJob {
             row.copy(status = "FAILED",
               error = Some(Option(e.getMessage).getOrElse(e.getClass.getName)),
               endTimeMillis = end, durationMillis = end - start)
-          } catch { case _: Throwable => () }
+          } catch { case NonFatal(w) => e.addSuppressed(w) }
         }
         throw e
     } finally {

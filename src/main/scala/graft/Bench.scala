@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Throughput harness (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query MEDIAN-OF-3
   * seconds. Queries run in sorted name order after a session warmup, so
@@ -154,7 +156,7 @@ object Bench {
         coldSweep(spark)
         val t0 = System.nanoTime()
         val rows = try materialize(fn(spark, sfDir)) catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             // attribute the failure (r11's tail had an unattributable stack
             // trace): name + exception to stderr, -1 sentinel in the rows map
             System.err.println(

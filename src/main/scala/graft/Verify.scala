@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -56,7 +58,7 @@ object Verify {
     // and Bench times operators rather than writes.
     graft.queries.Dedup.materializers.foreach { m =>
       try m(spark, sfDir)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] materializer failed: ${e.getMessage}")
       }
     }
@@ -69,7 +71,7 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         Some(name -> spark.read.parquet(s"$outDir/$name").count())
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         None
       }

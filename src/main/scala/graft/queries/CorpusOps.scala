@@ -486,12 +486,17 @@ object CorpusOps {
     * store manifest's recorded corpus LISTING FINGERPRINT compared to the
     * corpus's current one ([[graft.table.StoreManifest]]) — pure LIST
     * metadata, valid on object storage where mtimes carry no ordering
-    * contract; a store without a manifest is never trusted.
+    * contract; a store without a manifest is never trusted. `maxscore/`
+    * is additionally served only while the manifest stamps it at least as
+    * new as `postings/`: impacts computed before a later append are not
+    * valid upper bounds, so every reader falls back to its exact path.
     */
   private def lexStored(spark: SparkSession, dir: String, part: String): Option[DataFrame] = {
     val store = lexStorePathFor(dir)
     val path = s"$store/$part"
     if (lexStoreEnabled && new java.io.File(s"$path/_SUCCESS").exists() &&
+      (part != "maxscore" ||
+        graft.table.StoreManifest.partFresh(store, "maxscore", "postings")) &&
       graft.table.StoreManifest.corpusMatches(store,
         graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet")))
       Some(spark.read.parquet(path))

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 import graft.Tables
 
 /** Near-duplicate detection for training-data curation, built to the scale
@@ -154,7 +156,7 @@ object Dedup {
   private final class FrameCache[K](stale: K => Boolean) {
     private val m = new java.util.LinkedHashMap[K, DataFrame]()
     private def drop(df: DataFrame): Unit =
-      try df.unpersist(blocking = true) catch { case _: Throwable => () }
+      try df.unpersist(blocking = true) catch { case NonFatal(_) => () }
     def getOrBuild(k: K)(build: => DataFrame): DataFrame = synchronized {
       val it = m.entrySet().iterator()
       while (it.hasNext) {

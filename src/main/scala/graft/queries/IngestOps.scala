@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ingest.BatchPipeline
 import graft.ingest.Parsers._
+import graft.sources.DeltaLog
 
 /** The reference's ingestion semantics (SURVEY.md §2a P1-P14) exposed as
   * oracle-checkable queries: re-synthesize text lines from a parquet table,
@@ -965,16 +966,17 @@ object IngestOps {
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   /** q192 — TRANSACTIONAL VERSIONED TABLE with TIME TRAVEL: the q134 CDC
-    * merge, upgraded from a stateless transform to a COMMITTED table
-    * ([[graft.table.VersionedTable]]): the base snapshot commits as
-    * version 1, then three deterministic change batches merge as versions
-    * 2–4, each a copy-on-write rewrite of only the key buckets the batch
-    * touches, published by an atomic put-if-absent manifest (stale
-    * writers are rejected — VersionedTableSpec proves the two-writer
-    * race). The query then reads the table PINNED AT VERSION 3 — not
-    * latest — so the returned rows must equal base + exactly the first
-    * TWO change batches: the v4 batch is committed and visible to
-    * `readLatest`, and the oracle's reconstruction (base + b1 + b2 with
+    * merge, upgraded from a stateless transform to a COMMITTED Delta table
+    * ([[graft.sources.DeltaLog]]): a schema-only create commit is
+    * version 0, the base snapshot commits as version 1, then three
+    * deterministic change batches merge as versions 2–4 through the
+    * op-aware [[graft.sources.DeltaLog.mergeInto]] — a copy-on-write
+    * rewrite of only the files holding a batch key — each published by an
+    * atomic put-if-absent commit (stale writers are rejected —
+    * DeltaTableSpec proves the two-writer race). The query then reads the
+    * table PINNED AT VERSION 3 — not latest — so the returned rows must
+    * equal base + exactly the first TWO change batches: the v4 batch is
+    * committed and visible to a latest read, and the oracle's reconstruction (base + b1 + b2 with
     * delete-wins/last-writer-wins composition) hash-matches only if time
     * travel returns the historical snapshot bit-for-bit and leaks nothing
     * newer.
@@ -984,31 +986,42 @@ object IngestOps {
     * v3 = delete doc_id%9=0, upsert text+" v3" where doc_id%5=0;
     * v4 = upsert text+" v4" where doc_id%6=0 (must NOT appear).
     *
-    * Scale: manifests are version-sized text; each merge shuffles only
-    * changes + touched buckets (1% of keys touched ⇒ ~1% rewritten, the
-    * rest carries over by reference); time travel is manifest replay plus
-    * a pruned parquet read — none of it is table-sized driver work.
+    * Scale: the log is version-sized text; each merge scans the target's
+    * keys once and rewrites only the files a batch key hits (1% of keys
+    * touched in a clustered table ⇒ ~1% rewritten, the rest carries over
+    * by reference); time travel is log replay plus a parquet read — none
+    * of it is table-sized driver work.
     */
-  /** The q192/q195/q196 fixture: ONE versioned table per (JVM, sf dir) —
-    * base snapshot at v1, the three deterministic change batches at v2–v4.
-    * Built on first use (stale on-disk copies from earlier JVMs are
-    * discarded); safe to share because every consumer reads VERSION-PINNED
-    * state, which later commits cannot disturb — that immutability is the
-    * time-travel contract itself.
+  /** The q192/q195/q196 fixture: ONE Delta table per (JVM, sf dir) —
+    * schema at v0, base snapshot at v1, the three deterministic change
+    * batches at v2–v4. Built on first use (stale on-disk copies from
+    * earlier JVMs are discarded); safe to share because every consumer
+    * reads VERSION-PINNED state, which later commits cannot disturb —
+    * that immutability is the time-travel contract itself. Returns the
+    * table root.
     */
-  private val vtMemo =
-    scala.collection.concurrent.TrieMap.empty[String, graft.table.VersionedTable]
+  private val tableMemo = scala.collection.concurrent.TrieMap.empty[String, String]
+
+  /** A fresh table root for fixture `tag`: the base directory wiped, the
+    * table created empty with `schema` at v0.
+    */
+  private def freshTable(tag: String, dir: String,
+      schema: org.apache.spark.sql.types.StructType): String = {
+    val base = graft.Tables.fixtureRoot(tag, dir)
+    val baseDir = new java.io.File(base)
+    if (baseDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
+    val root = s"$base/tbl"
+    DeltaLog.create(root, schema)
+    root
+  }
 
   private def versionedDocsTable(spark: SparkSession, dir: String,
-      tag: String = "q192"): graft.table.VersionedTable =
-    vtMemo.getOrElseUpdate(s"$tag:$dir", {
-      val base = graft.Tables.fixtureRoot(tag, dir)
-      val baseDir = new java.io.File(base)
-      if (baseDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
+      tag: String = "q192"): String =
+    tableMemo.getOrElseUpdate(s"$tag:$dir", {
       val d = Tables(spark, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
-      val t = new graft.table.VersionedTable(spark, s"$base/tbl", "doc_id")
-      val v1 = t.init(d.filter(pmod(col("doc_id"), lit(3)) =!= 0))
+      val t = freshTable(tag, dir, d.schema)
+      DeltaLog.commitAppend(t, d.filter(pmod(col("doc_id"), lit(3)) =!= 0))
       def batch(delMod: Int, upMod: Int, suffix: String) = d
         .filter(pmod(col("doc_id"), lit(upMod)) === 0 ||
           pmod(col("doc_id"), lit(delMod)) === 0)
@@ -1016,11 +1029,11 @@ object IngestOps {
           when(pmod(col("doc_id"), lit(delMod)) === 0, lit("delete"))
             .otherwise(lit("upsert")).as("op"),
           concat(col("text"), lit(suffix)).as("text"), col("lang"))
-      val v2 = t.merge(batch(7, 4, " v2"), v1)
-      val v3 = t.merge(batch(9, 5, " v3"), v2)
-      t.merge(d.filter(pmod(col("doc_id"), lit(6)) === 0)
-        .select(col("doc_id"), lit("upsert").as("op"),
-          concat(col("text"), lit(" v4")).as("text"), col("lang")), v3)
+      Seq(batch(7, 4, " v2"), batch(9, 5, " v3"),
+        d.filter(pmod(col("doc_id"), lit(6)) === 0)
+          .select(col("doc_id"), lit("upsert").as("op"),
+            concat(col("text"), lit(" v4")).as("text"), col("lang")))
+        .foreach(b => DeltaLog.mergeInto(spark, t, b, Seq("doc_id"), ops = true))
       t
     })
 
@@ -1089,10 +1102,10 @@ object IngestOps {
   def q192TimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val t = versionedDocsTable(spark, dir)
     val v3 = 3L
-    t.read(v3)
+    DeltaLog.read(spark, t, Some(v3))
       .select(col("doc_id"), md5(col("text")).as("h"), col("lang"),
         lit(v3).as("read_version"),
-        lit(t.currentVersion()).as("latest_version"))
+        lit(DeltaLog.currentVersion(t)).as("latest_version"))
       .orderBy(col("doc_id"))
   }
 
@@ -1120,24 +1133,23 @@ object IngestOps {
 
   /** q195 — INCREMENTAL CDC READ between versions (`table_changes`): the
     * consumer side of the q192 commit log. Over the same versioned table
-    * (v1 base, change batches at v2–v4), `changes(2, 4)` emits one typed
+    * (v1 base, change batches at v2–v4), `DeltaLog.diff(2, 4)` emits one typed
     * row per key whose value differs between snapshot 2 and snapshot 4 —
     * `insert` (absent → present), `update` (payload changed), `delete`
     * (present → absent), carrying the v4 payload (v2 payload for deletes).
     * This is how an incremental materialized view, a replica, or an audit
     * subscribes to a 100 TB table: read the delta, never rescan the table.
     *
-    * Scale: the diff is BUCKET-PRUNED from the manifests — a bucket no
-    * commit in (2, 4] touched carries the same immutable files in both
-    * snapshots and is never read, so cost tracks the touched data, and the
-    * one full-outer join runs co-partitioned on the key over the two
-    * pruned fragments. The oracle reconstructs both snapshots from the
-    * batch definitions and diffs them — a hash match proves the pruned
-    * engine diff equals the full logical diff.
+    * Scale: the diff is FILE-PRUNED from the log — a file live in both
+    * snapshots holds the same rows on both sides and is never read, so
+    * cost tracks the touched data, and the one full-outer join runs on
+    * the key over the two pruned fragments. The oracle reconstructs both
+    * snapshots from the batch definitions and diffs them — a hash match
+    * proves the pruned engine diff equals the full logical diff.
     */
   def q195TableChanges(spark: SparkSession, dir: String): DataFrame = {
     val t = versionedDocsTable(spark, dir)
-    t.changes(2L, 4L)
+    DeltaLog.diff(spark, t, Seq("doc_id"), 2L, 4L)
       .select(col("doc_id"), col("change_type"), md5(col("text")).as("h"),
         col("lang"), lit(2L).as("from_version"), lit(4L).as("to_version"))
       .orderBy(col("doc_id"))
@@ -1178,7 +1190,8 @@ object IngestOps {
 
   /** q236 — EXTERNAL-FORMAT INTEROP: keep a table ANOTHER engine owns in
     * sync through the CDC feed, the documented Delta/Iceberg migration
-    * path (VersionedTable Scaladoc, "Interop / migration"). The external
+    * path: bootstrap from one pinned snapshot, then apply the keyed diff
+    * as a standard MERGE. The external
     * side here is a plain parquet directory — deliberately the weakest
     * stand-in, since the contract asks nothing of the foreign format
     * beyond "read a snapshot, rewrite keyed rows":
@@ -1186,7 +1199,7 @@ object IngestOps {
     *   1. BOOTSTRAP: the mirror initializes from ONE pinned snapshot,
     *      `read(1)` (a fixture built once per JVM — the replica's initial
     *      load, not part of each sync);
-    *   2. SYNC: `changes(1, 4)` — bucket-pruned, changes-sized — applies
+    *   2. SYNC: `DeltaLog.diff(1, 4)` — file-pruned, changes-sized — applies
     *      as the standard MERGE: delete/update keys leave the mirror
     *      (one left-anti join), insert/update payloads enter (one union);
     *   3. AUDIT: a hard require() proves the synced mirror equals the
@@ -1206,7 +1219,7 @@ object IngestOps {
     val t = versionedDocsTable(spark, dir)
     val mirrorV1 = q236Bootstrap(spark, dir)
     // the sync: ONE changes-sized feed, read once, used by both arms
-    val feed = t.changes(1L, 4L)
+    val feed = DeltaLog.diff(spark, t, Seq("doc_id"), 1L, 4L)
       .select(col("doc_id"), col("change_type"), col("text"), col("lang"))
       .localCheckpoint()
     val synced = spark.read.parquet(mirrorV1)
@@ -1218,7 +1231,8 @@ object IngestOps {
     val out = spark.read.parquet(mirrorV4)
     // replica audit: mirror == native snapshot, proved engine-side before
     // the oracle ever sees the rows
-    val native = t.read(4L).select(col("doc_id"), col("text"), col("lang"))
+    val native = DeltaLog.read(spark, t, Some(4L))
+      .select(col("doc_id"), col("text"), col("lang"))
     require(out.count() == native.count() &&
       out.join(native, Seq("doc_id", "text", "lang"), "left_anti").isEmpty,
       "external mirror diverged from the native snapshot it replicates")
@@ -1236,56 +1250,53 @@ object IngestOps {
   private[graft] def q236Bootstrap(spark: SparkSession, dir: String): String =
     q236Memo.getOrElseUpdate(dir, {
       val p = s"${q236Root(dir)}/mirror_v1"
-      versionedDocsTable(spark, dir).read(1L)
+      DeltaLog.read(spark, versionedDocsTable(spark, dir), Some(1L))
         .write.mode("overwrite").parquet(p)
       p
     })
 
-  /** q239's append-fragmented table: a base snapshot plus four
-    * [[graft.table.VersionedTable.appendBatch]] commits, each touching
-    * every bucket — the shape a streaming sink leaves behind (one data
-    * directory per bucket PER BATCH, so each bucket ends at exactly five
-    * live dirs). Built once per (JVM, sf dir).
+  /** q239's append-fragmented table: a one-file base snapshot (v1) plus
+    * four one-file [[graft.sources.DeltaLog.commitAppendIdempotent]]
+    * micro-batch commits — the shape a streaming sink leaves behind (one
+    * small file per batch, so v5 is exactly five live files). Built once
+    * per (JVM, sf dir).
     */
-  private[graft] def q239Table(spark: SparkSession, dir: String): graft.table.VersionedTable =
-    vtMemo.getOrElseUpdate(s"q239:$dir", {
-      val base = graft.Tables.fixtureRoot("q239", dir)
-      val baseDir = new java.io.File(base)
-      if (baseDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
+  private[graft] def q239Table(spark: SparkSession, dir: String): String =
+    tableMemo.getOrElseUpdate(s"q239:$dir", {
       val d = Tables(spark, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
-      val t = new graft.table.VersionedTable(spark, s"$base/tbl", "doc_id")
-      t.init(d.filter(pmod(col("doc_id"), lit(5)) === 0))
+      val t = freshTable("q239", dir, d.schema)
+      DeltaLog.commitAppend(t, d.filter(pmod(col("doc_id"), lit(5)) === 0).coalesce(1))
       (1 to 4).foreach { k =>
-        t.appendBatch(d.filter(pmod(col("doc_id"), lit(5)) === k), k.toLong)
+        DeltaLog.commitAppendIdempotent(spark, t,
+          d.filter(pmod(col("doc_id"), lit(5)) === k).coalesce(1), "q239", k.toLong)
       }
       t
     })
 
   /** q239 — TABLE COMPACTION (the OPTIMIZE verb): a streaming sink leaves
-    * one bucket-pure data directory per bucket per micro-batch
-    * ([[q239Table]]: five live dirs in every bucket after init + four
-    * appends), and small files are the classic lakehouse decay —
-    * footer-read overhead per scan grows with the commit count, not the
-    * data. [[graft.table.VersionedTable.compact]] rewrites only the
-    * fragmented buckets into one directory each and publishes a
-    * content-identical commit; time travel and the CDC feed keep working
-    * across the boundary (files are reclaimed later by vacuum).
+    * one small file per micro-batch ([[q239Table]]: five live files after
+    * init + four appends), and small files are the classic lakehouse
+    * decay — footer-read overhead per scan grows with the commit count,
+    * not the data. [[graft.sources.DeltaLog.commitOptimize]] rewrites the
+    * live files into one and publishes a content-identical
+    * `dataChange=false` commit; time travel keeps working across the
+    * boundary (files are reclaimed later by vacuum).
     *
     * The audit columns are CONSTANTS THE ENGINE MUST EARN (the q214
     * pattern): `files_before_max` = 5 reads the PINNED pre-compaction
-    * version (stable across reruns — every run compacts a fresh hard-link
-    * clone of the frozen fragmented fixture, so each run pays the real
-    * rewrite and sees the same starting state), `files_after_max` = 1
-    * holds only if compaction actually merged every bucket, and the
+    * version's live file count (stable across reruns — every run compacts
+    * a fresh hard-link clone of the frozen fragmented fixture, so each run
+    * pays the real rewrite and sees the same starting state),
+    * `files_after_max` = 1 holds only if compaction actually merged the
+    * files, and the
     * per-lang content rows hash-match the raw documents only if the
     * rewrite moved bytes and nothing else.
     *
-    * Scale: compact reads and writes ONLY fragmented buckets (here all,
-    * by construction); at 100 TB a nightly compact after a day of
-    * micro-batches costs the day's buckets, not the table.
+    * Scale: OPTIMIZE reads one snapshot's live files once and writes them
+    * once; the log cost is one commit regardless of data size.
     */
-  /** Hard-link clone of a VersionedTable root: metadata-only work (one
+  /** Hard-link clone of a table root: metadata-only work (one
     * link syscall per file, never data bytes), falling back to a copy on
     * filesystems without hard links. Lets q239 compact a FRESH fragmented
     * table on every invocation — r11's ADVICE showed the first bench
@@ -1312,12 +1323,12 @@ object IngestOps {
     val scratch = new java.io.File(s"$base/run")
     if (scratch.exists()) org.apache.commons.io.FileUtils.deleteDirectory(scratch)
     linkTree(java.nio.file.Paths.get(s"$base/tbl"), scratch.toPath)
-    val t = new graft.table.VersionedTable(spark, scratch.getPath, "doc_id")
+    val t = scratch.getPath
     val preV = 5L // init + four appends — pinned, so reruns see the same value
-    val beforeMax = t.bucketFileCounts(preV).values.max
-    val v = t.compact(t.currentVersion())
-    val afterMax = t.bucketFileCounts(v).values.max
-    t.read(v)
+    val beforeMax = DeltaLog.snapshotFiles(spark, t, Some(preV)).size
+    val v = DeltaLog.commitOptimize(spark, t, targetFiles = 1)
+    val afterMax = DeltaLog.snapshotFiles(spark, t, Some(v)).size
+    DeltaLog.read(spark, t, Some(v))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(length(col("text"))).as("len_sum"))
@@ -1342,9 +1353,9 @@ object IngestOps {
     * EVENT-TIME-CONTIGUOUS range files and replayed as a file stream one
     * file per trigger; `foreachBatch` reduces each micro-batch to ONE
     * change row per user (latest event by (ts, event_id); an event_id ≡ 0
-    * mod 7 is a tombstone) and commits it through
-    * [[graft.table.VersionedTable.mergeBatch]] — the q134 CDC merge and
-    * the micro-batch id tag in ONE atomic commit — then DELIVERS THE SAME
+    * mod 7 is a tombstone) and commits it through the op-aware
+    * [[graft.sources.DeltaLog.mergeInto]] with a `txn` action — the q134
+    * CDC merge and the micro-batch id in ONE atomic commit — then DELIVERS THE SAME
     * BATCH AGAIN to prove redelivery is a detected no-op. Because the
     * carve is time-ordered and a ts tie never straddles a file boundary
     * (range predicates cut strictly between distinct ts values), the
@@ -1353,8 +1364,8 @@ object IngestOps {
     * events table: any double-merge, lost batch, or mis-ordered replay
     * breaks the hash.
     *
-    * Scale: each commit rewrites only the buckets its users touch
-    * (copy-on-write merge); idempotence costs a manifest-header scan. This
+    * Scale: each commit rewrites only the files holding its users (a
+    * copy-on-write merge); idempotence costs a log replay. This
     * is the CDC-consumer produce path: a bus feed of entity states lands
     * as a queryable, time-travelable keyed table with exactly-once
     * semantics end to end.
@@ -1393,12 +1404,11 @@ object IngestOps {
     val fix = q240Fixture(spark, dir)
     val base = ReplayFixtures.runRoot(dir, "q240")
     val ss = ReplayFixtures.replaySession(spark)
-    val t = new graft.table.VersionedTable(ss, s"$base/tbl", "user_id")
+    val t = s"$base/tbl"
     val src = ss.read.parquet(s"$fix/in")
-    // day-zero init: an empty typed snapshot — the first merged batch
-    // defines the payload schema
-    t.init(src.filter(lit(false))
-      .select(col("user_id"), col("event_id"), col("event_type"), col("value")))
+    // day-zero create: an empty table whose schema every batch must match
+    DeltaLog.create(t, src
+      .select(col("user_id"), col("event_id"), col("event_type"), col("value")).schema)
     val q = ss.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$fix/in")
@@ -1414,15 +1424,17 @@ object IngestOps {
             when(pmod(col("event_id"), lit(7)) === 0, "delete")
               .otherwise("upsert").as("op"),
             col("event_id"), col("event_type"), col("value"))
-        t.mergeBatch(changes, bid)
-        // at-least-once redelivery: the committed batch tag makes this a
+        def merge() = DeltaLog.mergeInto(ss, t, changes, Seq("user_id"),
+          ops = true, txn = Some(("q240", bid)))
+        merge()
+        // at-least-once redelivery: the committed txn action makes this a
         // detected no-op — any re-apply would corrupt last-write-wins state
-        t.mergeBatch(changes, bid)
+        merge()
         ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    t.readLatest()
+    DeltaLog.read(spark, t)
       .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
       .orderBy(col("user_id"))
   }
@@ -1447,8 +1459,9 @@ object IngestOps {
     * append commits, a remove+add REPLACE commit, a parquet checkpoint +
     * `_last_checkpoint`, and a post-checkpoint tail commit — and the
     * query then ADOPTS it: `DeltaLog.read` replays checkpoint + JSON tail
-    * into the latest snapshot, `VersionedTable.init` lands it in the
-    * native substrate, and the output aggregates the adopted table. The
+    * into the latest snapshot, `DeltaLog.commitAppend` lands it as the
+    * first commit of a fresh table, and the output aggregates the adopted
+    * table. The
     * `v1_docs` audit column time-travels to the pre-replace version, so a
     * reader that ignored remove actions (or replayed the tail twice)
     * breaks the hash.
@@ -1459,9 +1472,9 @@ object IngestOps {
     * v3 = + (residue 1 with even doc_id) — so the latest snapshot is
     * `doc_id%3 <> 1 OR doc_id%2 = 0` and v1's is `doc_id%3 IN (0,1)`.
     *
-    * Scale: adoption cost is snapshot-sized (one read + one bucketed
-    * write); log replay is versions-sized driver string work bounded by
-    * the checkpoint — data files are never listed from storage, which is
+    * Scale: adoption cost is snapshot-sized (one read + one write); log
+    * replay is versions-sized driver string work bounded by the
+    * checkpoint — data files are never listed from storage, which is
     * what makes the format usable on an object store at 100 TB.
     */
   private[graft] def q241Fixture(spark: SparkSession, dir: String): String =
@@ -3175,7 +3188,7 @@ object IngestOps {
 
   /** Built-store fixture memo (JVM × sf dir): the store builds once, every
     * rep / repeat invocation reads the published artifact — the same
-    * hoist-the-build contract as [[vtMemo]].
+    * hoist-the-build contract as [[tableMemo]].
     */
   private val storeMemo = scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -3367,11 +3380,11 @@ object IngestOps {
     val base = ReplayFixtures.runRoot(dir, "q241")
     // time travel to the pre-replace version: pure log replay, no listing
     val v1n = DeltaLog.read(spark, delta, Some(1L)).count()
-    // adopt the latest snapshot into the native substrate
-    val t = new graft.table.VersionedTable(spark, s"$base/tbl", "doc_id")
-    t.init(DeltaLog.read(spark, delta)
+    // adopt the latest snapshot into a fresh table
+    val t = s"$base/tbl"
+    DeltaLog.commitAppend(t, DeltaLog.read(spark, delta)
       .select(col("doc_id"), col("text"), col("lang")))
-    t.readLatest()
+    DeltaLog.read(spark, t)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(length(col("text"))).as("len_sum"))
@@ -3424,24 +3437,21 @@ object IngestOps {
     * % 4 = 1; v3: upsert label+2000 where % 6 = 2. One per (JVM, sf dir),
     * version-pinned consumers only.
     */
-  private[graft] def versionedEmbsTable(spark: SparkSession, dir: String): graft.table.VersionedTable =
-    vtMemo.getOrElseUpdate(s"q238b:$dir", {
-      val base = graft.Tables.fixtureRoot("q238b", dir)
-      val baseDir = new java.io.File(base)
-      if (baseDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
+  private[graft] def versionedEmbsTable(spark: SparkSession, dir: String): String =
+    tableMemo.getOrElseUpdate(s"q238b:$dir", {
       val e = Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("label").cast("long").as("label"))
-      val t = new graft.table.VersionedTable(spark, s"$base/tbl", "vec_id")
-      val v1 = t.init(e.filter(pmod(col("vec_id"), lit(5)) =!= 4))
-      val v2 = t.merge(e
-        .filter(pmod(col("vec_id"), lit(7)) === 3 || pmod(col("vec_id"), lit(4)) === 1)
-        .select(col("vec_id"),
-          when(pmod(col("vec_id"), lit(7)) === 3, lit("delete"))
-            .otherwise(lit("upsert")).as("op"),
-          (col("label") + 1000L).as("label")), v1)
-      t.merge(e.filter(pmod(col("vec_id"), lit(6)) === 2)
-        .select(col("vec_id"), lit("upsert").as("op"),
-          (col("label") + 2000L).as("label")), v2)
+      val t = freshTable("q238b", dir, e.schema)
+      DeltaLog.commitAppend(t, e.filter(pmod(col("vec_id"), lit(5)) =!= 4))
+      Seq(e.filter(pmod(col("vec_id"), lit(7)) === 3 || pmod(col("vec_id"), lit(4)) === 1)
+          .select(col("vec_id"),
+            when(pmod(col("vec_id"), lit(7)) === 3, lit("delete"))
+              .otherwise(lit("upsert")).as("op"),
+            (col("label") + 1000L).as("label")),
+        e.filter(pmod(col("vec_id"), lit(6)) === 2)
+          .select(col("vec_id"), lit("upsert").as("op"),
+            (col("label") + 2000L).as("label")))
+        .foreach(b => DeltaLog.mergeInto(spark, t, b, Seq("vec_id"), ops = true))
       t
     })
 
@@ -3452,9 +3462,9 @@ object IngestOps {
   private[graft] def q238Mv0(spark: SparkSession, dir: String): String =
     q238Memo.getOrElseUpdate(dir, {
       val p = graft.Tables.fixtureRoot("q238mv", dir)
-      versionedDocsTable(spark, dir).read(2L)
+      DeltaLog.read(spark, versionedDocsTable(spark, dir), Some(2L))
         .select(col("doc_id"), col("text"), col("lang"))
-        .join(versionedEmbsTable(spark, dir).read(1L)
+        .join(DeltaLog.read(spark, versionedEmbsTable(spark, dir), Some(1L))
           .select(col("vec_id").as("doc_id"), col("label")), "doc_id")
         .write.mode("overwrite").parquet(p)
       p
@@ -3468,16 +3478,15 @@ object IngestOps {
     * ([[q238Mv0]]), and both tables have since moved (A→4, B→3).
     *
     * The refresh is DELTA-SCOPED RECOMPUTE:
-    *   1. touched = keys(ΔA) ∪ keys(ΔB) — union of the two bucket-pruned,
-    *      changes-sized CDC feeds ([[graft.table.VersionedTable.changes]]);
+    *   1. touched = keys(ΔA) ∪ keys(ΔB) — union of the two file-pruned,
+    *      changes-sized keyed diffs ([[graft.sources.DeltaLog.diff]]);
     *   2. patch = (A@4 ⋈ B@3) restricted to touched keys (semi-join on the
-    *      tiny touched frame; the pinned-snapshot reads are key-bucketed,
-    *      so at 100 TB the restriction prunes to the touched buckets);
+    *      tiny touched frame);
     *   3. mv' = (mv ∖ touched) ∪ patch — an anti-join and a union; in a
     *      real MV store this is a keyed upsert of |touched| rows.
     * Deletes on either side fall out naturally: a touched key whose post-
     * state misses either table simply produces no patch row. Work is
-    * O(|Δ| + touched-bucket reads), never a full rejoin — the difference
+    * O(|Δ| + the patch join), never a full rejoin of the view — the difference
     * between refreshing a 100 TB dashboard join hourly and rebuilding it.
     *
     * A hard require() proves mv' equals the from-scratch A@4 ⋈ B@3 (count
@@ -3489,11 +3498,12 @@ object IngestOps {
     val ta = versionedDocsTable(spark, dir)
     val tb = versionedEmbsTable(spark, dir)
     val mv0 = spark.read.parquet(q238Mv0(spark, dir))
-    val touched = ta.changes(2L, 4L).select(col("doc_id"))
-      .unionByName(tb.changes(1L, 3L).select(col("vec_id").as("doc_id")))
+    val touched = DeltaLog.diff(spark, ta, Seq("doc_id"), 2L, 4L).select(col("doc_id"))
+      .unionByName(DeltaLog.diff(spark, tb, Seq("vec_id"), 1L, 3L)
+        .select(col("vec_id").as("doc_id")))
       .distinct().localCheckpoint()
-    val a4 = ta.read(4L).select(col("doc_id"), col("text"), col("lang"))
-    val b3 = tb.read(3L).select(col("vec_id").as("doc_id"), col("label"))
+    val a4 = DeltaLog.read(spark, ta, Some(4L)).select(col("doc_id"), col("text"), col("lang"))
+    val b3 = DeltaLog.read(spark, tb, Some(3L)).select(col("vec_id").as("doc_id"), col("label"))
     val patch = a4.join(touched, Seq("doc_id"), "left_semi").join(b3, "doc_id")
     val mvNew = mv0.join(touched, Seq("doc_id"), "left_anti").unionByName(patch)
       .localCheckpoint()
@@ -3544,27 +3554,28 @@ object IngestOps {
       |ORDER BY a.doc_id""".stripMargin
 
   /** q196 — TABLE MAINTENANCE is logically invisible: on its own copy of
-    * the q192 table, write a manifest CHECKPOINT (the Delta
+    * the q192 table, write a parquet CHECKPOINT (the Delta
     * `_last_checkpoint` move — replay cost bounded by checkpoint cadence,
-    * not table lifetime) and then REBUCKET the table 16 → 4 as commit v5
-    * (the copy-on-write granularity rewrite a table needs when its key
-    * volume outgrows the bucket count chosen at creation). Both are
-    * physical-layout operations; the query reads the post-maintenance
-    * snapshot and the oracle reconstructs v4's logical content from the
-    * batch definitions — a hash match proves maintenance moved bytes and
-    * nothing else. Time travel across the maintenance boundary
-    * (VersionedTableSpec) and the atomic publish race are the safety
-    * rails; at 100 TB both run as background jobs against live readers.
+    * not table lifetime) and then REWRITE THE LAYOUT as commit v5: the
+    * live rows hash-repartitioned by key into 4 files
+    * ([[graft.sources.DeltaLog.commitRewriteLayout]], a
+    * `dataChange=false` commit). Both are physical-layout operations;
+    * the query reads the post-maintenance snapshot and the oracle
+    * reconstructs v4's logical content from the batch definitions — a
+    * hash match proves maintenance moved bytes and nothing else. Time
+    * travel across the maintenance boundary (DeltaTableSpec) and the
+    * atomic publish race are the safety rails; at 100 TB both run as
+    * background jobs against live readers.
     */
   def q196TableMaintenance(spark: SparkSession, dir: String): DataFrame = {
     val t = versionedDocsTable(spark, dir, tag = "q196")
-    if (t.currentVersion() == 4L) { // idempotent across same-JVM re-runs
-      t.checkpoint()
-      t.rebucket(4, 4L)
+    if (DeltaLog.currentVersion(t) == 4L) { // idempotent across same-JVM re-runs
+      DeltaLog.checkpoint(spark, t)
+      DeltaLog.commitRewriteLayout(spark, t, _.repartition(4, col("doc_id")), Some(4L))
     }
-    t.readLatest()
+    DeltaLog.read(spark, t)
       .select(col("doc_id"), md5(col("text")).as("h"), col("lang"),
-        lit(t.currentVersion()).as("read_version"))
+        lit(DeltaLog.currentVersion(t)).as("read_version"))
       .orderBy(col("doc_id"))
   }
 
@@ -3591,19 +3602,19 @@ object IngestOps {
   /** q200 — EXACTLY-ONCE STREAMING SINK into the versioned table: the
     * events fixture replays as a file stream through REAL micro-batches
     * (maxFilesPerTrigger=2 over a 6-file fixture, so ≥3 triggers), and
-    * `foreachBatch` commits each batch into a [[graft.table.VersionedTable]]
-    * via `appendBatch(df, batchId)` — then immediately DELIVERS THE SAME
-    * BATCH AGAIN, simulating the at-least-once redelivery every sink must
-    * tolerate after a failure. The batch-id tag in the committed manifest
-    * makes the duplicate a no-op (the Delta txn-version idiom), so the
+    * `foreachBatch` commits each batch into a Delta table via
+    * [[graft.sources.DeltaLog.commitAppendIdempotent]] keyed by the batch
+    * id — then immediately DELIVERS THE SAME BATCH AGAIN, simulating the
+    * at-least-once redelivery every sink must tolerate after a failure.
+    * The committed `txn` action makes the duplicate a no-op, so the
     * table holds each event exactly once; the per-type aggregate over the
     * final snapshot hash-matches the oracle computed from the raw events
     * table — any double-append would double the counts and fail the gate.
     *
-    * Scale: each commit is one bucket-partitioned parquet write (adds
-    * only, no rewrite); idempotence costs a manifest-header scan, never a
-    * data read. This is the produce path that turns a stream into the
-    * q192/q195 commit log — sink, time travel, and CDC read compose.
+    * Scale: each commit is one parquet write (adds only, no rewrite);
+    * idempotence costs a log replay, never a data read. This is the
+    * produce path that turns a stream into the q192/q195 commit log —
+    * sink, time travel, and CDC read compose.
     */
   /** q200's carved watch directory (build-once, Bench-hoistable). */
   private[graft] def q200Fixture(spark: SparkSession, dir: String): String =
@@ -3618,7 +3629,7 @@ object IngestOps {
     val fix = q200Fixture(spark, dir)
     val base = ReplayFixtures.runRoot(dir, "q200")
     val ss = ReplayFixtures.replaySession(spark)
-    val t = new graft.table.VersionedTable(ss, s"$base/tbl", "event_id")
+    val t = s"$base/tbl"
     val sch = ss.read.parquet(s"$fix/watch").schema
     val q = ss.readStream.schema(sch)
       .option("maxFilesPerTrigger", 2)
@@ -3627,15 +3638,15 @@ object IngestOps {
       .outputMode("append")
       .option("checkpointLocation", s"$base/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        t.appendBatch(batch, bid)
+        DeltaLog.commitAppendIdempotent(ss, t, batch, "q200", bid)
         // at-least-once redelivery: same batch id arrives again — the
-        // committed manifest tag makes this a detected no-op
-        t.appendBatch(batch, bid)
+        // committed txn action makes this a detected no-op
+        DeltaLog.commitAppendIdempotent(ss, t, batch, "q200", bid)
         ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    t.readLatest()
+    DeltaLog.read(spark, t)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         count_distinct(col("user_id")).as("n_users"),
@@ -3723,25 +3734,25 @@ object IngestOps {
 
   /** q202 — IVM FROM THE CHANGE FEED: the consumer loop the table layer
     * exists for. A per-lang (doc count, char sum) rollup is materialized
-    * at snapshot v1, then refreshed to v4 by aggregating ONLY
-    * `changes(1, 4)` — insert adds its contribution, delete retracts the
+    * at snapshot v1, then refreshed to v4 by aggregating ONLY the keyed
+    * diff `DeltaLog.diff(1, 4)` — insert adds its contribution, delete retracts the
     * PRE-IMAGE the feed carries (`old_*` columns), update contributes the
     * difference — and merging the langs-sized delta into the v1 rollup.
     * The oracle recomputes the rollup directly from the reconstructed v4
     * snapshot, so the hash match proves the incremental identity
     * rollup(v1) ⊕ Δ(changes) = rollup(v4) cross-engine, with the feed —
     * not the q145-style raw batch — as the delta source. At 100 TB the
-    * refresh reads the bucket-pruned delta and a langs-sized state row
+    * refresh reads the file-pruned delta and a langs-sized state row
     * set; the table is never rescanned.
     */
   def q202IvmFromChanges(spark: SparkSession, dir: String): DataFrame = {
     val t = versionedDocsTable(spark, dir)
-    val base = t.read(1L)
+    val base = DeltaLog.read(spark, t, Some(1L))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(length(col("text"))).as("sum_chars"))
     // retract the pre-image, add the post-image: updates that move a row
     // across groups (lang change) debit the OLD group and credit the new
-    val ch = t.changes(1L, 4L)
+    val ch = DeltaLog.diff(spark, t, Seq("doc_id"), 1L, 4L)
     val retract = ch.filter(col("change_type") =!= "insert")
       .select(coalesce(col("old_lang"), col("lang")).as("lang"),
         lit(-1L).as("dd"),
@@ -3794,7 +3805,8 @@ object IngestOps {
     *
     * The q137 CMS shape (4 md5 hash rows × 64 buckets) builds over the
     * token stream of versioned-table snapshot v1, the delta aggregates
-    * ONLY `changes(1, 4)` (bucket-pruned, ± token contributions), and the
+    * ONLY the keyed diff `DeltaLog.diff(1, 4)` (file-pruned, ± token
+    * contributions), and the
     * merged counters hash-match the oracle's from-scratch CMS over the
     * reconstructed v4 snapshot — the identity CMS(v1) ⊕ Δ(feed) = CMS(v4)
     * proved cross-engine. Zero cells drop on both sides (a from-scratch
@@ -3816,8 +3828,8 @@ object IngestOps {
       .select(col("w"), col("h1"), col("h2"), cmsJ)
       .groupBy(col("j"), expr("(h1 + j * h2) % 64").as("bucket"))
       .agg(sum(col("w")).as("cnt"))
-    val base = counters(t.read(1L), "text", lit(1L))
-    val ch = t.changes(1L, 4L)
+    val base = counters(DeltaLog.read(spark, t, Some(1L)), "text", lit(1L))
+    val ch = DeltaLog.diff(spark, t, Seq("doc_id"), 1L, 4L)
     val delta = counters(
       ch.filter(col("change_type") =!= "delete")
         .select(col("text").as("txt"), lit(1L).as("w0"))
@@ -3876,9 +3888,9 @@ object IngestOps {
     * snapshot and the whole join in SQL: any leak of the newer commit
     * breaks the hash.
     *
-    * Scale: the pinned side is a bucket-pruned parquet read like any
-    * other; at 100 TB it broadcasts if dimension-sized or bucket-joins if
-    * not — pinning costs nothing but the manifest lookup. This row closes
+    * Scale: the pinned side is a parquet read like any other; at 100 TB
+    * it broadcasts if dimension-sized or shuffle-joins if not — pinning
+    * costs nothing but the log replay. This row closes
     * the loop between the streaming family (q133's enrich) and the table
     * layer (q192's time travel): the same snapshot contract, composed.
     */
@@ -3894,9 +3906,9 @@ object IngestOps {
     val base = ReplayFixtures.runRoot(dir, "q230")
     val ss = ReplayFixtures.replaySession(spark)
     val t = versionedDocsTable(ss, dir, tag = "q230")
-    val v0 = t.currentVersion() // 4 on first build; grows with re-runs below
+    val v0 = DeltaLog.currentVersion(t) // 4 on first build; grows with re-runs below
     // the PIN: v3's immutable file list, resolved once
-    val dim = t.read(3L)
+    val dim = DeltaLog.read(ss, t, Some(3L))
       .select(pmod(col("doc_id"), lit(1000L)).as("user_key"),
         md5(col("text")).as("text_h"), col("lang"))
       .groupBy(col("user_key"))
@@ -3916,13 +3928,13 @@ object IngestOps {
           val ch = Tables(ss, dir, "documents").limit(50)
             .select(col("doc_id"), lit("upsert").as("op"),
               concat(col("text"), lit(" concurrent")).as("text"), col("lang"))
-          t.merge(ch, t.currentVersion())
+          DeltaLog.mergeInto(ss, t, ch, Seq("doc_id"), ops = true)
         }
         ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    require(t.currentVersion() > v0,
+    require(DeltaLog.currentVersion(t) > v0,
       "q230 must demonstrate a real mid-stream commit — the table did not move")
     spark.read
       .schema("event_id BIGINT, user_id BIGINT, text_h STRING, lang STRING")
@@ -3966,43 +3978,42 @@ object IngestOps {
     * travel deliberately keeps history readable. The pipeline: (1) a
     * customer table commits as v1; (2) the erasure batch — every subject
     * whose deterministic request flag fires — merges as v2 deletes
-    * (copy-on-write: only touched buckets rewrite); (3) `vacuum(retainFrom
-    * = 2)` reclaims the pre-erasure files, so the subjects' bytes are GONE
-    * from storage, not merely unreferenced — the legal requirement, and
-    * exactly why every lakehouse pairs deletes with a vacuum horizon.
+    * (copy-on-write: only the files holding a requested key are
+    * rewritten, so no live file still holds an erased row); (3)
+    * `vacuum(retainFrom = 2)` reclaims the pre-erasure files, so the
+    * subjects' bytes are GONE from storage, not merely unreferenced — the
+    * legal requirement, and exactly why every lakehouse pairs deletes
+    * with a vacuum horizon.
     *
     * The audit row proves each phase from live state: `survivors_after`
     * re-probes the post-erasure snapshot for every requested key (must be
     * 0); `v1_readable_after_vacuum` verifies the pre-erasure snapshot is
-    * no longer reconstructable (its rewritten buckets' files are deleted —
+    * no longer reconstructable (its rewritten files are deleted —
     * reading v1 now fails); the counts tie the erased population back to
     * the source-table predicate the oracle recomputes independently.
     *
-    * Scale: the erasure merge shuffles requests + touched buckets only;
-    * vacuum is manifest replay + file deletes, data-size-free. At 100 TB
-    * this is the nightly compliance job: batched requests, one merge, one
-    * vacuum past the retention window.
+    * Scale: the erasure merge reads and rewrites only the files holding a
+    * requested key; vacuum is log replay + file deletes, data-size-free.
+    * At 100 TB this is the nightly compliance job: batched requests, one
+    * merge, one vacuum past the retention window.
     */
   /** q214's erase-then-vacuum table, built once per (JVM, sf dir) —
     * exposed so Bench can hoist the build out of the timed region.
     */
-  private[graft] def q214Table(spark: SparkSession, dir: String): graft.table.VersionedTable = {
+  private[graft] def q214Table(spark: SparkSession, dir: String): String = {
     val reqPred = graft.functions.ColFns.h60(
       concat(col("c_custkey").cast("string"), lit(":gdpr"))) % Q214ReqMod === 0
-    vtMemo.getOrElseUpdate(s"q214:$dir", {
-      val base = graft.Tables.fixtureRoot("q214", dir)
-      val baseDir = new java.io.File(base)
-      if (baseDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
+    tableMemo.getOrElseUpdate(s"q214:$dir", {
       val c = Tables(spark, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      val tb = new graft.table.VersionedTable(spark, s"$base/tbl", "c_custkey")
-      val v1 = tb.init(c)
+      val t = freshTable("q214", dir, c.schema)
+      DeltaLog.commitAppend(t, c)
       val requests = c.filter(reqPred)
         .select(col("c_custkey"), lit("delete").as("op"),
           col("c_name"), col("c_mktsegment"))
-      tb.merge(requests, v1)
-      tb.vacuum(retainFrom = 2L)
-      tb
+      DeltaLog.mergeInto(spark, t, requests, Seq("c_custkey"), Some(1L), ops = true)
+      DeltaLog.vacuum(spark, t, retainFromVersion = 2L)
+      t
     })
   }
 
@@ -4010,20 +4021,20 @@ object IngestOps {
     val reqPred = graft.functions.ColFns.h60(
       concat(col("c_custkey").cast("string"), lit(":gdpr"))) % Q214ReqMod === 0
     val t = q214Table(spark, dir)
-    // "v1 unreadable" is probed at the MANIFEST level: every data path
-    // v1's manifest declares live must be gone from disk. Exactly the
+    // "v1 unreadable" is probed at the LOG level: every data path v1's
+    // snapshot declares live must be gone from disk. Exactly the
     // condition the former `t.read(1L).count()` try/catch detected
     // (PATH_NOT_FOUND), but without building a deliberately-failing Spark
     // plan — a failed analysis in an Observation-bearing session makes
     // Spark's ObservationManager listener re-raise the failure as an
     // ERROR-level stack in the log of the NEXT observed query (the
     // round-12 bench-tail pollution, traced here)
-    val v1Readable = t.liveFilePaths(1L)
-      .forall(p => new java.io.File(p).exists())
+    val v1Readable = DeltaLog.snapshotFiles(spark, t, Some(1L))
+      .forall(p => graft.table.Fs.exists(graft.table.Fs.resolve(t, p)))
     val src = Tables(spark, dir, "customer")
       .agg(count(lit(1)).as("n_before"),
         count(when(reqPred, 1)).as("n_requests"))
-    t.readLatest()
+    DeltaLog.read(spark, t)
       .agg(count(lit(1)).as("n_after"),
         count(when(reqPred, 1)).as("survivors_after"))
       .crossJoin(broadcast(src))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,15 +23,15 @@ import org.apache.spark.sql.types._
   *     to the newest checkpoint.
   *
   * The snapshot at version v is the adds of commits 0..v minus the
-  * removes (last action per path wins) — identical replay semantics to
-  * [[graft.table.VersionedTable]]'s native manifest log, which is what
-  * makes the two interoperable: INBOUND, `read(root, v)` materializes a
-  * snapshot another engine committed (SourcesSpec replays a hand-authored
-  * foreign log with multi-part checkpoints, remove-then-re-add across a
-  * checkpoint boundary, `dataChange=false` compaction commits, and
-  * stats/tags fields this writer never emits) and `VersionedTable.init`
-  * adopts it (q241 runs that loop against a table written by
-  * [[commitAppend]] / [[commitReplace]]); OUTBOUND, the writer publishes
+  * removes (last action per path wins). This is the engine's one commit
+  * protocol for versioned state — the q192-family tables, the streaming
+  * sinks and the BatchRun store all commit here. INBOUND,
+  * `read(root, v)` materializes a snapshot another engine committed
+  * (SourcesSpec replays a hand-authored foreign log with multi-part
+  * checkpoints, remove-then-re-add across a checkpoint boundary,
+  * `dataChange=false` compaction commits, and stats/tags fields this
+  * writer never emits; q241 adopts a table written by [[commitAppend]] /
+  * [[commitReplace]] into a fresh one); OUTBOUND, the writer publishes
   * commits any Delta reader accepts — checkpoints carry the
   * protocol/metaData actions and the full add schema PROTOCOL.md
   * requires, and `_last_checkpoint` is published via write-temp +
@@ -1352,7 +1353,7 @@ object DeltaLog {
       val v = x match {
         case Literal(l, _) => l
         case other if other.foldable && other.deterministic =>
-          try other.eval(null) catch { case _: Throwable => null }
+          try other.eval(null) catch { case NonFatal(_) => null }
         case _ => null
       }
       v match {
@@ -1532,7 +1533,7 @@ object DeltaLog {
       try org.apache.parquet.hadoop.ParquetFileReader.readFooter(
         Fs.hadoopConf,
         new org.apache.hadoop.fs.Path(file.toString))
-      catch { case _: Throwable => return None }
+      catch { case NonFatal(_) => return None }
     val md = footer.getFileMetaData
     val schema = md.getSchema
     var numRecords = 0L
@@ -1829,13 +1830,13 @@ object DeltaLog {
     case _ => false
   }
 
-  private def headerActions(df: DataFrame,
+  private def headerActions(schema: StructType,
       partitionColumns: Seq[String] = Seq.empty): Seq[String] = Seq(
-    if (containsNtz(df.schema))
+    if (containsNtz(schema))
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
         """"readerFeatures":["timestampNtz"],"writerFeatures":["timestampNtz"]}}"""
     else """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
-    metaDataAction(java.util.UUID.randomUUID().toString, df.schema.json,
+    metaDataAction(java.util.UUID.randomUUID().toString, schema.json,
       partitionColumns))
 
   /** The protocol upgrade an append EVOLVING a timestamp_ntz column into
@@ -2259,6 +2260,16 @@ object DeltaLog {
     changedFileAdds(root, fromVersion, toVersion, skipChangeCommits)
       .map(a => (a.path, a.partitionValues))
 
+  /** Create an EMPTY table: a schema-only commit 0 (protocol + metaData,
+    * no data files), so the first data commit lands at version 1 and an
+    * empty snapshot still carries the schema every later merge is checked
+    * against. Throws ConcurrentModificationException if commit 0 exists.
+    */
+  def create(root: String, schema: StructType): Long = {
+    publish(root, 0L, headerActions(schema))
+    0L
+  }
+
   /** Append `df` as the next commit (commit 0 creates the table and
     * carries the protocol/metaData actions; a later commit whose schema
     * differs carries a fresh metaData action — schema evolution).
@@ -2284,7 +2295,7 @@ object DeltaLog {
       expectedVersion: Option[Long] = None): Long = {
     val next = expectedVersion.getOrElse(currentVersion(root)) + 1
     val (header, wls) =
-      if (next == 0L) (headerActions(df, createPartitionBy), df.schema)
+      if (next == 0L) (headerActions(df.schema, createPartitionBy), df.schema)
       else {
         val (h, s) = evolutionFor(root, df)
         (ntzProtocolActions(root, s) ++ h, s)
@@ -2325,9 +2336,8 @@ object DeltaLog {
     * re-delivered batch whose version is ≤ the app's recorded cursor is
     * a DETECTED NO-OP (returns the current table version, writes
     * nothing). At-least-once delivery + this check = exactly-once table
-    * contents — the same contract [[graft.table.VersionedTable
-    * .appendBatch]] implements on the native substrate, here in the wire
-    * format any Delta reader/writer shares. The check and the publish
+    * contents, in the wire format any Delta reader/writer shares
+    * ([[mergeInto]]'s `txn` is the keyed-upsert half). The check and the publish
     * race safely: the commit lands via put-if-absent at the version the
     * cursor was read at, so a concurrent writer advancing the log forces
     * ConcurrentModificationException and the retry re-reads the cursor.
@@ -2340,7 +2350,7 @@ object DeltaLog {
     if (already) return base
     val next = base + 1
     val (header, wls) =
-      if (next == 0L) (headerActions(df, Seq.empty), df.schema)
+      if (next == 0L) (headerActions(df.schema), df.schema)
       else {
         val (h, s) = evolutionFor(root, df)
         (ntzProtocolActions(root, s) ++ h, s)
@@ -2629,55 +2639,172 @@ object DeltaLog {
     * matchedTargetRows, insertedSourceRows); an empty source publishes
     * nothing and returns (base, 0, 0).
     *
+    * With `ops` the source is a CDC CHANGE BATCH: key + payload columns
+    * plus `op` ∈ {upsert, delete}. `delete` wins over `upsert` for one
+    * key within the batch (one row per key survives, so duplicate keys
+    * are resolved, not refused); every batch key's target rows retract
+    * and only the upsert rows land, so deleting an absent key is a no-op.
+    * The payload columns must be exactly the table's (an empty table's
+    * come from its [[create]] commit): a drifting batch is refused, never
+    * evolved into the schema by a merge. A change batch is applied
+    * COPY-ON-WRITE instead of by deletion vectors: only the files that
+    * hold a batch key are rewritten (their other rows plus the upserts),
+    * every other file carries over by reference. Change tables are read
+    * — time travel, [[diff]] — far more often than written, so their
+    * snapshots stay plain scans, and a deleted row's bytes leave every
+    * live file, which is what lets [[vacuum]] physically erase them.
+    *
+    * With `txn = Some((appId, batchId))` the commit carries a `txn`
+    * action, and a batch whose id is at or below the app's recorded one
+    * is a detected no-op returning (base, 0, 0) — the
+    * [[commitAppendIdempotent]] protocol for exactly-once keyed upsert
+    * sinks, check and upsert landing in the same atomic commit.
+    *
     * Scale shape: one live-row scan of the target (predicate/column
     * pruning apply; the key join is AQE-planned), bitmaps built on
     * executors, driver state one descriptor per hit file. The matched
     * frame is persisted (matched-sized, not target-sized) because both
-    * the bitmap pass and the insert count consume it.
+    * the bitmap pass and the insert count consume it. A copy-on-write
+    * batch scans the target's keys once to find the hit files and then
+    * reads and rewrites only those.
     */
   def mergeInto(spark: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String],
-      expectedVersion: Option[Long] = None): (Long, Long, Long) = {
-    import spark.implicits._
+      expectedVersion: Option[Long] = None,
+      ops: Boolean = false,
+      txn: Option[(String, Long)] = None): (Long, Long, Long) = {
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
     val missing = keyCols.filterNot(source.columns.contains)
     require(missing.isEmpty,
       s"merge source lacks key columns: ${missing.mkString(", ")}")
     val base = expectedVersion.getOrElse(currentVersion(root))
     require(base >= 0, s"no Delta log at $root to merge into")
+    val replayed = txn.exists { case (app, id) =>
+      replay(spark, root, Some(base)).txns.get(app).exists(_ >= id)
+    }
+    if (replayed) return (base, 0L, 0L)
+    val changes = if (ops) resolveOps(root, source, keyCols) else source
     // the source is consumed by the count, the duplicate-key check, two
     // key joins, the data-file write, and the CDC write — persist it so
     // a nondeterministic source cannot make those views of it mutually
     // inconsistent (delta-spark materializes the merge source for the
     // same reason)
-    source.persist()
-    try { mergeIntoPersisted(spark, root, source, keyCols, base) }
-    finally { source.unpersist(); () }
+    changes.persist()
+    try { mergeIntoPersisted(spark, root, changes, keyCols, base, ops, txn) }
+    finally { changes.unpersist(); () }
+  }
+
+  /** An `ops` change batch checked against the table's columns (names
+    * and types) and reduced to one row per key, a delete winning over an
+    * upsert; columns come back in table order, then `op`.
+    */
+  private def resolveOps(root: String, source: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    require(source.columns.contains("op"),
+      "an ops merge source needs an `op` column (upsert | delete)")
+    def typed(fs: Seq[StructField]) = fs.map(f => s"${f.name}: ${f.dataType.sql}").sorted
+    val table = latestSchema(root).fields.toSeq
+    val batch = source.schema.fields.toSeq.filterNot(_.name == "op")
+    require(typed(batch) == typed(table),
+      s"DeltaLog $root: change batch columns ${typed(batch).mkString("[", ", ", "]")} " +
+        s"do not match table columns ${typed(table).mkString("[", ", ", "]")}; " +
+        "schema evolution requires an explicit rewrite, not a merge")
+    val tableCols = table.map(_.name)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCols.map(col): _*)
+      .orderBy(when(col("op") === "delete", 0).otherwise(1))
+    source.withColumn("__rk", row_number().over(w))
+      .filter(col("__rk") === 1)
+      .select((tableCols :+ "op").map(col): _*)
   }
 
   private def mergeIntoPersisted(spark: SparkSession, root: String,
-      source: DataFrame, keyCols: Seq[String], base: Long): (Long, Long, Long) = {
+      changes: DataFrame, keyCols: Seq[String], base: Long, ops: Boolean,
+      txn: Option[(String, Long)]): (Long, Long, Long) = {
     import spark.implicits._
-    val sourceCount = source.count()
-    if (sourceCount == 0L) return (base, 0L, 0L)
-    val dupKeys = source.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
-    require(dupKeys == 0L,
-      s"merge source has duplicate keys on (${keyCols.mkString(", ")}) — " +
-        "which copy should win is undefined; de-duplicate the source first")
+    val changeCount = changes.count()
+    if (changeCount == 0L) return (base, 0L, 0L)
+    if (!ops) {
+      val dupKeys = changes.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).count()
+      require(dupKeys == 0L,
+        s"merge source has duplicate keys on (${keyCols.mkString(", ")}) — " +
+          "which copy should win is undefined; de-duplicate the source first")
+    }
+    // the rows that land; with ops the deletes only retract
+    val source =
+      if (ops) changes.filter(col("op") === "upsert").drop("op") else changes
+    val txnActions = txn.toSeq.map { case (app, id) =>
+      s"""{"txn":{"appId":${jstr(app)},"version":$id,"lastUpdated":0}}"""
+    }
     val snap = replay(spark, root, Some(base))
     val next = base + 1
     // evolution + mapped layout resolve ONCE: the source lands under the
-    // evolved logical schema, physically spelled on mapped tables
-    val (evoActions, wls) = evolutionFor(root, source)
-    val (srcW, wPartCols) = toWriteLayout(root, source, wls)
+    // evolved logical schema, physically spelled on mapped tables; an ops
+    // batch was checked against the table schema and never evolves it
+    val (evoActions, wls) =
+      if (ops) (Seq.empty[String], latestSchema(root)) else evolutionFor(root, source)
+    def writeAdds(df: DataFrame): Seq[String] = {
+      val (w, partCols) = toWriteLayout(root, df, wls)
+      writeDataFiles(root, next, w, partCols).map(f => addAction(f.path, f.size,
+        partitionValues = f.partitionValues, stats = f.stats))
+    }
     if (snap.adds.isEmpty) {
-      val adds = writeDataFiles(root, next, srcW, wPartCols)
+      publish(root, next, evoActions ++ txnActions ++ writeAdds(source))
+      return (next, 0L, if (ops) source.count() else changeCount)
+    }
+    val srcKeys = changes.select(keyCols.map(col): _*)
+    // the change-data files of this merge, from the retracted target rows
+    // (every column): a retracted row whose key only had a delete leaves
+    // for good, the rest are update pre-images
+    def cdcActions(retracted: DataFrame, retractedKeys: DataFrame): Seq[String] = {
+      val ct = "_change_type"
+      val preTyped =
+        if (!ops) retracted.withColumn(ct, lit("update_preimage"))
+        else retracted.join(source.select(keyCols.map(col): _*)
+            .withColumn("__up", lit(true)), keyCols, "left")
+          .withColumn(ct, when(col("__up"), lit("update_preimage"))
+            .otherwise(lit("delete")))
+          .drop("__up")
+      // allowMissingColumns: a schema-evolving merge's preimage rows
+      // carry the PRE-evolution fields — they null-fill the new ones
+      val changeDf = preTyped
+        .unionByName(source.join(retractedKeys, keyCols, "left_semi")
+          .withColumn(ct, lit("update_postimage")),
+          allowMissingColumns = true)
+        .unionByName(source.join(retractedKeys, keyCols, "left_anti")
+          .withColumn(ct, lit("insert")),
+          allowMissingColumns = true)
+      val (cdcDf, cdcPart) = toWriteLayout(root, changeDf, wls,
+        extraCols = Seq(ct))
+      writeDataFiles(root, next, cdcDf, cdcPart, dirPrefix = "_change_data/")
+        .map(w => cdcAction(w.path, w.size, w.partitionValues))
+    }
+    val cdf = cdfEnabled(root)
+    if (ops) {
+      // COPY-ON-WRITE, pruned to the files holding a batch key: each hit
+      // file's surviving rows minus the batch keys are rewritten together
+      // with the upserts, every other file carries over by reference. No
+      // deletion vector is written, so readers of the new version scan
+      // plain files, and a retracted row's bytes leave the live set (what
+      // lets vacuum physically erase it)
+      val live = readAdds(spark, root, snap.adds, snap.schemaJson,
+        snap.metaDataJson, keepFile = true)
+      val hits = live.join(srcKeys, keyCols, "left_semi")
+        .groupBy(col("__dv_file")).count().as[(String, Long)].collect().toMap
+      val hitAdds = snap.adds.filter(a => hits.contains(a.path))
+      val hitRows = readAdds(spark, root, hitAdds, snap.schemaJson, snap.metaDataJson)
+      val retracted = hitRows.join(srcKeys, keyCols, "left_semi")
+      val inserted = source
+        .join(retracted.select(keyCols.map(col): _*), keyCols, "left_anti").count()
+      val adds = writeAdds(hitRows.join(srcKeys, keyCols, "left_anti").unionByName(source))
       publish(root, next,
-        evoActions ++ adds.map(w =>
-          addAction(w.path, w.size, partitionValues = w.partitionValues,
-            stats = w.stats)))
-      return (next, 0L, sourceCount)
+        txnActions ++
+          hitAdds.map(a => removeAction(a.path, dv = a.dv)) ++
+          adds ++
+          (if (cdf) cdcActions(retracted, retracted.select(keyCols.map(col): _*).distinct())
+           else Seq.empty))
+      return (next, hits.values.sum, inserted)
     }
     val byPath: Map[String, AddFile] = snap.adds.map(a => a.path -> a).toMap
     val dvAdds = snap.adds.filter(_.dv.exists(_.cardinality > 0))
@@ -2685,11 +2812,9 @@ object DeltaLog {
       if (dvAdds.isEmpty)
         spark.emptyDataset[(String, Long)].toDF("__dv_file", "__dv_pos")
       else dvDeletedPositions(spark, root, dvAdds)
-    val srcKeys = source.select(keyCols.map(col): _*)
     // with the change data feed on the matched rows are also the
     // update_preimage, so the scan keeps every column; otherwise it
     // prunes to keys + position
-    val cdf = cdfEnabled(root)
     val matched = scanAdds(spark, root, snap.adds, snap.schemaJson,
         snap.metaDataJson, withPos = true)
       .join(existing, Seq("__dv_file", "__dv_pos"), "left_anti")
@@ -2703,36 +2828,62 @@ object DeltaLog {
       val descRows = dvRewriteRows(spark, root,
         matched.select(col("__dv_file"), col("__dv_pos")), existing)
       val matchedRows = descRows.map(_._7).sum
-      val adds = writeDataFiles(root, next, srcW, wPartCols)
-      val cdcActions =
-        if (!cdf) Seq.empty[String]
-        else {
-          val ct = "_change_type"
-          // allowMissingColumns: a schema-evolving merge's preimage rows
-          // carry the PRE-evolution fields — they null-fill the new ones
-          val changeDf = matched.drop("__dv_file", "__dv_pos")
-            .withColumn(ct, lit("update_preimage"))
-            .unionByName(source.join(matchedKeysDf, keyCols, "left_semi")
-              .withColumn(ct, lit("update_postimage")),
-              allowMissingColumns = true)
-            .unionByName(source.join(matchedKeysDf, keyCols, "left_anti")
-              .withColumn(ct, lit("insert")),
-              allowMissingColumns = true)
-          val (cdcDf, cdcPart) = toWriteLayout(root, changeDf, wls,
-            extraCols = Seq(ct))
-          writeDataFiles(root, next, cdcDf, cdcPart,
-            dirPrefix = "_change_data/")
-            .map(w => cdcAction(w.path, w.size, w.partitionValues))
-        }
+      val adds = writeAdds(source)
       publish(root, next,
-        evoActions ++
+        evoActions ++ txnActions ++
           (if (descRows.isEmpty) Seq.empty else dvProtocolActions(root)) ++
           dvPairActions(byPath, descRows) ++
-          adds.map(w => addAction(w.path, w.size,
-            partitionValues = w.partitionValues, stats = w.stats)) ++
-          cdcActions)
-      (next, matchedRows, sourceCount - matchedKeyCount)
+          adds ++
+          (if (cdf) cdcActions(matched.drop("__dv_file", "__dv_pos"), matchedKeysDf)
+           else Seq.empty))
+      (next, matchedRows, changeCount - matchedKeyCount)
     } finally { matched.unpersist(); () }
+  }
+
+  /** KEYED NET DIFF between snapshots `fromVersion` and `toVersion`: one
+    * row per key whose row differs, typed `change_type` ∈ {insert,
+    * update, delete}, carrying the `toVersion` payload (the `fromVersion`
+    * one for deletes) plus `old_<col>` pre-image columns (NULL for
+    * inserts) — what an incremental consumer needs to retract the old
+    * contribution. Unlike [[readChangeFeed]] it needs no change data feed
+    * and nets out every commit in between. A file live in BOTH snapshots
+    * under the same deletion vector holds the same rows on both sides,
+    * so (keys being unique per snapshot) it cannot carry a difference and
+    * is never read: the cost follows the files the commits in between
+    * touched, not the table. Version 0 of a [[create]]d table is empty,
+    * so a diff from 0 reports every live row as an insert. Both sides
+    * read under the `toVersion` schema.
+    */
+  def diff(spark: SparkSession, root: String, keyCols: Seq[String],
+      fromVersion: Long, toVersion: Long): DataFrame = {
+    require(fromVersion >= 0 && fromVersion < toVersion &&
+      toVersion <= currentVersion(root),
+      s"need 0 <= from < to <= ${currentVersion(root)}, got ($fromVersion, $toVersion)")
+    val (a, b) = (replay(spark, root, Some(fromVersion)),
+      replay(spark, root, Some(toVersion)))
+    def ident(f: AddFile) = (f.path, f.dv)
+    val shared = a.adds.map(ident).toSet.intersect(b.adds.map(ident).toSet)
+    val payload = DataType.fromJson(b.schemaJson.get).asInstanceOf[StructType]
+      .fieldNames.toSeq.filterNot(keyCols.contains)
+    def side(s: Snapshot, tag: String): DataFrame =
+      readAdds(spark, root, s.adds.filterNot(f => shared(ident(f))),
+        b.schemaJson, b.metaDataJson)
+        .select(keyCols.map(col) ++ Seq(lit(true).as(s"__in_$tag")) ++
+          payload.map(c => col(c).as(s"__${tag}_$c")): _*)
+    val (o, n) = (side(a, "o"), side(b, "n"))
+    val oldStruct = struct(payload.map(c => col(s"__o_$c")): _*)
+    val newStruct = struct(payload.map(c => col(s"__n_$c")): _*)
+    o.join(n, keyCols, "full_outer")
+      .withColumn("change_type",
+        when(col("__in_o").isNull, "insert")
+          .when(col("__in_n").isNull, "delete")
+          .when(!(oldStruct <=> newStruct), "update"))
+      .filter(col("change_type").isNotNull)
+      .select(keyCols.map(col) ++ Seq(col("change_type")) ++
+        payload.map { c =>
+          when(col("change_type") === "delete", col(s"__o_$c"))
+            .otherwise(col(s"__n_$c")).as(c)
+        } ++ payload.map(c => col(s"__o_$c").as(s"old_$c")): _*)
   }
 
   /** One change-feed FILE entry per data/change file in versions
@@ -3347,9 +3498,9 @@ private[sources] object StatsPrune {
         case Some(null) => false // all rows NULL here: no comparison passes
         case Some(s) =>
           val typed: Any = v match {
-            case _: Long => try s.toLong catch { case _: Throwable => return true }
-            case _: Double => try s.toDouble catch { case _: Throwable => return true }
-            case _: Boolean => try s.toBoolean catch { case _: Throwable => return true }
+            case _: Long => try s.toLong catch { case NonFatal(_) => return true }
+            case _: Double => try s.toDouble catch { case NonFatal(_) => return true }
+            case _: Boolean => try s.toBoolean catch { case NonFatal(_) => return true }
             case _ => s
           }
           cmp(typed, v) match {
@@ -3366,7 +3517,7 @@ private[sources] object StatsPrune {
     } else stats match {
       case None => true
       case Some(json) =>
-        val node = try mapper.readTree(json) catch { case _: Throwable => return true }
+        val node = try mapper.readTree(json) catch { case NonFatal(_) => return true }
         // a zero-row file matches nothing, whatever the predicate
         if (Option(node.get("numRecords")).exists(n =>
           n.isIntegralNumber && n.asLong() == 0L)) return false

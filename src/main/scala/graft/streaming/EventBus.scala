@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.DeltaLog
+
 /** MESSAGE-BUS SOURCE SEAM for the event stream.
   *
   * Every streaming operator in this engine consumes a DataFrame with
@@ -30,9 +32,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * backpressure (`lib/batchProcessing.js:314-332`); a message bus is the
   * scale-layer generalization (SURVEY §2b streaming): offsets replace line
   * numbers as the replay cursor, and the exactly-once contract moves to
-  * the sink — [[sinkToVersionedTable]] writes each micro-batch through
-  * [[graft.table.VersionedTable.appendBatch]], whose batch-id manifest tag
-  * makes redelivery a detected no-op (the q200 path), so ANY of the three
+  * the sink — [[sinkToDeltaTable]] writes each micro-batch through
+  * [[graft.sources.DeltaLog.commitAppendIdempotent]], whose committed
+  * `txn` action makes redelivery a detected no-op (the q200 path), so ANY of the three
   * sources composes with at-least-once delivery into exactly-once tables.
   */
 object EventBus {
@@ -119,56 +121,61 @@ object EventBus {
       col("topic"), col("partition"), col("offset"))
       .select(col("e.*"), col("topic"), col("partition"), col("offset"))
 
-  /** Run `source` into the exactly-once table sink: every micro-batch
-    * appends through [[graft.table.VersionedTable.appendBatch]] keyed by
-    * the batch id — redelivered batches (at-least-once upstream, retried
-    * foreachBatch, restarted query) are detected no-ops, so the table
-    * holds each event exactly once whatever the source's delivery
-    * guarantee. Returns the running query; callers own stop().
+  /** Run `source` into the exactly-once Delta table sink at `root`: every
+    * micro-batch appends through
+    * [[graft.sources.DeltaLog.commitAppendIdempotent]] under the app id
+    * `checkpointDir` (the query's identity) and the batch id —
+    * redelivered batches (at-least-once upstream, retried foreachBatch,
+    * restarted query) are detected no-ops, so the table holds each event
+    * exactly once whatever the source's delivery guarantee. The first
+    * batch creates the table. Returns the running query; callers own
+    * stop().
     */
-  def sinkToVersionedTable(
+  def sinkToDeltaTable(
       spark: SparkSession,
       source: EventSource,
-      table: graft.table.VersionedTable,
+      root: String,
       checkpointDir: String): StreamingQuery =
     source.read(spark)
       // project to the event schema EXACTLY: a bus-backed source carries
       // lineage extras (topic/partition/offset) a direct source doesn't,
       // and the committed table's schema must not depend on which source
       // binding fed it — swapping bindings on an existing table is the
-      // seam's whole contract (EventBusSpec proves the committed schema is
-      // identical across bindings)
+      // seam's whole contract (StreamingSpec proves the committed schema
+      // is identical across bindings)
       .select(EventStream.eventSchema.fieldNames.toIndexedSeq.map(col): _*)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // appendBatch tags the manifest with the batch id, so an
-        // at-least-once upstream (bus redelivery, retried foreachBatch,
-        // restarted query) commits each batch once — the duplicate call is
-        // a detected no-op (VersionedTableSpec + the StreamingSpec E2E's
-        // post-run redelivery probe)
-        table.appendBatch(batch, bid)
+        // the txn action rides the commit, so an at-least-once upstream
+        // (bus redelivery, retried foreachBatch, restarted query) commits
+        // each batch once — the duplicate call is a detected no-op (the
+        // StreamingSpec E2E's post-run redelivery probe)
+        DeltaLog.commitAppendIdempotent(spark, root, batch, checkpointDir, bid)
         ()
       }
       .start()
 
   /** Run `source` into the exactly-once KEYED UPSERT sink — the
-    * [[sinkToVersionedTable]] seam with
-    * [[graft.table.VersionedTable.mergeBatch]] as the commit verb: each
+    * [[sinkToDeltaTable]] seam with the op-aware
+    * [[graft.sources.DeltaLog.mergeInto]] as the commit verb: each
     * micro-batch is mapped by `toChanges` onto the CDC change shape
-    * ((key, op ∈ upsert|delete, payload)) and merged as one batch-id-
-    * tagged copy-on-write commit, so redelivered batches are detected
-    * no-ops and the table converges to last-write-wins state per key
-    * whatever the source's delivery guarantee. `toChanges` MUST reduce
-    * each batch to at most one change row per key with a deterministic
-    * rule (e.g. latest event by (ts, event_id)) — merge's within-batch
-    * tie-break only orders delete before upsert, not replays of equals.
+    * ((key, op ∈ upsert|delete, payload)) and merged as one commit that
+    * carries the batch's `txn` action, so redelivered batches are
+    * detected no-ops and the table converges to last-write-wins state per
+    * key whatever the source's delivery guarantee. The table must exist
+    * ([[graft.sources.DeltaLog.create]] it with the payload schema).
+    * `toChanges` MUST reduce each batch to at most one change row per key
+    * with a deterministic rule (e.g. latest event by (ts, event_id)) —
+    * the merge's within-batch tie-break only orders delete before upsert,
+    * not replays of equals.
     */
-  def upsertToVersionedTable(
+  def upsertToDeltaTable(
       spark: SparkSession,
       source: EventSource,
-      table: graft.table.VersionedTable,
+      root: String,
+      keyCols: Seq[String],
       checkpointDir: String)(
       toChanges: DataFrame => DataFrame): StreamingQuery =
     source.read(spark)
@@ -177,7 +184,8 @@ object EventBus {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        table.mergeBatch(toChanges(batch.toDF()), bid)
+        DeltaLog.mergeInto(spark, root, toChanges(batch.toDF()), keyCols,
+          ops = true, txn = Some((checkpointDir, bid)))
         ()
       }
       .start()

@@ -185,7 +185,7 @@ final class WireBusStream(rowsPerBatch: Long, nParts: Int, topic: String,
 
   // Publish via write-temp + ATOMIC_MOVE: readers see the old complete
   // value or the new complete value, never a torn write (the same
-  // put-then-rename discipline as VersionedTable's manifest publish).
+  // put-then-rename discipline as DeltaLog's `_last_checkpoint` pointer).
   private def persist(): Unit = {
     val tmp = marker.resolveSibling(marker.getFileName.toString + ".tmp")
     java.nio.file.Files.write(tmp, s"$target\n".getBytes("UTF-8"))

@@ -4,6 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** THE OBJECT-STORAGE SEAM — every filesystem touch of the table/store
   * layer (Delta log commits and checkpoints, store maintenance staging,
   * manifests, versioned-table markers) routed through the Hadoop
@@ -105,7 +107,7 @@ object Fs {
     * scheme-less string passes through unchanged.
     */
   def fromUriString(s: String): String = {
-    val u = try java.net.URI.create(s) catch { case _: Throwable => return s }
+    val u = try java.net.URI.create(s) catch { case NonFatal(_) => return s }
     if (u.getScheme == null) s else new HPath(u).toString
   }
 
@@ -236,7 +238,7 @@ object Fs {
     *    implements a conditional PUT — PROBED via `hasPathCapability`
     *    ([[ConditionalCreateCapabilities]]); a store that cannot declare
     *    it REFUSES loudly (a check-then-act fallback here would let two
-    *    Delta/VersionedTable committers of the same version both "win").
+    *    Delta committers of the same version both "win").
     *    [[AssumeAtomicCreateKey]] is the operator override for stores
     *    with known-atomic creates and no capability string.
     */

@@ -153,8 +153,7 @@ object StoreMaint {
     * compacted nightly re-copies its fresh appends, not 100 TB — and a
     * second pass over an already-compacted store is a literal no-op
     * (returns 0, bumps nothing). This is the same candidate discipline
-    * Delta OPTIMIZE (minFileSize) and [[VersionedTable.compact]]
-    * (fragmented buckets only) apply.
+    * Delta OPTIMIZE applies with its minFileSize threshold.
     *
     * The rewrite itself is the q178 compaction planner made physical:
     * with `openCostInBytes = 0` and `maxPartitionBytes = targetBytes`,

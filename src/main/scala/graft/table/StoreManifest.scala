@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * reset them), and the engine's maxscore trust decision is
   * CORRECTNESS-adjacent: trusting stale BM25 impact bounds breaks WAND's
   * upper-bound invariant. So freshness is recorded explicitly, the
-  * [[VersionedTable]] discipline applied to the stores:
+  * versioned-commit discipline of [[graft.sources.DeltaLog]] applied to
+  * the stores:
   *
   *   - `<store>/_store_manifest.json` holds a MONOTONIC counter and the
   *     counter value at which each part (`dl`, `postings`, `maxscore`,

@@ -5,7 +5,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.functions._
 
+import graft.ingest.BatchRunStore
 import graft.ingest.Parsers.{CsvSpec, FwField, FwSpec}
+import graft.sources.DeltaLog
 
 /** End-to-end `processFile` — the reference's public API restated — on real
   * files with all three sinks.
@@ -49,7 +51,7 @@ class BatchJobSpec extends SparkTestBase {
     val run = store.current(summary.runId).get
     assert(run.successCount == 45)
     assert(run.version == 2 && run.status == "COMPLETED")
-    assert(spark.read.parquet(sinks.runPath.get).count() == 2) // full audit history retained
+    assert(DeltaLog.read(spark, sinks.runPath.get).count() == 2) // full audit history retained
     // optimistic lock: an update presenting the stale version is rejected
     assertThrows[java.util.ConcurrentModificationException] {
       store.update(summary.runId, expectedVersion = 1L)(identity)
@@ -179,6 +181,37 @@ class BatchJobSpec extends SparkTestBase {
     assert(leftovers() == before)
     val run = new graft.ingest.BatchRunStore(spark, runs).currentAll().collect()
     assert(run.length == 1 && run.head.status == "FAILED" && run.head.version == 2L)
+  }
+
+  test("BatchRunStore: a concurrent update of one run loses at the commit") {
+    val path = Files.createTempDirectory("graft-runstore-race").resolve("runs").toString
+    val (a, b) = (new BatchRunStore(spark, path), new BatchRunStore(spark, path))
+    a.insert("run-1", "f1", 1L)
+    a.insert("run-2", "f2", 2L)
+    // A reads run-1 at v1; B, also holding v1, updates it before A commits
+    // (B's whole update runs inside A's read-modify step)
+    var bVersion = 0L
+    val ex = intercept[java.util.ConcurrentModificationException] {
+      a.update("run-1", 1L) { row =>
+        bVersion = b.update("run-1", 1L)(_.copy(status = "COMPLETED"))
+        row.copy(status = "FAILED")
+      }
+    }
+    assert(bVersion == 2L)
+    assert(ex.getMessage.contains("expected 1, found 2"))
+    val rows = DeltaLog.read(spark, path).filter(col("runId") === "run-1")
+    assert(rows.filter(col("version") === 2L).count() == 1L,
+      "exactly one row may land at v2")
+    assert(a.current("run-1").exists(r => r.version == 2L && r.status == "COMPLETED"))
+    // a race on the same TABLE version but a different run retries and lands
+    var raced = false
+    val v = a.update("run-2", 1L) { row =>
+      if (!raced) { raced = true; b.update("run-1", 2L)(_.copy(durationMillis = 5L)) }
+      row.copy(status = "COMPLETED")
+    }
+    assert(v == 2L && raced)
+    assert(b.current("run-2").exists(r => r.version == 2L && r.status == "COMPLETED"))
+    assert(b.current("run-1").exists(r => r.version == 3L && r.durationMillis == 5L))
   }
 }
 

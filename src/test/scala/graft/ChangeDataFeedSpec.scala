@@ -62,6 +62,29 @@ class ChangeDataFeedSpec extends SparkTestBase {
     assert(DeltaLog.readChangeFeed(spark, root, -1L, v4).count() == 65L)
   }
 
+  test("op-aware merge feeds update pre/post-images, deletes and inserts") {
+    val root = tmpTable("graft-cdf-ops")
+    DeltaLog.commitAppend(root,
+      spark.range(0, 40).select(col("id"), (col("id") % 4).as("b")).repartition(2))
+    val v1 = DeltaLog.setTableProperties(root, Map("delta.enableChangeDataFeed" -> "true"))
+    // upsert 0..4 (matched), delete 10..12 (matched) and 50 (absent),
+    // upsert 100..101 (new); the copy-on-write commit carries cdc files
+    val batch = spark.range(0, 5).select(col("id"), lit("upsert").as("op"), lit(9L).as("b"))
+      .union(spark.range(10, 13).select(col("id"), lit("delete").as("op"), lit(0L).as("b")))
+      .union(spark.range(50, 51).select(col("id"), lit("delete").as("op"), lit(0L).as("b")))
+      .union(spark.range(100, 102).select(col("id"), lit("upsert").as("op"), lit(7L).as("b")))
+    val (v2, matched, inserted) =
+      DeltaLog.mergeInto(spark, root, batch, Seq("id"), ops = true)
+    assert(matched == 8L && inserted == 2L)
+    val f = DeltaLog.readChangeFeed(spark, root, v1, v2)
+    def n(t: String) = f.filter(col("_change_type") === t).count()
+    assert(n("update_preimage") == 5L && n("update_postimage") == 5L)
+    assert(n("delete") == 3L && n("insert") == 2L && f.count() == 15L,
+      "rows of rewritten files that no batch key touched must not surface")
+    assert(f.filter(col("_change_type") === "update_preimage" && col("b") === 9L).count() == 0L)
+    assert(DeltaLog.read(spark, root).count() == 40L - 3L + 2L)
+  }
+
   test("derived full-file deletes honor the removed incarnation's deletion vector; " +
       "cdc-less DV commits derive exactly the newDv \\ oldDv rows") {
     val root = tmpTable("graft-cdf-derived")

@@ -176,6 +176,37 @@ class CorpusOpsSpec extends SparkTestBase {
     assert(topk.select(col("query_id")).distinct().count() >= 100L)
   }
 
+  test("q253 fleet after a store append equals the store-off path: stale maxscore is never read") {
+    import graft.table.StoreManifest
+    // a private corpus C with its own store; then batch B is appended to
+    // BOTH the corpus and the store and the corpus fingerprint re-pinned
+    // (an incremental ingest): postings/ index C + B, maxscore/ still
+    // holds C's document frequencies
+    val d = java.nio.file.Files.createTempDirectory("graft-stale-maxscore").toString
+    val c = Tables(spark, sfDir, "documents")
+    c.write.parquet(s"$d/documents.parquet")
+    CorpusOps.writeLexStore(spark, d)
+    val store = CorpusOps.lexStorePathFor(d)
+    val maxId = c.agg(max(col("doc_id"))).head().getLong(0)
+    val b = c.withColumn("doc_id", col("doc_id") + lit(maxId + 1))
+      .withColumn("text", concat(lit("zzstale zzstale "), col("text")))
+    b.write.mode("append").parquet(s"$d/documents.parquet")
+    CorpusOps.appendLexStore(b, store)
+    StoreManifest.recordCorpus(store,
+      StoreManifest.corpusFingerprint(s"$d/documents.parquet"))
+    assert(StoreManifest.corpusMatches(store,
+      StoreManifest.corpusFingerprint(s"$d/documents.parquet")),
+      "the appended store must still be trusted for postings/")
+    assert(!StoreManifest.partFresh(store, "maxscore", "postings"))
+    def fleet() = CorpusOps.q253Queries(spark, d).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    val served = fleet()
+    CorpusOps.lexStoreEnabled = false
+    val cold = try fleet() finally CorpusOps.lexStoreEnabled = true
+    assert(served.nonEmpty && served == cold,
+      "the fleet must rank the vocabulary by the CURRENT document frequencies")
+  }
+
   test("q257 fleet eval: per-query metrics are internally exact and match a " +
       "brute per-query recomputation") {
     val rows = CorpusOps.q257FleetEval(spark, sfDir).collect()

@@ -65,7 +65,7 @@ class FatalTextsSpec extends SparkTestBase {
   /** Texts a typed Scala API cannot produce (the compiler enforces what
     * the reference's runtime type checks enforce) or that belong to the
     * reference's oe-Cloud HTTP backend, whose engine counterpart is the
-    * parquet BatchRunStore with its own spec-covered conflict texts.
+    * Delta-table BatchRunStore with its own spec-covered conflict texts.
     */
   private val unreachable: Map[String, String] = Map(
     "csv-headers-type" -> "CsvSpec.headers is Vector[String] by type",
@@ -74,10 +74,10 @@ class FatalTextsSpec extends SparkTestBase {
     "fw-not-array" -> "FwSpec.fields is Seq[FwField] by type",
     "fw-recdata" -> "reference-internal stream envelope; engine rows are never enveloped",
     "read-error" -> "mid-read IO failures surface as Spark task failures with retries",
-    "oe-running" -> "engine run store is parquet, not an oe-Cloud server",
-    "oe-models" -> "engine run store is parquet, not an oe-Cloud server",
-    "put-stats" -> "BatchRunStore appends parquet; HTTP PUT does not exist",
-    "put-stats-auth" -> "BatchRunStore appends parquet; HTTP PUT does not exist",
+    "oe-running" -> "engine run store is a Delta table, not an oe-Cloud server",
+    "oe-models" -> "engine run store is a Delta table, not an oe-Cloud server",
+    "put-stats" -> "BatchRunStore commits to a Delta table; HTTP PUT does not exist",
+    "put-stats-auth" -> "BatchRunStore commits to a Delta table; HTTP PUT does not exist",
     "update-stats" -> "BatchRunStore conflict throws ConcurrentModificationException (BatchRunStore.update, spec-covered)")
 
   private def messageOf(body: => Any): String =

@@ -1168,36 +1168,60 @@ class PlanSpec extends SparkTestBase {
     } finally CorpusOps.lexStoreEnabled = true
   }
 
-  /** Construction-time jobs the fleet contract permits: the store reads'
-    * distributed partition-discovery listings (InMemoryFileIndex —
-    * table-count-sized), plus the FLEET-CONSTANT hub materializations
-    * (`CorpusOps.fleetHub` & co.'s eager localCheckpoints — a fixed number
-    * per top-level build, each fleet-sized in rows, never per-query) and
-    * the AQE stage jobs those materializations submit. A reintroduced
-    * per-query driver step (collect/take/head inside the pipeline) still
-    * trips the gate: it shows up under its own action name, which this
-    * allowlist does not contain.
+  /** Construction-time jobs the fleet contract does NOT permit, from the
+    * (result-stage name, SQL execution id) of every construction job. Allowed:
+    * the store reads' distributed partition-discovery listings
+    * (InMemoryFileIndex — table-count-sized), the FLEET-CONSTANT hub
+    * materializations (`CorpusOps.fleetHub` & co.'s eager localCheckpoints
+    * — a fixed number per top-level build, each fleet-sized in rows, never
+    * per-query), and the AQE stage jobs (submitted from AQE's own threads,
+    * so their call site is `withThreadLocalCaptured`/`CompletableFuture`)
+    * ONLY when they belong to the SQL execution of one of those
+    * localCheckpoints. A reintroduced per-query driver step
+    * (collect/take/head inside the pipeline) still trips the gate — under
+    * its own action name, or as AQE stage jobs of an execution no
+    * localCheckpoint owns.
     */
-  private def fleetConstructionJobAllowed(stageNames: String): Boolean =
-    stageNames.startsWith("parquet at") ||
-      stageNames.contains("localCheckpoint at") ||
-      stageNames.contains("withThreadLocalCaptured") ||
-      stageNames.contains("CompletableFuture")
+  private def disallowedFleetConstructionJobs(jobs: Seq[(String, String)]): Seq[String] = {
+    val checkpointExecs = jobs.collect {
+      case (name, exec) if name.startsWith("localCheckpoint at") && exec != null => exec
+    }.toSet
+    jobs.filterNot { case (name, exec) =>
+      name.startsWith("parquet at") ||
+        name.startsWith("localCheckpoint at") ||
+        ((name.contains("withThreadLocalCaptured") || name.contains("CompletableFuture")) &&
+          checkpointExecs(exec))
+    }.map { case (name, exec) => s"$name [execution $exec]" }
+  }
+
+  /** Records (result-stage name, SQL execution id) of every job it sees
+    * start; the result stage's name is the call site of the job's action.
+    */
+  private final class ConstructionJobs extends org.apache.spark.scheduler.SparkListener {
+    private val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      seen.add((if (js.stageInfos.isEmpty) "" else js.stageInfos.maxBy(_.stageId).name,
+        Option(js.properties).map(_.getProperty("spark.sql.execution.id")).orNull))
+    /** The jobs recorded before the marker `count at` job. */
+    def beforeMarker(): Seq[(String, String)] = {
+      import scala.jdk.CollectionConverters._
+      def jobs = seen.asScala.toSeq
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.exists(_._1.contains("count at")) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      jobs.takeWhile(!_._1.contains("count at"))
+    }
+  }
 
   test("q253 batch WAND: plan construction performs only fleet-constant " +
       "actions (store listings + hub materializations); store-served") {
     CorpusOps.writeLexStore(spark, sfDir)
     // the whole point of the batch surface: the QUERY axis adds zero
     // driver work. Construction may list store partitions and materialize
-    // the O(1)-per-build fleet hubs (see fleetConstructionJobAllowed);
+    // the O(1)-per-build fleet hubs (see disallowedFleetConstructionJobs);
     // any per-query collect added to the pipeline surfaces as a
     // non-allowlisted job and trips this gate.
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(js.stageInfos.map(_.name).mkString(";").take(120))
-    }
+    val listener = new ConstructionJobs
     spark.sparkContext.addSparkListener(listener)
     val df =
       try {
@@ -1206,17 +1230,15 @@ class PlanSpec extends SparkTestBase {
         // name): once it appears on the ordered listener bus, every
         // construction-time job has already been recorded before it
         spark.sparkContext.parallelize(Seq(1), 1).count()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (!seen.toArray.exists(_.toString.contains("count at")) &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-        val pre = seen.toArray.map(_.toString)
-          .takeWhile(!_.contains("count at"))
-        assert(pre.forall(fleetConstructionJobAllowed),
+        val pre = listener.beforeMarker()
+        val bad = disallowedFleetConstructionJobs(pre)
+        assert(bad.isEmpty,
           s"fleet plan construction must submit no Spark jobs beyond store " +
             s"partition listings and fleet-hub materializations, saw: " +
-            s"${pre.mkString(" // ")}")
-        assert(pre.count(_.startsWith("parquet at")) <= 6,
-          s"store listing jobs must stay table-count-sized, saw ${pre.length}")
+            s"${bad.mkString(" // ")}")
+        val listings = pre.count(_._1.startsWith("parquet at"))
+        assert(listings <= 6,
+          s"store listing jobs must stay table-count-sized, saw $listings")
         assert(pre.length <= 24,
           s"construction jobs must stay fleet-constant (one hub build), " +
             s"saw ${pre.length}")
@@ -1247,26 +1269,18 @@ class PlanSpec extends SparkTestBase {
       "q259" -> (() => CorpusOps.q259PhraseFleet(spark, sfDir)),
       "q260" -> (() => CorpusOps.q260ProximityFleet(spark, sfDir)),
       "q262" -> (() => CorpusOps.q262FleetSnippetText(spark, sfDir)))) {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          seen.add(js.stageInfos.map(_.name).mkString(";").take(120))
-      }
+      val listener = new ConstructionJobs
       spark.sparkContext.addSparkListener(listener)
       val df =
         try {
           val built = build()
           spark.sparkContext.parallelize(Seq(1), 1).count()
-          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-          while (!seen.toArray.exists(_.toString.contains("count at")) &&
-            System.nanoTime() < deadline) Thread.sleep(20)
-          val pre = seen.toArray.map(_.toString)
-            .takeWhile(!_.contains("count at"))
-          assert(pre.forall(fleetConstructionJobAllowed),
+          val pre = listener.beforeMarker()
+          val bad = disallowedFleetConstructionJobs(pre)
+          assert(bad.isEmpty,
             s"$name construction must submit no Spark jobs beyond store " +
               s"partition listings and fleet-hub materializations, saw: " +
-              s"${pre.mkString(" // ")}")
+              s"${bad.mkString(" // ")}")
           // fleet-constant bound: the hub materializations are at most
           // THREE per build (queries hub, ranked-docs page, span page),
           // each a bounded-wave execution — a per-query driver step would

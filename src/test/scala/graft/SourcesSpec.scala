@@ -1582,7 +1582,7 @@ class SourcesSpec extends SparkTestBase {
   test("Hadoop seam: Delta commits, DVs, checkpoints, store maintenance and " +
       "versioned tables all round-trip under file:// URIs") {
     import graft.sources.DeltaLog
-    import graft.table.{StoreMaint, VersionedTable}
+    import graft.table.StoreMaint
     val dir = Files.createTempDirectory("graft-fsuri").toString
     // Delta: append / DV delete / checkpoint / append-past-checkpoint
     val root = "file://" + dir + "/tbl"
@@ -1603,13 +1603,16 @@ class SourcesSpec extends SparkTestBase {
     assert(spark.read.parquet(store).count() == 1000L - 143L)
     assert(StoreMaint.compact(spark, store, Seq.empty, 1L << 20) > 0L)
     assert(spark.read.parquet(store).count() == 1000L - 143L)
-    // versioned table: init / merge / time travel
-    val vt = new VersionedTable(spark, "file://" + dir + "/vt", "id", 4)
-    val v1 = vt.init(spark.range(0, 50).select(col("id"), (col("id") * 2).as("v")))
-    val v2 = vt.merge(spark.range(0, 5)
-      .select(col("id"), lit("upsert").as("op"), lit(-1L).as("v")), v1)
-    assert(vt.read(v2).filter(col("v") === -1).count() == 5L)
-    assert(vt.read(v1).filter(col("v") === -1).count() == 0L)
+    // versioned table: create / init / op-aware merge / time travel
+    val vt = "file://" + dir + "/vt"
+    val base = spark.range(0, 50).select(col("id"), (col("id") * 2).as("v"))
+    DeltaLog.create(vt, base.schema)
+    val v1 = DeltaLog.commitAppend(vt, base)
+    val (v2, _, _) = DeltaLog.mergeInto(spark, vt, spark.range(0, 5)
+      .select(col("id"), lit("upsert").as("op"), lit(-1L).as("v")), Seq("id"),
+      Some(v1), ops = true)
+    assert(DeltaLog.read(spark, vt, Some(v2)).filter(col("v") === -1).count() == 5L)
+    assert(DeltaLog.read(spark, vt, Some(v1)).filter(col("v") === -1).count() == 0L)
   }
 
   test("mapped + PARTITIONED table: DELETE retracts via DVs keeping the " +

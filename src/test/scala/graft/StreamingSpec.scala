@@ -548,31 +548,32 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.EventBus
     val tmp = Files.createTempDirectory("graft-bus").toString
     val ss = graft.queries.ReplayFixtures.replaySession(spark)
-    val table = new graft.table.VersionedTable(ss, s"$tmp/tbl", "event_id")
+    val table = s"$tmp/tbl"
     val RowsPerBatch = 400L
-    val q = EventBus.sinkToVersionedTable(ss,
+    val q = EventBus.sinkToDeltaTable(ss,
       EventBus.RateEventSource(RowsPerBatch), table, s"$tmp/ckpt")
     // the rate source is unbounded: run until >= 3 micro-batches committed,
     // then stop — determinism comes from rate-micro-batch's fixed
     // rowsPerBatch and value sequence, not from when we stop
     // NOTE: never processAllAvailable() here — a generator source always
     // has a next batch available, so that call would block forever. Poll
-    // committed progress, then stop(); appendBatch commits atomically per
-    // batch, so a stop mid-trigger leaves only whole batches behind.
+    // committed progress, then stop(); each batch is one atomic commit, so
+    // a stop mid-trigger leaves only whole batches behind.
     val deadline = System.nanoTime() + 120L * 1000000000L
     while ((q.lastProgress == null || q.lastProgress.batchId < 3) &&
         System.nanoTime() < deadline) Thread.sleep(100)
     q.stop()
     q.awaitTermination()
-    val got = table.readLatest()
+    val got = graft.sources.DeltaLog.read(ss, table)
     val n = got.count()
-    val vBefore = table.currentVersion()
+    val vBefore = graft.sources.DeltaLog.currentVersion(table)
     // AT-LEAST-ONCE REDELIVERY PROBE through the public API: a bus that
     // redelivers batch 0 after the query advanced must hit a detected
-    // no-op — the batch-id manifest tag, not luck, is what makes the
+    // no-op — the committed txn action, not luck, is what makes the
     // table exactly-once
-    table.appendBatch(got.limit(10), 0L)
-    assert(table.currentVersion() == vBefore && table.readLatest().count() == n,
+    graft.sources.DeltaLog.commitAppendIdempotent(ss, table, got.limit(10), s"$tmp/ckpt", 0L)
+    assert(graft.sources.DeltaLog.currentVersion(table) == vBefore &&
+      graft.sources.DeltaLog.read(ss, table).count() == n,
       "redelivered batch id must commit nothing")
     val stats = got.agg(
       count_distinct(col("event_id")).as("d"),
@@ -631,7 +632,7 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.EventBus
     val tmp = Files.createTempDirectory("graft-wirebus").toString
     val ss = graft.queries.ReplayFixtures.replaySession(spark)
-    val table = new graft.table.VersionedTable(ss, s"$tmp/tbl", "event_id")
+    val table = s"$tmp/tbl"
     val RowsPerBatch = 300L
     val src = EventBus.BusEventSource("graft.streaming.WireBus",
       Map("rowsPerBatch" -> RowsPerBatch.toString, "partitions" -> "4"))
@@ -639,7 +640,7 @@ class StreamingSpec extends SparkTestBase {
     // restarts), so the restarted run genuinely waits for NEW batches
     // beyond any replayed in-flight one; returns the last batch id seen
     def runUntil(minAbsBatch: Long): Long = {
-      val q = EventBus.sinkToVersionedTable(ss, src, table, s"$tmp/ckpt")
+      val q = EventBus.sinkToDeltaTable(ss, src, table, s"$tmp/ckpt")
       val deadline = System.nanoTime() + 120L * 1000000000L
       while ((q.lastProgress == null || q.lastProgress.batchId < minAbsBatch) &&
           System.nanoTime() < deadline) Thread.sleep(100)
@@ -649,7 +650,7 @@ class StreamingSpec extends SparkTestBase {
     }
     val b1 = runUntil(3)
     assert(b1 >= 3, s"first run must reach batch 3, got $b1")
-    val n1 = table.readLatest().count()
+    val n1 = graft.sources.DeltaLog.read(ss, table).count()
     assert(n1 >= 2 * RowsPerBatch && n1 % RowsPerBatch == 0,
       s"first run must commit whole batches, got $n1")
     // RESTART from the same checkpoint: the generator instance is fresh
@@ -658,7 +659,7 @@ class StreamingSpec extends SparkTestBase {
     // of rewinding and re-appending ids 0..n1-1. Waiting for b1 + 2
     // guarantees at least one batch beyond any replayed in-flight batch.
     runUntil(b1 + 2)
-    val got = table.readLatest()
+    val got = graft.sources.DeltaLog.read(ss, table)
     val n2 = got.count()
     assert(n2 > n1, s"restart must produce NEW batches beyond the first run's $n1 rows")
     val stats = got.agg(
@@ -704,22 +705,22 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.{EventBus, EventStream}
     val tmp = Files.createTempDirectory("graft-busschema").toString
     val ss = graft.queries.ReplayFixtures.replaySession(spark)
-    val table = new graft.table.VersionedTable(ss, s"$tmp/tbl", "event_id")
+    val table = s"$tmp/tbl"
     val src = EventBus.BusEventSource("graft.streaming.WireBus",
       Map("rowsPerBatch" -> "100", "partitions" -> "2"))
-    val q = EventBus.sinkToVersionedTable(ss, src, table, s"$tmp/ckpt")
+    val q = EventBus.sinkToDeltaTable(ss, src, table, s"$tmp/ckpt")
     val deadline = System.nanoTime() + 60L * 1000000000L
-    while (table.currentVersion() < 1 && System.nanoTime() < deadline)
+    // the first committed batch is commit 0
+    while (graft.sources.DeltaLog.currentVersion(table) < 0 && System.nanoTime() < deadline)
       Thread.sleep(100)
     q.stop(); q.awaitTermination()
-    assert(table.currentVersion() >= 1, "sink must commit at least one batch")
+    assert(graft.sources.DeltaLog.currentVersion(table) >= 0, "sink must commit at least one batch")
     // the committed schema must be the EVENT schema — no topic/partition/
     // offset lineage extras from the bus binding; swapping the source
     // binding on an existing table must keep committing identical columns
-    assert(table.readLatest().schema.fieldNames.toSeq ==
-      EventStream.eventSchema.fieldNames.toSeq,
-      s"bus-backed sink leaked binding columns: " +
-        table.readLatest().schema.fieldNames.mkString(","))
+    val committed = graft.sources.DeltaLog.read(ss, table).schema.fieldNames.toSeq
+    assert(committed == EventStream.eventSchema.fieldNames.toSeq,
+      s"bus-backed sink leaked binding columns: " + committed.mkString(","))
   }
 
   test("WireBus.payloadJson decodes to exactly EventBus.eventColumns' mapping — one sequence, two serializations") {
