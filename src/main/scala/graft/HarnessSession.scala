@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE session builder Bench and Explain share, so the captured plans
-  * are produced under exactly the session shape that is benched (same
+/** The ONE session builder of the harness mains (Bench, Explain, Verify,
+  * ScaleSmoke), so the captured plans and the verified results are
+  * produced under exactly the session shape that is benched (same
   * master/core count, same shuffle partitions, same confs, same top-k
   * rewrite). Round 18's Explain hardcoded its own confs and a different
   * SPARK_GRAFT_CPUS default ("32" vs Bench's "4"), which let plan captures
@@ -17,11 +18,15 @@ object HarnessSession {
     */
   def cpus(): String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  def build(): SparkSession = {
-    val n = cpus()
+  def build(): SparkSession = build(cpus(), cpus())
+
+  /** A session on `n` local cores with `shufflePartitions` shuffle
+    * partitions (ScaleSmoke grows the partitions with its replicated data).
+    */
+  def build(n: String, shufflePartitions: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$n]")
-      .config("spark.sql.shuffle.partitions", n)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // reclaim shuffle files/broadcasts continuously (default 30min never
@@ -40,7 +45,8 @@ object HarnessSession {
       // scheduling it saves. Committed as a negative result.
       .getOrCreate()
     // ERROR, not WARN: any WARN line landing between queries eats into the
-    // driver's ~2000-char output tail and can push the result line out
+    // driver's ~2000-char output tail and can push the result line out;
+    // Verify and ScaleSmoke print their own failures on stderr
     spark.sparkContext.setLogLevel("ERROR")
     // the native top-k rewrite is part of the engine, not a per-query
     // opt-in: Verify proves it correct on every query it fires on, so both

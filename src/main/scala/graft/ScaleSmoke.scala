@@ -247,15 +247,7 @@ object ScaleSmoke {
     // round 9's q182 8-vs-32 contrast (139× vs 40×) and the q211 spill
     // both demonstrated exactly this. Defaults to cpus (the 10× smoke).
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopK.enableRewrite(spark) // same plans Bench/Verify run
+    val spark = HarnessSession.build(cpus, shuffleParts) // same plans Bench/Verify run
 
     // ratios time the COLD candidate build on BOTH sides — a signature
     // store left behind by a Bench run at the 1× dir would fake the 1× time

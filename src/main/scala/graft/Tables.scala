@@ -14,25 +14,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per-JVM suffix for tmpdir fixture roots built by delete-then-rebuild
-    * memoized builders (q192/q214 versioned tables, q215 bucketed tables):
-    * two concurrent JVMs sharing a fixed path would delete each other's
-    * live files mid-read (observed as FILE_NOT_EXIST when a test suite and
-    * a bench run overlap). Unique per JVM, stable within it.
-    */
-  private[graft] lazy val jvmTag: String =
-    java.util.UUID.randomUUID().toString.take(8)
-
-  /** Canonical tmpdir root for a delete-then-rebuild fixture keyed by
-    * (JVM, sf dir) — ONE naming/sanitization scheme for every such site
-    * (versioned tables, bucketed tables, variant staging, MV baselines).
-    * Artifacts meant to be SHARED across JVMs (signature store, loser
-    * sets) deliberately do NOT use this — they omit [[jvmTag]].
-    */
-  private[graft] def fixtureRoot(tag: String, dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${jvmTag}_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir) else spark.read.parquet(s"$dir/$name.parquet")
 

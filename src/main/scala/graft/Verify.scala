@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
@@ -40,18 +39,11 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // session-wide native top-k: the correctness gate below is exactly
-    // what proves the rewrite semantics-preserving on every query whose
-    // window idiom it fires on (PlanSpec holds the fires-on-≥3 gate)
-    graft.plans.TopK.enableRewrite(spark)
+    // the benched session, native top-k included: the correctness gate
+    // below is exactly what proves the rewrite semantics-preserving on
+    // every query whose window idiom it fires on (PlanSpec holds the
+    // fires-on-≥3 gate)
+    val spark = HarnessSession.build()
     new java.io.File(outDir).mkdirs()
     // Engine-private stages some oracles read back as parquet (q45/q46
     // loser sets): materialized here, once, so query fns stay read-only

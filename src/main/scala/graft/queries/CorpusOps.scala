@@ -410,16 +410,10 @@ object CorpusOps {
     * of 90..99) — the month-offline history a derived-store consumer
     * catches up over. Immutable to its consumers.
     */
-  private val catchupDeltaMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[queries] def catchupDelta(spark: SparkSession, dir: String): String =
-    catchupDeltaMemo.getOrElseUpdate(s"catchup:$dir", {
+    ReplayFixtures.once("q280camp", dir) { root =>
       import graft.sources.DeltaLog
-      val base = graft.Tables.fixtureRoot("q280camp", dir)
-      val f = new java.io.File(base)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-      val delta = s"$base/delta"
+      val delta = s"$root/delta"
       val d = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
       (0 until 110).foreach { r =>
         DeltaLog.commitAppend(delta, d.filter(pmod(col("doc_id"), lit(110)) === r))
@@ -429,7 +423,7 @@ object CorpusOps {
           pmod(col("doc_id"), lit(100)) === (90 + k))
       }
       delta
-    })
+    }
 
   /** The CATCH-UP CAMPAIGN (scale row): bootstrap a FRESH lexical store
     * from the 120-commit feed in one read — the grouped-plan
@@ -445,10 +439,7 @@ object CorpusOps {
   def feedCatchupCampaign(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.DeltaLog
     val delta = catchupDelta(spark, dir)
-    val base = graft.Tables.fixtureRoot("q280run", dir)
-    val f = new java.io.File(base)
-    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-    val store = s"$base/lexstore"
+    val store = s"${ReplayFixtures.runRoot(dir, "q280run")}/lexstore"
     val feed = DeltaLog.readChangeFeed(spark, delta, -1L,
       DeltaLog.currentVersion(delta))
     catchupLexStoreFromFeed(spark, store, feed)

@@ -44,12 +44,8 @@ object EventsOps {
     * per ROW once at write, not per QUERY forever after (the q215
     * bucketing economics applied to JSON).
     */
-  private val q235Memo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def q235Staged(spark: SparkSession, dir: String): String =
-    q235Memo.getOrElseUpdate(dir, {
-      val base = graft.Tables.fixtureRoot("q235", dir)
+    ReplayFixtures.once("q235", dir) { base =>
       val confs = Seq(
         "spark.sql.variant.writeShredding.enabled" -> "true",
         "spark.sql.variant.inferShreddingSchema" -> "true")
@@ -65,7 +61,7 @@ object EventsOps {
         case (k, None) => spark.conf.unset(k)
       }
       base
-    })
+    }
 
   /** q235 — the VARIANT path for the semi-structured `props` column
     * (Spark 4 `parse_json` / `variant_get` over shredded parquet): where

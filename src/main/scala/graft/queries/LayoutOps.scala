@@ -260,9 +260,6 @@ object LayoutOps {
     */
   private[graft] val Q215Buckets = 8
 
-  private val q215Memo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   /** Write lineitem + orders as BUCKETED TABLES (same bucket count, same
     * key) once per (JVM, sf dir): [[graft.sources.Sinks.bucketedTable]]'s
     * layout, external-path'd under tmpdir so the in-memory catalog owns
@@ -271,10 +268,7 @@ object LayoutOps {
     */
   private[graft] def q215Tables(spark: SparkSession, dir: String): (String, String) = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    q215Memo.getOrElseUpdate(dir, {
-      val base = graft.Tables.fixtureRoot("q215", dir)
-      val baseDir = new java.io.File(base)
-      if (baseDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(baseDir)
+    ReplayFixtures.once("q215", dir) { base =>
       val lt = s"graft_q215_lineitem_$tag"
       val ot = s"graft_q215_orders_$tag"
       Tables(spark, dir, "lineitem")
@@ -290,7 +284,7 @@ object LayoutOps {
         .bucketBy(Q215Buckets, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/orders").format("parquet").saveAsTable(ot)
       (lt, ot)
-    })
+    }
   }
 
   /** The q215 join stage alone (pre-aggregation), exposed so PlanSpec can
@@ -429,7 +423,7 @@ object LayoutOps {
     * reads: every file's (partkey, suppkey) stats envelope spans
     * essentially the full range, so every box predicate reads all 16.
     */
-  private[queries] def q270Fixture(spark: SparkSession, dir: String): String =
+  private[graft] def q270Fixture(spark: SparkSession, dir: String): String =
     ReplayFixtures.ensure(dir, "q270", Seq("lineitem")) { root =>
       graft.sources.DeltaLog.commitAppend(s"$root/delta",
         Tables(spark, dir, "lineitem")
@@ -455,11 +449,7 @@ object LayoutOps {
     */
   def q270ZorderOptimize(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.DeltaLog
-    q270Fixture(spark, dir)
-    val base = ReplayFixtures.fixtureRootFor(dir, "q270")
-    val scratch = new java.io.File(s"${ReplayFixtures.runRoot(dir, "q270")}/delta")
-    IngestOps.linkTree(java.nio.file.Paths.get(s"$base/delta"), scratch.toPath)
-    val delta = scratch.getPath
+    val delta = ReplayFixtures.cloneInto(s"${q270Fixture(spark, dir)}/delta", "q270", dir)
     val b = Tables(spark, dir, "lineitem")
       .agg(max(col("l_partkey")), max(col("l_suppkey"))).head // one-row driver frame
     val (mp, ms) = (b.getAs[Number](0).longValue(), b.getAs[Number](1).longValue())

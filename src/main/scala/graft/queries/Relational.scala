@@ -616,14 +616,11 @@ object Relational {
     * BIGINT partial, so re-aggregating partials is order-free.
     */
   def q205MvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    // _mv2_: round 13 widened the view with min/max partials and the
-    // per-measure non-null count avg needs — a stale _mv_ fixture from an
-    // earlier round must not be adopted
-    val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_q205_mv2_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
     val s2 = spark.newSession()
     val base = Tables(s2, dir, "lineitem")
-    if (!new java.io.File(s"$mvPath/_SUCCESS").exists())
+    // rebuilt whenever lineitem is newer than the view: a regenerated
+    // fact must never be answered from the old partials
+    val mvPath = ReplayFixtures.ensure(dir, "q205mv", Seq("lineitem")) { root =>
       base.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("s_qty"),
           sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("s_price_cents"),
@@ -631,7 +628,8 @@ object Relational {
           min(col("l_quantity")).as("mn_qty"),
           max(col("l_quantity")).as("mx_qty"),
           count(col("l_quantity")).as("c_qty"))
-        .write.mode("overwrite").parquet(mvPath)
+        .write.parquet(s"$root/mv")
+    } + "/mv"
     graft.plans.MvRewrite.clear()
     graft.plans.MvRewrite.register(
       base, s2.read.parquet(mvPath),
@@ -656,7 +654,7 @@ object Relational {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation
           if (l.relation match {
             case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              h.location.rootPaths.exists(_.toString.contains("graft_q205_mv2_"))
+              h.location.rootPaths.exists(_.toString.contains(mvPath))
             case _ => false
           }) => l
     }.nonEmpty, "q205 must exercise MvRewrite: the aggregate still reads the fact")

@@ -4,47 +4,111 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** BUILD-ONCE cache for streaming-replay fixtures.
+/** The ONE module that names, builds and reuses query fixtures. Every
+  * fixture root lives under `java.io.tmpdir` with the `graft_` prefix,
+  * in one of three lifetimes:
   *
-  * Every replay query (q89/q112/q133/q140/q143/q152/q165/q174/q187) stages
-  * a deterministic file fixture — carved parquet/text sides, sentinel
-  * rows, forced modification times — and then replays it through real
-  * micro-batches. The carving is Spark-write work that is IDENTICAL for
-  * every run at a given scale factor, yet it used to be redone on every
-  * invocation (every bench repeat, every verify). This cache builds each
-  * fixture once into a shared per-(query, sf) root and only replays the
-  * STREAM per run; at 100 TB the analogous artifact is the staged landing
-  * zone a replay harness carves once per dataset, not per test.
+  *   - SHARED, [[ensure]] (`graft_fix_<name>_<sf>`): built once per
+  *     (query, sf) and reused by every JVM. The replay queries
+  *     (q89/q112/q133/q140/q143/q152/q165/q174/q187) and the lakehouse
+  *     fixtures stage deterministic inputs here — carved parquet/text
+  *     sides, sentinel rows, forced modification times, hand-authored
+  *     Delta logs — that are IDENTICAL for every run at a given scale
+  *     factor, so only the STREAM or the verb runs per call. Contract:
+  *       - freshness: the `_FIXTURE_OK` marker must be newer than every
+  *         source table the fixture derives from — a regenerated corpus
+  *         can never serve a stale fixture (same contract as the q40
+  *         minhash signature store);
+  *       - restoration: the marker records the carved file list, and
+  *         reuse DELETES any file a previous replay appended into the
+  *         fixture tree (q174's in-run drain sentinels, q152's v1+
+  *         rollups), restoring the carved state exactly — including the
+  *         carve-time modification times the FileStreamSource replay
+  *         order depends on, which the files keep because restoration
+  *         never rewrites them.
+  *   - PER JVM, [[once]] (`graft_<tag>_<jvm>_<sf>`): built on first use
+  *     in this JVM, memoized, and handed to every later call — the
+  *     versioned tables, derived stores and staged layouts whose
+  *     consumers only read them (version-pinned reads, published stores).
+  *     A stale copy from an earlier JVM is wiped before the build.
+  *   - PER CALL, [[runRoot]] (`graft_run_<name>_<jvm>_<sf>`): wiped on
+  *     every call — checkpoints, sinks, and the [[cloneInto]] copies a
+  *     mutating verb runs against, so every replay starts from offset
+  *     zero and every run pays the real verb against the frozen input.
   *
-  * Correctness contract:
-  *   - freshness: the `_FIXTURE_OK` marker must be newer than every
-  *     source table the fixture derives from — a regenerated corpus can
-  *     never serve a stale fixture (same contract as the q40 minhash
-  *     signature store);
-  *   - restoration: the marker records the carved file list, and reuse
-  *     DELETES any file a previous replay appended into the fixture tree
-  *     (q174's in-run drain sentinels, q152's v1+ rollups), restoring the
-  *     carved state exactly — including the carve-time modification times
-  *     the FileStreamSource replay order depends on, which the files keep
-  *     because restoration never rewrites them;
-  *   - run isolation: checkpoints and sinks live under [[runRoot]], wiped
-  *     per call, so every replay starts from offset zero against the
-  *     shared input.
+  * Per-JVM and per-call roots carry a per-JVM tag: two concurrent JVMs
+  * sharing a fixed path would delete each other's live files mid-read
+  * (observed as FILE_NOT_EXIST when a test suite and a bench run
+  * overlap). Deleting `graft_*` under tmpdir forces every fixture to
+  * rebuild.
   */
 private[graft] object ReplayFixtures {
 
   private def sfTag(dir: String) = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  /** Shared fixture root for (query, sf) — stable across runs. */
+  private def tmpDir = System.getProperty("java.io.tmpdir")
+
+  /** Per-JVM suffix of the [[once]] and [[runRoot]] roots: unique per
+    * JVM, stable within it.
+    */
+  private lazy val jvmTag: String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** Shared fixture root for (query, sf) — stable across runs and JVMs. */
   def fixtureRootFor(dir: String, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_fix_${name}_${sfTag(dir)}"
+    s"$tmpDir/graft_fix_${name}_${sfTag(dir)}"
 
-  /** Per-run scratch root (checkpoints, sinks) for (query, sf). */
+  /** Per-call scratch root (checkpoints, sinks, clones) for (query, sf). */
   def runRootFor(dir: String, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_run_${name}_${sfTag(dir)}"
+    s"$tmpDir/graft_run_${name}_${jvmTag}_${sfTag(dir)}"
 
-  /** Write `df` as ONE parquet file named `name` directly under `dir`
-    * and return its size — the foreign-table-fixture primitive (a
+  private def wipe(root: String): Unit = {
+    val f = new java.io.File(root)
+    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
+  }
+
+  private val memo = scala.collection.mutable.HashMap.empty[(String, String), Any]
+
+  /** The per-JVM fixture `tag` for sf `dir`: on the first call in this
+    * JVM, wipe its root and run `build(root)`; every call returns that
+    * first build's result.
+    */
+  def once[T](tag: String, dir: String)(build: String => T): T = synchronized {
+    memo.get((tag, dir)) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        val root = s"$tmpDir/graft_${tag}_${jvmTag}_${sfTag(dir)}"
+        wipe(root)
+        val v = build(root)
+        memo((tag, dir)) = v
+        v
+    }
+  }
+
+  /** Hard-link clone of the fixture subtree `src` into a fresh
+    * [[runRoot]] for `runName`, returning the clone's path (the run root
+    * plus `src`'s last path segment). Metadata-only work — one link
+    * syscall per file, never data bytes — falling back to a copy on
+    * filesystems without hard links. The verbs that run on a clone only
+    * add files and never rewrite one in place, so the frozen source is
+    * never disturbed and every run (each bench repeat included) pays the
+    * real verb, never the idempotent no-op a second run on one root
+    * would be.
+    */
+  def cloneInto(src: String, runName: String, dir: String): String = {
+    val from = Paths.get(src)
+    val to = Paths.get(runRoot(dir, runName)).resolve(from.getFileName)
+    Files.walk(from).forEach { (p: Path) =>
+      val rel = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(rel)
+      else
+        try Files.createLink(rel, p)
+        catch { case _: UnsupportedOperationException => Files.copy(p, rel); () }
+    }
+    to.toString
+  }
+
+  /** Write `df` as ONE parquet file at `dir/name` (`name` may name
+    * subdirectories, created as needed) and return its size — the foreign-table-fixture primitive (a
     * hand-authored Delta log needs files at exact paths, not a Spark
     * output directory). One definition instead of a per-fixture copy of
     * the write-to-temp / find-the-part / move / clean dance.
@@ -107,8 +171,7 @@ private[graft] object ReplayFixtures {
         if (empty) Files.delete(d)
       }
     } else {
-      if (Files.exists(rootPath))
-        org.apache.commons.io.FileUtils.deleteDirectory(rootPath.toFile)
+      wipe(root)
       Files.createDirectories(rootPath)
       build(root)
       val rels = regularFiles(rootPath)
@@ -119,12 +182,11 @@ private[graft] object ReplayFixtures {
     root
   }
 
-  /** Fresh per-run scratch root: wiped and recreated on every call. */
+  /** Fresh per-call scratch root: wiped and recreated on every call. */
   def runRoot(dir: String, name: String): String = {
     val root = runRootFor(dir, name)
-    val f = new java.io.File(root)
-    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-    f.mkdirs()
+    wipe(root)
+    new java.io.File(root).mkdirs()
     root
   }
 

@@ -677,26 +677,16 @@ object Similarity {
     if (denom == 0L) 1.0 else hits.toDouble / denom.toDouble
   }
 
-  /** One fixture per (JVM, corpus): build from the base 4/5ths, append
-    * the last 5th against the frozen centroids, then erase the
-    * `vec_id % 37 == 3` subjects through a Delta CHANGE DATA FEED (the
-    * corpus owner deletes from a CDF-enabled keys table; the store syncs
-    * through the feed).
-    */
-  private val annStoreMemo = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** The SHARED fixture pipeline: build from the base 4/5ths, append the
     * last 5th against the frozen centroids, erase the `vec_id % 37 == 3`
     * subjects through a Delta CHANGE DATA FEED (the corpus owner deletes
     * from a CDF-enabled keys table; the store syncs through the feed).
     * Both the once-per-JVM q272 fixture and the always-cold campaign row
-    * run THIS — they must never diverge.
+    * run THIS — they must never diverge. `base` must be fresh (empty).
     */
   private def buildCampaignStore(spark: SparkSession, dir: String,
       base: String): String = {
     import graft.sources.DeltaLog
-    val f = new java.io.File(base)
-    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
     val store = s"$base/annstore"
     val e = Tables(spark, dir, "embeddings")
     buildAnnStore(spark, store, e.filter(pmod(col("vec_id"), lit(5)) =!= 4))
@@ -713,8 +703,7 @@ object Similarity {
   }
 
   private[graft] def q272Store(spark: SparkSession, dir: String): String =
-    annStoreMemo.getOrElseUpdate(s"q272:$dir",
-      buildCampaignStore(spark, dir, graft.Tables.fixtureRoot("q272", dir)))
+    ReplayFixtures.once("q272", dir)(buildCampaignStore(spark, dir, _))
 
   /** q272 — ANN SEARCH SERVED BY THE STORE: q54's IVF probe + score over
     * the persisted index after an append and a feed-driven erasure. The
@@ -738,7 +727,7 @@ object Similarity {
     */
   def annMaintenanceCampaign(spark: SparkSession, dir: String): DataFrame =
     annSearchFrom(spark, dir,
-      buildCampaignStore(spark, dir, graft.Tables.fixtureRoot("q272camp", dir)))
+      buildCampaignStore(spark, dir, ReplayFixtures.runRoot(dir, "q272camp")))
 
   /** The REBUILD campaign — build over the full corpus, then
     * [[rebuildAnnStore]] (Lloyd update + full reassignment + pointer
@@ -748,10 +737,7 @@ object Similarity {
     * writes); the serve stage stays probe-pruned.
     */
   def annRebuildCampaign(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.fixtureRoot("q279camp", dir)
-    val f = new java.io.File(base)
-    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-    val store = s"$base/annstore"
+    val store = s"${ReplayFixtures.runRoot(dir, "q279camp")}/annstore"
     buildAnnStore(spark, store, Tables(spark, dir, "embeddings"))
     rebuildAnnStore(spark, store)
     annSearchFrom(spark, dir, store)
@@ -839,15 +825,12 @@ object Similarity {
     * step + full reassignment, cut over atomically to generation 1.
     */
   private[graft] def q279Store(spark: SparkSession, dir: String): String =
-    annStoreMemo.getOrElseUpdate(s"q279:$dir", {
-      val base = graft.Tables.fixtureRoot("q279", dir)
-      val f = new java.io.File(base)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-      val store = s"$base/annstore"
+    ReplayFixtures.once("q279", dir) { root =>
+      val store = s"$root/annstore"
       buildAnnStore(spark, store, Tables(spark, dir, "embeddings"))
       rebuildAnnStore(spark, store)
       store
-    })
+    }
 
   /** q279 — ANN SEARCH OVER A REBUILT QUANTIZER: the q272 search served
     * by generation 1 of the store — centroids RETRAINED by one
@@ -917,15 +900,12 @@ object Similarity {
     * deterministically), recall-gated cutover to generation 1.
     */
   private[graft] def q285Store(spark: SparkSession, dir: String): String =
-    annStoreMemo.getOrElseUpdate(s"q285:$dir", {
-      val base = graft.Tables.fixtureRoot("q285", dir)
-      val f = new java.io.File(base)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-      val store = s"$base/annstore"
+    ReplayFixtures.once("q285", dir) { root =>
+      val store = s"$root/annstore"
       buildAnnStore(spark, store, Tables(spark, dir, "embeddings"))
       rebuildAnnStore(spark, store, maxIters = 2, moveTol = 0.0)
       store
-    })
+    }
 
   /** q285 — ANN SEARCH OVER AN ITERATED REBUILD: q279's verb with the
     * round-18 hardening exercised end-to-end — two Lloyd rounds instead

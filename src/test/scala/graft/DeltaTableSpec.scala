@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -370,5 +372,48 @@ class DeltaTableSpec extends SparkTestBase {
     // idempotent across calls in one JVM (memoized fixture, read-only audit)
     val r2 = graft.queries.IngestOps.q214Erasure(spark, sfDir).collect()
     assert(r2.map(_.toSeq).toSeq === r1.map(_.toSeq).toSeq)
+  }
+
+  test("ReplayFixtures.once: one build per (tag, dir) in a JVM, one root") {
+    val tag = s"oncespec${System.nanoTime()}"
+    var builds = 0
+    def fixture(dir: String): String =
+      graft.queries.ReplayFixtures.once(tag, dir) { root => builds += 1; root }
+    val a = fixture(sfDir)
+    assert(fixture(sfDir) == a && builds == 1)
+    val b = fixture(s"$sfDir-other")
+    assert(b != a && builds == 2)
+    assert(fixture(sfDir) == a && fixture(s"$sfDir-other") == b && builds == 2)
+  }
+
+  test("cloned-fixture queries: two runs return identical rows and leave the " +
+      "frozen source's files untouched") {
+    import graft.queries.{IngestOps, LayoutOps}
+    def listing(root: String): Seq[(String, Long)] = {
+      val p = java.nio.file.Paths.get(root)
+      val s = java.nio.file.Files.walk(p)
+      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => p.relativize(f).toString -> java.nio.file.Files.size(f))
+        .toSeq.sorted
+      finally s.close()
+    }
+    val q264 = () => s"${IngestOps.q264Fixture(spark, sfDir)}/delta"
+    val cases: Seq[(String, () => String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] = Seq(
+      ("q239", () => IngestOps.q239Table(spark, sfDir), IngestOps.q239Compaction),
+      ("q245", () => s"${IngestOps.q245Fixture(spark, sfDir)}/delta", IngestOps.q245DeltaOptimize),
+      ("q264", q264, IngestOps.q264DeltaDeleteVectors),
+      ("q265", q264, IngestOps.q265DeltaMerge),
+      ("q266", q264, IngestOps.q266ChangeFeed),
+      ("q270", () => s"${LayoutOps.q270Fixture(spark, sfDir)}/delta", LayoutOps.q270ZorderOptimize),
+      ("q273", () => s"${IngestOps.q273Fixture(spark, sfDir)}/delta", IngestOps.q273MappedDelete))
+    cases.foreach { case (q, source, run) =>
+      val src = source()
+      val before = listing(src)
+      assert(before.exists(_._1.startsWith("_delta_log")), s"$q: $src is not a Delta table")
+      val r1 = run(spark, sfDir).collect().toSeq
+      val r2 = run(spark, sfDir).collect().toSeq
+      assert(r1.nonEmpty && r1 == r2, s"$q: a second run saw a different table")
+      assert(listing(src) == before, s"$q: the runs changed the source fixture $src")
+    }
   }
 }
