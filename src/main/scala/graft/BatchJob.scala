@@ -90,7 +90,11 @@ object BatchJob {
           coalesce(col("http_error"), col("error")).as("error"))
     }
 
-  /** Process one line-delimited file end-to-end. */
+  /** Process one line-delimited file end-to-end. A glob or directory that
+    * resolves to several files is numbered per file (each file's `rec_id`
+    * runs 1..n, [[textSourcePerFile]]); a plain file goes straight to the
+    * shuffle-free [[textSource]], with no listing first.
+    */
   def processFile(
       spark: SparkSession,
       filePath: String,
@@ -138,7 +142,11 @@ object BatchJob {
     var stored: RowBatches = null
     var restResults: Option[DataFrame] = None
     try {
-      val lines = textSource(spark, filePath)
+      val lines =
+        if (!new java.io.File(filePath).isFile &&
+          spark.read.textFile(filePath).inputFiles.length > 1)
+          textSourcePerFile(spark, filePath)
+        else textSource(spark, filePath)
       val parsed: DataFrame = parser match {
         case Parser.Csv(spec) => parseCsv(lines, spec)
         case Parser.Fw(spec)  => parseFw(lines, spec)

@@ -18,11 +18,13 @@ final case class RecData(fileName: String, rec: String, recId: Long)
   *   scan -> per-record parse/coerce -> route(SUCCESS/FAILED/ignored)
   *        -> target write + batch_status append -> run-summary agg
   *
-  * Differences by design (SURVEY.md §7): the per-record REST sink (P11) and
-  * rate limiter (P15) are non-goals — bulk columnar writes preserve the
-  * observable contract (target rows + status rows + summary counts) and are
-  * the only shape that survives 100 TB. Nothing here shuffles except the
-  * optional exact-file-order `recId` assignment.
+  * The target and status sinks are bulk columnar writes — the only shape
+  * that survives 100 TB while preserving the observable contract (target
+  * rows + status rows + summary counts). The per-record REST channel (P11)
+  * and its rate limiter (P15) live in [[RestSink]], which
+  * [[graft.BatchJob.processFile]] drives when a REST sink is configured.
+  * Nothing here shuffles except the optional per-file `recId` assignment
+  * ([[textSourcePerFile]]).
   */
 object BatchPipeline {
 
@@ -190,14 +192,10 @@ object BatchPipeline {
       .withColumn("endTimeMillis", lit(endMillis))
       .withColumn("durationMillis", lit(endMillis - startMillis))
 
-  /** P18 — lifecycle hooks around the job action (`lib/batchProcessing.js:172-193`).
-    * `onEachResult` at scale is a post-hoc scan of the status frame, not a
-    * per-row driver callback.
-    */
+  /** P18 — lifecycle hooks around the job action (`lib/batchProcessing.js:172-193`). */
   final case class Hooks(
       onStart: () => Unit = () => (),
-      onEnd: () => Unit = () => (),
-      onEachResult: Row => Unit = _ => ())
+      onEnd: () => Unit = () => ())
 
   /** End-to-end job: the minimum slice of SURVEY.md §7.3. Writes nothing;
     * callers choose sinks (parquet/Delta/JDBC `df.write`).

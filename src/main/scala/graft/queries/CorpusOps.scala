@@ -42,8 +42,11 @@ object CorpusOps {
     * quantization; Lucene's per-block impact metadata analogue), the
     * ingest artifact that lets q247 prune candidates by score upper
     * bound without touching their postings.
+    * v5: the store manifest records what each part was derived from
+    * (`maxscore/` from `postings/`); a manifest written without that
+    * record would serve a stale `maxscore/`.
     */
-  private val LexStoreFormatVersion = 4
+  private val LexStoreFormatVersion = 5
 
   /** `postings/` is hash-partitioned on the term, 64 ways: a keyword
     * query prunes to its terms' partitions at the FILE level — the
@@ -138,12 +141,11 @@ object CorpusOps {
         .withColumn("pbkt", pmod(h60(col("term")), lit(LexPostingBuckets.toLong)))
         .write.mode("overwrite").partitionBy("pbkt").parquet(s"$store/postings")
     } finally { toks.unpersist(blocking = true); () }
-    graft.table.StoreManifest.bump(store, Seq("dl", "postings"))
-    refreshMaxScores(spark, store)
     // pin the exact corpus file set this store indexes — the freshness
     // probe is listing-fingerprint equality, never mtime ordering
-    graft.table.StoreManifest.recordCorpus(store,
-      graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet"))
+    graft.table.StoreManifest.bump(store, Seq("dl", "postings"),
+      corpus = Some(s"$dir/documents.parquet"))
+    refreshMaxScores(spark, store)
   }
 
   /** (Re)compute the `maxscore/` per-term impact metadata from the
@@ -154,9 +156,9 @@ object CorpusOps {
     * pass, paid at index build / compaction cadence like a real engine's;
     * the table is vocab-sized. This IS the refresh job the incremental
     * store defers to: impacts are non-monotone in the drifting global
-    * stats, so they are recomputed here — never appended — and the
-    * read path ([[wandTopKBatchFrom]]) only trusts them when `maxscore/`
-    * is at least as new as `postings/`.
+    * stats, so they are recomputed here — never appended — and stamped
+    * as derived from `postings/`, so the manifest serves them only while
+    * no later write has moved `postings/` past them.
     */
   def refreshMaxScores(spark: SparkSession, store: String): Unit = {
     val dls = spark.read.parquet(s"$store/dl")
@@ -175,7 +177,7 @@ object CorpusOps {
       .agg(max(col("n_t")).as("df"), max(col("q")).as("max_q"))
       .withColumn("pbkt", pmod(h60(col("term")), lit(LexPostingBuckets.toLong)))
       .write.mode("overwrite").partitionBy("pbkt").parquet(s"$store/maxscore")
-    graft.table.StoreManifest.bump(store, Seq("maxscore"))
+    graft.table.StoreManifest.bump(store, Seq("maxscore"), from = Seq("postings"))
   }
 
   /** LAYOUT MAINTENANCE for an incrementally-built lexical store — the
@@ -324,42 +326,24 @@ object CorpusOps {
     * the consumer that keeps a retrieval index consistent with a table
     * that takes row-level updates and deletes, paying CHANGES-SIZED work
     * per version instead of the rebuild a snapshot diff would cost.
-    * Versions apply IN ORDER, retractions before arrivals within each
-    * (a merge's update is its preimage leaving and its postimage
-    * landing; a doc deleted at v and re-inserted at v' must survive):
-    * delete/update_preimage keys erase from `dl/` and `postings/` via
-    * the file-level copy-on-write semi-join ([[graft.table.StoreMaint
-    * .eraseKeys]] — subject keys stay a frame, never a driver list);
-    * insert/update_postimage rows append through [[appendLexStore]]
-    * (documents are immutable per incarnation, so append is merge).
-    * One impact recompute at the end — [[refreshMaxScores]]' globals
-    * drift with every slice, and stale bounds are not upper bounds.
-    * Driver state: the feed's distinct version list, checkpoint-cadence
-    * sized.
+    * [[graft.table.StoreMaint.applyFeed]] owns the version order; this
+    * store's steps: retracted keys erase from `dl/` and `postings/` via
+    * the file-level copy-on-write semi-join, arrivals append through
+    * [[appendLexStore]] (documents are immutable per incarnation, so
+    * append is merge). One impact recompute at the end —
+    * [[refreshMaxScores]]' globals drift with every slice, and stale
+    * bounds are not upper bounds.
     */
   def syncLexStoreFromFeed(spark: SparkSession, store: String,
       feed: DataFrame): Unit = {
-    val fd = feed.select(col("_commit_version"), col("_change_type"),
-        col("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val versions = fd.select(col("_commit_version")).distinct()
-        .orderBy(col("_commit_version")).collect().map(_.getLong(0))
-      versions.foreach { v =>
-        val slice = fd.filter(col("_commit_version") === v)
-        val gone = slice
-          .filter(col("_change_type").isin("delete", "update_preimage"))
-          .select(col("doc_id")).distinct()
+    graft.table.StoreMaint.applyFeed(feed, "doc_id", Seq("text"))(
+      erase = { gone =>
         graft.table.StoreMaint.eraseKeys(spark, s"$store/dl", Seq.empty,
           "doc_id", gone)
         graft.table.StoreMaint.eraseKeys(spark, s"$store/postings",
           Seq("pbkt"), "doc_id", gone)
-        val born = slice
-          .filter(col("_change_type").isin("insert", "update_postimage"))
-          .select(col("doc_id"), col("text"))
-        if (born.limit(1).count() > 0) appendLexStore(born, store)
-      }
-    } finally { fd.unpersist(); () }
+      },
+      append = appendLexStore(_, store))
     refreshMaxScores(spark, store)
   }
 
@@ -472,27 +456,15 @@ object CorpusOps {
         .select(col("term"), col("max_q"))
     }
 
-  /** One store table read back, or None when absent, disabled, or not
-    * derived from the corpus parquet's CURRENT file set. Freshness is the
-    * store manifest's recorded corpus LISTING FINGERPRINT compared to the
-    * corpus's current one ([[graft.table.StoreManifest]]) — pure LIST
-    * metadata, valid on object storage where mtimes carry no ordering
-    * contract; a store without a manifest is never trusted. `maxscore/`
-    * is additionally served only while the manifest stamps it at least as
-    * new as `postings/`: impacts computed before a later append are not
-    * valid upper bounds, so every reader falls back to its exact path.
+  /** One store table read back when the kill switch is on and the store
+    * manifest serves it for the corpus's CURRENT file set
+    * ([[graft.table.StoreManifest.servable]]); `maxscore/` additionally
+    * only while no append has moved `postings/` past it.
     */
-  private def lexStored(spark: SparkSession, dir: String, part: String): Option[DataFrame] = {
-    val store = lexStorePathFor(dir)
-    val path = s"$store/$part"
-    if (lexStoreEnabled && new java.io.File(s"$path/_SUCCESS").exists() &&
-      (part != "maxscore" ||
-        graft.table.StoreManifest.partFresh(store, "maxscore", "postings")) &&
-      graft.table.StoreManifest.corpusMatches(store,
-        graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet")))
-      Some(spark.read.parquet(path))
-    else None
-  }
+  private def lexStored(spark: SparkSession, dir: String, part: String): Option[DataFrame] =
+    Option.when(lexStoreEnabled)(lexStorePathFor(dir))
+      .flatMap(graft.table.StoreManifest.servable(_, part, Some(s"$dir/documents.parquet")))
+      .map(spark.read.parquet(_))
 
   /** The corpus (doc_id, text) scan for the STORE-OFF tokenize fallbacks,
     * fanned out when (and only when) its physical split count is below the
@@ -1051,12 +1023,10 @@ object CorpusOps {
     * incrementally-built / compacted / erased lexical store rather than
     * the corpus dir's canonical fixture): `dl/` and the query terms'
     * `postings/` partitions feed the identical pruning protocol. The
-    * `maxscore/` metadata is trusted ONLY when the store MANIFEST stamps
-    * it at least as new as `postings/` ([[graft.table.StoreManifest]] —
-    * an integer compare, never filesystem mtimes, which object storage
-    * does not order) — impacts are non-monotone in
-    * the global stats, so bounds computed before a later append are NOT
-    * valid upper bounds; a stale table falls back to deriving exact
+    * `maxscore/` metadata is read ONLY when the store manifest serves it
+    * ([[graft.table.StoreManifest.servable]]) — impacts are non-monotone
+    * in the global stats, so bounds computed before a later append are
+    * NOT valid upper bounds; a stale table falls back to deriving exact
     * bounds from the current postings (same values the refresh would
     * write), and [[compactLexStore]] / [[refreshMaxScores]] restores the
     * store-served prune.
@@ -1075,21 +1045,18 @@ object CorpusOps {
       case None => posts.select(col("doc_id"), col("term"), col("tf"))
         .join(broadcast(qt.select(col("term")).distinct()), Seq("term"), "leftsemi")
     }
-    val maxs =
-      if (graft.table.StoreManifest.partFresh(store, "maxscore", "postings"))
-        Some {
-          val m = spark.read.parquet(s"$store/maxscore")
-          literalTerms match {
-            case Some(ts) =>
-              val bkts = ts.map(lexBucketOf).distinct
-              m.filter(col("pbkt").isin(bkts: _*) && col("term").isin(ts: _*))
-                .select(col("term"), col("max_q"))
-            case None => m
-              .join(broadcast(qt.select(col("term")).distinct()), Seq("term"), "leftsemi")
-              .select(col("term"), col("max_q"))
-          }
-        }
-      else None
+    val maxs = graft.table.StoreManifest.servable(store, "maxscore").map { p =>
+      val m = spark.read.parquet(p)
+      literalTerms match {
+        case Some(ts) =>
+          val bkts = ts.map(lexBucketOf).distinct
+          m.filter(col("pbkt").isin(bkts: _*) && col("term").isin(ts: _*))
+            .select(col("term"), col("max_q"))
+        case None => m
+          .join(broadcast(qt.select(col("term")).distinct()), Seq("term"), "leftsemi")
+          .select(col("term"), col("max_q"))
+      }
+    }
     wandCore(docs, tfq0, qt, maxs, k)
   }
 
@@ -1219,22 +1186,24 @@ object CorpusOps {
     val queries = spark.read.parquet(s"$out/queries")
     wandTopKBatch(spark, dir, queries)._2
       .write.mode("overwrite").parquet(s"$out/topk")
-    graft.table.StoreManifest.bump(out, Seq("queries", "topk"))
     // pin the corpus the ranking was computed over: a consumer must be
     // able to tell "this topk ranks THAT corpus" without trusting mtimes
-    graft.table.StoreManifest.recordCorpus(out,
-      graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet"))
+    graft.table.StoreManifest.bump(out, Seq("queries", "topk"),
+      corpus = Some(s"$dir/documents.parquet"))
   }
 
-  /** Refuse artifacts whose recorded corpus fingerprint no longer matches
-    * the corpus — a ranking over yesterday's corpus silently serving
-    * today's queries is wrong results, not slow ones.
+  /** One fleet artifact read back; refused when the store manifest does
+    * not serve it for the corpus's current file set — a ranking over
+    * yesterday's corpus silently serving today's queries is wrong
+    * results, not slow ones.
     */
-  private def requireFleetArtifactsFresh(dir: String, artifacts: String): Unit =
-    require(graft.table.StoreManifest.corpusMatches(artifacts,
-        graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet")),
-      s"fleet artifacts at $artifacts are STALE: the corpus at $dir has " +
-        "changed since they were materialized — re-run fleetArtifacts")
+  private def fleetArtifact(spark: SparkSession, dir: String,
+      artifacts: String, part: String): DataFrame =
+    spark.read.parquet(graft.table.StoreManifest
+      .servable(artifacts, part, Some(s"$dir/documents.parquet"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"fleet artifacts at $artifacts are STALE: the corpus at $dir has " +
+          "changed since they were materialized — re-run fleetArtifacts")))
 
   /** Brute restatement of the fleet: the same derived queries (row_number
     * over (df DESC, term) restates TakeOrdered-then-rank exactly), every
@@ -1442,7 +1411,8 @@ object CorpusOps {
 
   /** [[q257FleetEval]] served from MATERIALIZED fleet artifacts (see
     * [[fleetArtifacts]]): the scorecard re-derives nothing — queries and
-    * the ranked frame come off disk, only the label joins run. The cold
+    * the ranked frame come off disk ([[fleetArtifact]] refuses stale
+    * ones), only the label joins run. The cold
     * entry point above stays the bench surface (the cold-sweep honesty
     * rule); this is the production shape, where one ranked frame feeds
     * scorecard + snippets.
@@ -1450,8 +1420,8 @@ object CorpusOps {
   def q257FleetEvalFrom(spark: SparkSession, dir: String,
       artifacts: String): DataFrame =
     fleetEvalCore(spark, dir,
-      spark.read.parquet(s"$artifacts/queries").select(col("query_id"), col("term")),
-      spark.read.parquet(s"$artifacts/topk"))
+      fleetArtifact(spark, dir, artifacts, "queries").select(col("query_id"), col("term")),
+      fleetArtifact(spark, dir, artifacts, "topk"))
 
   private def fleetEvalCore(spark: SparkSession, dir: String,
       qt: DataFrame, topk: DataFrame): DataFrame = {
@@ -1588,8 +1558,8 @@ object CorpusOps {
   def q258FleetSnippetsFrom(spark: SparkSession, dir: String,
       artifacts: String): DataFrame =
     fleetSnippetsCore(spark, dir,
-      spark.read.parquet(s"$artifacts/queries").select(col("query_id"), col("term")),
-      spark.read.parquet(s"$artifacts/topk"))
+      fleetArtifact(spark, dir, artifacts, "queries").select(col("query_id"), col("term")),
+      fleetArtifact(spark, dir, artifacts, "topk"))
 
   private def fleetSnippetsCore(spark: SparkSession, dir: String,
       qt: DataFrame, topk: DataFrame): DataFrame = {
@@ -1739,14 +1709,12 @@ object CorpusOps {
     * (see [[fleetArtifacts]]): the spans come from
     * [[q258FleetSnippetsFrom]]'s stored-ranking path, so the heaviest
     * bench row's production shape re-derives NO fleet DAG — one ranked
-    * frame feeds scorecard, spans and page text. Freshness-gated on the
-    * recorded corpus fingerprint (stale artifacts REFUSE).
+    * frame feeds scorecard, spans and page text. Stale artifacts REFUSE
+    * ([[fleetArtifact]]).
     */
   def q262FleetSnippetTextFrom(spark: SparkSession, dir: String,
-      artifacts: String): DataFrame = {
-    requireFleetArtifactsFresh(dir, artifacts)
+      artifacts: String): DataFrame =
     snippetTextCore(spark, dir, q258FleetSnippetsFrom(spark, dir, artifacts))
-  }
 
   private def snippetTextCore(spark: SparkSession, dir: String,
       spans: DataFrame): DataFrame = {

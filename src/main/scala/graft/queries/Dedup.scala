@@ -227,16 +227,18 @@ object Dedup {
 
   def minhashCandidates(spark: SparkSession, dir: String, maxBucket: Int = 256): DataFrame = {
     candCache.getOrBuild((spark, dir, maxBucket))(
-      storedCandidates(spark, dir, maxBucket)
+      storedPart(spark, dir, maxBucket, "pairs")
         .getOrElse(buildMinhashCandidates(spark, dir, maxBucket))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** Bump when the signature pipeline (hash family, shingle n, K/BANDS/ROWS,
-    * pair schema) changes shape — a store written by older code must read as
-    * ABSENT, never as silently-wrong candidates.
+    * pair schema) or what the store manifest records changes shape — a
+    * store written by older code must read as ABSENT, never as
+    * silently-wrong candidates. v3: the manifest records `pairs/` as
+    * derived from `sigs/` and `bands/`.
     */
-  private val StoreFormatVersion = 2
+  private val StoreFormatVersion = 3
 
   /** On-disk signature store root for one (corpus, cap): the SURVEY §9
     * artifact. `sigs/` is the per-doc MinHash signature table; `bands/` the
@@ -287,9 +289,9 @@ object Dedup {
       .select(col("band"), col("key"), col("doc_id"))
     pairCandidates(sigs, buckets)
       .write.mode("overwrite").parquet(s"$store/pairs")
-    graft.table.StoreManifest.bump(store, Seq("sigs", "bands", "pairs"))
-    graft.table.StoreManifest.recordCorpus(store,
-      graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet"))
+    graft.table.StoreManifest.bump(store, Seq("sigs", "bands"))
+    graft.table.StoreManifest.bump(store, Seq("pairs"), from = Seq("sigs", "bands"),
+      corpus = Some(s"$dir/documents.parquet"))
   }
 
   /** Append ONE micro-batch of documents to an incremental signature store
@@ -344,52 +346,38 @@ object Dedup {
       pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit = {
     graft.table.StoreMaint.eraseWhere(spark, s"$store/sigs", Seq.empty, pred(col("doc_id")))
     graft.table.StoreMaint.eraseWhere(spark, s"$store/bands", Seq("band"), pred(col("doc_id")))
-    if (new java.io.File(s"$store/pairs").isDirectory)
+    if (graft.table.Fs.isDir(s"$store/pairs"))
       graft.table.StoreMaint.eraseWhere(spark, s"$store/pairs", Seq.empty,
         pred(col("id_a")) || pred(col("id_b")))
   }
 
   /** CDC-DRIVEN SYNC of the signature store — [[graft.queries.CorpusOps
-    * .syncLexStoreFromFeed]]'s contract on the dedup artifact: versions
-    * in order, retractions before arrivals (a deleted-then-reinserted
-    * doc survives with its NEW signature), delete/update_preimage keys
-    * erasing from `sigs/`, `bands/`, and a materialized `pairs/` (a pair
+    * .syncLexStoreFromFeed]]'s contract on the dedup artifact, through the
+    * same [[graft.table.StoreMaint.applyFeed]] loop (a deleted-then-
+    * reinserted doc survives with its NEW signature): retracted keys
+    * erase from `sigs/`, `bands/`, and a materialized `pairs/` (a pair
     * dies when EITHER side retracts) via the frame-keyed copy-on-write
-    * [[graft.table.StoreMaint.eraseKeys]]; insert/update_postimage rows
-    * re-hash through [[appendSigStore]] — an UPDATED doc's signature is
-    * recomputed from its new text, not patched. Per-version work is
-    * changes-sized; the store never reads the table.
+    * [[graft.table.StoreMaint.eraseKeys]]; arrivals re-hash through
+    * [[appendSigStore]] — an UPDATED doc's signature is recomputed from
+    * its new text, not patched. Per-version work is changes-sized; the
+    * store never reads the table.
     */
   def syncSigStoreFromFeed(spark: SparkSession, store: String,
-      feed: DataFrame): Unit = {
-    val fd = feed.select(col("_commit_version"), col("_change_type"),
-        col("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val versions = fd.select(col("_commit_version")).distinct()
-        .orderBy(col("_commit_version")).collect().map(_.getLong(0))
-      versions.foreach { v =>
-        val slice = fd.filter(col("_commit_version") === v)
-        val gone = slice
-          .filter(col("_change_type").isin("delete", "update_preimage"))
-          .select(col("doc_id")).distinct()
+      feed: DataFrame): Unit =
+    graft.table.StoreMaint.applyFeed(feed, "doc_id", Seq("text"))(
+      erase = { gone =>
         graft.table.StoreMaint.eraseKeys(spark, s"$store/sigs", Seq.empty,
           "doc_id", gone)
         graft.table.StoreMaint.eraseKeys(spark, s"$store/bands", Seq("band"),
           "doc_id", gone)
-        if (new java.io.File(s"$store/pairs").isDirectory) {
+        if (graft.table.Fs.isDir(s"$store/pairs")) {
           graft.table.StoreMaint.eraseKeys(spark, s"$store/pairs", Seq.empty,
             "id_a", gone.withColumnRenamed("doc_id", "id_a"))
           graft.table.StoreMaint.eraseKeys(spark, s"$store/pairs", Seq.empty,
             "id_b", gone.withColumnRenamed("doc_id", "id_b"))
         }
-        val born = slice
-          .filter(col("_change_type").isin("insert", "update_postimage"))
-          .select(col("doc_id"), col("text"))
-        if (born.limit(1).count() > 0) appendSigStore(born, store)
-      }
-    } finally { fd.unpersist(); () }
-  }
+      },
+      append = appendSigStore(_, store))
 
   /** Candidate pairs from an incrementally-built store: the bucket cap and
     * bucket-local pairing run over the ACCUMULATED sigs/bands tables —
@@ -420,27 +408,15 @@ object Dedup {
       .select(col("band"), col("key"), col("doc_id"))
   }
 
-  /** One store table read back, or None when the store is absent, disabled,
-    * or not derived from the corpus parquet's CURRENT file set (a
-    * rewritten corpus must never serve stale state — same freshness
-    * contract a warehouse table carries). The probe is the store
-    * manifest's recorded corpus LISTING FINGERPRINT compared to the
-    * corpus's current one ([[graft.table.StoreManifest]]) — pure LIST
-    * metadata, valid on object storage where mtimes carry no ordering
-    * contract; a store without a manifest is never trusted.
+  /** One store table read back when the kill switch is on and the store
+    * manifest serves it for the corpus's CURRENT file set
+    * ([[graft.table.StoreManifest.servable]]) — a rewritten corpus must
+    * never serve stale state, the same contract a warehouse table carries.
     */
-  private def storedPart(spark: SparkSession, dir: String, maxBucket: Int, part: String): Option[DataFrame] = {
-    val store = signatureStorePathFor(dir, maxBucket)
-    val path = s"$store/$part"
-    if (signatureStoreEnabled && new java.io.File(s"$path/_SUCCESS").exists() &&
-      graft.table.StoreManifest.corpusMatches(store,
-        graft.table.StoreManifest.corpusFingerprint(s"$dir/documents.parquet")))
-      Some(spark.read.parquet(path))
-    else None
-  }
-
-  private def storedCandidates(spark: SparkSession, dir: String, maxBucket: Int): Option[DataFrame] =
-    storedPart(spark, dir, maxBucket, "pairs")
+  private def storedPart(spark: SparkSession, dir: String, maxBucket: Int, part: String): Option[DataFrame] =
+    Option.when(signatureStoreEnabled)(signatureStorePathFor(dir, maxBucket))
+      .flatMap(graft.table.StoreManifest.servable(_, part, Some(s"$dir/documents.parquet")))
+      .map(spark.read.parquet(_))
 
   /** The corpus signature table: the store's `sigs/` when fresh (hash once
     * per INGEST, the artifact's whole point), else one in-session pass.

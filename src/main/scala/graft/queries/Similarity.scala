@@ -311,7 +311,8 @@ object Similarity {
     cent.write.mode("overwrite").parquet(s"$store/centroids")
     assignLists(base, spark.read.parquet(s"$store/centroids"))
       .write.mode("overwrite").partitionBy("list").parquet(s"$store/postings")
-    graft.table.StoreManifest.bump(store, Seq("centroids", "postings"))
+    graft.table.StoreManifest.bump(store, Seq("centroids"))
+    graft.table.StoreManifest.bump(store, Seq("postings"), from = Seq("centroids"))
     ()
   }
 
@@ -558,7 +559,8 @@ object Similarity {
     }
     graft.table.Fs.replaceAtomic(s"$store/${sourceStampName(gen)}",
       sourceNames.sorted.mkString("\n").getBytes("UTF-8"))
-    graft.table.StoreManifest.bump(store, Seq(cPart, pPart))
+    graft.table.StoreManifest.bump(store, Seq(cPart))
+    graft.table.StoreManifest.bump(store, Seq(pPart), from = Seq(cPart))
     graft.table.Fs.replaceAtomic(s"$store/_active_gen",
       gen.toString.getBytes("UTF-8"))
     gen
@@ -746,9 +748,10 @@ object Similarity {
   private[graft] def annSearchFrom(spark: SparkSession, dir: String,
       store: String): DataFrame = {
     val (cPart, pPart) = annGenParts(annActiveGen(store))
-    require(graft.table.StoreManifest.partFresh(store, pPart, cPart),
-      s"ANN store $store: $pPart is STALE relative to $cPart — " +
-        "reassign (rebuild or re-append) before serving")
+    val pPath = graft.table.StoreManifest.servable(store, pPart).getOrElse(
+      throw new IllegalArgumentException(
+        s"ANN store $store: $pPart is STALE relative to $cPart (or unfinished) — " +
+          "reassign (rebuild or re-append) before serving"))
     val cent = spark.read.parquet(s"$store/$cPart")
     val probes = ivfProbes(spark, dir, 2, Some(cent))
     val lists = probes.select(col("label").cast("long")).distinct()
@@ -758,7 +761,7 @@ object Similarity {
     // must serve an empty list, not throw "unable to infer schema", so
     // dirs qualify on holding ≥1 parquet file and zero survivors return
     // the typed empty top-k
-    val dirs = lists.map(l => s"$store/$pPart/list=$l")
+    val dirs = lists.map(l => s"$pPath/list=$l")
       .filter(d => graft.table.Fs.listFilesRecursive(d)
         .exists(_._1.endsWith(".parquet")))
     if (dirs.isEmpty)
@@ -773,7 +776,7 @@ object Similarity {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("cosine",
             org.apache.spark.sql.types.DoubleType))))
-    val postings = spark.read.option("basePath", s"$store/$pPart")
+    val postings = spark.read.option("basePath", pPath)
       .parquet(dirs.toIndexedSeq: _*)
     rankTop5(postings.join(broadcast(probes), col("list") === col("label"))
       .filter(col("vec_id") =!= col("query_id"))

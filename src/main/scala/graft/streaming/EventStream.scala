@@ -378,36 +378,25 @@ object EventStream {
     * watch a directory for line files, parse each record with the fidelity
     * CSV parser, route, and (caller-side) sink status + data. Replaces the
     * pause/resume reader + Bottleneck limiter with `maxFilesPerTrigger`
-    * ingest throttling; per-record error capture is identical to batch
-    * (same pure parse function), so batch results oracle the stream.
-    * `recId` is per-batch monotonic only — exact file-order ids are a
-    * batch-mode guarantee (documented divergence).
+    * ingest throttling; records go through the batch row builder
+    * ([[graft.ingest.BatchPipeline.parseCsv]]), so batch results oracle
+    * the stream. Every record carries `_file = "stream"` and `_rec_id = 0`
+    * — exact file-order ids are a batch-mode guarantee (documented
+    * divergence).
     */
   def csvIngestStream(
       spark: SparkSession,
       dir: String,
       spec: graft.ingest.Parsers.CsvSpec,
       maxFilesPerTrigger: Int = 16): DataFrame = {
-    import org.apache.spark.sql.Row
+    import spark.implicits._
     import graft.ingest.{BatchPipeline, RecData}
     val lines = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(dir)
-    val types = spec.types.getOrElse(Vector.fill(spec.headers.length)("string"))
-    val schema = BatchPipeline.schemaFor(spec.headers, types)
-    val parse = graft.ingest.Parsers.parseCsvLine(spec) _
-    val parsed = lines.select(col("value")).as(org.apache.spark.sql.Encoders.STRING)
-      .map { line =>
-        val p = parse(line)
-        val vals = p.fields.map {
-          case Some(graft.ingest.Parsers.SVal(s)) => s
-          case Some(graft.ingest.Parsers.NVal(d)) => d
-          case Some(graft.ingest.Parsers.BVal(b)) => b
-          case None => null
-        }
-        Row.fromSeq("stream" +: 0L +: vals :+ p.error.orNull)
-      }(org.apache.spark.sql.Encoders.row(schema))
-    BatchPipeline.route(parsed)
+      .select(lit("stream").as("fileName"), col("value").as("rec"), lit(0L).as("recId"))
+      .as[RecData]
+    BatchPipeline.route(BatchPipeline.parseCsv(lines, spec))
   }
 
   /** The reference's ENTIRE job lifecycle as an unbounded stream: watch a

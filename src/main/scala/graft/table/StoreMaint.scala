@@ -1,19 +1,26 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Layout + compliance maintenance for the engine's derived parquet
-  * stores (the lexical store's `dl/`/`postings/`/`maxscore/`, the
-  * signature store's `sigs/`/`bands/`/`pairs/`): file-level copy-on-write
-  * erasure and bin-packed small-file compaction.
+/** Maintenance verbs for the engine's derived parquet stores (the lexical
+  * store's `dl/`/`postings/`/`maxscore/`, the signature store's
+  * `sigs/`/`bands/`/`pairs/`, the ANN store's list-partitioned
+  * postings): file-level copy-on-write erasure, bin-packed small-file
+  * compaction, and the change-feed apply loop that drives a store's
+  * erase and append steps from a Delta change data feed.
   *
-  * Both operate at FILE granularity, the same unit every lakehouse
-  * maintenance protocol uses (Delta OPTIMIZE / GDPR delete, Iceberg
-  * rewrite_data_files): a rewrite touches only the files that need it,
-  * every untouched file stays byte-identical in place, and the data pass
-  * is a distributed Spark job — the driver handles only the file
-  * MANIFEST (the listing), never rows.
+  * Every verb that rewrites a part re-stamps it in the store's
+  * [[StoreManifest]] ([[StoreManifest.bumpPart]]), so a part recorded as
+  * derived from the rewritten one stops being served until its own
+  * writer refreshes it; the verbs never decide what may be read.
+  *
+  * Erasure and compaction operate at FILE granularity, the same unit
+  * every lakehouse maintenance protocol uses (Delta OPTIMIZE / GDPR
+  * delete, Iceberg rewrite_data_files): a rewrite touches only the files
+  * that need it, every untouched file stays byte-identical in place, and
+  * the data pass is a distributed Spark job — the driver handles only the
+  * file MANIFEST (the listing), never rows.
   *
   * All filesystem verbs route through [[Fs]] (the Hadoop `FileSystem`
   * seam): publication here is staged-file move-in + candidate delete —
@@ -37,6 +44,37 @@ object StoreMaint {
 
   private def touchSuccess(path: String): Unit =
     Fs.touch(Fs.resolve(path, "_SUCCESS"))
+
+  /** CHANGE-FEED APPLY: replay a Delta change data feed
+    * ([[graft.sources.DeltaLog.readChangeFeed]]) into a derived store one
+    * commit version at a time, IN ORDER, and within each version
+    * RETRACTIONS BEFORE ARRIVALS: the version's `delete`/`update_preimage`
+    * keys go to `erase` (one column, distinct `key`s; called for every
+    * version) before its `insert`/`update_postimage` rows (`key` +
+    * `payload` columns) go to `append` (skipped when there are none). A
+    * merge's update is its preimage leaving and its postimage landing,
+    * and a key deleted at v and re-inserted at v' must survive — both
+    * hold only in this order. Each store passes its own steps; the feed
+    * is persisted for the walk, and driver state is its distinct version
+    * list, checkpoint-cadence sized.
+    */
+  def applyFeed(feed: DataFrame, key: String, payload: Seq[String])(
+      erase: DataFrame => Unit, append: DataFrame => Unit): Unit = {
+    val fd = feed.select((Seq("_commit_version", "_change_type", key) ++ payload).map(col): _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val versions = fd.select(col("_commit_version")).distinct()
+        .orderBy(col("_commit_version")).collect().map(_.getLong(0))
+      versions.foreach { v =>
+        val slice = fd.filter(col("_commit_version") === v)
+        erase(slice.filter(col("_change_type").isin("delete", "update_preimage"))
+          .select(col(key)).distinct())
+        val born = slice.filter(col("_change_type").isin("insert", "update_postimage"))
+          .select((key +: payload).map(col): _*)
+        if (born.limit(1).count() > 0) append(born)
+      }
+    } finally { fd.unpersist(); () }
+  }
 
   /** FILE-LEVEL COPY-ON-WRITE ERASURE: remove every row matching `hit`
     * from the parquet table at `path`, rewriting ONLY the files that
@@ -96,7 +134,7 @@ object StoreMaint {
     * copy-on-write publish: only files holding a subject's rows rewrite.
     */
   def eraseKeys(spark: SparkSession, path: String, partitionCols: Seq[String],
-      keyCol: String, keys: org.apache.spark.sql.DataFrame): Long = {
+      keyCol: String, keys: DataFrame): Long = {
     if (!Fs.isDir(path)) return 0L
     val k = keys.select(col(keyCol)).distinct()
     val hitFiles = spark.read.parquet(path)
@@ -120,7 +158,7 @@ object StoreMaint {
     */
   private def cowPublish(path: String, partitionCols: Seq[String],
       hitFiles: Seq[String],
-      survivors: org.apache.spark.sql.DataFrame): Long = {
+      survivors: DataFrame): Long = {
     val staging = path + ".cow"
     Fs.deleteRecursive(staging)
     val w = survivors.write.mode("overwrite")

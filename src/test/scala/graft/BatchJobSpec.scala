@@ -61,6 +61,27 @@ class BatchJobSpec extends SparkTestBase {
     assert(store.current(summary.runId).get.status == "FAILED")
   }
 
+  test("processFile: a two-file glob numbers rec_id 1..n within each file") {
+    val dir = Files.createTempDirectory("graft-job-glob")
+    Files.write(dir.resolve("a.csv"), (1 to 30).map(i => s"a$i,$i").mkString("\n").getBytes)
+    Files.write(dir.resolve("b.csv"), (1 to 70).map(i => s"b$i,$i").mkString("\n").getBytes)
+    val sinks = BatchJob.Sinks(
+      targetPath = Some(dir.resolve("target").toString),
+      statusPath = Some(dir.resolve("status").toString))
+    val summary = BatchJob.processFile(spark, dir.resolve("*.csv").toString,
+      BatchJob.Parser.Csv(CsvSpec(Vector("key", "n"), Some(Vector("string", "number")))),
+      sinks)
+    assert(summary.successCount == 100)
+    val byFile = spark.read.parquet(sinks.statusPath.get)
+      .select(col("file_name"), col("rec_id")).collect()
+      .groupBy(_.getString(0).split('/').last)
+      .map { case (f, rs) => f -> rs.map(_.getLong(1)).sorted.toSeq }
+    assert(byFile == Map("a.csv" -> (1L to 30L), "b.csv" -> (1L to 70L)))
+    // line n of each file holds key <file letter>n
+    spark.read.parquet(sinks.targetPath.get).select(col("key"), col("_rec_id"))
+      .collect().foreach(r => assert(r.getString(0).drop(1).toLong == r.getLong(1), r))
+  }
+
   test("processFile: custom parser with ignores, append across two runs") {
     val dir = Files.createTempDirectory("graft-job2")
     val in = dir.resolve("batch.txt")

@@ -192,12 +192,11 @@ class CorpusOpsSpec extends SparkTestBase {
       .withColumn("text", concat(lit("zzstale zzstale "), col("text")))
     b.write.mode("append").parquet(s"$d/documents.parquet")
     CorpusOps.appendLexStore(b, store)
-    StoreManifest.recordCorpus(store,
-      StoreManifest.corpusFingerprint(s"$d/documents.parquet"))
-    assert(StoreManifest.corpusMatches(store,
-      StoreManifest.corpusFingerprint(s"$d/documents.parquet")),
+    val corpus = Some(s"$d/documents.parquet")
+    StoreManifest.bump(store, Nil, corpus = corpus)
+    assert(StoreManifest.servable(store, "postings", corpus).isDefined,
       "the appended store must still be trusted for postings/")
-    assert(!StoreManifest.partFresh(store, "maxscore", "postings"))
+    assert(StoreManifest.servable(store, "maxscore", corpus).isEmpty)
     def fleet() = CorpusOps.q253Queries(spark, d).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     val served = fleet()
@@ -567,7 +566,8 @@ class CorpusOpsSpec extends SparkTestBase {
       .toString + "/fleet"
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(out), new java.io.File(stale))
-    graft.table.StoreManifest.recordCorpus(stale, "not-the-corpus")
+    graft.table.StoreManifest.bump(stale, Nil,
+      corpus = Some(s"$sfDir/embeddings.parquet"))
     val e = intercept[IllegalArgumentException] {
       CorpusOps.q262FleetSnippetTextFrom(spark, sfDir, stale)
     }

@@ -2337,6 +2337,11 @@ class MockCapFs extends org.apache.hadoop.fs.FilterFileSystem(
       : org.apache.hadoop.fs.FSDataOutputStream =
     super.create(local(f), permission, overwrite, bufferSize, replication,
       blockSize, progress)
+  // the read-side probes a store gate makes (exists/isFile, manifest read)
+  override def getFileStatus(f: org.apache.hadoop.fs.Path)
+      : org.apache.hadoop.fs.FileStatus = super.getFileStatus(local(f))
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = super.open(local(f), bufferSize)
   override def hasPathCapability(path: org.apache.hadoop.fs.Path,
       capability: String): Boolean =
     capability == "fs.option.create.conditional.overwrite" && MockCapFs.capable

@@ -94,6 +94,53 @@ class StoreMaintSpec extends SparkTestBase {
       "a rewritten corpus must invalidate the store even with backdated mtimes")
   }
 
+  test("applyFeed: a lexical and a signature store synced from a change feed " +
+      "(insert, update, delete, delete then re-insert) equal stores built " +
+      "from the final table") {
+    import graft.sources.DeltaLog
+    val base = Files.createTempDirectory("graft_feedsync").toString
+    val delta = s"$base/delta"
+    val d = docs.filter(col("doc_id") < 60)
+    DeltaLog.commitAppend(delta, d)                                     // v0
+    DeltaLog.setTableProperties(delta,
+      Map("delta.enableChangeDataFeed" -> "true"))                      // v1
+    DeltaLog.deleteWhere(spark, delta, pmod(col("doc_id"), lit(3)) === 0) // v2
+    // %5 docs update; the %5 ∧ %3 ones were deleted at v2 and come back;
+    // the shifted %9 docs are new
+    val mx = d.agg(max(col("doc_id"))).head.getLong(0)
+    val source = d.filter(pmod(col("doc_id"), lit(5)) === 0)
+      .withColumn("text", concat(lit("U:"), col("text")))
+      .unionByName(d.filter(pmod(col("doc_id"), lit(9)) === 0)
+        .withColumn("doc_id", col("doc_id") + lit(mx + 1)))
+    val (v3, _, _) = DeltaLog.mergeInto(spark, delta, source, Seq("doc_id"))
+    val feed = DeltaLog.readChangeFeed(spark, delta, -1L, v3)
+    assert(feed.select(col("_change_type")).distinct().collect().map(_.getString(0)).toSet ==
+      Set("insert", "delete", "update_preimage", "update_postimage"))
+    val fin = DeltaLog.read(spark, delta).select(col("doc_id"), col("text"))
+    assert(fin.filter(col("doc_id") === 15L).count() == 1L,
+      "a doc deleted at v2 and merged back at v3 must be live")
+    def rows(store: String, part: String): Seq[String] =
+      spark.read.parquet(s"$store/$part").collect().map(_.toString).sorted.toSeq
+
+    val lexSynced = s"$base/lex_synced"
+    CorpusOps.syncLexStoreFromFeed(spark, lexSynced, feed)
+    val lexDirect = s"$base/lex_direct"
+    CorpusOps.appendLexStore(fin, lexDirect)
+    CorpusOps.refreshMaxScores(spark, lexDirect)
+    Seq("dl", "postings", "maxscore").foreach { part =>
+      assert(rows(lexSynced, part) == rows(lexDirect, part), s"lexical store $part")
+    }
+    assert(graft.table.StoreManifest.servable(lexSynced, "maxscore").isDefined)
+
+    val sigSynced = s"$base/sig_synced"
+    Dedup.syncSigStoreFromFeed(spark, sigSynced, feed)
+    val sigDirect = s"$base/sig_direct"
+    Dedup.appendSigStore(fin, sigDirect)
+    Seq("sigs", "bands").foreach { part =>
+      assert(rows(sigSynced, part) == rows(sigDirect, part), s"signature store $part")
+    }
+  }
+
   test("eraseWhere: rows where the predicate evaluates to NULL are KEPT, " +
       "even when their file is rewritten for other rows") {
     val dir = Files.createTempDirectory("graft_erase_null").toString + "/t"
@@ -448,7 +495,7 @@ class StoreMaintSpec extends SparkTestBase {
       graft.table.Fs.isDir(s"$store/postings"),
       "the rebuild must not destroy the previous generation")
     // g1 postings were reassigned against g1 centroids: manifest-fresh
-    assert(graft.table.StoreManifest.partFresh(store, "postings-g1", "centroids-g1"))
+    assert(graft.table.StoreManifest.servable(store, "postings-g1").isDefined)
     // the Lloyd step conserves vectors: g1 postings hold exactly the g0 set
     val g0 = spark.read.parquet(s"$store/postings").select(col("vec_id"))
     val g1 = spark.read.parquet(s"$store/postings-g1").select(col("vec_id"))
