@@ -4,13 +4,15 @@ import java.util.UUID
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ingest.BatchPipeline._
 import graft.ingest.Parsers.{CsvSpec, FwSpec}
-import graft.ingest.{BatchConfig, RecData}
+import graft.ingest.{BatchConfig, ProgressReporter, RecData, RestSink}
 import graft.operators.RowBatches
+import graft.table.Fs
 
 /** The reference's one public API, re-expressed:
   * `processFile(filePath, options, jobService, cb)`
@@ -27,6 +29,10 @@ import graft.operators.RowBatches
   *   - fatal-vs-record errors     -> config errors throw here (driver-side,
   *     before any task runs); data errors land in BatchStatus and never
   *     abort the run (`README.md:100-101` contract)
+  *
+  * The job itself is [[ingest]], everything after the line source. It runs
+  * once per [[processFile]] call and once per micro-batch of
+  * [[graft.streaming.EventStream.jobStream]].
   */
 object BatchJob {
 
@@ -68,16 +74,18 @@ object BatchJob {
       targetPath: Option[String] = None, // parsed SUCCESS records
       statusPath: Option[String] = None, // per-record BatchStatus audit
       runPath: Option[String] = None,    // one-row BatchRun summary
-      rest: Option[graft.ingest.RestSink.RestOptions] = None, // P11 per-record REST channel
+      rest: Option[RestSink.RestOptions] = None, // P11 per-record REST channel
       jdbc: Option[JdbcSink] = None)     // external-DB target channel
+
+  /** A run's record counters, as the BatchRun row carries them. */
+  private[graft] final case class Counts(total: Long, success: Long, failure: Long, ignored: Long)
 
   /** Fold per-record HTTP outcomes into BatchStatus rows: the REST
     * channel's code/text/error win over the parse-stage values, exactly
     * like the reference counts `statusCode === 200` per record
-    * (`lib/batchProcessing.js:679,700`). Shared by the batch path and the
-    * streaming foreachBatch path so batch runs oracle the stream.
+    * (`lib/batchProcessing.js:679,700`).
     */
-  def statusWithHttp(base: DataFrame, restResults: Option[DataFrame]): DataFrame =
+  private def statusWithHttp(base: DataFrame, restResults: Option[DataFrame]): DataFrame =
     restResults.fold(base) { r =>
       base.join(
           r.select(col("rec_id"),
@@ -90,9 +98,102 @@ object BatchJob {
           coalesce(col("http_error"), col("error")).as("error"))
     }
 
-  /** Process one line-delimited file end-to-end. A glob or directory that
-    * resolves to several files is numbered per file (each file's `rec_id`
-    * runs 1..n, [[textSourcePerFile]]); a plain file goes straight to the
+  /** The job after its line source: parse, route, and every sink of
+    * `sinks` (REST, target, JDBC, status), counting through an
+    * `Observation` on the status write. Every setting comes from `config`.
+    * The REST POSTs carry `<runId>:<file>:<recId>` as their
+    * Idempotency-Key: a glob numbers `recId` per file.
+    *
+    * `overwriteRun` is how the two callers write differently: the batch
+    * appends flat files; the stream overwrites its own `run_id` partition
+    * of the target and status sinks (dynamic partition overwrite), so a
+    * replayed micro-batch converges. Batch sinks stay flat: Spark refuses
+    * one `read.parquet` over several roots that each hold `run_id=`
+    * directories. JDBC always appends (at-least-once on replay).
+    */
+  private[graft] def ingest(
+      lines: Dataset[RecData],
+      parser: Parser,
+      sinks: Sinks,
+      runId: String,
+      config: BatchConfig,
+      overwriteRun: Boolean): Counts = {
+    val detachProgress = Option.when(config.progressIntervalMillis > 0)(
+      new ProgressReporter(config.progressIntervalMillis).attach(lines.sparkSession))
+    // tracked in vars so the finally releases whichever was built
+    var stored: RowBatches = null
+    var restResults: Option[DataFrame] = None
+    try {
+      val parsed: DataFrame = parser match {
+        case Parser.Csv(spec) => parseCsv(lines, spec)
+        case Parser.Fw(spec)  => parseFw(lines, spec)
+        case Parser.Custom(names, types, fn) => parseCustom(lines, names, types)(fn)
+      }
+      // Every sink reads the routed records, so they are parsed once and
+      // kept as packed UnsafeRow batches, filled by the first write.
+      stored = RowBatches.persist(route(parsed))
+      val routed = stored.frame
+      // The REST channel (P11): POST each SUCCESS-parsed record's JSON; its
+      // per-record HTTP outcome then drives the status rows and run counters,
+      // exactly like the reference counts `statusCode === 200`
+      // (lib/batchProcessing.js:679,700). Persisted because both the status
+      // sink and the HTTP-200 count read it — recomputing would re-send.
+      restResults = sinks.rest.map { ro =>
+        val dataCols = parsed.columns
+          .filterNot(Set("_file", "_rec_id", "_error").contains).map(col)
+        val key = concat_ws(":", lit(runId), col("_file"), col("_rec_id"))
+        RestSink.send(successes(routed), col("_rec_id"), to_json(struct(dataCols.toIndexedSeq: _*)),
+            ro, config, idempotencyKey = Some(key))
+          .toDF()
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      }
+      def write(rows: DataFrame, path: String): Unit = {
+        val w = rows.withColumn("run_id", lit(runId)).write
+        if (overwriteRun)
+          w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("run_id").parquet(path)
+        else w.mode("append").parquet(path)
+      }
+      val target = successes(routed).drop("_error", "statusText")
+      sinks.targetPath.foreach(write(target, _))
+      sinks.jdbc.foreach { j =>
+        val props = new java.util.Properties()
+        j.properties.foreach { case (k, v) => props.setProperty(k, v) }
+        target.withColumn("run_id", lit(runId)).write.mode("append").jdbc(j.url, j.table, props)
+      }
+      // The run counters ride the status write: an Observation on the
+      // routed records, taken before batchStatus drops the IGNORED ones. A
+      // run without a status sink counts them in a noop write instead.
+      val outcome = Observation()
+      val counted = routed.observe(outcome,
+        count(when(col("statusText") === "SUCCESS", 1)).as("SUCCESS"),
+        count(when(col("statusText") === "FAILED", 1)).as("FAILED"),
+        count(when(col("statusText") === "IGNORED", 1)).as("IGNORED"))
+      sinks.statusPath match {
+        case Some(p) =>
+          write(statusWithHttp(batchStatus(counted, config.batchResultLogItems), restResults), p)
+        case None => counted.write.format("noop").mode("overwrite").save()
+      }
+      val counts = outcome.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+      val parsedOk = counts("SUCCESS")
+      val httpOk = restResults.map(_.filter(col("status_code") === 200).count())
+      Counts(
+        total = parsedOk + counts("FAILED"),
+        success = httpOk.getOrElse(parsedOk),
+        failure = counts("FAILED") + httpOk.map(parsedOk - _).getOrElse(0L),
+        ignored = counts("IGNORED"))
+    } finally {
+      restResults.foreach(_.unpersist())
+      if (stored != null) stored.release()
+      detachProgress.foreach(_())
+    }
+  }
+
+  /** Process one line-delimited file (a path or a URI, probed through
+    * [[graft.table.Fs]]): pre-flight checks, line source, the BatchRun
+    * row's lifecycle, and [[ingest]]. A glob or directory that resolves to
+    * several files is numbered per file (each file's `rec_id` runs 1..n,
+    * [[textSourcePerFile]]); a plain file goes straight to the
     * shuffle-free [[textSource]], with no listing first.
     */
   def processFile(
@@ -117,8 +218,7 @@ object BatchJob {
           "jobService.onEachRecord() is not defined. Aborting processing.")
       case _ =>
     }
-    if (!filePath.exists(c => c == '*' || c == '?' || c == '[') &&
-      !new java.io.File(filePath).exists())
+    if (!filePath.exists(c => c == '*' || c == '?' || c == '[') && !Fs.exists(filePath))
       throw new java.io.FileNotFoundException(
         s"ENOENT: no such file or directory, open '$filePath'")
 
@@ -136,88 +236,23 @@ object BatchJob {
     // The try opens IMMEDIATELY after the run-row insert: a missing input
     // file or an AnalysisException thrown while CONSTRUCTING the pipeline
     // (textSource/parse/route) must also finalize the run as FAILED, not
-    // leave it stuck at PROCESSING v1. The stored routed records and the
-    // REST results are tracked in vars so the finally can release whichever
-    // exist.
-    var stored: RowBatches = null
-    var restResults: Option[DataFrame] = None
+    // leave it stuck at PROCESSING v1.
     try {
       val lines =
-        if (!new java.io.File(filePath).isFile &&
-          spark.read.textFile(filePath).inputFiles.length > 1)
+        if (!Fs.isFile(filePath) && spark.read.textFile(filePath).inputFiles.length > 1)
           textSourcePerFile(spark, filePath)
         else textSource(spark, filePath)
-      val parsed: DataFrame = parser match {
-        case Parser.Csv(spec) => parseCsv(lines, spec)
-        case Parser.Fw(spec)  => parseFw(lines, spec)
-        case Parser.Custom(names, types, fn) => parseCustom(lines, names, types)(fn)
-      }
-      // Every sink reads the routed records, so they are parsed once and
-      // kept as packed UnsafeRow batches, filled by the first write.
-      stored = RowBatches.persist(route(parsed))
-      val routed = stored.frame
-      // The REST channel (P11): POST each SUCCESS-parsed record's JSON; its
-      // per-record HTTP outcome then drives the status rows and run counters,
-      // exactly like the reference counts `statusCode === 200`
-      // (lib/batchProcessing.js:679,700). Persisted because both the status
-      // sink and the HTTP-200 count read it — recomputing would re-send.
-      restResults = sinks.rest.map { ro =>
-        val dataCols = parsed.columns
-          .filterNot(Set("_file", "_rec_id", "_error").contains).map(col)
-        graft.ingest.RestSink
-          .send(successes(routed), col("_rec_id"), to_json(struct(dataCols.toIndexedSeq: _*)), ro)
-          .toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      sinks.targetPath.foreach { p =>
-        successes(routed).drop("_error", "statusText")
-          .withColumn("run_id", lit(runId))
-          .write.mode("append").parquet(p)
-      }
-      sinks.jdbc.foreach { j =>
-        val props = new java.util.Properties()
-        j.properties.foreach { case (k, v) => props.setProperty(k, v) }
-        successes(routed).drop("_error", "statusText")
-          .withColumn("run_id", lit(runId))
-          .write.mode("append").jdbc(j.url, j.table, props)
-      }
-      // The run counters ride the status write: an Observation on the
-      // routed records, taken before batchStatus drops the IGNORED ones. A
-      // run without a status sink counts them in a noop write instead.
-      val outcome = Observation()
-      val counted = routed.observe(outcome,
-        count(when(col("statusText") === "SUCCESS", 1)).as("SUCCESS"),
-        count(when(col("statusText") === "FAILED", 1)).as("FAILED"),
-        count(when(col("statusText") === "IGNORED", 1)).as("IGNORED"))
-      sinks.statusPath match {
-        case Some(p) =>
-          statusWithHttp(batchStatus(counted, config.batchResultLogItems), restResults)
-            .withColumn("run_id", lit(runId)).write.mode("append").parquet(p)
-        case None => counted.write.format("noop").mode("overwrite").save()
-      }
-      val counts = outcome.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
-      val parsedOk = counts("SUCCESS")
-      val httpOk = restResults.map(_.filter(col("status_code") === 200).count())
+      val c = ingest(lines, parser, sinks, runId, config, overwriteRun = false)
       val end = System.currentTimeMillis()
-      val summary = RunSummary(
-        runId, filePath,
-        totalRecordCount = parsedOk + counts("FAILED"),
-        successCount = httpOk.getOrElse(parsedOk),
-        failureCount = counts("FAILED") + httpOk.map(parsedOk - _).getOrElse(0L),
-        ignoredCount = counts("IGNORED"),
-        startTimeMillis = start, endTimeMillis = end, durationMillis = end - start)
       runStore.foreach { st =>
         st.update(runId, runVersion.get) { row =>
-          row.copy(status = "COMPLETED",
-            totalRecordCount = summary.totalRecordCount,
-            successCount = summary.successCount,
-            failureCount = summary.failureCount,
-            ignoredCount = summary.ignoredCount,
+          row.copy(status = "COMPLETED", totalRecordCount = c.total, successCount = c.success,
+            failureCount = c.failure, ignoredCount = c.ignored,
             endTimeMillis = end, durationMillis = end - start)
         }
       }
       hooks.onEnd()
-      summary
+      RunSummary(runId, filePath, c.total, c.success, c.failure, c.ignored, start, end, end - start)
     } catch {
       // The reference finalizes the run row EVEN on failure — its end-of-job
       // PUT always fires and carries the error text
@@ -235,10 +270,6 @@ object BatchJob {
           } catch { case NonFatal(w) => e.addSuppressed(w) }
         }
         throw e
-    } finally {
-      // guard: a construction-phase failure may leave either one unbuilt
-      restResults.foreach(_.unpersist())
-      if (stored != null) stored.release()
     }
   }
 }

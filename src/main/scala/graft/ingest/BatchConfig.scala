@@ -5,6 +5,12 @@ package graft.ingest
   * (`lib/batchProcessing.js:74-102`, env overrides at `87-101,245,440,610,632`;
   * same precedence for auth at `436-525`).
   *
+  * The one source of a job's settings, read by [[graft.BatchJob.ingest]]:
+  * the REST endpoint and rate limit, the status log items, and the
+  * progress interval (above 0 it attaches a [[ProgressReporter]] for the
+  * call). The reference's `maxQueueSize` bounds Bottleneck's queue; Spark
+  * has no such queue.
+  *
   * Unlike the reference's module-global mutable state
   * (`lib/batchProcessing.js:51-53,74,104` — unsafe for concurrent runs),
   * a BatchConfig is an immutable value per job.
@@ -12,7 +18,6 @@ package graft.ingest
 final case class BatchConfig(
     maxConcurrent: Int = 80,       // reference default, lib/batchProcessing.js:87
     minTimeMillis: Int = 20,       // :89
-    maxQueueSize: Int = 50000,     // :101
     progressIntervalMillis: Int = 10000, // :299
     appBaseUrl: Option[String] = None,
     modelApi: Option[String] = None,
@@ -45,8 +50,6 @@ object BatchConfig {
         fileDefaults.get("maxConcurrent").map(_.toInt), 80)(_.toInt),
       minTimeMillis = resolve(env, "MIN_TIME", options.get("minTime").map(_.toInt),
         fileDefaults.get("minTime").map(_.toInt), 20)(_.toInt),
-      maxQueueSize = resolve(env, "MAX_QUEUE_SIZE", options.get("maxQueueSize").map(_.toInt),
-        fileDefaults.get("maxQueueSize").map(_.toInt), 50000)(_.toInt),
       progressIntervalMillis = resolve(env, "PROGRESS_INTERVAL",
         options.get("progressInterval").map(_.toInt),
         fileDefaults.get("progressInterval").map(_.toInt), 10000)(_.toInt),

@@ -18,11 +18,13 @@ final case class RecData(fileName: String, rec: String, recId: Long)
   *   scan -> per-record parse/coerce -> route(SUCCESS/FAILED/ignored)
   *        -> target write + batch_status append -> run-summary agg
   *
-  * The target and status sinks are bulk columnar writes — the only shape
-  * that survives 100 TB while preserving the observable contract (target
-  * rows + status rows + summary counts). The per-record REST channel (P11)
-  * and its rate limiter (P15) live in [[RestSink]], which
-  * [[graft.BatchJob.processFile]] drives when a REST sink is configured.
+  * These are the stages; [[graft.BatchJob.ingest]] is the one job that
+  * runs them, for both `processFile` and the job stream. The target and
+  * status sinks are bulk columnar writes — the only shape that survives
+  * 100 TB while preserving the observable contract (target rows + status
+  * rows + summary counts). The per-record REST channel (P11) and its rate
+  * limiter (P15) live in [[RestSink]], which `ingest` drives when a REST
+  * sink is configured.
   * Nothing here shuffles except the optional per-file `recId` assignment
   * ([[textSourcePerFile]]).
   */
@@ -192,25 +194,11 @@ object BatchPipeline {
       .withColumn("endTimeMillis", lit(endMillis))
       .withColumn("durationMillis", lit(endMillis - startMillis))
 
-  /** P18 — lifecycle hooks around the job action (`lib/batchProcessing.js:172-193`). */
+  /** P18 — lifecycle hooks around the job action (`lib/batchProcessing.js:172-193`):
+    * [[graft.BatchJob.processFile]] calls `onStart` before its run row is
+    * inserted and `onEnd` after the run completes.
+    */
   final case class Hooks(
       onStart: () => Unit = () => (),
       onEnd: () => Unit = () => ())
-
-  /** End-to-end job: the minimum slice of SURVEY.md §7.3. Writes nothing;
-    * callers choose sinks (parquet/Delta/JDBC `df.write`).
-    */
-  def runCsvJob(
-      spark: SparkSession,
-      lines: Dataset[RecData],
-      spec: CsvSpec,
-      hooks: Hooks = Hooks()): (DataFrame, DataFrame, DataFrame) = {
-    hooks.onStart()
-    val t0 = System.currentTimeMillis()
-    val routed = route(parseCsv(lines, spec))
-    val status = batchStatus(routed)
-    val summary = runSummary(routed, "mem", t0, System.currentTimeMillis())
-    hooks.onEnd()
-    (routed, status, summary)
-  }
 }

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * Fidelity points mirrored from the reference:
   *   - URL assembly `appBaseURL + '/' + modelAPI + '?access_token=...'`
   *     with precedence env > options for base/api/token
-  *     (`:610,634,648`; the per-record payload override level collapses
-  *     into the job level here because the payload is engine-built);
+  *     (`:610,634,648`), resolved by [[BatchConfig.load]] (the per-record
+  *     payload override level collapses into the job level here because
+  *     the payload is engine-built);
   *   - method from options (`:649`), default `Cookie` header plus
   *     additional headers (`:657-663`);
   *   - 10 s request timeout (`:671`);
@@ -35,15 +36,11 @@ import org.apache.spark.sql.functions._
   */
 object RestSink {
 
+  /** The request shape; the endpoint and rate limit are [[BatchConfig]]'s. */
   final case class RestOptions(
-      appBaseUrl: Option[String] = None,
-      modelApi: Option[String] = None,
       method: Option[String] = None,
       headers: Map[String, String] = Map.empty,
-      accessToken: Option[String] = None,
-      timeoutMillis: Int = 10000, // lib/batchProcessing.js:671
-      maxConcurrent: Int = 80,    // :87
-      minTimeMillis: Int = 20)    // :89
+      timeoutMillis: Int = 10000) // lib/batchProcessing.js:671
 
   final case class RestResult(
       rec_id: Long,
@@ -121,14 +118,13 @@ object RestSink {
     }
 
   /** Driver-side config resolution; throws the reference's fatal messages. */
-  def resolveUrl(o: RestOptions, env: Map[String, String] = sys.env): String = {
-    val base = env.get("APP_BASE_URL").orElse(o.appBaseUrl).getOrElse(throw new IllegalArgumentException(
+  def resolveUrl(config: BatchConfig): String = {
+    val base = config.appBaseUrl.getOrElse(throw new IllegalArgumentException(
       "appBaseURL is not specified in env variable (APP_BASE_URL) or options. Aborting job."))
-    val api = env.get("MODEL_API").orElse(o.modelApi).getOrElse(throw new IllegalArgumentException(
+    val api = config.modelApi.getOrElse(throw new IllegalArgumentException(
       "modelAPI is neither specified in environment variable (MODEL_API) nor processFile options nor passed in payload. Aborting job."))
-    val token = env.get("ACCESS_TOKEN").orElse(o.accessToken)
     base + (if (api.startsWith("/")) "" else "/") + api +
-      token.map("?access_token=" + _).getOrElse("")
+      config.accessToken.map("?access_token=" + _).getOrElse("")
   }
 
   def resolveMethod(o: RestOptions): String =
@@ -166,24 +162,25 @@ object RestSink {
     */
   val IdempotencyHeader = "Idempotency-Key"
 
-  /** POST/PUT/... one JSON body per record; returns per-record results.
-    * The caller should persist the result before running multiple actions
-    * on it — each recomputation would re-send the requests.
+  /** POST/PUT/... one JSON body per record to `config`'s endpoint at its
+    * rate limit; returns per-record results. The caller should persist the
+    * result before running multiple actions on it — each recomputation
+    * would re-send the requests.
     *
     * `idempotencyKey` (optional, per record) is sent as the
     * [[IdempotencyHeader]] header: a replayed delivery carries the SAME
     * key, so a deduplicating receiver applies each record once no matter
-    * how many times a micro-batch retry re-sends it ([[graft.streaming
-    * .EventStream.csvJobStream]] passes (runId, recId)).
+    * how many times a micro-batch retry re-sends it
+    * ([[graft.BatchJob.ingest]] passes (runId, file, recId)).
     */
   def send(records: DataFrame, recId: Column, body: Column,
-           opts: RestOptions, env: Map[String, String] = sys.env,
+           opts: RestOptions, config: BatchConfig,
            idempotencyKey: Option[Column] = None): Dataset[RestResult] = {
-    val url = resolveUrl(opts, env)
+    val url = resolveUrl(config)
     val method = resolveMethod(opts)
     val headers = (Map(DefaultCookieHeader) ++ opts.headers).toSeq
     val timeout = opts.timeoutMillis
-    val (maxConc, minTime) = (opts.maxConcurrent, opts.minTimeMillis)
+    val (maxConc, minTime) = (config.maxConcurrent, config.minTimeMillis)
     val spark = records.sparkSession
     import spark.implicits._
     val keyCol = idempotencyKey.getOrElse(lit(null)).cast("string")

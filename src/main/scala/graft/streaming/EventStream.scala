@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
+
+import graft.BatchJob
+import graft.ingest.{BatchConfig, BatchPipeline, RecData}
 
 /** Structured Streaming surface for the `events` stream: the same windowed
   * aggregations [[graft.queries.EventsOps]] runs in batch, incrementally.
@@ -374,90 +377,66 @@ object EventStream {
         col("v_ts"), col("p_ts"))
   }
 
-  /** Streaming ingest: the reference's entire job as an unbounded stream —
-    * watch a directory for line files, parse each record with the fidelity
-    * CSV parser, route, and (caller-side) sink status + data. Replaces the
-    * pause/resume reader + Bottleneck limiter with `maxFilesPerTrigger`
-    * ingest throttling; records go through the batch row builder
-    * ([[graft.ingest.BatchPipeline.parseCsv]]), so batch results oracle
-    * the stream. Every record carries `_file = "stream"` and `_rec_id = 0`
-    * — exact file-order ids are a batch-mode guarantee (documented
-    * divergence).
+  /** Every line of every file landing in `dir`, with `_file = "stream"`
+    * and `recId = 0`: exact file-order ids are a batch-mode guarantee
+    * (documented divergence).
+    */
+  private def lineStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int): Dataset[RecData] = {
+    import spark.implicits._
+    spark.readStream
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .text(dir)
+      .select(lit("stream").as("fileName"), col("value").as("rec"), lit(0L).as("recId"))
+      .as[RecData]
+  }
+
+  /** Streaming ingest: watch a directory for line files, parse each record
+    * with the fidelity CSV parser, route, and (caller-side) sink status +
+    * data. Replaces the pause/resume reader + Bottleneck limiter with
+    * `maxFilesPerTrigger` ingest throttling; records go through the batch
+    * row builder ([[graft.ingest.BatchPipeline.parseCsv]]), so batch results
+    * oracle the stream.
     */
   def csvIngestStream(
       spark: SparkSession,
       dir: String,
       spec: graft.ingest.Parsers.CsvSpec,
-      maxFilesPerTrigger: Int = 16): DataFrame = {
-    import spark.implicits._
-    import graft.ingest.{BatchPipeline, RecData}
-    val lines = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(dir)
-      .select(lit("stream").as("fileName"), col("value").as("rec"), lit(0L).as("recId"))
-      .as[RecData]
-    BatchPipeline.route(BatchPipeline.parseCsv(lines, spec))
-  }
+      maxFilesPerTrigger: Int = 16): DataFrame =
+    BatchPipeline.route(BatchPipeline.parseCsv(lineStream(spark, dir, maxFilesPerTrigger), spec))
 
-  /** The reference's ENTIRE job lifecycle as an unbounded stream: watch a
-    * directory for line files, parse + route each record with the fidelity
-    * CSV parser ([[csvIngestStream]]), POST every SUCCESS record through the
-    * per-record REST channel, and append BatchStatus audit rows with the
-    * HTTP outcomes folded in — `foreachBatch` reuses the batch sink code
-    * (`RestSink.send`, `batchStatus`, `BatchJob.statusWithHttp`) verbatim,
-    * so a batch `processFile` run over the same fixture is the stream's
-    * oracle. Checkpointing makes file ingest exactly-once; the REST POSTs
-    * are at-least-once on micro-batch retry — but each carries a
-    * (runId, recId) Idempotency-Key header, so a deduplicating receiver
-    * (the reference's BatchStatus-under-failure contract) applies every
-    * record exactly once — and the status sink OVERWRITES its own batch's
-    * run_id partition (dynamic partition overwrite) instead of appending,
-    * so a replayed batch converges to the same rows rather than
-    * duplicating them. StreamingSpec proves both by deleting the last
-    * checkpoint commit and re-running the batch for real.
+  /** The reference's ENTIRE job as an unbounded stream: each micro-batch
+    * of files landing in `watchDir` runs through [[BatchJob.ingest]], the
+    * core of [[BatchJob.processFile]] (any parser, the sinks of `sinks`,
+    * the settings of `config`), so `processFile` is the stream's oracle.
+    *
+    * Replay: checkpointing makes file ingest exactly-once. A re-run batch
+    * keeps its batchId and is re-served the same files in the same splits,
+    * so `monotonically_increasing_id` numbers its lines the same way and
+    * (`stream-<batchId>`, recId) names the same record: the REST POSTs
+    * carry it as their Idempotency-Key (a deduplicating receiver applies
+    * each record once), and the target and status sinks overwrite their
+    * own `run_id` partition, so the batch converges. JDBC appends, so it is
+    * at-least-once on replay. A `sinks.runPath` is refused
+    * (IllegalArgumentException): a replay would insert a second
+    * PROCESSING run row.
     */
-  def csvJobStream(
+  def jobStream(
       spark: SparkSession,
       watchDir: String,
-      spec: graft.ingest.Parsers.CsvSpec,
-      restOpts: graft.ingest.RestSink.RestOptions,
-      statusPath: String,
-      checkpointDir: String,
-      restEnv: Map[String, String] = sys.env): StreamingQuery = {
-    import graft.ingest.BatchPipeline.{batchStatus, successes}
-    csvIngestStream(spark, watchDir, spec).writeStream
+      parser: BatchJob.Parser,
+      sinks: BatchJob.Sinks,
+      config: BatchConfig,
+      checkpointDir: String): StreamingQuery = {
+    require(sinks.runPath.isEmpty,
+      "the job stream writes no BatchRun rows: a replayed micro-batch would insert a second PROCESSING row")
+    import spark.implicits._
+    lineStream(spark, watchDir, maxFilesPerTrigger = 16).writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // csvIngestStream leaves _rec_id at 0 (exact file-order ids are a
-        // batch-mode guarantee); the REST/status join needs ids unique
-        // WITHIN the micro-batch, which monotonically_increasing_id gives
-        // in this (batch) context. (run_id, rec_id) is then unique overall.
-        // the replay key: batchId is stable across retries of the same
-        // micro-batch, and the file source re-serves the same files in the
-        // same splits, so monotonically_increasing_id reproduces the same
-        // per-record ids — (runId, recId) names the same record on replay
-        val runId = s"stream-$batchId"
-        val routed = batch
-          .withColumn("_rec_id", monotonically_increasing_id())
-          .persist()
-        try {
-          val rest = graft.ingest.RestSink
-            .send(successes(routed), col("_rec_id"),
-              to_json(struct(spec.headers.map(col): _*)), restOpts, restEnv,
-              idempotencyKey = Some(concat_ws(":", lit(runId), col("_rec_id"))))
-            .toDF().persist()
-          try
-            graft.BatchJob.statusWithHttp(batchStatus(routed), Some(rest))
-              .withColumn("run_id", lit(runId))
-              .write.mode("overwrite")
-              // idempotent replay: overwrite ONLY this batch's partition —
-              // a re-run converges; other batches' rows are untouched
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("run_id")
-              .parquet(statusPath)
-          finally rest.unpersist()
-        } finally routed.unpersist()
+      .foreachBatch { (batch: Dataset[RecData], batchId: Long) =>
+        // ids unique within the micro-batch make (run_id, rec_id) unique
+        val lines = batch.withColumn("recId", monotonically_increasing_id()).as[RecData]
+        BatchJob.ingest(lines, parser, sinks, s"stream-$batchId", config, overwriteRun = true)
         ()
       }
       .start()

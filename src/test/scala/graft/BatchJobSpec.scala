@@ -82,6 +82,23 @@ class BatchJobSpec extends SparkTestBase {
       .collect().foreach(r => assert(r.getString(0).drop(1).toLong == r.getLong(1), r))
   }
 
+  test("processFile: a file:// URI input ingests like its plain path; a missing one is ENOENT") {
+    val dir = Files.createTempDirectory("graft-job-uri")
+    val in = dir.resolve("batch.csv")
+    Files.write(in, (1 to 30).map(i => if (i % 6 == 0) s"k$i,x" else s"k$i,$i").mkString("\n").getBytes)
+    val parser = BatchJob.Parser.Csv(CsvSpec(Vector("key", "n"), Some(Vector("string", "number"))))
+    def counts(s: BatchJob.RunSummary) = (s.totalRecordCount, s.successCount, s.failureCount, s.ignoredCount)
+    val uri = in.toUri.toString
+    assert(uri.startsWith("file:///"))
+    val plain = BatchJob.processFile(spark, in.toString, parser)
+    assert(counts(plain) == ((30L, 25L, 5L, 0L)))
+    assert(counts(BatchJob.processFile(spark, uri, parser)) == counts(plain))
+    val e = intercept[java.io.FileNotFoundException] {
+      BatchJob.processFile(spark, dir.resolve("absent.csv").toUri.toString, parser)
+    }
+    assert(e.getMessage.contains("ENOENT: no such file or directory"))
+  }
+
   test("processFile: custom parser with ignores, append across two runs") {
     val dir = Files.createTempDirectory("graft-job2")
     val in = dir.resolve("batch.txt")

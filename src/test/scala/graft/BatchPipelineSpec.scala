@@ -110,10 +110,10 @@ class BatchPipelineSpec extends SparkTestBase {
     val cfg = BatchConfig.load(
       env = Map("MAX_CONCURRENT" -> "7"),
       options = Map("maxConcurrent" -> "5", "minTime" -> "11", "modelAPI" -> "/api/x"),
-      fileDefaults = Map("maxConcurrent" -> "3", "minTime" -> "9", "maxQueueSize" -> "123"))
+      fileDefaults = Map("maxConcurrent" -> "3", "minTime" -> "9", "appBaseURL" -> "http://file"))
     assert(cfg.maxConcurrent == 7) // env wins
     assert(cfg.minTimeMillis == 11) // option wins
-    assert(cfg.maxQueueSize == 123) // file default wins
+    assert(cfg.appBaseUrl.contains("http://file")) // file default wins
     assert(cfg.progressIntervalMillis == 10000) // hard default
     assert(cfg.modelApi.contains("/api/x"))
   }
@@ -139,14 +139,18 @@ class BatchPipelineSpec extends SparkTestBase {
       org.apache.logging.log4j.core.config.Configurator.setRootLevel(before)
   }
 
-  test("runCsvJob invokes hooks around the run (P18)") {
+  test("processFile invokes hooks around the run (P18)") {
+    val dir = Files.createTempDirectory("graft-hooks")
+    val in = Files.write(dir.resolve("batch.csv"), lines.mkString("\n").getBytes)
     var events = List.empty[String]
     val hooks = Hooks(
       onStart = () => events ::= "start",
       onEnd = () => events ::= "end")
-    val (routed, status, summary) = runCsvJob(spark, fromLines(spark, lines), spec, hooks)
-    assert(summary.collect().head.getAs[Long]("totalRecordCount") == 4L)
-    assert(status.count() == 4)
+    val statusPath = dir.resolve("status").toString
+    val summary = BatchJob.processFile(spark, in.toString, BatchJob.Parser.Csv(spec),
+      BatchJob.Sinks(statusPath = Some(statusPath)), hooks = hooks)
+    assert(summary.totalRecordCount == 4L)
+    assert(spark.read.parquet(statusPath).count() == 4)
     assert(events.reverse == List("start", "end"))
   }
 }

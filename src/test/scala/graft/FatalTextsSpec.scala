@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.ingest.Parsers.{CsvSpec, FwField, FwSpec}
-import graft.ingest.RestSink
+import graft.ingest.{BatchConfig, RestSink}
 import graft.ingest.RestSink.{AuthCtx, RestOptions}
 
 /** GOLDEN PARITY SWEEP over the reference's fatal error texts.
@@ -107,9 +107,9 @@ class FatalTextsSpec extends SparkTestBase {
       "appBaseURL-login" -> messageOf(
         RestSink.resolveAccessToken(AuthCtx(username = Some("u")), None, env = Map.empty)),
       "appBaseURL-url" -> messageOf(
-        RestSink.resolveUrl(RestOptions(), env = Map.empty)),
+        RestSink.resolveUrl(BatchConfig())),
       "modelAPI" -> messageOf(
-        RestSink.resolveUrl(RestOptions(appBaseUrl = Some("http://x")), env = Map.empty)),
+        RestSink.resolveUrl(BatchConfig(appBaseUrl = Some("http://x")))),
       "method" -> messageOf(RestSink.resolveMethod(RestOptions())),
       "batchrun-version" -> messageOf {
         val store = new graft.ingest.BatchRunStore(spark,

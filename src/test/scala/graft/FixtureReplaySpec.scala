@@ -57,14 +57,14 @@ class FixtureReplaySpec extends SparkTestBase {
     assert(math.abs(first.getAs[Double]("key") - 1e38) / 1e38 < 1e-9)
   }
 
-  test("batch-100.csv through the full runCsvJob slice reproduces the summary shape") {
-    val ds = textSource(spark, referenceFixture("batch-100.csv"))
-    val spec = CsvSpec(headers = Vector("key", "value"))
-    val (_, status, summary) = runCsvJob(spark, ds, spec)
-    val s = summary.collect().head
-    assert(s.getAs[Long]("totalRecordCount") == 100L)
-    assert(s.getAs[Long]("successCount") == 100L)
-    assert(s.getAs[Long]("failureCount") == 0L)
-    assert(status.count() == 100)
+  test("batch-100.csv through processFile reproduces the summary shape") {
+    val statusPath = java.nio.file.Files.createTempDirectory("graft-fixture").resolve("status").toString
+    val s = BatchJob.processFile(spark, referenceFixture("batch-100.csv"),
+      BatchJob.Parser.Csv(CsvSpec(headers = Vector("key", "value"))),
+      BatchJob.Sinks(statusPath = Some(statusPath)))
+    assert(s.totalRecordCount == 100L)
+    assert(s.successCount == 100L)
+    assert(s.failureCount == 0L)
+    assert(spark.read.parquet(statusPath).count() == 100)
   }
 }

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.BatchConfig
 import graft.ingest.BatchPipeline._
 import graft.ingest.Parsers.CsvSpec
 import graft.ingest.RestSink
@@ -50,11 +51,16 @@ class RestSinkSpec extends SparkTestBase {
     val peak = new AtomicInteger(0)
     @volatile var delayMillis = 0L
     val requests = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String, String)]()
-    def record(ex: HttpExchange, body: String): Unit =
+    val arrivalsNanos = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val keys = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def record(ex: HttpExchange, body: String): Unit = {
+      arrivalsNanos.add(System.nanoTime())
+      Option(ex.getRequestHeaders.getFirst(RestSink.IdempotencyHeader)).foreach(keys.add)
       requests.add((ex.getRequestMethod,
         ex.getRequestURI.toString,
         ex.getRequestHeaders.getFirst("Cookie"),
         body))
+    }
   }
 
   private def csvLines(n: Int): org.apache.spark.sql.Dataset[graft.ingest.RecData] =
@@ -64,10 +70,9 @@ class RestSinkSpec extends SparkTestBase {
     withServer(_ => false) { (base, state) =>
       val routed = route(parseCsv(csvLines(5), CsvSpec(headers = Vector("key", "value"))))
       val res = RestSink.send(successes(routed), col("_rec_id"), to_json(struct(col("key"), col("value"))),
-        RestOptions(appBaseUrl = Some(base), modelApi = Some("api/TestData"), method = Some("post"),
-          headers = Map("custom-header1" -> "custom-header-value1"),
-          accessToken = Some("tok123"), minTimeMillis = 0),
-        env = Map.empty).collect()
+        RestOptions(method = Some("post"), headers = Map("custom-header1" -> "custom-header-value1")),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("api/TestData"),
+          accessToken = Some("tok123"), minTimeMillis = 0)).collect()
       assert(res.length == 5 && res.forall(_.status_text == "SUCCESS"))
       val reqs = state.requests.toArray(Array.empty[(String, String, String, String)])
       assert(reqs.forall(_._1 == "POST"), "method uppercased like the reference's request lib")
@@ -83,9 +88,11 @@ class RestSinkSpec extends SparkTestBase {
       RestSink.send(
         successes(route(parseCsv(csvLines(2), CsvSpec(headers = Vector("key", "value"))))),
         col("_rec_id"), lit("{}"),
-        RestOptions(appBaseUrl = Some("http://wrong-host:1"), modelApi = Some("/wrongApi"),
-          method = Some("PUT"), minTimeMillis = 0),
-        env = Map("APP_BASE_URL" -> base, "MODEL_API" -> "/envApi")).collect()
+        RestOptions(method = Some("PUT")),
+        BatchConfig.load(
+          env = Map("APP_BASE_URL" -> base, "MODEL_API" -> "/envApi"),
+          options = Map("appBaseURL" -> "http://wrong-host:1", "modelAPI" -> "/wrongApi",
+            "minTime" -> "0"))).collect()
       val reqs = state.requests.toArray(Array.empty[(String, String, String, String)])
       assert(reqs.nonEmpty && reqs.forall(_._2 == "/envApi"), "env precedence must win")
     }
@@ -93,11 +100,11 @@ class RestSinkSpec extends SparkTestBase {
 
   test("REST sink: missing modelAPI / appBaseURL / method are job-fatal with reference text") {
     val e1 = intercept[IllegalArgumentException] {
-      RestSink.resolveUrl(RestOptions(appBaseUrl = Some("http://x")), env = Map.empty)
+      RestSink.resolveUrl(BatchConfig(appBaseUrl = Some("http://x")))
     }
     assert(e1.getMessage.contains("modelAPI is neither specified in environment variable"))
     val e2 = intercept[IllegalArgumentException] {
-      RestSink.resolveUrl(RestOptions(modelApi = Some("/api")), env = Map.empty)
+      RestSink.resolveUrl(BatchConfig(modelApi = Some("/api")))
     }
     assert(e2.getMessage.contains("appBaseURL is not specified in env variable (APP_BASE_URL)"))
     val e3 = intercept[IllegalArgumentException] { RestSink.resolveMethod(RestOptions()) }
@@ -109,9 +116,9 @@ class RestSinkSpec extends SparkTestBase {
       val routed = route(parseCsv(csvLines(20), CsvSpec(headers = Vector("key", "value"))))
       val t0 = System.nanoTime()
       val res = RestSink.send(successes(routed).coalesce(1), col("_rec_id"), lit("{}"),
-        RestOptions(appBaseUrl = Some(base), modelApi = Some("/api"), method = Some("POST"),
-          minTimeMillis = 7, maxConcurrent = 79), // distinct config => fresh limiter state
-        env = Map.empty).collect()
+        RestOptions(method = Some("POST")),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api"),
+          minTimeMillis = 7, maxConcurrent = 79)).collect() // distinct config => fresh limiter state
       val elapsedMs = (System.nanoTime() - t0) / 1e6
       assert(res.length == 20)
       assert(elapsedMs >= 19 * 7 * 0.7, f"20 records at minTime=7ms took only $elapsedMs%.0f ms")
@@ -123,9 +130,9 @@ class RestSinkSpec extends SparkTestBase {
       state.delayMillis = 30
       val routed = route(parseCsv(csvLines(24), CsvSpec(headers = Vector("key", "value"))))
       val res = RestSink.send(successes(routed).repartition(8), col("_rec_id"), lit("{}"),
-        RestOptions(appBaseUrl = Some(base), modelApi = Some("/api"), method = Some("POST"),
-          minTimeMillis = 0, maxConcurrent = 2),
-        env = Map.empty).collect()
+        RestOptions(method = Some("POST")),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api"),
+          minTimeMillis = 0, maxConcurrent = 2)).collect()
       assert(res.length == 24)
       assert(state.peak.get() <= 2, s"peak in-flight ${state.peak.get()} exceeded maxConcurrent=2")
     }
@@ -198,8 +205,8 @@ class RestSinkSpec extends SparkTestBase {
         BatchJob.Sinks(
           statusPath = Some(s"$out/status"),
           runPath = Some(s"$out/run"),
-          rest = Some(RestOptions(appBaseUrl = Some(base), modelApi = Some("/api/TestData"),
-            method = Some("POST"), minTimeMillis = 0))))
+          rest = Some(RestOptions(method = Some("POST")))),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api/TestData"), minTimeMillis = 0))
       assert(summary.totalRecordCount == 100)
       assert(summary.successCount == 50, s"expected 50 HTTP 200s, got $summary")
       assert(summary.failureCount == 50)
@@ -208,6 +215,42 @@ class RestSinkSpec extends SparkTestBase {
       assert(status.filter(col("status_code") === 200).count() == 50)
       assert(status.filter(col("status_code") === 500).count() == 50)
       assert(status.filter(col("status_text") === "FAILED" && col("error").isNotNull).count() == 50)
+    }
+  }
+
+  test("processFile: a base URL and minTime set only through BatchConfig.load(env) reach the requests") {
+    withServer(_ => false) { (base, state) =>
+      val in = java.nio.file.Files.createTempDirectory("rest-config").resolve("batch.csv")
+      java.nio.file.Files.write(in, (1 to 20).map(i => f"B$i%04d,C$i%04d").mkString("\n").getBytes)
+      // the job's settings come only from the config: RestOptions carries
+      // the request shape, and nothing is set in options or a file
+      val config = BatchConfig.load(env = Map(
+        "APP_BASE_URL" -> base, "MODEL_API" -> "/cfgApi", "MIN_TIME" -> "50", "MAX_CONCURRENT" -> "77"))
+      val summary = BatchJob.processFile(spark, in.toString,
+        BatchJob.Parser.Csv(CsvSpec(headers = Vector("key", "value"))),
+        BatchJob.Sinks(rest = Some(RestOptions(method = Some("POST")))), config)
+      assert(summary.successCount == 20)
+      val reqs = state.requests.toArray(Array.empty[(String, String, String, String)])
+      assert(reqs.length == 20 && reqs.forall(_._2 == "/cfgApi"), "base URL and API from the config")
+      // 20 paced starts span at least 19 x 50 ms; the 20 ms default would span 380 ms
+      val arrivals = state.arrivalsNanos.toArray.map(_.asInstanceOf[Long])
+      val spanMs = (arrivals.max - arrivals.min) / 1e6
+      assert(spanMs >= 19 * 50 * 0.7, f"20 requests at MIN_TIME=50 spanned only $spanMs%.0f ms")
+    }
+  }
+
+  test("processFile: a two-file glob sends one distinct Idempotency-Key per record") {
+    withServer(_ => false) { (base, state) =>
+      val dir = java.nio.file.Files.createTempDirectory("rest-glob")
+      // both files number their lines 1..3, so the key must name the file
+      Seq("a", "b").foreach(f => java.nio.file.Files.write(dir.resolve(s"$f.csv"),
+        (1 to 3).map(i => s"$f$i,$i").mkString("\n").getBytes))
+      val summary = BatchJob.processFile(spark, dir.resolve("*.csv").toString,
+        BatchJob.Parser.Csv(CsvSpec(headers = Vector("key", "value"))),
+        BatchJob.Sinks(rest = Some(RestOptions(method = Some("POST")))),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api"), minTimeMillis = 0))
+      assert(summary.successCount == 6 && state.requests.size == 6)
+      assert(state.keys.size == 6, s"a deduplicating receiver would drop records: ${state.keys}")
     }
   }
 }

@@ -248,6 +248,11 @@ class StreamingSpec extends SparkTestBase {
     finally server.stop(0)
   }
 
+  /** A target sink's (key, value) rows, sorted. */
+  private def keyValueRows(path: String): Seq[(String, String)] =
+    spark.read.parquet(path).select("key", "value").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+
   test("mg_topk heavy-hitters sketch aggregates incrementally under streaming (exact regime)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     graft.functions.HeavyHitters.register(spark)
@@ -279,6 +284,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("csvJobStream runs the full reference lifecycle as a stream; batch processFile is the oracle") {
+    import graft.ingest.BatchConfig
     import graft.ingest.Parsers.CsvSpec
     import graft.ingest.RestSink.RestOptions
     // same 50/50 HTTP failure mix as the batch REST E2E
@@ -293,10 +299,12 @@ class StreamingSpec extends SparkTestBase {
       val all = Files.readAllLines(
         java.nio.file.Paths.get(referenceFixture("batch-100.csv")))
       Files.write(inDir.resolve("part1.csv"), all.subList(0, 60))
-      val opts = RestOptions(appBaseUrl = Some(base), modelApi = Some("/api/TestData"),
-        method = Some("POST"), minTimeMillis = 0, maxConcurrent = 78)
-      val q = EventStream.csvJobStream(spark, inDir.toString, spec, opts,
-        statusPath = s"$tmp/status", checkpointDir = s"$tmp/ck", restEnv = Map.empty)
+      val q = EventStream.jobStream(spark, inDir.toString, BatchJob.Parser.Csv(spec),
+        BatchJob.Sinks(targetPath = Some(s"$tmp/target"), statusPath = Some(s"$tmp/status"),
+          rest = Some(RestOptions(method = Some("POST")))),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api/TestData"),
+          minTimeMillis = 0, maxConcurrent = 78),
+        checkpointDir = s"$tmp/ck")
       try {
         q.processAllAvailable()
         Files.write(inDir.resolve("part2.csv"), all.subList(60, 100))
@@ -315,17 +323,23 @@ class StreamingSpec extends SparkTestBase {
         val summary = BatchJob.processFile(
           spark, referenceFixture("batch-100.csv"),
           BatchJob.Parser.Csv(spec),
-          BatchJob.Sinks(rest = Some(RestOptions(appBaseUrl = Some(base2),
-            modelApi = Some("/api/TestData"), method = Some("POST"),
-            minTimeMillis = 0, maxConcurrent = 79))))
+          BatchJob.Sinks(targetPath = Some(s"$tmp/batch-target"),
+            rest = Some(RestOptions(method = Some("POST")))),
+          BatchConfig(appBaseUrl = Some(base2), modelApi = Some("/api/TestData"),
+            minTimeMillis = 0, maxConcurrent = 79))
         assert(summary.successCount == streamOk, s"stream 200s ($streamOk) != batch ($summary)")
         assert(summary.failureCount == streamFail)
         assert(summary.totalRecordCount == 100)
+        // the same core writes the same target rows on both sides
+        val streamTarget = keyValueRows(s"$tmp/target")
+        assert(streamTarget.length == 100)
+        assert(streamTarget == keyValueRows(s"$tmp/batch-target"))
       }
     }
   }
 
   test("csvJobStream replay: a crashed micro-batch re-runs and CONVERGES — keyed POSTs, no duplicate status rows") {
+    import graft.ingest.BatchConfig
     import graft.ingest.Parsers.CsvSpec
     import graft.ingest.RestSink
     import graft.ingest.RestSink.RestOptions
@@ -357,11 +371,13 @@ class StreamingSpec extends SparkTestBase {
       val all = Files.readAllLines(
         java.nio.file.Paths.get(referenceFixture("batch-100.csv")))
       Files.write(inDir.resolve("part1.csv"), all.subList(0, 40))
-      val opts = RestOptions(appBaseUrl = Some(base), modelApi = Some("/api/TestData"),
-        method = Some("POST"), minTimeMillis = 0, maxConcurrent = 80)
       def run(): Unit = {
-        val q = EventStream.csvJobStream(spark, inDir.toString, spec, opts,
-          statusPath = s"$tmp/status", checkpointDir = s"$tmp/ck", restEnv = Map.empty)
+        val q = EventStream.jobStream(spark, inDir.toString, BatchJob.Parser.Csv(spec),
+          BatchJob.Sinks(targetPath = Some(s"$tmp/target"), statusPath = Some(s"$tmp/status"),
+            rest = Some(RestOptions(method = Some("POST")))),
+          BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api/TestData"),
+            minTimeMillis = 0, maxConcurrent = 80),
+          checkpointDir = s"$tmp/ck")
         try q.processAllAvailable() finally q.stop()
       }
       run()
@@ -389,7 +405,51 @@ class StreamingSpec extends SparkTestBase {
       assert(status.count() == 40, s"one status row per record, got ${status.count()}")
       assert(status.groupBy(col("run_id"), col("rec_id")).count()
         .filter(col("count") > 1).count() == 0, "no duplicate (run_id, rec_id) after replay")
+      // ...and so did the target sink
+      val target = spark.read.parquet(s"$tmp/target")
+      assert(target.count() == 40, s"one target row per record, got ${target.count()}")
+      assert(target.groupBy(col("run_id"), col("_rec_id")).count()
+        .filter(col("count") > 1).count() == 0, "no duplicate target (run_id, _rec_id) after replay")
     } finally server.stop(0)
+  }
+
+  test("jobStream runs the fixed-width parser; batch processFile over fwbatch-100.fwv is the oracle") {
+    import graft.ingest.BatchConfig
+    import graft.ingest.Parsers.{FwField, FwSpec}
+    val parser = BatchJob.Parser.Fw(FwSpec(Vector(
+      FwField("key", "string", 1, 5),
+      FwField("value", "string", 6, 13))))
+    val tmp = Files.createTempDirectory("graft-stream-fw")
+    val inDir = Files.createDirectory(tmp.resolve("in"))
+    val all = Files.readAllLines(java.nio.file.Paths.get(referenceFixture("fwbatch-100.fwv")))
+    // every line is 13 characters; cut two of them short -> FAILED records
+    all.set(7, all.get(7).take(9)); all.set(70, all.get(70).take(9))
+    val sinks = BatchJob.Sinks(targetPath = Some(s"$tmp/target"), statusPath = Some(s"$tmp/status"))
+    // a run row per micro-batch would be inserted twice on replay: refused
+    intercept[IllegalArgumentException] {
+      EventStream.jobStream(spark, inDir.toString, parser, sinks.copy(runPath = Some(s"$tmp/runs")),
+        BatchConfig(), checkpointDir = s"$tmp/ck-refused")
+    }
+    Files.write(inDir.resolve("part1.fwv"), all.subList(0, 60))
+    val q = EventStream.jobStream(spark, inDir.toString, parser, sinks, BatchConfig(),
+      checkpointDir = s"$tmp/ck")
+    try {
+      q.processAllAvailable()
+      Files.write(inDir.resolve("part2.fwv"), all.subList(60, 100))
+      q.processAllAvailable()
+    } finally q.stop()
+    val status = spark.read.parquet(s"$tmp/status")
+    assert(status.select("run_id").distinct().count() >= 2, "two staged files -> >= 2 micro-batches")
+
+    val batchIn = tmp.resolve("batch.fwv")
+    Files.write(batchIn, all)
+    val summary = BatchJob.processFile(spark, batchIn.toString, parser,
+      BatchJob.Sinks(targetPath = Some(s"$tmp/batch-target")), BatchConfig())
+    assert((summary.totalRecordCount, summary.successCount, summary.failureCount) == ((100L, 98L, 2L)))
+    assert(status.count() == summary.totalRecordCount)
+    assert(status.filter(col("status_text") === "SUCCESS").count() == summary.successCount)
+    assert(status.filter(col("status_text") === "FAILED").count() == summary.failureCount)
+    assert(keyValueRows(s"$tmp/target") == keyValueRows(s"$tmp/batch-target"))
   }
 
   test("session_window boundary: an exact-gap event MERGES, one microsecond past it SPLITS") {
