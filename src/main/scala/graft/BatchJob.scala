@@ -83,15 +83,16 @@ object BatchJob {
   /** Fold per-record HTTP outcomes into BatchStatus rows: the REST
     * channel's code/text/error win over the parse-stage values, exactly
     * like the reference counts `statusCode === 200` per record
-    * (`lib/batchProcessing.js:679,700`).
+    * (`lib/batchProcessing.js:679,700`). The join key is (file, rec_id):
+    * a glob numbers `rec_id` per file.
     */
   private def statusWithHttp(base: DataFrame, restResults: Option[DataFrame]): DataFrame =
     restResults.fold(base) { r =>
       base.join(
-          r.select(col("rec_id"),
+          r.select(col("file_name"), col("rec_id"),
             col("status_code").cast("int").as("http_code"),
             col("status_text").as("http_status"), col("error").as("http_error")),
-          Seq("rec_id"), "left")
+          Seq("file_name", "rec_id"), "left")
         .select(col("file_name"), col("rec_id"),
           coalesce(col("http_status"), col("status_text")).as("status_text"),
           coalesce(col("http_code"), col("status_code")).as("status_code"),
@@ -143,7 +144,7 @@ object BatchJob {
           .filterNot(Set("_file", "_rec_id", "_error").contains).map(col)
         val key = concat_ws(":", lit(runId), col("_file"), col("_rec_id"))
         RestSink.send(successes(routed), col("_rec_id"), to_json(struct(dataCols.toIndexedSeq: _*)),
-            ro, config, idempotencyKey = Some(key))
+            ro, config, idempotencyKey = Some(key), file = Some(col("_file")))
           .toDF()
           .persist(StorageLevel.MEMORY_AND_DISK)
       }
@@ -171,7 +172,10 @@ object BatchJob {
         count(when(col("statusText") === "IGNORED", 1)).as("IGNORED"))
       sinks.statusPath match {
         case Some(p) =>
-          write(statusWithHttp(batchStatus(counted, config.batchResultLogItems), restResults), p)
+          // the configured log items are stripped after the HTTP outcome
+          // is folded in, which reads `file_name` and `error`
+          write(statusWithHttp(batchStatus(counted), restResults)
+            .drop(config.batchResultLogItems.toSeq: _*), p)
         case None => counted.write.format("noop").mode("overwrite").save()
       }
       val counts = outcome.get.map { case (k, v) => k -> v.asInstanceOf[Long] }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import scala.util.control.NonFatal
 
@@ -151,9 +153,19 @@ object Bench {
     // the query is flagged `harness_drift` in BENCH_DETAIL rather than
     // letting the inflated median masquerade as an operator regression.
     val drift = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+    // COMPILE TIME as its own layer: each repeat also records how many
+    // generated classes Janino compiled and for how long (the process-wide
+    // CodegenMetrics count and CodeGenerator nanos, as deltas). A class
+    // served from the codegen cache costs neither, so a query whose
+    // repeats keep compiling generates different source per run, compiles
+    // under a new class loader per run, or outgrows the cache
+    // (HarnessSession.CodegenCacheMaxEntries).
+    def median[T: Ordering](xs: Seq[T]): T = xs.sorted.apply(xs.size / 2)
     val results = kept.map { case (name, fn) =>
-      def once(): (Double, Long) = {
+      def once(): (Double, Long, Long, Long) = {
         coldSweep(spark)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val rows = try materialize(fn(spark, sfDir)) catch {
           case NonFatal(e) =>
@@ -163,7 +175,9 @@ object Bench {
               s"[bench] $name materialize failed: ${e.toString.take(300)}")
             -1L
         }
-        ((System.nanoTime() - t0) / 1e9, rows)
+        ((System.nanoTime() - t0) / 1e9, rows,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+          CodeGenerator.compileTime - compileNs0)
       }
       val first = (1 to Repeats).map(_ => once())
       val contended = first.map(_._1).max > SpreadBound * first.map(_._1).min &&
@@ -177,7 +191,7 @@ object Bench {
         val recheck = once()._1
         if (recheck > 2.0 * best) drift += name -> (best, recheck)
       }
-      (name, runs.map(_._1).sorted.apply(runs.size / 2), runs.head._2, runs)
+      (name, median(runs.map(_._1)), runs.head._2, runs)
     }
     // The driver keeps only the last ~2000 chars of sbt output, and the
     // "[success] Total time" trailer eats ~80 of them. A line with 70+ full
@@ -206,6 +220,12 @@ object Bench {
     val detailRuns = results.map { case (k, _, _, runs) =>
       "\"" + k + "\":[" + runs.map(_._1).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val detailCompiles = results.map { case (k, _, _, runs) =>
+      "\"" + k + "\":" + median(runs.map(_._3))
+    }.mkString("{", ",", "}")
+    val detailCompileMs = results.map { case (k, _, _, runs) =>
+      "\"" + k + "\":" + median(runs.map(_._4)) / 1e6
+    }.mkString("{", ",", "}")
     val drifted = results.collect {
       case (k, _, _, runs) if runs.map(_._2).distinct.size != 1 =>
         "\"" + k + "\":[" + runs.map(_._2).mkString(",") + "]"
@@ -215,7 +235,7 @@ object Bench {
     val driftJson = drift.map { case (k, (b, r)) => "\"" + k + "\":[" + b + "," + r + "]" }
       .mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","basis":"noop-materialize","queries":$detailQs,"rows":$detailRows,"runs":$detailRuns,"row_drift":$drifted,"harness_drift":$driftJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","basis":"noop-materialize","queries":$detailQs,"rows":$detailRows,"runs":$detailRuns,"compiles":$detailCompiles,"compile_ms":$detailCompileMs,"row_drift":$drifted,"harness_drift":$driftJson,"sf":"$sfDir"}"""
     writeLine("BENCH_DETAIL.json", detail)
     val sfName = new java.io.File(sfDir).getName // basename: every char counts
     // 176+ queries no longer fit one ~1800-char line even at 1-decimal

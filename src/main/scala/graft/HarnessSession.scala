@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** The ONE session builder of the harness mains (Bench, Explain, Verify,
   * ScaleSmoke), so the captured plans and the verified results are
@@ -18,6 +19,26 @@ object HarnessSession {
     */
   def cpus(): String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
+  /** Size of Spark's cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is an
+    * LRU keyed by the class loader and the generated source, and a mix
+    * that cycles through more distinct classes than it holds misses on
+    * every access. One pass of perfbench's 11-query mix needs about 217
+    * classes: at 100 entries every later pass recompiled 205-208 of them
+    * (2.0-2.4 s of Janino time on 4 cores); at 8192 the later passes
+    * compiled 14, 0 and 10 (all q194).
+    * The 287-query suite at sf0.001 touches about 4.5k classes, so 8192
+    * covers it with headroom (4000 still thrashed). Its second pass went
+    * from 7,262 compiles (96.7 s, 287 s wall) to 722 (11.9 s, 209 s wall),
+    * and Metaspace after two passes from 225 to 267 MiB.
+    *
+    * It is a static conf: `CodeGenerator` reads it once per JVM, when it
+    * first initializes, so it must be set on the builder before any query
+    * runs, and every session builder of one JVM has to agree on it (the
+    * test session applies the same value).
+    */
+  val CodegenCacheMaxEntries: Int = 8192
+
   def build(): SparkSession = build(cpus(), cpus())
 
   /** A session on `n` local cores with `shufflePartitions` shuffle
@@ -29,6 +50,7 @@ object HarnessSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheMaxEntries.toLong)
       // reclaim shuffle files/broadcasts continuously (default 30min never
       // fires inside a suite run) — see the harness-drift note in Bench
       .config("spark.cleaner.periodicGC.interval", "30s")

@@ -42,7 +42,12 @@ object RestSink {
       headers: Map[String, String] = Map.empty,
       timeoutMillis: Int = 10000) // lib/batchProcessing.js:671
 
+  /** One record's outcome. `file_name` is the record's input file when the
+    * caller names it (null otherwise): a glob numbers `rec_id` per file, so
+    * only (file_name, rec_id) identifies a record of a multi-file run.
+    */
   final case class RestResult(
+      file_name: String,
       rec_id: Long,
       status_code: Int, // 0 = transport error, no HTTP response
       status_text: String,
@@ -172,10 +177,13 @@ object RestSink {
     * key, so a deduplicating receiver applies each record once no matter
     * how many times a micro-batch retry re-sends it
     * ([[graft.BatchJob.ingest]] passes (runId, file, recId)).
+    * `file` (optional, per record) is carried into each result's
+    * `file_name`.
     */
   def send(records: DataFrame, recId: Column, body: Column,
            opts: RestOptions, config: BatchConfig,
-           idempotencyKey: Option[Column] = None): Dataset[RestResult] = {
+           idempotencyKey: Option[Column] = None,
+           file: Option[Column] = None): Dataset[RestResult] = {
     val url = resolveUrl(config)
     val method = resolveMethod(opts)
     val headers = (Map(DefaultCookieHeader) ++ opts.headers).toSeq
@@ -184,13 +192,14 @@ object RestSink {
     val spark = records.sparkSession
     import spark.implicits._
     val keyCol = idempotencyKey.getOrElse(lit(null)).cast("string")
-    records.select(recId.cast("long"), body.cast("string"), keyCol)
-      .as[(Long, String, String)]
+    val fileCol = file.getOrElse(lit(null)).cast("string")
+    records.select(fileCol, recId.cast("long"), body.cast("string"), keyCol)
+      .as[(String, Long, String, String)]
       .mapPartitions { it =>
         val client = HttpClient.newBuilder()
           .connectTimeout(Duration.ofMillis(timeout)).build()
         val limiter = Throttle.forConfig(maxConc, minTime)
-        it.map { case (id, payload, key) =>
+        it.map { case (fileName, id, payload, key) =>
           limiter.pace()
           limiter.sem.acquire()
           try {
@@ -201,11 +210,11 @@ object RestSink {
             if (key != null) b.header(IdempotencyHeader, key)
             val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
             val ok = resp.statusCode() == 200
-            RestResult(id, resp.statusCode(), if (ok) "SUCCESS" else "FAILED",
+            RestResult(fileName, id, resp.statusCode(), if (ok) "SUCCESS" else "FAILED",
               if (ok) null else resp.body(), resp.body())
           } catch {
             case e: Exception =>
-              RestResult(id, 0, "FAILED", String.valueOf(e.getMessage), null)
+              RestResult(fileName, id, 0, "FAILED", String.valueOf(e.getMessage), null)
           } finally limiter.sem.release()
         }
       }

@@ -1194,25 +1194,6 @@ class PlanSpec extends SparkTestBase {
     }.map { case (name, exec) => s"$name [execution $exec]" }
   }
 
-  /** Records (result-stage name, SQL execution id) of every job it sees
-    * start; the result stage's name is the call site of the job's action.
-    */
-  private final class ConstructionJobs extends org.apache.spark.scheduler.SparkListener {
-    private val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      seen.add((if (js.stageInfos.isEmpty) "" else js.stageInfos.maxBy(_.stageId).name,
-        Option(js.properties).map(_.getProperty("spark.sql.execution.id")).orNull))
-    /** The jobs recorded before the marker `count at` job. */
-    def beforeMarker(): Seq[(String, String)] = {
-      import scala.jdk.CollectionConverters._
-      def jobs = seen.asScala.toSeq
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.exists(_._1.contains("count at")) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      jobs.takeWhile(!_._1.contains("count at"))
-    }
-  }
-
   test("q253 batch WAND: plan construction performs only fleet-constant " +
       "actions (store listings + hub materializations); store-served") {
     CorpusOps.writeLexStore(spark, sfDir)

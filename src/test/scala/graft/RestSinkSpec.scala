@@ -253,4 +253,43 @@ class RestSinkSpec extends SparkTestBase {
       assert(state.keys.size == 6, s"a deduplicating receiver would drop records: ${state.keys}")
     }
   }
+
+  test("processFile: a two-file glob with a REST sink writes one status row per record") {
+    // b2 fails; a2 shares its rec_id, so a join on rec_id alone would
+    // double every row and give a2 b2's outcome
+    withServer(_.contains("\"b2\"")) { (base, state) =>
+      val dir = java.nio.file.Files.createTempDirectory("rest-glob-status")
+      Seq("a", "b").foreach(f => java.nio.file.Files.write(dir.resolve(s"$f.csv"),
+        (1 to 3).map(i => s"$f$i,$i").mkString("\n").getBytes))
+      val out = dir.resolve("out").toString
+      val summary = BatchJob.processFile(spark, dir.resolve("*.csv").toString,
+        BatchJob.Parser.Csv(CsvSpec(headers = Vector("key", "value"))),
+        BatchJob.Sinks(statusPath = Some(s"$out/status"), rest = Some(RestOptions(method = Some("POST")))),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api"), minTimeMillis = 0))
+      assert(state.requests.size == 6)
+      assert((summary.totalRecordCount, summary.successCount, summary.failureCount) == ((6L, 5L, 1L)))
+      val status = spark.read.parquet(s"$out/status")
+        .select(regexp_extract(col("file_name"), "([ab])\\.csv$", 1).as("f"), col("rec_id"), col("status_code"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+      assert(status == Seq(("a", 1L, 200), ("a", 2L, 200), ("a", 3L, 200),
+        ("b", 1L, 200), ("b", 2L, 500), ("b", 3L, 200)), status)
+    }
+  }
+
+  test("processFile: batchResultLogItems strips status columns after the REST outcome is folded in") {
+    withServer(_.contains("\"a2\"")) { (base, _) =>
+      val dir = java.nio.file.Files.createTempDirectory("rest-log-items")
+      java.nio.file.Files.write(dir.resolve("a.csv"), (1 to 3).map(i => s"a$i,$i").mkString("\n").getBytes)
+      val out = dir.resolve("out").toString
+      val summary = BatchJob.processFile(spark, dir.resolve("a.csv").toString,
+        BatchJob.Parser.Csv(CsvSpec(headers = Vector("key", "value"))),
+        BatchJob.Sinks(statusPath = Some(s"$out/status"), rest = Some(RestOptions(method = Some("POST")))),
+        BatchConfig(appBaseUrl = Some(base), modelApi = Some("/api"), minTimeMillis = 0,
+          batchResultLogItems = Set("error", "file_name")))
+      assert((summary.successCount, summary.failureCount) == ((2L, 1L)))
+      val status = spark.read.parquet(s"$out/status")
+      assert(!status.columns.contains("error") && !status.columns.contains("file_name"), status.columns.mkString(","))
+      assert(status.orderBy("rec_id").select("status_code").collect().map(_.getInt(0)).toSeq == Seq(200, 500, 200))
+    }
+  }
 }
