@@ -39,10 +39,14 @@ import org.apache.spark.sql.types._
   * atomic put-if-absent race on the commit file that object-store Delta
   * writers use.
   *
-  * Scale: log replay is driver-side string work sized by versions since
-  * the last checkpoint (never data-sized); the checkpoint read is one
-  * tiny parquet. Data files are never listed from storage — the log IS
-  * the listing, the property that makes Delta-shaped tables usable on
+  * Scale: every snapshot comes out of one replay ([[fold]]) over one
+  * `_delta_log` listing. The checkpoint's protocol/metaData/txn/sidecar
+  * actions are read on the driver with parquet-mr, the JSON tail is
+  * driver-side string work sized by versions since the last checkpoint,
+  * and the checkpoint's add rows are the one distributed scan — a full
+  * or pruned replay runs at most one Spark job, a metadata-only replay
+  * none. Data files are never listed from storage — the log IS the
+  * listing, the property that makes Delta-shaped tables usable on
   * object stores at 100 TB.
   */
 object DeltaLog {
@@ -58,65 +62,7 @@ object DeltaLog {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def listVersions(root: String, suffix: String): Seq[Long] =
-    Fs.list(logDir(root)).map(Fs.name)
-      .filter(n => n.endsWith(suffix) && n.length > suffix.length &&
-        n.dropRight(suffix.length).forall(_.isDigit))
-      .map(_.dropRight(suffix.length).toLong)
-
-  /** Highest committed version, -1 if the table does not exist. A
-    * checkpoint at V proves commit V happened even when log retention has
-    * trimmed the JSON commit itself, so the version lattice is the max
-    * over BOTH file families — otherwise an append to a fully-trimmed
-    * history would restart at version 0 and corrupt the table.
-    */
-  def currentVersion(root: String): Long = {
-    val vs = listVersions(root, ".json") ++ checkpoints(root).keys
-    if (vs.isEmpty) -1L else vs.max
-  }
-
-  /** The stream start OFFSET for `startingTimestamp` = `tsMillis`
-    * (delta-spark's semantics: changes committed at or after the
-    * timestamp deliver): (lowest version whose commit-file mtime is
-    * ≥ tsMillis) − 1, or — when every commit predates the timestamp —
-    * the newest version seen, so the consumer tails only what arrives
-    * next. Resolution is by commit-file modification time, the only
-    * clock a foreign table is guaranteed to carry. Both halves derive
-    * from ONE log listing: a second currentVersion() listing would race
-    * a commit landing in between — its mtime is ≥ ts, yet the fallback
-    * would skip past it forever. Commit mtimes are non-decreasing on any
-    * sanely-clocked store, so the scan takes the min matching version;
-    * a clock wobble over-delivers, never under-delivers.
-    */
-  private[graft] def startOffsetForTimestamp(root: String,
-      tsMillis: Long): Long = {
-    val entries = Fs.listDetailed(logDir(root))
-    def jsonVer(n: String): Option[Long] =
-      if (n.endsWith(".json") && n.length > 5 &&
-          n.dropRight(5).forall(_.isDigit))
-        Some(n.dropRight(5).toLong)
-      else None
-    val jsons = entries.collect {
-      case (p, true, _, mtime) => (Fs.name(p), mtime)
-    }
-    val hits = jsons.flatMap { case (n, m) =>
-      jsonVer(n).filter(_ => m >= tsMillis)
-    }
-    if (hits.nonEmpty) hits.min - 1L
-    else {
-      // all-older history: tail from the newest version in the SAME
-      // listing — JSON commits plus checkpoint families (a fully
-      // retention-trimmed table's version floor is its checkpoint)
-      val ckVers = entries.flatMap { case (p, _, _, _) =>
-        Fs.name(p) match {
-          case CkptName(v, _, _) => Some(v.toLong)
-          case V2CkptName(v, _, _) => Some(v.toLong)
-          case _ => None
-        }
-      }
-      (jsons.flatMap(j => jsonVer(j._1)) ++ ckVers).foldLeft(-1L)(math.max)
-    }
-  }
+  private val CommitName = """^(\d+)\.json$""".r
 
   /** Checkpoint part files per version: single-part
     * `V.checkpoint.parquet` and multi-part `V.checkpoint.I.N.parquet`
@@ -137,94 +83,103 @@ object DeltaLog {
   private val V2CkptName =
     """^(\d{20})\.checkpoint\.([0-9a-zA-Z_-]+)\.(parquet|json)$""".r
 
-  private[sources] def isV2Manifest(name: String): Boolean = name match {
-    case V2CkptName(_, _, _) => true
-    case _ => false
+  private final case class LogFile(path: String, len: Long, mtime: Long)
+
+  /** ONE `_delta_log` listing, the only one a replay makes: the JSON
+    * commits by version and the COMPLETE checkpoint groups by version,
+    * each file with the (length, mtime) the snapshot-cache fingerprint
+    * hashes. A v2 manifest is complete by itself (a missing sidecar fails
+    * the read loudly, never silently); a classic checkpoint at the same
+    * version wins over it — both are complete snapshots, and the classic
+    * read needs no manifest.
+    */
+  private final case class LogListing(commits: Map[Long, LogFile],
+      checkpoints: Map[Long, Seq[LogFile]]) {
+
+    /** Highest committed version, -1 if the table does not exist. A
+      * checkpoint at V proves commit V happened even when log retention
+      * has trimmed the JSON commit itself, so the version lattice is the
+      * max over BOTH file families — otherwise an append to a
+      * fully-trimmed history would restart at version 0 and corrupt the
+      * table.
+      */
+    val latest: Long =
+      (commits.keysIterator ++ checkpoints.keysIterator).foldLeft(-1L)(math.max)
+
+    def checkpointAtOrBelow(v: Long): Option[(Long, Seq[LogFile])] = {
+      val cs = checkpoints.filter(_._1 <= v)
+      if (cs.isEmpty) None else Some(cs.maxBy(_._1))
+    }
+
+    /** (file count, 64-bit hash) over the (name, size, mtime) of EXACTLY
+      * the files a replay of version v reads — the newest checkpoint group
+      * ≤ v plus the JSON tail above it. A table deleted and REBUILT at the
+      * same path (fixtures do this) must never serve the old build's
+      * snapshot: one file's (size, mtime) can collide under coarse
+      * object-store mtime granularity, the whole replay input at once is
+      * another matter. Hashing only the replay slice keeps the work
+      * bounded by checkpoint cadence, not table lifetime; a checkpoint
+      * landing later at some c ≤ v changes the slice, and that miss just
+      * replays to the same snapshot.
+      */
+    def fingerprint(v: Long): (Long, Long) = {
+      val ckpt = checkpointAtOrBelow(v)
+      val from = ckpt.fold(-1L)(_._1)
+      var n = 0L
+      var h = 1125899906842597L
+      def mix(x: Long): Unit = { h = h * 31 + x }
+      def file(id: Long, f: LogFile): Unit = { n += 1; mix(id); mix(f.len); mix(f.mtime) }
+      ckpt.toSeq.flatMap(_._2).foreach(f => file(Fs.name(f.path).hashCode.toLong, f))
+      commits.toSeq.filter { case (c, _) => c > from && c <= v }.sortBy(_._1)
+        .foreach { case (c, f) => file(c, f) }
+      (n, h)
+    }
   }
 
-  private def checkpoints(root: String): Map[Long, Seq[String]] = {
-    val listing = Fs.list(logDir(root))
-    val named = listing.flatMap { p =>
-      Fs.name(p) match {
-        case CkptName(v, part, of) =>
-          Some((v.toLong, Option(of).map(_.toInt), p))
-        case _ => None
-      }
+  private def listLog(root: String): LogListing = {
+    val files = Fs.listDetailed(logDir(root)).collect {
+      case (p, true, len, mt) => (Fs.name(p), LogFile(p, len, mt))
     }
-    val v1 = named.groupBy(_._1).flatMap { case (v, grp) =>
-      val parts = grp.sortBy(t => Fs.name(t._3)).map(_._3)
-      val declared = grp.flatMap(_._2).headOption
-      declared match {
-        case Some(n) if grp.count(_._2.isDefined) == n =>
-          Some(v -> grp.filter(_._2.isDefined).sortBy(t => Fs.name(t._3)).map(_._3))
-        case Some(_) => None // incomplete multi-part group
-        case None => Some(v -> parts)
-      }
+    val commits = files.collect { case (CommitName(v), f) => v.toLong -> f }.toMap
+    val classic = files.collect {
+      case (name @ CkptName(v, _, of), f) => (v.toLong, Option(of).map(_.toInt), name, f)
+    }.groupBy(_._1).flatMap { case (v, grp) =>
+      val (multi, single) = grp.partition(_._2.isDefined)
+      multi.groupBy(_._2.get).collectFirst { case (n, parts) if parts.size == n => parts }
+        .orElse(single.headOption.map(Seq(_)))
+        .map(parts => v -> parts.sortBy(_._3).map(_._4))
     }
-    // v2 manifests: one entry per version (parquet preferred over json
-    // when a writer left both); a classic checkpoint at the same version
-    // wins — both are complete snapshots, and the classic read is cheaper
-    val v2 = listing.flatMap { p =>
-      Fs.name(p) match {
-        case V2CkptName(v, _, ext) => Some((v.toLong, ext, p))
-        case _ => None
-      }
+    val v2 = files.collect {
+      case (name @ V2CkptName(v, _, ext), f) => (v.toLong, ext != "parquet", name, f)
     }.groupBy(_._1).map { case (v, grp) =>
-      v -> Seq(grp.sortBy(t => (if (t._2 == "parquet") 0 else 1,
-        Fs.name(t._3))).head._3)
+      v -> Seq(grp.minBy(t => (t._2, t._3))._4)
     }
-    v2 ++ v1
+    LogListing(commits, v2 ++ classic)
   }
 
-  /** Resolve one checkpoint's part list into (spark-readable parquet
-    * parts, driver-parsed manifest action lines). Classic checkpoints:
-    * the parts verbatim. V2 PARQUET manifest: the manifest plus its
-    * sidecar files (the `sidecar` actions scanned driver-side via
-    * parquet-mr — sidecar counts are bounded by checkpoint part sizing,
-    * never by table file counts), read together under mergeSchema. V2
-    * JSON manifest: the sidecar parquet files, plus the manifest's own
-    * action lines (protocol/metaData/txn — and inline adds on the
-    * no-sidecar compat shape) handed back for driver-side processing.
+  /** Highest committed version, -1 if the table does not exist (see
+    * [[LogListing.latest]]).
     */
-  private def checkpointContent(root: String, parts: Seq[String])
-      : (Seq[String], Seq[com.fasterxml.jackson.databind.JsonNode]) = {
-    if (parts.size != 1 || !isV2Manifest(Fs.name(parts.head)))
-      return (parts, Seq.empty)
-    val manifest = parts.head
-    def sidecarFull(p: String): String =
-      if (p.contains("://") || p.startsWith("/")) p
-      else Fs.resolve(Fs.resolve(logDir(root), "_sidecars"), p)
-    if (Fs.name(manifest).endsWith(".json")) {
-      val nodes = Fs.readLines(manifest).filter(_.nonEmpty).map(mapper.readTree)
-      val (sidecars, actions) = nodes.partition(_.has("sidecar"))
-      (sidecars.map(n => sidecarFull(n.get("sidecar").get("path").asText())),
-        actions)
-    } else
-      (manifest +: checkpointSidecarPaths(manifest).map(sidecarFull), Seq.empty)
-  }
+  def currentVersion(root: String): Long = listLog(root).latest
 
-  /** Every `sidecar` action's path in a parquet v2 manifest — driver-side
-    * parquet-mr, no SparkSession.
+  /** The stream start OFFSET for `startingTimestamp` = `tsMillis`
+    * (delta-spark's semantics: changes committed at or after the
+    * timestamp deliver): (lowest version whose commit-file mtime is
+    * ≥ tsMillis) − 1, or — when every commit predates the timestamp —
+    * the newest version seen, so the consumer tails only what arrives
+    * next. Resolution is by commit-file modification time, the only
+    * clock a foreign table is guaranteed to carry. Both halves derive
+    * from ONE log listing: a second listing would race a commit landing
+    * in between — its mtime is ≥ ts, yet the fallback would skip past it
+    * forever. Commit mtimes are non-decreasing on any sanely-clocked
+    * store, so the scan takes the min matching version; a clock wobble
+    * over-delivers, never under-delivers.
     */
-  private def checkpointSidecarPaths(manifest: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(manifest)).build()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        if (g.getType.containsField("sidecar") &&
-            g.getFieldRepetitionCount("sidecar") > 0) {
-          val sg = g.getGroup("sidecar", 0)
-          if (sg.getType.containsField("path") &&
-              sg.getFieldRepetitionCount("path") > 0)
-            out += sg.getString("path", 0)
-        }
-        g = reader.read()
-      }
-    } finally reader.close()
-    out.toSeq
+  private[graft] def startOffsetForTimestamp(root: String,
+      tsMillis: Long): Long = {
+    val log = listLog(root)
+    val hits = log.commits.collect { case (v, f) if f.mtime >= tsMillis => v }
+    if (hits.nonEmpty) hits.min - 1L else log.latest
   }
 
   /** One live data file: relative path, size, and the add action's
@@ -305,18 +260,29 @@ object DeltaLog {
       }.toMap
     }.getOrElse(Map.empty)
 
+  /** One add-action JSON node as an [[AddFile]] — THE parse, shared by
+    * every path that meets an add as JSON (checkpoint manifest inline
+    * adds, commit-tail adds). A new add field (stats spelling, baseRowId,
+    * ...) lands here once instead of drifting across copies.
+    */
+  private def jsonAddFile(a: com.fasterxml.jackson.databind.JsonNode): AddFile =
+    AddFile(a.get("path").asText(),
+      if (a.has("size")) a.get("size").asLong() else 0L,
+      jsonPartitionValues(a),
+      // delta-spark spells stats as a JSON STRING field
+      Option(a.get("stats")).filterNot(_.isNull).map(n =>
+        if (n.isTextual) n.asText() else n.toString),
+      jsonDv(a))
+
   /** Bounded per-(table, version) SNAPSHOT CACHE. A committed version's
     * log content is immutable (publish is create-new), so (root, version)
-    * identifies a snapshot — fingerprinted by a hash over the REPLAY
-    * SLICE of the log listing (the newest checkpoint group ≤ v + the
-    * JSON tail; names, sizes, mtimes) so a table recreated at the same
-    * path cannot serve a stale entry. Without it every read re-reads the checkpoint parquet
-    * and re-parses the JSON tail — minutes of driver work PER QUERY on a
-    * 10⁵-file table. LRU-bounded; the kill switch exists for scale
-    * measurements that contract to time the COLD replay.
+    * identifies a snapshot — fingerprinted by [[LogListing.fingerprint]]
+    * so a table recreated at the same path cannot serve a stale entry.
+    * Without it every read re-reads the checkpoint and re-parses the JSON
+    * tail — minutes of driver work PER QUERY on a 10⁵-file table.
+    * LRU-bounded; full and metadata-only snapshots are kept apart.
     */
   private val SnapCacheCap = 32
-  @volatile private[graft] var snapshotCacheEnabled = true
   private val snapCache =
     new java.util.LinkedHashMap[(String, Long, Boolean, Long, Long), Snapshot](
         SnapCacheCap, 0.75f, true) {
@@ -325,338 +291,382 @@ object DeltaLog {
           : Boolean = size() > SnapCacheCap
     }
 
-  private def snapKey(root: String, v: Long, withAdds: Boolean)
-      : (String, Long, Boolean, Long, Long) = {
-    // Fingerprint = (count, 64-bit hash) over the (name, size, mtime) of
-    // EXACTLY the files a replay of version v reads — the newest COMPLETE
-    // checkpoint group ≤ v plus the JSON tail above it — from ONE list
-    // call. A table deleted and REBUILT at the same path (fixtures do
-    // this) must never serve the old build's snapshot: a single file's
-    // (size, mtime) can collide under coarse object-store mtime
-    // granularity, but colliding on replay's whole input set at once is
-    // another matter. Hashing ONLY the replay slice (not every file ≤ v)
-    // keeps the per-probe driver work bounded by checkpoint cadence, not
-    // table lifetime — 10⁵ retained commits cost the LIST they always
-    // cost, never 10⁵ hash rounds; a checkpoint landing later at some
-    // c ≤ v changes the slice, and that miss just replays to the same
-    // snapshot.
-    val entries = Fs.listDetailed(logDir(root)).collect {
-      case (p, true, len, mt) => (Fs.name(p), len, mt)
-    }
-    // newest complete checkpoint group ≤ v — the same completeness rule
-    // as [[checkpoints]] (an interrupted multi-part group is invisible)
-    val ckptV = entries.map(_._1).flatMap {
-      case CkptName(vv, _, of) => Some((vv.toLong, Option(of).map(_.toInt)))
-      // a v2 manifest is complete by itself (missing sidecars fail the
-      // read loudly, never silently) — same completeness stance as
-      // [[checkpoints]]
-      case V2CkptName(vv, _, _) => Some((vv.toLong, None))
-      case _ => None
-    }.groupBy(_._1).collect {
-      case (vv, grp) if vv <= v &&
-          grp.flatMap(_._2).headOption.forall(d =>
-            grp.count(_._2.isDefined) == d) => vv
-    } match {
-      case s if s.isEmpty => -1L
-      case s => s.max
-    }
-    def inSlice(name: String): Boolean =
-      (name.endsWith(".json") && name.length > 5 &&
-        name.dropRight(5).forall(_.isDigit) && {
-          val jv = name.dropRight(5).toLong
-          jv > ckptV && jv <= v
-        }) ||
-        (name match {
-          case CkptName(vv, _, _) => vv.toLong == ckptV
-          case V2CkptName(vv, _, _) => vv.toLong == ckptV
-          case _ => false
-        })
-    var n = 0L
-    var h = 1125899906842597L
-    def mix(x: Long): Unit = { h = h * 31 + x }
-    entries.filter(e => inSlice(e._1)).sortBy(_._1).foreach {
-      case (name, len, mt) =>
-        n += 1
-        name.foreach(c => mix(c.toLong))
-        mix(len); mix(mt)
-    }
+  private def snapKey(root: String, log: LogListing, v: Long,
+      withAdds: Boolean): (String, Long, Boolean, Long, Long) = {
+    val (n, h) = log.fingerprint(v)
     (Fs.qualified(root), v, withAdds, n, h)
   }
 
-  /** Replay the log into a [[Snapshot]]. With `withAdds = false` only the
-    * metaData/protocol/txn state materializes (adds skipped end-to-end) —
-    * the cheap half [[readWhere]]'s distributed-pruning path needs before
-    * it decides which add rows ever reach the driver.
+  private def cachedSnapshot(key: (String, Long, Boolean, Long, Long))
+      : Option[Snapshot] =
+    snapCache.synchronized(Option(snapCache.get(key)))
+
+  /** Which live adds a replay keeps. `keep` tests one add on the driver
+    * (checkpoint-manifest inline adds, commit-tail adds); `scan` is the
+    * same test over the checkpoint add scan's columns (path, size,
+    * partitionValues, stats, deletionVector JSON), applied on executors
+    * so only survivors reach the driver.
     */
-  private def replay(spark: SparkSession, root: String,
-      version: Option[Long], withAdds: Boolean = true): Snapshot = {
-    val cur = currentVersion(root)
-    require(cur >= 0, s"no Delta log at $root")
-    val v = version.getOrElse(cur)
-    require(v >= 0 && v <= cur, s"version $v out of range [0, $cur]")
-    val key = snapKey(root, v, withAdds)
-    if (snapshotCacheEnabled) {
-      val hit = snapCache.synchronized(Option(snapCache.get(key)))
-      if (hit.isDefined) return hit.get
-    }
-    val live = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Long, Map[String, String], Option[String],
-        Option[DeletionVectors.Descriptor])]
+  private final case class AddFilter(spark: SparkSession,
+      keep: AddFile => Boolean, scan: DataFrame => DataFrame)
+
+  private def allAdds(spark: SparkSession): AddFilter =
+    AddFilter(spark, _ => true, identity)
+
+  private def addsAt(spark: SparkSession, paths: Set[String]): AddFilter =
+    // isInCollection compiles to InSet above Spark's in-threshold — a
+    // 10⁴-path probe is ONE distributed filter pushed into the scan
+    AddFilter(spark, a => paths(a.path), _.filter(col("path").isInCollection(paths)))
+
+  /** The adds that can possibly satisfy `conjuncts` — on executors the
+    * stats JSON parses inside the task, [[StatsPrune.mayMatch]] verbatim
+    * (the closure captures only the conjuncts, never this module).
+    */
+  private def addsMayMatch(spark: SparkSession,
+      conjuncts: Seq[(String, CmpOp, Any)], partCols: Set[String]): AddFilter =
+    AddFilter(spark,
+      a => conjuncts.forall { case (n, op, vv) =>
+        StatsPrune.mayMatch(a.partitionValues, a.stats, n, op, vv, partCols)
+      },
+      _.filter { (r: Row) =>
+        val pvm = if (r.isNullAt(2)) Map.empty[String, String]
+          else r.getMap[String, String](2).toMap
+        val sto = if (r.isNullAt(3)) None else Some(r.getString(3))
+        conjuncts.forall { case (n, op, vv) =>
+          StatsPrune.mayMatch(pvm, sto, n, op, vv, partCols)
+        }
+      })
+
+  /** THE LOG REPLAY — every snapshot this module serves comes out of this
+    * one fold. From `log` (one listing) it takes the newest checkpoint
+    * ≤ v, reads it with [[readCheckpoint]], then folds the JSON commits
+    * above it. Adds and removes reconcile by PROTOCOL.md's (path, dvId)
+    * rule, last action wins: a remove kills exactly the incarnation whose
+    * deletionVector uniqueId it names (both-absent matches). A DELETE
+    * commit is {remove(P, oldDv), add(P, newDv)} and its line order is
+    * not guaranteed — exact matching makes replay order-independent: the
+    * stale remove never kills the new add. `adds` = None replays only
+    * metaData/protocol/txn (no add is parsed, no Spark job runs); with a
+    * filter, the adds it rejects never enter the live set. Removes inside
+    * a checkpoint are VACUUM tombstones, not live-set state, and
+    * [[readCheckpoint]] never reads them. A commit missing inside the
+    * range is tolerated: a retention sweep is not atomic, and a
+    * mid-flight trim must not fail a read.
+    *
+    * Returns the snapshot, the add rows the distributed checkpoint scan
+    * collected, and the adds the driver kept from manifest and tail.
+    */
+  private def fold(root: String, log: LogListing, v: Long,
+      adds: Option[AddFilter]): (Snapshot, Long, Long) = {
+    val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
     var schemaJson: Option[String] = None
     var metaDataJson: Option[String] = None
     var protocolJson: Option[String] = None
     val txns = scala.collection.mutable.Map.empty[String, Long]
-    val ckpts = checkpoints(root)
-    val ckpt = ckpts.keys.filter(_ <= v).toSeq.sorted.lastOption
-    ckpt.foreach { c =>
-      val (dataParts, manifestActions) = checkpointContent(root, ckpts(c))
-      // v2 JSON manifest lines: protocol/metaData/txn (and inline adds on
-      // the no-sidecar shape) land driver-side; removes in a checkpoint
-      // are VACUUM tombstones, not live-set state — ignored, same as the
-      // parquet path below
-      manifestActions.foreach { node =>
-        if (node.has("metaData")) {
-          metaDataJson = Some(node.get("metaData").toString)
-          if (node.get("metaData").has("schemaString"))
-            schemaJson = Some(node.get("metaData").get("schemaString").asText())
-        } else if (node.has("protocol"))
-          protocolJson = Some(node.get("protocol").toString)
-        else if (node.has("txn")) {
-          val t = node.get("txn")
-          txns(t.get("appId").asText()) = t.get("version").asLong()
-        } else if (node.has("add") && withAdds) {
-          val a = node.get("add")
-          live(a.get("path").asText()) =
-            (if (a.has("size")) a.get("size").asLong() else 0L,
-              jsonPartitionValues(a),
-              Option(a.get("stats")).filterNot(_.isNull).map(n =>
-                if (n.isTextual) n.asText() else n.toString),
-              jsonDv(a))
+    var driverAdds = 0L
+    def applyAction(node: com.fasterxml.jackson.databind.JsonNode): Unit =
+      if (node.has("add")) adds.foreach { f =>
+        val a = jsonAddFile(node.get("add"))
+        // the new incarnation replaces any prior one; if IT is filtered
+        // out, the prior (now dead) entry must not linger
+        if (f.keep(a)) { live(a.path) = a; driverAdds += 1 }
+        else { live.remove(a.path); () }
+      } else if (node.has("remove")) {
+        if (adds.isDefined) {
+          val rm = node.get("remove")
+          val p = rm.get("path").asText()
+          val rid = jsonDv(rm).map(_.uniqueId).getOrElse("")
+          live.get(p).foreach { a =>
+            if (a.dv.map(_.uniqueId).getOrElse("") == rid) { live.remove(p); () }
+          }
         }
+      } else if (node.has("metaData")) {
+        metaDataJson = Some(node.get("metaData").toString)
+        if (node.get("metaData").has("schemaString"))
+          schemaJson = Some(node.get("metaData").get("schemaString").asText())
+      } else if (node.has("protocol"))
+        protocolJson = Some(node.get("protocol").toString)
+      else if (node.has("txn")) {
+        val t = node.get("txn")
+        txns(t.get("appId").asText()) = t.get("version").asLong()
       }
-      if (dataParts.nonEmpty) {
-      // mergeSchema: a v2 manifest and its sidecars spell DIFFERENT
-      // column sets (manifest: protocol/metaData/sidecar; sidecars:
-      // add/remove) — classic same-schema parts merge to themselves
-      val df = spark.read
-        .option("mergeSchema", isV2Manifest(Fs.name(ckpts(c).head)).toString)
-        .parquet(dataParts: _*)
-      def fieldsOf(column: String): Set[String] =
-        df.schema(column).dataType.asInstanceOf[StructType].fieldNames.toSet
-      // adds: live set as of the checkpoint (removes in a checkpoint are
-      // VACUUM tombstones, not live-set state — ignored for replay);
-      // column presence is probed, never assumed — pre-round-13
-      // checkpoints carried only an add.path column
-      if (withAdds && df.columns.contains("add")) {
-        val sz = if (fieldsOf("add")("size")) col("add.size").cast("long")
-          else lit(0L)
-        val pv = if (fieldsOf("add")("partitionValues")) col("add.partitionValues")
-          else lit(null).cast("map<string,string>")
-        val st = if (fieldsOf("add")("stats")) col("add.stats").cast("string")
-          else lit(null).cast("string")
-        val dvc = if (fieldsOf("add")("deletionVector"))
-          to_json(col("add.deletionVector")) else lit(null).cast("string")
-        df.filter(col("add").isNotNull).select(col("add.path"), sz, pv, st, dvc)
-          .collect().foreach { r =>
-            val m = if (r.isNullAt(2)) Map.empty[String, String]
-              else r.getMap[String, String](2).toMap
-            val dv = if (r.isNullAt(4)) None
-              else parseDvNode(mapper.readTree(r.getString(4)))
-            live(r.getString(0)) =
-              (r.getLong(1), m, if (r.isNullAt(3)) None else Some(r.getString(3)), dv)
-          }
-      }
-      // metaData/protocol ride out of the checkpoint as full JSON — on a
-      // checkpoint-bounded history (pre-checkpoint JSON trimmed by log
-      // retention) the checkpoint is the ONLY carrier of both, and the
-      // protocol gate below must still see them
-      if (df.columns.contains("metaData")) {
-        df.filter(col("metaData").isNotNull)
-          .select(to_json(col("metaData")),
-            if (fieldsOf("metaData")("schemaString")) col("metaData.schemaString")
-            else lit(null).cast("string"))
-          .collect().headOption.foreach { r =>
-            metaDataJson = Some(r.getString(0))
-            if (!r.isNullAt(1)) schemaJson = Some(r.getString(1))
-          }
-      }
-      if (df.columns.contains("protocol"))
-        df.filter(col("protocol").isNotNull)
-          .select(to_json(col("protocol"))).collect()
-          .headOption.foreach(r => protocolJson = Some(r.getString(0)))
-      // txn rows: one per appId (PROTOCOL.md requires checkpoints carry
-      // the latest SetTransaction per app — a trimmed history must not
-      // reset a sink's idempotence cursor and re-admit a replayed batch)
-      if (df.columns.contains("txn"))
-        df.filter(col("txn").isNotNull)
-          .select(col("txn.appId"), col("txn.version").cast("long"))
-          .collect().foreach(r => txns(r.getString(0)) = r.getLong(1))
+    val ckpt = log.checkpointAtOrBelow(v)
+    var scanned = 0L
+    ckpt.foreach { case (_, parts) =>
+      val cp = readCheckpoint(root, parts.map(_.path), withAdds = adds.isDefined)
+      cp.actions.foreach(applyAction)
+      adds.foreach { f =>
+        val rows = scanCheckpointAdds(f, cp.addFiles, cp.addTypes)
+        scanned = rows.size.toLong
+        rows.foreach(a => live(a.path) = a)
       }
     }
-    (ckpt.getOrElse(-1L) + 1L to v).foreach { i =>
-      // a missing commit inside the range is tolerated exactly like
-      // latestTailAction/changedFileAdds tolerate it: a retention sweep
-      // is not atomic, and a mid-flight trim must not fail snapshot reads
-      // that every other path in this module survives
+    (ckpt.fold(-1L)(_._1) + 1L to v).foreach { i =>
       readLinesIfExists(commitPath(root, i)).foreach { line =>
-        if (line.nonEmpty) {
-          val node = mapper.readTree(line)
-          if (node.has("add")) {
-            if (withAdds) {
-            val a = node.get("add")
-            live(a.get("path").asText()) =
-              (if (a.has("size")) a.get("size").asLong() else 0L,
-                jsonPartitionValues(a),
-                // delta-spark spells stats as a JSON STRING field
-                Option(a.get("stats")).filterNot(_.isNull).map(n =>
-                  if (n.isTextual) n.asText() else n.toString),
-                jsonDv(a))
-            }
-          } else if (node.has("remove")) {
-            if (withAdds) {
-            // PROTOCOL.md action reconciliation keys the live set by
-            // (path, dvId): a remove kills exactly the incarnation whose
-            // deletionVector uniqueId it names (both-absent matches). A
-            // DELETE commit is {remove(P, oldDv), add(P, newDv)} and its
-            // line order is not guaranteed — exact matching makes replay
-            // order-independent: the stale remove never kills the new add.
-            val rm = node.get("remove")
-            val p = rm.get("path").asText()
-            val rid = jsonDv(rm).map(_.uniqueId).getOrElse("")
-            live.get(p).foreach { case (_, _, _, dv) =>
-              if (dv.map(_.uniqueId).getOrElse("") == rid) live.remove(p)
-            }
-            }
-          } else if (node.has("metaData")) {
-            metaDataJson = Some(node.get("metaData").toString)
-            if (node.get("metaData").has("schemaString"))
-              schemaJson = Some(node.get("metaData").get("schemaString").asText())
-          } else if (node.has("protocol"))
-            protocolJson = Some(node.get("protocol").toString)
-          else if (node.has("txn")) {
-            val t = node.get("txn")
-            txns(t.get("appId").asText()) = t.get("version").asLong()
-          }
-        }
+        if (line.nonEmpty) applyAction(mapper.readTree(line))
       }
     }
-    validateReadable(root, protocolJson, metaDataJson)
-    val snap = Snapshot(
-      live.toSeq.map { case (p, (s, pv, st, dv)) => AddFile(p, s, pv, st, dv) },
-      schemaJson, metaDataJson, protocolJson, txns.toMap)
-    if (snapshotCacheEnabled)
-      snapCache.synchronized { snapCache.put(key, snap); () }
+    (Snapshot(live.values.toIndexedSeq, schemaJson, metaDataJson, protocolJson,
+      txns.toMap), scanned, driverAdds)
+  }
+
+  /** One checkpoint as the driver reads it: its non-add actions as action
+    * JSON nodes (protocol, metaData, txn, sidecar — and a v2 manifest's
+    * inline adds), plus, when the replay wants adds, the parquet files
+    * holding the add rows and the `add` column type each file's footer
+    * declares.
+    */
+  private final case class CheckpointRead(
+      actions: Seq[com.fasterxml.jackson.databind.JsonNode],
+      addFiles: Seq[String],
+      addTypes: Seq[org.apache.parquet.schema.GroupType])
+
+  /** Classic checkpoints: the parts' protocol/metaData/txn columns are
+    * read on the driver, their add rows by the distributed scan. A v2
+    * manifest is read whole on the driver (it carries no add rows beyond
+    * the inline compat shape), and its `sidecar` actions name the files
+    * the distributed scan reads; sidecar counts are bounded by checkpoint
+    * part sizing, never by table file counts.
+    */
+  private def readCheckpoint(root: String, parts: Seq[String],
+      withAdds: Boolean): CheckpointRead = {
+    parts match {
+      case Seq(m) if V2CkptName.matches(Fs.name(m)) =>
+        val wanted = Set("protocol", "metaData", "txn", "sidecar") ++
+          (if (withAdds) Set("add") else Set.empty)
+        val actions =
+          if (m.endsWith(".json"))
+            Fs.readLines(m).filter(_.nonEmpty).map(mapper.readTree)
+              .filter(n => wanted.exists(n.has))
+          else parquetActions(m, wanted)._1
+        val sidecars =
+          if (!withAdds) Seq.empty
+          else actions.filter(_.has("sidecar")).map { n =>
+            val p = n.get("sidecar").get("path").asText()
+            if (p.contains("://") || p.startsWith("/")) p
+            else Fs.resolve(Fs.resolve(logDir(root), "_sidecars"), p)
+          }
+        CheckpointRead(actions, sidecars,
+          sidecars.flatMap(s => parquetActions(s, Set.empty)._2))
+      case _ =>
+        val read = parts.map(p => parquetActions(p, Set("protocol", "metaData", "txn")))
+        CheckpointRead(read.flatMap(_._1),
+          if (withAdds) parts else Seq.empty,
+          if (withAdds) read.flatMap(_._2) else Seq.empty)
+    }
+  }
+
+  /** The non-null `columns` actions of one checkpoint parquet file as
+    * action JSON nodes — driver-side parquet-mr, only those columns
+    * decoded — and the file's `add` column type from the same footer.
+    */
+  private def parquetActions(file: String, columns: Set[String])
+      : (Seq[com.fasterxml.jackson.databind.JsonNode],
+        Option[org.apache.parquet.schema.GroupType]) = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(Fs.hp(file), Fs.hadoopConf))
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val groups = schema.getFields.asScala.toSeq.filterNot(_.isPrimitive)
+      val out = Seq.newBuilder[com.fasterxml.jackson.databind.JsonNode]
+      val wanted = groups.filter(f => columns(f.getName))
+      if (wanted.nonEmpty) {
+        val proj = new org.apache.parquet.schema.MessageType(schema.getName, wanted.asJava)
+        reader.setRequestedSchema(proj)
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(proj, schema)
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records = io.getRecordReader(pages,
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(proj))
+          var i = 0L
+          while (i < pages.getRowCount) {
+            val g = records.read()
+            (0 until proj.getFieldCount).foreach { f =>
+              if (g.getFieldRepetitionCount(f) > 0)
+                out += mapper.createObjectNode().set[com.fasterxml.jackson.databind.JsonNode](
+                  proj.getFieldName(f), groupToJson(g.getGroup(f, 0)))
+            }
+            i += 1
+          }
+          pages = reader.readNextRowGroup()
+        }
+      }
+      (out.result(), groups.find(_.getName == "add").map(_.asGroupType()))
+    } finally reader.close()
+  }
+
+  /** One parquet-mr group as its action JSON node. Scalars keep their
+    * parquet types (ints stay JSON numbers), LIST groups (3-level, or the
+    * legacy repeated-primitive spelling) become JSON arrays, MAP key_value
+    * groups become JSON objects; other nested groups recurse. Every field
+    * survives: after a log-retention trim the checkpoint is the ONLY
+    * carrier of partition columns, column-mapping mode and readerFeatures,
+    * and a lossy read would report "unpartitioned, unmapped, featureless"
+    * — the exact misread the gates exist to stop.
+    */
+  private def groupToJson(g: org.apache.parquet.example.data.Group)
+      : com.fasterxml.jackson.databind.node.ObjectNode = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val node = mapper.createObjectNode()
+    val gt = g.getType
+    def primNode(i: Int, j: Int): com.fasterxml.jackson.databind.JsonNode = {
+      val pt = gt.getType(i).asPrimitiveType().getPrimitiveTypeName
+      pt match {
+        case INT32 => node.numberNode(g.getInteger(i, j))
+        case INT64 => node.numberNode(g.getLong(i, j))
+        case BOOLEAN => node.booleanNode(g.getBoolean(i, j))
+        case DOUBLE => node.numberNode(g.getDouble(i, j))
+        case FLOAT => node.numberNode(g.getFloat(i, j))
+        case _ => node.textNode(g.getValueToString(i, j))
+      }
+    }
+    (0 until gt.getFieldCount).foreach { i =>
+      val ft = gt.getType(i)
+      val n = g.getFieldRepetitionCount(i)
+      if (n > 0) {
+        val ann = Option(ft.getLogicalTypeAnnotation)
+        if (ft.isPrimitive) {
+          if (ft.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED)) {
+            val arr = node.putArray(ft.getName)
+            (0 until n).foreach(j => arr.add(primNode(i, j)))
+          } else
+            // set[T] is generically typed — never ascribe its result
+            node.set[com.fasterxml.jackson.databind.JsonNode](
+              ft.getName, primNode(i, 0))
+        } else if (ann.contains(LogicalTypeAnnotation.listType())) {
+          // 3-level list: group (LIST) { repeated group list { element } };
+          // legacy 2-level: group (LIST) { repeated <primitive> element }
+          val arr = node.putArray(ft.getName)
+          val lg = g.getGroup(i, 0)
+          val legacy = lg.getType.getType(0).isPrimitive
+          (0 until lg.getFieldRepetitionCount(0)).foreach { j =>
+            if (legacy) arr.add(lg.getValueToString(0, j))
+            else {
+              val eg = lg.getGroup(0, j)
+              if (eg.getFieldRepetitionCount(0) > 0)
+                arr.add(eg.getValueToString(0, 0))
+              else arr.addNull()
+            }
+          }
+        } else if (ann.contains(LogicalTypeAnnotation.mapType())) {
+          // map: group (MAP) { repeated group key_value { key; value } }
+          val mg = g.getGroup(i, 0)
+          val obj = node.putObject(ft.getName)
+          (0 until mg.getFieldRepetitionCount(0)).foreach { j =>
+            val kv = mg.getGroup(0, j)
+            val key = kv.getValueToString(0, 0)
+            if (kv.getType.getFieldCount > 1 && kv.getFieldRepetitionCount(1) > 0)
+              obj.put(key, kv.getValueToString(1, 0))
+            else obj.putNull(key)
+          }
+        } else node.set[com.fasterxml.jackson.databind.JsonNode](
+          ft.getName, groupToJson(g.getGroup(i, 0)))
+      }
+    }
+    node
+  }
+
+  /** The checkpoint's add rows that pass `f.scan`, collected in ONE Spark
+    * job. The read schema is the union of the `add` fields the files'
+    * footers declare (converted the way Spark's own inference converts
+    * them), so no schema-inference job runs and a part missing a field
+    * null-fills it instead of hiding it from the other parts; fields are
+    * probed, never assumed — pre-round-13 checkpoints carried only an
+    * add.path column.
+    */
+  private def scanCheckpointAdds(f: AddFilter, files: Seq[String],
+      addTypes: Seq[org.apache.parquet.schema.GroupType]): Seq[AddFile] = {
+    if (files.isEmpty || addTypes.isEmpty) return Seq.empty
+    val conv = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(f.spark.sessionState.conf)
+    val wanted = Set("path", "size", "partitionValues", "stats", "deletionVector")
+    val addType = StructType(addTypes.flatMap { t =>
+      conv.convert(new org.apache.parquet.schema.MessageType("add", t))("add")
+        .dataType.asInstanceOf[StructType].fields
+    }.filter(fd => wanted(fd.name)).distinctBy(_.name).map(_.copy(nullable = true)))
+    def field(name: String, present: Column, absent: Column): Column =
+      (if (addType.fieldNames.contains(name)) present else absent).as(name)
+    val rows = f.scan(f.spark.read.schema(StructType(Seq(StructField("add", addType))))
+      .parquet(files: _*)
+      .filter(col("add").isNotNull)
+      .select(col("add.path").as("path"),
+        field("size", col("add.size").cast("long"), lit(0L)),
+        field("partitionValues", col("add.partitionValues"),
+          lit(null).cast("map<string,string>")),
+        field("stats", col("add.stats").cast("string"), lit(null).cast("string")),
+        field("deletionVector", to_json(col("add.deletionVector")),
+          lit(null).cast("string"))))
+      .collect()
+    rows.toIndexedSeq.map { r =>
+      AddFile(r.getString(0), r.getLong(1),
+        if (r.isNullAt(2)) Map.empty[String, String] else r.getMap[String, String](2).toMap,
+        if (r.isNullAt(3)) None else Some(r.getString(3)),
+        if (r.isNullAt(4)) None else parseDvNode(mapper.readTree(r.getString(4))))
+    }
+  }
+
+  /** `version` checked against the listing's bound (default: latest). */
+  private def versionIn(root: String, log: LogListing,
+      version: Option[Long]): Long = {
+    require(log.latest >= 0, s"no Delta log at $root")
+    val v = version.getOrElse(log.latest)
+    require(v >= 0 && v <= log.latest, s"version $v out of range [0, ${log.latest}]")
+    v
+  }
+
+  /** The snapshot at `v` through the cache: a full snapshot with
+    * `spark`, the metadata-only one (no add parsed, no Spark job)
+    * without — which a cached full snapshot also serves. Not run through
+    * the protocol gate; [[replay]] is the reader's entry point.
+    */
+  private def snapshotAt(root: String, log: LogListing, v: Long,
+      spark: Option[SparkSession]): Snapshot = {
+    val key = snapKey(root, log, v, withAdds = spark.isDefined)
+    cachedSnapshot(key)
+      .orElse(if (spark.isEmpty) cachedSnapshot(key.copy(_3 = true)) else None)
+      .getOrElse {
+        val snap = fold(root, log, v, spark.map(allAdds))._1
+        snapCache.synchronized { snapCache.put(key, snap); () }
+        snap
+      }
+  }
+
+  /** The full snapshot at `version` (default: latest) from one log
+    * listing, through the cache and the protocol refusal gate.
+    */
+  private def replay(spark: SparkSession, root: String,
+      version: Option[Long]): Snapshot = {
+    val log = listLog(root)
+    val snap = snapshotAt(root, log, versionIn(root, log, version), Some(spark))
+    validateReadable(root, snap.protocolJson, snap.metaDataJson)
     snap
   }
 
-  /** One add-action JSON node as an [[AddFile]] — THE parse, shared by
-    * every replay/prune/feed path that meets an add as JSON (checkpoint
-    * manifest inline adds, commit-tail adds). A new add field (stats
-    * spelling, baseRowId, ...) lands here once instead of drifting
-    * across copies.
+  /** The metadata-only snapshot at the latest version, None when the
+    * table does not exist. No protocol gate: writers read through it.
     */
-  private def jsonAddFile(a: com.fasterxml.jackson.databind.JsonNode): AddFile =
-    AddFile(a.get("path").asText(),
-      if (a.has("size")) a.get("size").asLong() else 0L,
-      jsonPartitionValues(a),
-      Option(a.get("stats")).filterNot(_.isNull).map(n =>
-        if (n.isTextual) n.asText() else n.toString),
-      jsonDv(a))
+  private def latestMeta(root: String): Option[Snapshot] = {
+    val log = listLog(root)
+    if (log.latest < 0) None else Some(snapshotAt(root, log, log.latest, None))
+  }
 
   /** [[replay]] restricted to `paths` — the live INCARNATIONS of exactly
-    * those paths at `version`, reconciled under the same (path, dvId)
-    * last-action-wins rule. The change feed's full-remove derivation
+    * those paths at `version`. The change feed's full-remove derivation
     * needs ONLY the removed paths' prior state (their partitionValues +
-    * deletion vector), and a full replay(v-1) materializes the ENTIRE
-    * live add set driver-side — O(files) work per derived remove on a
-    * 10⁶-file table. Here the checkpoint half stays DISTRIBUTED (the
-    * path predicate pushes into the checkpoint parquet scan; only
-    * matching rows reach the driver) and the JSON tail filters as it
-    * parses, so the driver cost is changes-sized: O(|paths| + tail).
-    * Never cached — each call is one bounded probe, and caching keyed on
-    * arbitrary path sets would just thrash the snapshot LRU.
+    * deletion vector); the path predicate pushes into the checkpoint
+    * scan, so only matching rows reach the driver and the driver cost is
+    * changes-sized: O(|paths| + tail). Never cached — each call is one
+    * bounded probe, and caching keyed on arbitrary path sets would just
+    * thrash the snapshot LRU.
     */
   private def replayForPaths(spark: SparkSession, root: String,
       version: Long, paths: Set[String]): Seq[AddFile] = {
     if (paths.isEmpty) return Seq.empty
-    var collected = 0L
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    val ckpts = checkpoints(root)
-    val ckpt = ckpts.keys.filter(_ <= version).toSeq.sorted.lastOption
-    ckpt.foreach { c =>
-      val (dataParts, manifestActions) = checkpointContent(root, ckpts(c))
-      manifestActions.foreach { node =>
-        if (node.has("add")) {
-          val a = node.get("add")
-          val p = a.get("path").asText()
-          if (paths(p)) {
-            collected += 1
-            live(p) = jsonAddFile(a)
-          }
-        }
-      }
-      if (dataParts.nonEmpty) {
-      val df = spark.read
-        .option("mergeSchema", isV2Manifest(Fs.name(ckpts(c).head)).toString)
-        .parquet(dataParts: _*)
-      def fieldsOf(column: String): Set[String] =
-        df.schema(column).dataType.asInstanceOf[StructType].fieldNames.toSet
-      if (df.columns.contains("add")) {
-        val sz = if (fieldsOf("add")("size")) col("add.size").cast("long")
-          else lit(0L)
-        val pv = if (fieldsOf("add")("partitionValues")) col("add.partitionValues")
-          else lit(null).cast("map<string,string>")
-        val st = if (fieldsOf("add")("stats")) col("add.stats").cast("string")
-          else lit(null).cast("string")
-        val dvc = if (fieldsOf("add")("deletionVector"))
-          to_json(col("add.deletionVector")) else lit(null).cast("string")
-        // isInCollection compiles to InSet above Spark's in-threshold —
-        // a 10⁴-path remove commit probes as ONE distributed filter, and
-        // only the matching add rows ever transit to the driver
-        df.filter(col("add").isNotNull &&
-            col("add.path").isInCollection(paths))
-          .select(col("add.path"), sz, pv, st, dvc)
-          .collect().foreach { r =>
-            collected += 1
-            val m = if (r.isNullAt(2)) Map.empty[String, String]
-              else r.getMap[String, String](2).toMap
-            val dv = if (r.isNullAt(4)) None
-              else parseDvNode(mapper.readTree(r.getString(4)))
-            live(r.getString(0)) = AddFile(r.getString(0), r.getLong(1), m,
-              if (r.isNullAt(3)) None else Some(r.getString(3)), dv)
-          }
-      }
-      }
-    }
-    (ckpt.getOrElse(-1L) + 1L to version).foreach { i =>
-      readLinesIfExists(commitPath(root, i)).foreach { line =>
-        // same per-line JSON parse cost replay() pays on the tail; the
-        // set-membership check (not an O(|paths|) substring scan) keeps
-        // a 10⁴-path probe linear in the tail
-        if (line.nonEmpty) {
-          val node = mapper.readTree(line)
-          if (node.has("add")) {
-            val a = node.get("add")
-            val p = a.get("path").asText()
-            if (paths(p)) {
-              collected += 1
-              live(p) = jsonAddFile(a)
-            }
-          } else if (node.has("remove")) {
-            val rm = node.get("remove")
-            val p = rm.get("path").asText()
-            if (paths(p)) {
-              val rid = jsonDv(rm).map(_.uniqueId).getOrElse("")
-              live.get(p).foreach { a =>
-                if (a.dv.map(_.uniqueId).getOrElse("") == rid) live.remove(p)
-              }
-            }
-          }
-        }
-      }
-    }
-    lastFeedReplayCollectedAdds = collected
-    live.values.toIndexedSeq
+    val (snap, scanned, kept) =
+      fold(root, listLog(root), version, Some(addsAt(spark, paths)))
+    lastFeedReplayCollectedAdds = scanned + kept
+    snap.adds
   }
 
   /** Add rows the last [[replayForPaths]] materialized driver-side —
@@ -675,7 +685,7 @@ object DeltaLog {
     * `deletionVectors`, `timestampNtz` (one more leaf type — batch scan,
     * partition decode, and the stream reader's INT64 lattice all carry
     * it) or `v2Checkpoint` (manifest + sidecar layout, read by
-    * [[checkpointContent]]) (DV'd files are row-filtered through
+    * [[readCheckpoint]]) (DV'd files are row-filtered through
     * `_metadata.row_index` anti-joins in [[readAdds]]; the adds-only
     * incremental path still refuses DV commits — see [[changedFileAdds]]
     * — while the change feed, batch and streamed, DERIVES their
@@ -1132,7 +1142,7 @@ object DeltaLog {
       version: Option[Long] = None): Seq[String] =
     prunedSnapshot(spark, root, predicate, version)._1.map(_.path)
 
-  /** Add rows the last [[prunedAdds]] checkpoint filter COLLECTED to the
+  /** Add rows the last pruned read's checkpoint scan COLLECTED to the
     * driver — the audit counter the bounded-driver gate reads (-1: the
     * last pruned read never touched a checkpoint distributively, e.g. a
     * cache hit or a checkpoint-less table).
@@ -1140,45 +1150,47 @@ object DeltaLog {
   @volatile private[graft] var lastPrunedCollectedAdds: Long = -1L
 
   /** The (pruned live adds, meta-only snapshot) a predicate read needs.
-    * BOUNDED-DRIVER contract: on a checkpointed table the add rows are
-    * filtered DISTRIBUTED over the checkpoint parquet (stats JSON parsed
-    * on executors, [[StatsPrune.mayMatch]] verbatim) and only the
-    * SURVIVORS are collected — driver state and JSON parsing scale with
-    * the pruned set plus the commit tail, never the table's file count
-    * (10⁵–10⁶ add rows at 100 TB). A cached full snapshot short-circuits
-    * to a driver filter (already materialized, no job needed); a
-    * checkpoint-less table replays its (tail-sized) log as before.
+    * BOUNDED-DRIVER contract: on a checkpointed table the metaData comes
+    * from the metadata-only replay (no Spark job), and the one [[fold]]
+    * then runs with [[addsMayMatch]] as its filter — the checkpoint's add
+    * rows are pruned DISTRIBUTED (stats JSON parsed on executors,
+    * [[StatsPrune.mayMatch]] verbatim) in ONE job, and only the SURVIVORS
+    * are collected; commit-tail adds prune through the same test on the
+    * driver. Driver state and JSON parsing scale with the pruned set
+    * plus the commit tail, never the table's file count (10⁵–10⁶ add
+    * rows at 100 TB). A cached full snapshot short-circuits to a driver
+    * filter (already materialized, no job needed); a checkpoint-less
+    * table replays its (tail-sized) log in full and is cached.
     */
   private def prunedSnapshot(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column, version: Option[Long])
       : (Seq[AddFile], Snapshot) = {
-    val cur = currentVersion(root)
-    require(cur >= 0, s"no Delta log at $root")
-    val v = version.getOrElse(cur)
-    require(v >= 0 && v <= cur, s"version $v out of range [0, $cur]")
+    val log = listLog(root)
+    val v = versionIn(root, log, version)
+    def gated(snap: Snapshot): Snapshot = {
+      validateReadable(root, snap.protocolJson, snap.metaDataJson); snap
+    }
     def driverFilter(snap: Snapshot): (Seq[AddFile], Snapshot) = {
       val (conjuncts, partCols) =
         prunablePhysical(spark, predicate, snap.schemaJson, snap.metaDataJson)
       lastPrunedCollectedAdds = -1L
-      (snap.adds.filter(a => conjuncts.forall { case (n, op, vv) =>
-        fileMayMatch(a, n, op, vv, partCols)
-      }), snap)
+      (snap.adds.filter(addsMayMatch(spark, conjuncts, partCols).keep), snap)
     }
-    val cachedFull =
-      if (snapshotCacheEnabled)
-        snapCache.synchronized(Option(snapCache.get(snapKey(root, v, true))))
-      else None
-    cachedFull match {
-      case Some(snap) => driverFilter(snap)
-      case None => newestCheckpointAtOrBelow(root, v) match {
-        case None => driverFilter(replay(spark, root, Some(v)))
-        case Some((cv, parts)) =>
-          val meta = replay(spark, root, Some(v), withAdds = false)
-          val (conjuncts, partCols) =
-            prunablePhysical(spark, predicate, meta.schemaJson, meta.metaDataJson)
-          if (conjuncts.isEmpty) driverFilter(replay(spark, root, Some(v)))
-          else (prunedAdds(spark, root, v, cv, parts, conjuncts, partCols), meta)
-      }
+    def full(): Snapshot = gated(snapshotAt(root, log, v, Some(spark)))
+    cachedSnapshot(snapKey(root, log, v, withAdds = true)) match {
+      case Some(snap) => driverFilter(gated(snap))
+      case None if log.checkpointAtOrBelow(v).isEmpty => driverFilter(full())
+      case None =>
+        val meta = gated(snapshotAt(root, log, v, None))
+        val (conjuncts, partCols) =
+          prunablePhysical(spark, predicate, meta.schemaJson, meta.metaDataJson)
+        if (conjuncts.isEmpty) driverFilter(full())
+        else {
+          val (pruned, scanned, _) =
+            fold(root, log, v, Some(addsMayMatch(spark, conjuncts, partCols)))
+          lastPrunedCollectedAdds = scanned
+          (pruned.adds, meta)
+        }
     }
   }
 
@@ -1208,95 +1220,6 @@ object DeltaLog {
         phys.get(n).map(p => (p, op, vv))
       }, partColsLogical.flatMap(phys.get).toSet)
     }
-  }
-
-  /** The live adds at `v` that can possibly satisfy `conjuncts`, with the
-    * checkpoint side evaluated on EXECUTORS and only survivors collected.
-    * The commit tail (checkpoint-cadence-sized) applies the same
-    * (path, dvId) reconciliation as [[replay]], with tail adds pruned
-    * driver-side through the identical [[fileMayMatch]].
-    */
-  private def prunedAdds(spark: SparkSession, root: String, v: Long,
-      ckptVersion: Long, ckptParts: Seq[String],
-      conjuncts: Seq[(String, CmpOp, Any)], partCols: Set[String])
-      : Seq[AddFile] = {
-    val (dataParts, manifestActions) = checkpointContent(root, ckptParts)
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, AddFile]
-    // v2 JSON-manifest inline adds (the no-sidecar compat shape) prune
-    // driver-side through the identical fileMayMatch — a shape bounded by
-    // a writer that chose an inline JSON manifest, not by this reader
-    manifestActions.foreach { node =>
-      if (node.has("add")) {
-        val af = jsonAddFile(node.get("add"))
-        if (conjuncts.forall { case (n, op, vv) =>
-            fileMayMatch(af, n, op, vv, partCols) })
-          live(af.path) = af
-      }
-    }
-    val df = if (dataParts.isEmpty) null
-      else spark.read
-        .option("mergeSchema", isV2Manifest(Fs.name(ckptParts.head)).toString)
-        .parquet(dataParts: _*)
-    def fieldsOf(column: String): Set[String] =
-      df.schema(column).dataType.asInstanceOf[StructType].fieldNames.toSet
-    if (df != null && df.columns.contains("add")) {
-      val sz = if (fieldsOf("add")("size")) col("add.size").cast("long")
-        else lit(0L)
-      val pv = if (fieldsOf("add")("partitionValues")) col("add.partitionValues")
-        else lit(null).cast("map<string,string>")
-      val st = if (fieldsOf("add")("stats")) col("add.stats").cast("string")
-        else lit(null).cast("string")
-      val dvc = if (fieldsOf("add")("deletionVector"))
-        to_json(col("add.deletionVector")) else lit(null).cast("string")
-      val cj = conjuncts
-      val pc = partCols
-      val keptRows = df.filter(col("add").isNotNull)
-        .select(col("add.path"), sz, pv, st, dvc)
-        .filter { (r: Row) =>
-          val pvm = if (r.isNullAt(2)) Map.empty[String, String]
-            else r.getMap[String, String](2).toMap
-          val sto = if (r.isNullAt(3)) None else Some(r.getString(3))
-          cj.forall { case (n, op, vv) =>
-            StatsPrune.mayMatch(pvm, sto, n, op, vv, pc)
-          }
-        }
-        .collect()
-      lastPrunedCollectedAdds = keptRows.length.toLong
-      keptRows.foreach { r =>
-        val pvm = if (r.isNullAt(2)) Map.empty[String, String]
-          else r.getMap[String, String](2).toMap
-        live(r.getString(0)) = AddFile(r.getString(0), r.getLong(1), pvm,
-          if (r.isNullAt(3)) None else Some(r.getString(3)),
-          if (r.isNullAt(4)) None else parseDvNode(mapper.readTree(r.getString(4))))
-      }
-    } else lastPrunedCollectedAdds = 0L
-    ((ckptVersion + 1L) to v).foreach { i =>
-      readLinesIfExists(commitPath(root, i)).foreach { line =>
-          if (line.nonEmpty) {
-            val node = mapper.readTree(line)
-            if (node.has("add")) {
-              val af = jsonAddFile(node.get("add"))
-              val p = af.path
-              // the new incarnation replaces any prior one; if IT prunes
-              // out, the prior (now dead) entry must not linger
-              if (conjuncts.forall { case (n, op, vv) =>
-                  fileMayMatch(af, n, op, vv, partCols) })
-                live(p) = af
-              else { live.remove(p); () }
-            } else if (node.has("remove")) {
-              val rm = node.get("remove")
-              val p = rm.get("path").asText()
-              val rid = jsonDv(rm).map(_.uniqueId).getOrElse("")
-              live.get(p).foreach { af =>
-                if (af.dv.map(_.uniqueId).getOrElse("") == rid) {
-                  live.remove(p); ()
-                }
-              }
-            }
-          }
-        }
-    }
-    live.values.toSeq
   }
 
   /** Resolve + fold the predicate against a ONE-ROW dummy frame with the
@@ -1386,33 +1309,39 @@ object DeltaLog {
     }
   }
 
-  /** Can `a` possibly hold a row satisfying (name op v)? Partition
-    * columns answer exactly (one value per file — a NULL partition value
-    * satisfies no comparison, so the file skips); data columns answer
-    * from the stats envelope; anything unresolvable reads.
-    */
-  private def fileMayMatch(a: AddFile, name: String, op: CmpOp, v: Any,
-      partCols: Set[String]): Boolean =
-    StatsPrune.mayMatch(a.partitionValues, a.stats, name, op, v, partCols)
-
   private def jstr(s: String): String = mapper.writeValueAsString(s)
 
   /** Publish commit `v` atomically (put-if-absent on the commit file —
-    * the same single-winner race Delta writers run on object stores).
+    * the same single-winner race Delta writers run on object stores). A
+    * writer that loses the race deletes its attempt's data directory
+    * `dir` and the `_change_data/` directory of the same name: no commit
+    * references their files, and [[vacuum]] works from the log, so
+    * nothing else would ever reclaim them.
     */
-  private def publish(root: String, v: Long, actions: Seq[String]): Unit = {
+  private def publish(root: String, v: Long, actions: Seq[String],
+      dir: Option[String] = None): Unit = {
     Fs.mkdirs(logDir(root))
     try
       Fs.createNew(commitPath(root, v),
         actions.mkString("", "\n", "\n").getBytes("UTF-8"))
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        dir.foreach(d => Seq(d, s"_change_data/$d").foreach(p =>
+          Fs.deleteRecursive(Fs.resolve(root, p))))
         throw new java.util.ConcurrentModificationException(
           s"DeltaLog $root: version $v was committed concurrently")
     }
   }
 
-  /** Write `df`'s rows as parquet under a commit-unique subdirectory and
+  /** The directory one commit attempt at `v` writes its data files under
+    * (its change files go under `_change_data/` + the same name) —
+    * unique per attempt, so [[publish]] can delete a lost attempt's
+    * files and nobody else's.
+    */
+  private def attemptDir(v: Long): String =
+    f"c$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** Write `df`'s rows as parquet under `sub` (an [[attemptDir]]) and
     * return (relativePath, size, partitionValues) per data file. With
     * `partCols` non-empty the write is PARTITIONED exactly as the Delta
     * protocol prescribes: the partition columns are NOT stored in the
@@ -1431,11 +1360,8 @@ object DeltaLog {
     */
   private object FieldIdWriteLock
 
-  private def writeDataFiles(root: String, v: Long, df: DataFrame,
-      partCols: Seq[String] = Seq.empty,
-      dirPrefix: String = ""): Seq[WrittenFile] = {
-    val sub = s"${dirPrefix}c" +
-      f"$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
+  private def writeDataFiles(root: String, sub: String, df: DataFrame,
+      partCols: Seq[String] = Seq.empty): Seq[WrittenFile] = {
     def doWrite(): Unit =
       if (partCols.nonEmpty) {
         val missing = partCols.filterNot(df.columns.contains)
@@ -1900,169 +1826,23 @@ object DeltaLog {
       s""""writerFeatures":${jarr(newWriter)}}}""")
   }
 
-  /** Newest checkpoint version at or below `v`, with its part files. */
-  private def newestCheckpointAtOrBelow(root: String,
-      v: Long): Option[(Long, Seq[String])] = {
-    val cs = checkpoints(root).filter(_._1 <= v)
-    if (cs.isEmpty) None else Some(cs.maxBy(_._1))
-  }
-
-  /** Newest JSON action of `kind` scanning the commit tail BACKWARD from
-    * `cur` down to (and excluding) the newest checkpoint — never past it:
-    * standard Delta log retention may have trimmed pre-checkpoint JSON on
-    * a foreign table, and the scan must stay bounded by checkpoint
-    * cadence, not table lifetime. Missing commit files inside the scanned
-    * range are tolerated (a retention sweep is not atomic). Driver string
-    * work, no SparkSession.
-    */
-  private def latestTailAction(root: String,
-      kind: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val cur = currentVersion(root)
-    val lo = newestCheckpointAtOrBelow(root, cur).map(_._1 + 1).getOrElse(0L)
-    (cur to lo by -1L).iterator
-      .flatMap { v =>
-        readLinesIfExists(commitPath(root, v)).reverseIterator
-          .flatMap { line =>
-            if (line.isEmpty) None
-            else {
-              val node = mapper.readTree(line)
-              if (node.has(kind)) Some(node.get(kind)) else None
-            }
-          }
-      }.nextOption()
-  }
-
-  /** One action struct out of a checkpoint's parquet parts reconstructed
-    * as the FULL action JSON node (the same shape `latestTailAction`
-    * returns from the commit tail) — driver-side parquet-mr, no
-    * SparkSession. Scalars keep their parquet types (ints stay JSON
-    * numbers), Spark/delta-style 3-level LIST groups become JSON arrays,
-    * MAP key_value groups become JSON objects; other nested groups recurse.
-    * This is what lets every metaData-derived gate (partition columns,
-    * column-mapping mode, readerFeatures) survive a log-retention trim:
-    * after the trim, the checkpoint is the ONLY carrier of these fields,
-    * and a scalar-only fallback would silently report "unpartitioned,
-    * unmapped, featureless" — the exact misread the gates exist to stop.
-    */
-  private def checkpointActionJson(parts: Seq[String],
-      kind: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val it = parts.iterator
-    while (it.hasNext) {
-      val p = it.next()
-      // a v2 JSON manifest carries its actions as JSON lines directly
-      if (Fs.name(p).endsWith(".json")) {
-        Fs.readLines(p).foreach { line =>
-          if (line.nonEmpty) {
-            val node = mapper.readTree(line)
-            if (node.has(kind)) return Some(node.get(kind))
-          }
-        }
-      } else {
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            new org.apache.hadoop.fs.Path(p.toString))
-          .build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            if (g.getType.containsField(kind) &&
-              g.getFieldRepetitionCount(kind) > 0)
-              return Some(groupToJson(g.getGroup(kind, 0)))
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
-    }
-    None
-  }
-
-  private def groupToJson(g: org.apache.parquet.example.data.Group)
-      : com.fasterxml.jackson.databind.node.ObjectNode = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val node = mapper.createObjectNode()
-    val gt = g.getType
-    def primNode(i: Int, j: Int): com.fasterxml.jackson.databind.JsonNode = {
-      val pt = gt.getType(i).asPrimitiveType().getPrimitiveTypeName
-      pt match {
-        case INT32 => node.numberNode(g.getInteger(i, j))
-        case INT64 => node.numberNode(g.getLong(i, j))
-        case BOOLEAN => node.booleanNode(g.getBoolean(i, j))
-        case DOUBLE => node.numberNode(g.getDouble(i, j))
-        case FLOAT => node.numberNode(g.getFloat(i, j))
-        case _ => node.textNode(g.getValueToString(i, j))
-      }
-    }
-    (0 until gt.getFieldCount).foreach { i =>
-      val ft = gt.getType(i)
-      val n = g.getFieldRepetitionCount(i)
-      if (n > 0) {
-        val ann = Option(ft.getLogicalTypeAnnotation)
-        if (ft.isPrimitive) {
-          if (ft.isRepetition(org.apache.parquet.schema.Type.Repetition.REPEATED)) {
-            val arr = node.putArray(ft.getName)
-            (0 until n).foreach(j => arr.add(primNode(i, j)))
-          } else
-            // set[T] is generically typed — never ascribe its result
-            node.set[com.fasterxml.jackson.databind.JsonNode](
-              ft.getName, primNode(i, 0))
-        } else if (ann.contains(LogicalTypeAnnotation.listType())) {
-          // 3-level list: group (LIST) { repeated group list { element } }
-          val arr = node.putArray(ft.getName)
-          val lg = g.getGroup(i, 0)
-          (0 until lg.getFieldRepetitionCount(0)).foreach { j =>
-            val eg = lg.getGroup(0, j)
-            if (eg.getFieldRepetitionCount(0) > 0)
-              arr.add(eg.getValueToString(0, 0))
-            else arr.addNull()
-          }
-        } else if (ann.contains(LogicalTypeAnnotation.mapType())) {
-          // map: group (MAP) { repeated group key_value { key; value } }
-          val mg = g.getGroup(i, 0)
-          val obj = node.putObject(ft.getName)
-          (0 until mg.getFieldRepetitionCount(0)).foreach { j =>
-            val kv = mg.getGroup(0, j)
-            val key = kv.getValueToString(0, 0)
-            if (kv.getType.getFieldCount > 1 && kv.getFieldRepetitionCount(1) > 0)
-              obj.put(key, kv.getValueToString(1, 0))
-            else obj.putNull(key)
-          }
-        } else node.set[com.fasterxml.jackson.databind.JsonNode](
-          ft.getName, groupToJson(g.getGroup(i, 0)))
-      }
-    }
-    node
-  }
-
-  /** The latest metaData action as its full JSON string: the commit tail
-    * first (bounded backward scan), the newest checkpoint's reconstructed
-    * metaData row when the tail carries none — the checkpoint-bounded-
-    * history case, where a metaData action normally PRECEDES the
-    * checkpoint (foreign writers checkpoint every N commits) and the
-    * pre-checkpoint JSON may be trimmed. Every metaData-derived gate
-    * (schema, partition columns, column-mapping mode) resolves through
-    * this, so they agree with replay on checkpointed tables.
+  /** The latest metaData action as its full JSON string — a view of the
+    * metadata-only replay at the latest version ([[latestMeta]]), so it
+    * agrees with replay on checkpointed tables: after a log-retention
+    * trim the checkpoint is the only carrier of the metaData, and every
+    * metaData-derived gate (schema, partition columns, column-mapping
+    * mode) resolves through this.
     */
   private def latestMetaDataJson(root: String): Option[String] =
-    latestTailAction(root, "metaData").map(_.toString)
-      .orElse {
-        newestCheckpointAtOrBelow(root, currentVersion(root)).flatMap {
-          case (_, parts) => checkpointActionJson(parts, "metaData")
-        }.map(_.toString)
-      }
+    latestMeta(root).flatMap(_.metaDataJson)
 
-  /** The latest protocol action as its full JSON string — tail first,
-    * reconstructed checkpoint row second, readerFeatures INCLUDED (a
-    * scalar-only fallback would let a checkpointed deletion-vector table
-    * pass the refusal gate and resurrect DV-deleted rows).
+  /** The latest protocol action as its full JSON string, readerFeatures
+    * INCLUDED (a scalar-only fallback would let a checkpointed
+    * deletion-vector table pass the refusal gate and resurrect DV-deleted
+    * rows).
     */
   private def latestProtocolJson(root: String): Option[String] =
-    latestTailAction(root, "protocol").map(_.toString)
-      .orElse {
-        newestCheckpointAtOrBelow(root, currentVersion(root)).flatMap {
-          case (_, parts) => checkpointActionJson(parts, "protocol")
-        }.map(_.toString)
-      }
+    latestMeta(root).flatMap(_.protocolJson)
 
   /** The latest metaData action's (table id, schemaString). */
   private def latestMetaData(root: String): Option[(String, String)] =
@@ -2070,18 +1850,19 @@ object DeltaLog {
       .filter(m => m.has("id") && m.has("schemaString"))
       .map(m => (m.get("id").asText(), m.get("schemaString").asText()))
 
-  /** The table's CURRENT schema resolved entirely driver-side (tail scan
-    * bounded by the newest checkpoint, parquet-mr fallback into it) —
-    * what the streaming source binds to, so a stream over an EVOLVED
-    * table sees the latest field list, not commit 0's. Runs the protocol
-    * refusal gate first: a stream must refuse a deletion-vector or
-    * column-mapping table exactly like the batch reader.
+  /** The table's CURRENT schema resolved entirely driver-side (the
+    * metadata-only replay, no Spark job) — what the streaming source
+    * binds to, so a stream over an EVOLVED table sees the latest field
+    * list, not commit 0's. Runs the protocol refusal gate first: a stream
+    * must refuse a deletion-vector or column-mapping table exactly like
+    * the batch reader.
     */
   private[graft] def latestSchema(root: String): StructType = {
-    require(currentVersion(root) >= 0, s"no Delta log at $root")
-    validateReadable(root, latestProtocolJson(root), latestMetaDataJson(root))
-    latestMetaData(root)
-      .map(m => DataType.fromJson(m._2).asInstanceOf[StructType])
+    val meta = latestMeta(root).getOrElse(
+      throw new IllegalArgumentException(s"no Delta log at $root"))
+    validateReadable(root, meta.protocolJson, meta.metaDataJson)
+    meta.schemaJson
+      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(throw new IllegalArgumentException(
         s"no metaData action in Delta log at $root"))
   }
@@ -2294,6 +2075,7 @@ object DeltaLog {
       createPartitionBy: Seq[String],
       expectedVersion: Option[Long] = None): Long = {
     val next = expectedVersion.getOrElse(currentVersion(root)) + 1
+    val dir = attemptDir(next)
     val (header, wls) =
       if (next == 0L) (headerActions(df.schema, createPartitionBy), df.schema)
       else {
@@ -2313,11 +2095,11 @@ object DeltaLog {
     // write schema is the EVOLVED one when this commit minted new ids.
     val (wdf, wPartCols) =
       if (next == 0L) (df, partCols) else toWriteLayout(root, df, wls)
-    val adds = writeDataFiles(root, next, wdf, wPartCols)
+    val adds = writeDataFiles(root, dir, wdf, wPartCols)
     publish(root, next,
       header ++ adds.map(w =>
         addAction(w.path, w.size, partitionValues = w.partitionValues,
-          stats = w.stats)))
+          stats = w.stats)), Some(dir))
     next
   }
 
@@ -2349,6 +2131,7 @@ object DeltaLog {
       replay(spark, root, Some(base)).txns.get(appId).exists(_ >= version)
     if (already) return base
     val next = base + 1
+    val dir = attemptDir(next)
     val (header, wls) =
       if (next == 0L) (headerActions(df.schema), df.schema)
       else {
@@ -2357,12 +2140,12 @@ object DeltaLog {
       }
     val (wdf, wPartCols) =
       if (next == 0L) (df, Seq.empty[String]) else toWriteLayout(root, df, wls)
-    val adds = writeDataFiles(root, next, wdf, wPartCols)
+    val adds = writeDataFiles(root, dir, wdf, wPartCols)
     publish(root, next,
       header ++
         Seq(s"""{"txn":{"appId":${jstr(appId)},"version":$version,"lastUpdated":0}}""") ++
         adds.map(w => addAction(w.path, w.size,
-          partitionValues = w.partitionValues, stats = w.stats)))
+          partitionValues = w.partitionValues, stats = w.stats)), Some(dir))
     next
   }
 
@@ -2375,6 +2158,7 @@ object DeltaLog {
       expectedVersion: Option[Long] = None): Long = {
     val base = expectedVersion.getOrElse(currentVersion(root))
     val next = base + 1
+    val dir = attemptDir(next)
     // resolve each removed path's LIVE incarnation so the remove carries
     // its deletionVector when one exists — replay's exact-match rule
     // would otherwise keep a DV'd file alive through a dv-less remove
@@ -2384,13 +2168,13 @@ object DeltaLog {
     val (header0, wls) = evolutionFor(root, addDf)
     val header = ntzProtocolActions(root, wls) ++ header0
     val (wdf, wPartCols) = toWriteLayout(root, addDf, wls)
-    val adds = writeDataFiles(root, next, wdf, wPartCols)
+    val adds = writeDataFiles(root, dir, wdf, wPartCols)
     publish(root, next,
       header ++
         removePaths.map(p => removeAction(p, dv = liveDv.getOrElse(p, None))) ++
         adds.map(w =>
           addAction(w.path, w.size, partitionValues = w.partitionValues,
-            stats = w.stats)))
+            stats = w.stats)), Some(dir))
     next
   }
 
@@ -2436,6 +2220,7 @@ object DeltaLog {
     val liveAdds = replay(spark, root, Some(base)).adds
     require(liveAdds.nonEmpty, s"nothing to optimize at $root@$base")
     val next = base + 1
+    val dir = attemptDir(next)
     // on a partitioned table the rewrite re-partitions by the table
     // layout (the supplied layout applies within it); partition values
     // re-derive from the directory segments exactly like an append's. On
@@ -2446,11 +2231,11 @@ object DeltaLog {
     // physical layout (toWriteLayout), so OPTIMIZE is mapping-preserving.
     val (wdf, wPartCols) = toWriteLayout(root,
       layout(read(spark, root, Some(base))), latestSchema(root))
-    val adds = writeDataFiles(root, next, wdf, wPartCols)
+    val adds = writeDataFiles(root, dir, wdf, wPartCols)
     publish(root, next,
       liveAdds.map(a => removeAction(a.path, dataChange = false, dv = a.dv)) ++
         adds.map(w => addAction(w.path, w.size, dataChange = false,
-          partitionValues = w.partitionValues, stats = w.stats)))
+          partitionValues = w.partitionValues, stats = w.stats)), Some(dir))
     next
   }
 
@@ -2520,6 +2305,7 @@ object DeltaLog {
       if (descRows.isEmpty) return (base, 0L)
       val rowsDeleted = descRows.map(_._7).sum
       val next = base + 1
+      val dir = attemptDir(next)
       val cdcActions =
         if (!cdf) Seq.empty[String]
         else {
@@ -2529,11 +2315,11 @@ object DeltaLog {
             hitRows.drop("__dv_file", "__dv_pos")
               .withColumn("_change_type", lit("delete")),
             latestSchema(root), extraCols = Seq("_change_type"))
-          writeDataFiles(root, next, cdcDf, cdcPart, dirPrefix = "_change_data/")
+          writeDataFiles(root, s"_change_data/$dir", cdcDf, cdcPart)
             .map(w => cdcAction(w.path, w.size, w.partitionValues))
         }
       publish(root, next,
-        dvProtocolActions(root) ++ dvPairActions(byPath, descRows) ++ cdcActions)
+        dvProtocolActions(root) ++ dvPairActions(byPath, descRows) ++ cdcActions, Some(dir))
       (next, rowsDeleted)
     } finally { if (cdf) { hitRows.unpersist(); () } }
   }
@@ -2612,13 +2398,14 @@ object DeltaLog {
     val dvAdds = snap.adds.filter(_.dv.exists(_.cardinality > 0))
     if (dvAdds.isEmpty) return base
     val next = base + 1
+    val dir = attemptDir(next)
     val survivors = readAdds(spark, root, dvAdds, snap.schemaJson, snap.metaDataJson)
     val (wdf, wPartCols) = toWriteLayout(root, survivors, latestSchema(root))
-    val adds = writeDataFiles(root, next, wdf, wPartCols)
+    val adds = writeDataFiles(root, dir, wdf, wPartCols)
     publish(root, next,
       dvAdds.map(a => removeAction(a.path, dataChange = false, dv = a.dv)) ++
         adds.map(w => addAction(w.path, w.size, dataChange = false,
-          partitionValues = w.partitionValues, stats = w.stats)))
+          partitionValues = w.partitionValues, stats = w.stats)), Some(dir))
     next
   }
 
@@ -2739,6 +2526,7 @@ object DeltaLog {
     }
     val snap = replay(spark, root, Some(base))
     val next = base + 1
+    val dir = attemptDir(next)
     // evolution + mapped layout resolve ONCE: the source lands under the
     // evolved logical schema, physically spelled on mapped tables; an ops
     // batch was checked against the table schema and never evolves it
@@ -2746,11 +2534,11 @@ object DeltaLog {
       if (ops) (Seq.empty[String], latestSchema(root)) else evolutionFor(root, source)
     def writeAdds(df: DataFrame): Seq[String] = {
       val (w, partCols) = toWriteLayout(root, df, wls)
-      writeDataFiles(root, next, w, partCols).map(f => addAction(f.path, f.size,
+      writeDataFiles(root, dir, w, partCols).map(f => addAction(f.path, f.size,
         partitionValues = f.partitionValues, stats = f.stats))
     }
     if (snap.adds.isEmpty) {
-      publish(root, next, evoActions ++ txnActions ++ writeAdds(source))
+      publish(root, next, evoActions ++ txnActions ++ writeAdds(source), Some(dir))
       return (next, 0L, if (ops) source.count() else changeCount)
     }
     val srcKeys = changes.select(keyCols.map(col): _*)
@@ -2777,7 +2565,7 @@ object DeltaLog {
           allowMissingColumns = true)
       val (cdcDf, cdcPart) = toWriteLayout(root, changeDf, wls,
         extraCols = Seq(ct))
-      writeDataFiles(root, next, cdcDf, cdcPart, dirPrefix = "_change_data/")
+      writeDataFiles(root, s"_change_data/$dir", cdcDf, cdcPart)
         .map(w => cdcAction(w.path, w.size, w.partitionValues))
     }
     val cdf = cdfEnabled(root)
@@ -2803,7 +2591,7 @@ object DeltaLog {
           hitAdds.map(a => removeAction(a.path, dv = a.dv)) ++
           adds ++
           (if (cdf) cdcActions(retracted, retracted.select(keyCols.map(col): _*).distinct())
-           else Seq.empty))
+           else Seq.empty), Some(dir))
       return (next, hits.values.sum, inserted)
     }
     val byPath: Map[String, AddFile] = snap.adds.map(a => a.path -> a).toMap
@@ -2835,7 +2623,7 @@ object DeltaLog {
           dvPairActions(byPath, descRows) ++
           adds ++
           (if (cdf) cdcActions(matched.drop("__dv_file", "__dv_pos"), matchedKeysDf)
-           else Seq.empty))
+           else Seq.empty), Some(dir))
       (next, matchedRows, changeCount - matchedKeyCount)
     } finally { matched.unpersist(); () }
   }
@@ -2940,11 +2728,7 @@ object DeltaLog {
     }
     if (cdc.nonEmpty) return FeedCommitChanges(cdc, Seq.empty, Seq.empty, Set.empty)
     val adds = lines.collect {
-      case n if n.has("add") && changed(n.get("add")) =>
-        val a = n.get("add")
-        AddFile(a.get("path").asText(),
-          if (a.has("size")) a.get("size").asLong() else 0L,
-          jsonPartitionValues(a), None, jsonDv(a))
+      case n if n.has("add") && changed(n.get("add")) => jsonAddFile(n.get("add"))
     }
     val removeDvByPath: Map[String, Option[DeletionVectors.Descriptor]] =
       lines.collect {
@@ -3032,12 +2816,14 @@ object DeltaLog {
     */
   def readChangeFeed(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
-    val cur = currentVersion(root)
+    val log = listLog(root)
+    val cur = log.latest
     require(fromVersion >= -1 && fromVersion <= toVersion && toVersion <= cur,
       s"feed range ($fromVersion, $toVersion] out of [0, $cur]")
-    validateReadable(root, latestProtocolJson(root), latestMetaDataJson(root))
-    val schemaJson = latestMetaData(root).map(_._2)
-    val metaJson = latestMetaDataJson(root)
+    val meta = snapshotAt(root, log, cur, None)
+    validateReadable(root, meta.protocolJson, meta.metaDataJson)
+    val schemaJson = meta.schemaJson
+    val metaJson = meta.metaDataJson
     val feedSchema = StructType(
       schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType].fields)
         .getOrElse(Array.empty[StructField]).toIndexedSeq :+
@@ -3210,20 +2996,9 @@ object DeltaLog {
               "cannot express the retraction; consume the change feed " +
               "(readChangeFeed, which derives the deleted rows) or opt " +
               "into skipChangeCommits to drop retracting commits entirely")
-        AddFile(a.get("path").asText(),
-          if (a.has("size")) a.get("size").asLong() else 0L,
-          jsonPartitionValues(a))
+        jsonAddFile(a)
       }
     }
-
-  /** The table schema recorded by the newest metaData action at or below
-    * `version` (driver-side log replay only).
-    */
-  private[graft] def schemaAt(spark: SparkSession, root: String,
-      version: Option[Long] = None): StructType =
-    replay(spark, root, version).schemaJson
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .getOrElse(new StructType())
 
   def changesSince(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Option[Long] = None): DataFrame = {
@@ -3248,12 +3023,20 @@ object DeltaLog {
     */
   def vacuum(spark: SparkSession, root: String,
       retainFromVersion: Long): Seq[String] = {
-    val cur = currentVersion(root)
+    val log = listLog(root)
+    val cur = log.latest
     require(retainFromVersion >= 0 && retainFromVersion <= cur,
       s"retain horizon $retainFromVersion out of range [0, $cur]")
-    val retained = (retainFromVersion to cur)
-      .map(v => replay(spark, root, Some(v)))
-    val keep = retained.flatMap(_.adds.map(_.path)).toSet
+    val commits = (0L to cur).map { v =>
+      v -> readLinesIfExists(commitPath(root, v)).filter(_.nonEmpty).map(mapper.readTree)
+    }
+    def addsIn(nodes: Seq[com.fasterxml.jackson.databind.JsonNode]) =
+      nodes.filter(_.has("add")).map(_.get("add"))
+    // the keep set in ONE replay: a file live in some version ≥ the
+    // horizon is live AT the horizon or added by a commit after it
+    val horizon = replay(spark, root, Some(retainFromVersion))
+    val laterAdds = commits.filter(_._1 > retainFromVersion).flatMap(c => addsIn(c._2))
+    val keep = horizon.adds.map(_.path).toSet ++ laterAdds.map(_.get("path").asText())
     // the ever-added candidate set: the newest checkpoint's live set (the
     // only record of pre-horizon files once log retention trims JSON),
     // plus adds from every still-present JSON commit. Missing commit
@@ -3262,14 +3045,13 @@ object DeltaLog {
     // (= checkpoint cadence); on an untrimmed local table the
     // opportunistic full scan is what lets a first-ever vacuum reclaim
     // files removed before the first checkpoint existed.
-    val ckptV = newestCheckpointAtOrBelow(root, cur).map(_._1)
-    val ckptSnap = ckptV.map(c => replay(spark, root, Some(c)))
+    val ckptSnap = log.checkpointAtOrBelow(cur).map(c => replay(spark, root, Some(c._1)))
     val ckptLive = ckptSnap.toSeq.flatMap(_.adds.map(_.path))
     // DV sidecars ride the same sweep, LOG-DERIVED like the data files
     // (never a storage listing): a "u"/"p" descriptor on any add/remove
-    // action is a candidate; one referenced by a retained snapshot is
-    // kept. Only files under the table root are deleted — an absolute
-    // "p" descriptor may point outside the table.
+    // action is a candidate; one a kept add references is kept. Only
+    // files under the table root are deleted — an absolute "p"
+    // descriptor may point outside the table.
     def dvFileOf(d: DeletionVectors.Descriptor): Option[String] =
       if (d.storageType == "i") None
       else {
@@ -3277,17 +3059,10 @@ object DeltaLog {
         val r = graft.table.Fs.absPathNoScheme(root).stripSuffix("/") + "/"
         if (p.startsWith(r)) Some(p.drop(r.length)) else None
       }
-    val keepDv = retained.flatMap(_.adds)
-      .flatMap(_.dv).flatMap(dvFileOf).toSet
-    val tailActions = (0L to cur).flatMap { v =>
-      readLinesIfExists(commitPath(root, v)).flatMap { line =>
-        if (line.isEmpty) None else Some(mapper.readTree(line))
-      }
-    }
-    val all = (ckptLive ++ tailActions.flatMap { node =>
-      if (node.has("add")) Some(node.get("add").get("path").asText())
-      else None
-    }).distinct
+    val keepDv = (horizon.adds.flatMap(_.dv) ++ laterAdds.flatMap(jsonDv))
+      .flatMap(dvFileOf).toSet
+    val tailActions = commits.flatMap(_._2)
+    val all = (ckptLive ++ addsIn(tailActions).map(_.get("path").asText())).distinct
     val allDv = (ckptSnap.toSeq.flatMap(_.adds.flatMap(_.dv)) ++
       tailActions.flatMap { node =>
         Seq("add", "remove").flatMap(k =>
@@ -3357,7 +3132,7 @@ object DeltaLog {
     * checkpoints so no single writer task owns a 100 TB table's whole
     * action set): part 1 carries the protocol + metaData header, add
     * rows round-robin across all parts, `_last_checkpoint` declares
-    * `parts`. The reader ([[checkpoints]]) already requires a COMPLETE
+    * `parts`. The reader ([[listLog]]) already requires a COMPLETE
     * part group, so an interrupted multi-part publish is invisible.
     */
   def checkpoint(spark: SparkSession, root: String, parts: Int): Long = {

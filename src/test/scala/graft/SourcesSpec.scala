@@ -205,6 +205,34 @@ class SourcesSpec extends SparkTestBase {
     }
   }
 
+  test("DeltaLog: a writer that loses the commit race deletes the data and " +
+      "change files it wrote — only the winner's directories remain") {
+    import graft.sources.DeltaLog
+    val root = Files.createTempDirectory("graft-delta-lostrace").toString + "/tbl"
+    def attemptDirs(under: String, v: Long): Seq[String] =
+      Option(new java.io.File(root, under).listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith(f"c$v%05d-"))
+    val rows = spark.range(0, 10).select(col("id"))
+    DeltaLog.commitAppend(root, rows)                                  // v0
+    assert(DeltaLog.commitAppend(root, rows, Some(0L)) == 1L)          // winner
+    intercept[java.util.ConcurrentModificationException] {
+      DeltaLog.commitAppend(root, rows, Some(0L))                      // loser
+    }
+    val live = DeltaLog.snapshotFiles(spark, root).map(_.takeWhile(_ != '/')).toSet
+    assert(attemptDirs("", 1L).size == 1 && live(attemptDirs("", 1L).head),
+      s"expected only the winning attempt's directory: ${attemptDirs("", 1L)}")
+    // a row-retracting writer with the change data feed on also writes
+    // change files; the losing attempt takes those with it
+    val base = DeltaLog.setTableProperties(root, Map("delta.enableChangeDataFeed" -> "true"))
+    assert(DeltaLog.deleteWhere(spark, root, col("id") === 3L, Some(base))._1 == base + 1)
+    intercept[java.util.ConcurrentModificationException] {
+      DeltaLog.deleteWhere(spark, root, col("id") === 4L, Some(base))
+    }
+    assert(attemptDirs("_change_data", base + 1).size == 1,
+      s"expected only the winner's change files: ${attemptDirs("_change_data", base + 1)}")
+    assert(DeltaLog.read(spark, root).count() == 18L) // two appends of 0..9, id 3 deleted
+  }
+
   test("DeltaLog OPTIMIZE: dataChange=false rewrite — identical rows, fewer files, time travel intact") {
     import graft.sources.DeltaLog
     val root = Files.createTempDirectory("graft-deltaopt").toString + "/tbl"
@@ -1552,6 +1580,51 @@ class SourcesSpec extends SparkTestBase {
     assert(again.count() == 20L &&
       again.filter(col("tag") === "second").count() == 20L,
       "a rebuilt table served the previous build's cached snapshot")
+  }
+
+  test("one log replay: a cache-miss read over a single-part, multi-part or " +
+      "v2-manifest checkpoint runs at most one Spark job, a cold pruned read " +
+      "at most one, and latestSchema none") {
+    import graft.sources.DeltaLog
+    def jobsDuring(body: => Unit): Seq[String] = {
+      val listener = new ConstructionJobs
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        spark.sparkContext.parallelize(Seq(1), 1).count() // marker
+        listener.beforeMarker().map(_._1)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    def table(shape: String)(checkpoint: String => Unit): (String, String) = {
+      val root = Files.createTempDirectory("graft-replayjobs").toString + "/tbl"
+      (0 until 3).foreach(i => DeltaLog.commitAppend(root,
+        spark.range(i * 10L, (i + 1) * 10L).select(col("id").as("k")).coalesce(1)))
+      checkpoint(root)
+      shape -> root
+    }
+    // a fresh copy has no snapshot-cache entry: the cache key is the path
+    def cold(root: String): String = {
+      val copy = Files.createTempDirectory("graft-replayjobs-cold").toString + "/tbl"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(root), new java.io.File(copy))
+      copy
+    }
+    Seq(
+      table("single-part")(r => { DeltaLog.checkpoint(spark, r); () }),
+      table("multi-part")(r => { DeltaLog.checkpoint(spark, r, parts = 3); () }),
+      table("v2 parquet manifest")(r =>
+        graft.queries.IngestOps.authorV2Checkpoint(spark, r, 2L, jsonManifest = false))
+    ).foreach { case (shape, root) =>
+      val (r1, r2, r3) = (cold(root), cold(root), cold(root))
+      var files = Seq.empty[String]
+      val read = jobsDuring { DeltaLog.read(spark, r1); () }
+      val pruned = jobsDuring { files = DeltaLog.filesMatching(spark, r2, col("k") === 15L) }
+      val schema = jobsDuring { DeltaLog.latestSchema(r3); () }
+      assert(read.size <= 1, s"$shape: cache-miss read ran ${read.size} jobs: ${read.mkString(" // ")}")
+      assert(pruned.size <= 1, s"$shape: cold filesMatching ran ${pruned.size} jobs: ${pruned.mkString(" // ")}")
+      assert(schema.isEmpty, s"$shape: latestSchema ran jobs: ${schema.mkString(" // ")}")
+      assert(files.size == 1, s"$shape: stats must prune to one file, got $files")
+      assert(DeltaLog.read(spark, r1).count() == 30L, shape)
+    }
   }
 
   test("OBJECT-STORE SEAM: the commit/maintenance layer (sources/ + table/) " +
