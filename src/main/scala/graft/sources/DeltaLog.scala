@@ -41,9 +41,11 @@ import org.apache.spark.sql.types._
   *
   * Scale: every snapshot comes out of one replay ([[fold]]) over one
   * `_delta_log` listing. The checkpoint's protocol/metaData/txn/sidecar
-  * actions are read on the driver with parquet-mr, the JSON tail is
-  * driver-side string work sized by versions since the last checkpoint,
-  * and the checkpoint's add rows are the one distributed scan — a full
+  * actions are read on the driver with parquet-mr, decoding only the
+  * pages whose statistics show such an action (work bounded by a page,
+  * not by the live-file count); the JSON tail is driver-side string work
+  * sized by versions since the last checkpoint, and the checkpoint's add
+  * rows are the one distributed scan — a full
   * or pruned replay runs at most one Spark job, a metadata-only replay
   * none. Data files are never listed from storage — the log IS the
   * listing, the property that makes Delta-shaped tables usable on
@@ -301,41 +303,30 @@ object DeltaLog {
       : Option[Snapshot] =
     snapCache.synchronized(Option(snapCache.get(key)))
 
-  /** Which live adds a replay keeps. `keep` tests one add on the driver
-    * (checkpoint-manifest inline adds, commit-tail adds); `scan` is the
-    * same test over the checkpoint add scan's columns (path, size,
-    * partitionValues, stats, deletionVector JSON), applied on executors
-    * so only survivors reach the driver.
+  /** Which live adds a replay keeps: `keep` tests one add. The checkpoint
+    * add scan applies `pushdown` when given, else `keep` itself over each
+    * decoded row, on executors, so only survivors reach the driver.
     */
   private final case class AddFilter(spark: SparkSession,
-      keep: AddFile => Boolean, scan: DataFrame => DataFrame)
+      keep: AddFile => Boolean, pushdown: Option[Column] = None)
 
   private def allAdds(spark: SparkSession): AddFilter =
-    AddFilter(spark, _ => true, identity)
+    AddFilter(spark, _ => true, Some(lit(true)))
 
   private def addsAt(spark: SparkSession, paths: Set[String]): AddFilter =
     // isInCollection compiles to InSet above Spark's in-threshold — a
     // 10⁴-path probe is ONE distributed filter pushed into the scan
-    AddFilter(spark, a => paths(a.path), _.filter(col("path").isInCollection(paths)))
+    AddFilter(spark, a => paths(a.path), Some(col("path").isInCollection(paths)))
 
-  /** The adds that can possibly satisfy `conjuncts` — on executors the
-    * stats JSON parses inside the task, [[StatsPrune.mayMatch]] verbatim
-    * (the closure captures only the conjuncts, never this module).
+  /** The adds that can possibly satisfy `conjuncts`, by
+    * [[StatsPrune.mayMatch]] (on executors the stats JSON parses inside
+    * the task).
     */
   private def addsMayMatch(spark: SparkSession,
       conjuncts: Seq[(String, CmpOp, Any)], partCols: Set[String]): AddFilter =
-    AddFilter(spark,
-      a => conjuncts.forall { case (n, op, vv) =>
-        StatsPrune.mayMatch(a.partitionValues, a.stats, n, op, vv, partCols)
-      },
-      _.filter { (r: Row) =>
-        val pvm = if (r.isNullAt(2)) Map.empty[String, String]
-          else r.getMap[String, String](2).toMap
-        val sto = if (r.isNullAt(3)) None else Some(r.getString(3))
-        conjuncts.forall { case (n, op, vv) =>
-          StatsPrune.mayMatch(pvm, sto, n, op, vv, partCols)
-        }
-      })
+    AddFilter(spark, a => conjuncts.forall { case (n, op, vv) =>
+      StatsPrune.mayMatch(a.partitionValues, a.stats, n, op, vv, partCols)
+    })
 
   /** THE LOG REPLAY — every snapshot this module serves comes out of this
     * one fold. From `log` (one listing) it takes the newest checkpoint
@@ -459,39 +450,79 @@ object DeltaLog {
   /** The non-null `columns` actions of one checkpoint parquet file as
     * action JSON nodes — driver-side parquet-mr, only those columns
     * decoded — and the file's `add` column type from the same footer.
+    * The read carries an "any scalar leaf of those columns is non-null"
+    * filter, so row-group statistics and page column indexes skip the
+    * add rows: a classic checkpoint's header sits in its first rows, and
+    * the driver decodes those pages, not one record per live file.
     */
   private def parquetActions(file: String, columns: Set[String])
       : (Seq[com.fasterxml.jackson.databind.JsonNode],
         Option[org.apache.parquet.schema.GroupType]) = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(Fs.hp(file), Fs.hadoopConf))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      val groups = schema.getFields.asScala.toSeq.filterNot(_.isPrimitive)
-      val out = Seq.newBuilder[com.fasterxml.jackson.databind.JsonNode]
-      val wanted = groups.filter(f => columns(f.getName))
-      if (wanted.nonEmpty) {
-        val proj = new org.apache.parquet.schema.MessageType(schema.getName, wanted.asJava)
-        reader.setRequestedSchema(proj)
-        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(proj, schema)
-        var pages = reader.readNextRowGroup()
-        while (pages != null) {
-          val records = io.getRecordReader(pages,
-            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(proj))
-          var i = 0L
-          while (i < pages.getRowCount) {
-            val g = records.read()
-            (0 until proj.getFieldCount).foreach { f =>
-              if (g.getFieldRepetitionCount(f) > 0)
-                out += mapper.createObjectNode().set[com.fasterxml.jackson.databind.JsonNode](
-                  proj.getFieldName(f), groupToJson(g.getGroup(f, 0)))
-            }
-            i += 1
-          }
-          pages = reader.readNextRowGroup()
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val input = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(Fs.hp(file), Fs.hadoopConf)
+    val footer = {
+      val r = ParquetFileReader.open(input)
+      try r.getFooter finally r.close()
+    }
+    val schema = footer.getFileMetaData.getSchema
+    val groups = schema.getFields.asScala.toSeq.filterNot(_.isPrimitive)
+    val addType = groups.find(_.getName == "add").map(_.asGroupType())
+    val wanted = groups.filter(f => columns(f.getName))
+    if (wanted.isEmpty) return (Seq.empty, addType)
+    val proj = new org.apache.parquet.schema.MessageType(schema.getName, wanted.asJava)
+    // filter predicates cannot name repeated leaves, and a column name
+    // is dot-split (a foreign `stats_parsed` field may hold a dot); every
+    // action this module reads has a plain scalar leaf (minReaderVersion,
+    // id, appId, path)
+    val nonNull = proj.getColumns.asScala.toSeq
+      .filter(d => d.getMaxRepetitionLevel == 0 && !d.getPath.exists(_.contains(".")))
+      .flatMap { d =>
+        val p = d.getPath.mkString(".")
+        d.getPrimitiveType.getPrimitiveTypeName match {
+          case INT32 => Some(FilterApi.notEq(FilterApi.intColumn(p),
+            null.asInstanceOf[java.lang.Integer]))
+          case INT64 => Some(FilterApi.notEq(FilterApi.longColumn(p),
+            null.asInstanceOf[java.lang.Long]))
+          case BINARY => Some(FilterApi.notEq(FilterApi.binaryColumn(p),
+            null.asInstanceOf[org.apache.parquet.io.api.Binary]))
+          case _ => None
         }
       }
-      (out.result(), groups.find(_.getName == "add").map(_.asGroupType()))
+    val filter =
+      if (nonNull.isEmpty) FilterCompat.NOOP
+      else FilterCompat.get(nonNull.reduce[org.apache.parquet.filter2.predicate
+        .FilterPredicate](FilterApi.or))
+    val reader = ParquetFileReader.open(input, footer,
+      org.apache.parquet.HadoopReadOptions.builder(Fs.hadoopConf)
+        .withRecordFilter(filter).build(),
+      input.newStream())
+    try {
+      reader.setRequestedSchema(proj)
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(proj, schema)
+      val out = Seq.newBuilder[com.fasterxml.jackson.databind.JsonNode]
+      var pages = reader.readNextFilteredRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages,
+          new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(proj),
+          filter)
+        var i = 0L
+        while (i < pages.getRowCount) {
+          // null: a record the filter rejected
+          val g = records.read()
+          if (g != null) (0 until proj.getFieldCount).foreach { f =>
+            if (g.getFieldRepetitionCount(f) > 0)
+              out += mapper.createObjectNode().set[com.fasterxml.jackson.databind.JsonNode](
+                proj.getFieldName(f), groupToJson(g.getGroup(f, 0)))
+          }
+          i += 1
+        }
+        pages = reader.readNextFilteredRowGroup()
+      }
+      (out.result(), addType)
     } finally reader.close()
   }
 
@@ -567,7 +598,7 @@ object DeltaLog {
     node
   }
 
-  /** The checkpoint's add rows that pass `f.scan`, collected in ONE Spark
+  /** The checkpoint's add rows that pass `f`, collected in ONE Spark
     * job. The read schema is the union of the `add` fields the files'
     * footers declare (converted the way Spark's own inference converts
     * them), so no schema-inference job runs and a part missing a field
@@ -587,7 +618,7 @@ object DeltaLog {
     }.filter(fd => wanted(fd.name)).distinctBy(_.name).map(_.copy(nullable = true)))
     def field(name: String, present: Column, absent: Column): Column =
       (if (addType.fieldNames.contains(name)) present else absent).as(name)
-    val rows = f.scan(f.spark.read.schema(StructType(Seq(StructField("add", addType))))
+    val adds = f.spark.read.schema(StructType(Seq(StructField("add", addType))))
       .parquet(files: _*)
       .filter(col("add").isNotNull)
       .select(col("add.path").as("path"),
@@ -596,15 +627,23 @@ object DeltaLog {
           lit(null).cast("map<string,string>")),
         field("stats", col("add.stats").cast("string"), lit(null).cast("string")),
         field("deletionVector", to_json(col("add.deletionVector")),
-          lit(null).cast("string"))))
-      .collect()
+          lit(null).cast("string")))
+    val keep = f.keep
+    val rows = f.pushdown
+      .fold(adds.filter((r: Row) => keep(ckptAdd(r))))(c => adds.filter(c)).collect()
     rows.toIndexedSeq.map { r =>
-      AddFile(r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) Map.empty[String, String] else r.getMap[String, String](2).toMap,
-        if (r.isNullAt(3)) None else Some(r.getString(3)),
+      ckptAdd(r).copy(dv =
         if (r.isNullAt(4)) None else parseDvNode(mapper.readTree(r.getString(4))))
     }
   }
+
+  /** One row of the checkpoint add scan as an [[AddFile]], its deletion
+    * vector left unparsed (column 4 holds it as JSON).
+    */
+  private def ckptAdd(r: Row): AddFile =
+    AddFile(r.getString(0), r.getLong(1),
+      if (r.isNullAt(2)) Map.empty[String, String] else r.getMap[String, String](2).toMap,
+      if (r.isNullAt(3)) None else Some(r.getString(3)))
 
   /** `version` checked against the listing's bound (default: latest). */
   private def versionIn(root: String, log: LogListing,
@@ -3032,11 +3071,17 @@ object DeltaLog {
     }
     def addsIn(nodes: Seq[com.fasterxml.jackson.databind.JsonNode]) =
       nodes.filter(_.has("add")).map(_.get("add"))
-    // the keep set in ONE replay: a file live in some version ≥ the
-    // horizon is live AT the horizon or added by a commit after it
-    val horizon = replay(spark, root, Some(retainFromVersion))
+    // the keep set: a file live in some version ≥ the horizon is live AT
+    // the horizon, added by a commit after it, or live at a checkpoint in
+    // (horizon, cur] — once log retention trims the JSON below such a
+    // checkpoint, it is the only record of that version's live set (the
+    // replay at the horizon then folds nothing)
     val laterAdds = commits.filter(_._1 > retainFromVersion).flatMap(c => addsIn(c._2))
-    val keep = horizon.adds.map(_.path).toSet ++ laterAdds.map(_.get("path").asText())
+    val retained = replay(spark, root, Some(retainFromVersion)) +:
+      log.checkpoints.keys.toSeq.sorted.filter(c => c > retainFromVersion && c <= cur)
+        .map(c => replay(spark, root, Some(c)))
+    val keep = retained.flatMap(_.adds.map(_.path)).toSet ++
+      laterAdds.map(_.get("path").asText())
     // the ever-added candidate set: the newest checkpoint's live set (the
     // only record of pre-horizon files once log retention trims JSON),
     // plus adds from every still-present JSON commit. Missing commit
@@ -3059,7 +3104,7 @@ object DeltaLog {
         val r = graft.table.Fs.absPathNoScheme(root).stripSuffix("/") + "/"
         if (p.startsWith(r)) Some(p.drop(r.length)) else None
       }
-    val keepDv = (horizon.adds.flatMap(_.dv) ++ laterAdds.flatMap(jsonDv))
+    val keepDv = (retained.flatMap(_.adds).flatMap(_.dv) ++ laterAdds.flatMap(jsonDv))
       .flatMap(dvFileOf).toSet
     val tailActions = commits.flatMap(_._2)
     val all = (ckptLive ++ addsIn(tailActions).map(_.get("path").asText())).distinct

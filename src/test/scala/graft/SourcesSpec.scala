@@ -618,6 +618,28 @@ class SourcesSpec extends SparkTestBase {
     assert(DeltaLog.read(spark, root).count() == n + widened.count())
   }
 
+  test("DeltaLog: vacuum with a horizon below a trimmed checkpoint keeps the " +
+      "checkpoint's live files") {
+    import graft.sources.DeltaLog
+    val root = Files.createTempDirectory("graft-delta-trimmed-vac").toString + "/tbl"
+    def part(i: Int) = Tables(spark, sfDir, "documents")
+      .select(col("doc_id"), col("lang"))
+      .filter(pmod(col("doc_id"), lit(4)) === i)
+    DeltaLog.commitAppend(root, part(0))  // v0
+    DeltaLog.commitAppend(root, part(1))  // v1
+    assert(DeltaLog.checkpoint(spark, root) == 1L)
+    (0L to 1L).foreach(v => java.nio.file.Files.delete(
+      java.nio.file.Paths.get(root, "_delta_log", f"$v%020d.json")))
+    DeltaLog.commitAppend(root, part(2))  // v2
+    val n = DeltaLog.read(spark, root).count()
+    assert(n == part(0).count() + part(1).count() + part(2).count())
+    // the replay at v0 folds nothing (commit 0 is gone), yet v1's live set
+    // — recorded only by the checkpoint — is live at every retained version
+    val deleted = DeltaLog.vacuum(spark, root, retainFromVersion = 0L)
+    assert(deleted.isEmpty, s"checkpointed live files were deleted: $deleted")
+    assert(DeltaLog.read(spark, root).count() == n)
+  }
+
   test("DeltaLog txn (SetTransaction): re-delivered batches are detected no-ops, " +
       "apps have independent cursors, and the cursor survives checkpoint + trim") {
     import graft.sources.DeltaLog
