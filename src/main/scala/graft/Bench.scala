@@ -83,6 +83,17 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(file),
       (line + System.lineSeparator).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
+  /** The one JSON writer of both bench outputs. A value is a number,
+    * printed as Scala prints it, or JSON already rendered here; keys and
+    * `str` values are quoted, with `"` and backslash escaped.
+    */
+  private object Json {
+    def str(s: String): String = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    def field(kv: (String, Any)): String = str(kv._1) + ":" + kv._2
+    def obj(fields: Iterable[(String, Any)]): String = fields.map(field).mkString("{", ",", "}")
+    def arr(xs: Iterable[Any]): String = xs.mkString("[", ",", "]")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // session shape (master, shuffle partitions, confs, top-k rewrite) is
@@ -211,31 +222,24 @@ object Bench {
     require(results.map(_._1.takeWhile(_ != '_')).distinct.size == results.size,
       "duplicate qNN prefix among query names — compact bench keys would collide")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val detailQs = results.map { case (k, secs, _, _) => "\"" + k + "\":" + secs }
-      .mkString("{", ",", "}")
-    val detailRows = results.map { case (k, _, n, _) => "\"" + k + "\":" + n }
-      .mkString("{", ",", "}")
-    // full per-repeat seconds + any row-count drift — the audit trail for
-    // "is this regression code or contention" without re-running anything
-    val detailRuns = results.map { case (k, _, _, runs) =>
-      "\"" + k + "\":[" + runs.map(_._1).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val detailCompiles = results.map { case (k, _, _, runs) =>
-      "\"" + k + "\":" + median(runs.map(_._3))
-    }.mkString("{", ",", "}")
-    val detailCompileMs = results.map { case (k, _, _, runs) =>
-      "\"" + k + "\":" + median(runs.map(_._4)) / 1e6
-    }.mkString("{", ",", "}")
-    val drifted = results.collect {
-      case (k, _, _, runs) if runs.map(_._2).distinct.size != 1 =>
-        "\"" + k + "\":[" + runs.map(_._2).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    // harness_drift: queries whose re-run of repeat-1 AFTER the final
-    // repeat still exceeded 2x the best landing — [best, recheck] seconds
-    val driftJson = drift.map { case (k, (b, r)) => "\"" + k + "\":[" + b + "," + r + "]" }
-      .mkString("{", ",", "}")
-    val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","basis":"noop-materialize","queries":$detailQs,"rows":$detailRows,"runs":$detailRuns,"compiles":$detailCompiles,"compile_ms":$detailCompileMs,"row_drift":$drifted,"harness_drift":$driftJson,"sf":"$sfDir"}"""
+    val detail = Json.obj(Seq(
+      "metric" -> Json.str("total"), "value" -> total, "unit" -> Json.str("sec"),
+      "basis" -> Json.str("noop-materialize"),
+      "queries" -> Json.obj(results.map { case (k, secs, _, _) => k -> secs }),
+      "rows" -> Json.obj(results.map { case (k, _, n, _) => k -> n }),
+      // full per-repeat seconds + any row-count drift — the audit trail for
+      // "is this regression code or contention" without re-running anything
+      "runs" -> Json.obj(results.map { case (k, _, _, runs) => k -> Json.arr(runs.map(_._1)) }),
+      "compiles" -> Json.obj(results.map { case (k, _, _, runs) => k -> median(runs.map(_._3)) }),
+      "compile_ms" -> Json.obj(results.map { case (k, _, _, runs) =>
+        k -> median(runs.map(_._4)) / 1e6 }),
+      "row_drift" -> Json.obj(results.collect {
+        case (k, _, _, runs) if runs.map(_._2).distinct.size != 1 => k -> Json.arr(runs.map(_._2))
+      }),
+      // harness_drift: queries whose re-run of repeat-1 AFTER the final
+      // repeat still exceeded 2x the best landing — [best, recheck] seconds
+      "harness_drift" -> Json.obj(drift.map { case (k, (b, r)) => k -> Json.arr(Seq(b, r)) }),
+      "sf" -> Json.str(sfDir)))
     writeLine("BENCH_DETAIL.json", detail)
     val sfName = new java.io.File(sfDir).getName // basename: every char counts
     // 176+ queries no longer fit one ~1800-char line even at 1-decimal
@@ -249,42 +253,38 @@ object Bench {
     // "omitted" count so a reader knows the map is a prefix, not the suite.
     val budget = 1800
     val bySlowest = results.sortBy(-_._2)
-    val entries = bySlowest.map { case (k, secs, _, _) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + fmt(secs)
-    }
+    val medians = bySlowest.map { case (k, secs, _, _) => k.takeWhile(_ != '_') -> fmt(secs) }
     // RAW REPEATS for the slowest queries, IN the driver-committed line
     // (round-17 lesson: a contended sweep inflated a q-block 4-8x and
     // adjudicating it took a scoped re-run + an A/B — with the repeats
     // visible, [30.2, 3.9, 4.1] reads as contention in one look while
     // [30.2, 29.8, 31.0] reads as a real regression)
-    val repEntries = bySlowest.map { case (k, _, _, runs) =>
-      "\"" + k.takeWhile(_ != '_') + "\":[" + runs.map(r => fmt(r._1)).mkString(",") + "]"
+    val repeats = bySlowest.map { case (k, _, _, runs) =>
+      k.takeWhile(_ != '_') -> Json.arr(runs.map(r => fmt(r._1)))
     }
-    val head =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfName","n":${results.size},"queries":{"""
-    // reserve digits for the WORST-case omitted counts, so the require
+    def render(meds: Seq[(String, Any)], reps: Seq[(String, Any)]): String = Json.obj(Seq(
+      "metric" -> Json.str("total"), "value" -> fmt(total), "unit" -> Json.str("sec"),
+      "sf" -> Json.str(sfName), "n" -> results.size,
+      "queries" -> Json.obj(meds), "omitted" -> (medians.size - meds.size),
+      "repeats" -> Json.obj(reps), "omitted_repeats" -> (repeats.size - reps.size)))
+    // the empty line carries the WORST-case omitted counts, so the require
     // can't fire after a full run no matter how many queries the suite
-    // grows to; strictly UNDER the reserve (the require below is `<`)
-    val trailerReserve =
-      s"""},"omitted":${entries.size},"repeats":{},"omitted_repeats":${entries.size}}""".length + 1
-    val room = budget - head.length - trailerReserve
-    def pack(xs: Seq[String], cap: Int): (Seq[String], Int) = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    // grows to; strictly UNDER the budget (the require below is `<`)
+    val room = budget - render(Nil, Nil).length - 1
+    def pack(xs: Seq[(String, Any)], cap: Int): (Seq[(String, Any)], Int) = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
       var used = 0
       xs.foreach { e =>
-        val cost = e.length + (if (out.isEmpty) 0 else 1)
+        val cost = Json.field(e).length + (if (out.isEmpty) 0 else 1)
         if (used + cost <= cap) { out += e; used += cost }
       }
       (out.toSeq, used)
     }
     // medians get ~60% of the room (the round-over-round signal), the
     // repeats the rest (the contention self-adjudication)
-    val (medPacked, medUsed) = pack(entries, (room * 3) / 5)
-    val (repPacked, _) = pack(repEntries, room - medUsed)
-    val line = head + medPacked.mkString(",") +
-      s"""},"omitted":${entries.size - medPacked.size},"repeats":{""" +
-      repPacked.mkString(",") +
-      s"""},"omitted_repeats":${repEntries.size - repPacked.size}}"""
+    val (medPacked, medUsed) = pack(medians, (room * 3) / 5)
+    val (repPacked, _) = pack(repeats, room - medUsed)
+    val line = render(medPacked, repPacked)
     require(line.length < budget, s"bench line ${line.length} chars breaches tail budget")
     // Mirror the EXACT stdout line, bare, to a known file: the driver's
     // parser has recorded parsed:null every round because sbt's logger

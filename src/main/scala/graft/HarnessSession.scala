@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.StaticSQLConf
 
-/** The ONE session builder of the harness mains (Bench, Explain, Verify,
-  * ScaleSmoke), so the captured plans and the verified results are
-  * produced under exactly the session shape that is benched (same
-  * master/core count, same shuffle partitions, same confs, same top-k
-  * rewrite). Round 18's Explain hardcoded its own confs and a different
-  * SPARK_GRAFT_CPUS default ("32" vs Bench's "4"), which let plan captures
-  * silently diverge from benched plans whenever the env var was unset —
-  * deriving both from here makes that drift impossible.
+/** The ONE session builder: the harness mains (Bench, Explain, Verify,
+  * ScaleSmoke), perfbench and the test suite all build here, so the
+  * captured plans, the verified results and the tested plans are produced
+  * under exactly the session shape that is benched (same master/core
+  * count, same shuffle partitions, same confs, same extensions). Round
+  * 18's Explain hardcoded its own confs and a different SPARK_GRAFT_CPUS
+  * default ("32" vs Bench's "4"), which let plan captures silently diverge
+  * from benched plans whenever the env var was unset — deriving both from
+  * here makes that drift impossible.
   */
 object HarnessSession {
 
@@ -34,8 +35,7 @@ object HarnessSession {
     *
     * It is a static conf: `CodeGenerator` reads it once per JVM, when it
     * first initializes, so it must be set on the builder before any query
-    * runs, and every session builder of one JVM has to agree on it (the
-    * test session applies the same value).
+    * runs.
     */
   val CodegenCacheMaxEntries: Int = 8192
 
@@ -50,6 +50,12 @@ object HarnessSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // graft's functions, top-k strategy and top-k rewrite are part of
+      // the engine, not a per-query opt-in: every session built here and
+      // every newSession() child of it plans with them (Verify proves the
+      // rewrite correct on every query it fires on; PlanSpec gates that
+      // it fires)
+      .withExtensions(new graft.functions.GraftExtensions)
       .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheMaxEntries.toLong)
       // reclaim shuffle files/broadcasts continuously (default 30min never
       // fires inside a suite run) — see the harness-drift note in Bench
@@ -70,10 +76,6 @@ object HarnessSession {
     // driver's ~2000-char output tail and can push the result line out;
     // Verify and ScaleSmoke print their own failures on stderr
     spark.sparkContext.setLogLevel("ERROR")
-    // the native top-k rewrite is part of the engine, not a per-query
-    // opt-in: Verify proves it correct on every query it fires on, so both
-    // harnesses see the same plans (PlanSpec gates that it fires)
-    graft.plans.TopK.enableRewrite(spark)
     spark
   }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -153,18 +152,5 @@ object HeavyHitters {
       throw new IllegalArgumentException(
         s"mg_topk(col, k): k must be in [1, ${Int.MaxValue}], got $k")
     k.toInt
-  }
-
-  /** Register `mg_topk(col, k)` in the session registry (idempotent —
-    * skip-if-present so repeated calls don't log replacement WARNs into
-    * the driver's bounded output tail).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("mg_topk")))
-      reg.createOrReplaceTempFunction("mg_topk",
-        { exprs: Seq[Expression] =>
-          MisraGriesTopK(exprs(0), resolveK(exprs(1)))
-        }, "built-in")
   }
 }

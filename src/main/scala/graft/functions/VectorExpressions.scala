@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -97,35 +97,19 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Register the native functions in a session (idempotent). SQL name ->
-    * expression builder; usable from both SQL text and the Column API.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // skip-if-present: createOrReplaceTempFunction logs a WARN per
-    // replacement, and query fns call register() per invocation — 90
-    // queries of WARN lines were enough to push the bench's one-line JSON
-    // out of the driver's bounded output tail
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_similarity")))
-      reg.createOrReplaceTempFunction("cosine_similarity",
-        { exprs: Seq[Expression] => CosineSimilarity(exprs(0), exprs(1)) }, "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product")))
-      reg.createOrReplaceTempFunction("dot_product",
-        { exprs: Seq[Expression] => DotProduct(exprs(0), exprs(1)) }, "built-in")
-  }
-
-  /** Column-API entry points (register(spark) must have run in the session).
-    * Column.fn builds an UnresolvedFunction resolved against the registry —
-    * the public path, no private Column(Expression) constructor.
+  /** Column-API entry point. Resolves by name against the session's
+    * function registry, where [[GraftExtensions]] put it — the public path,
+    * no private Column(Expression) constructor.
     */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_similarity", a, b)
-  def dotProd(a: Column, b: Column): Column = call_function("dot_product", a, b)
 }
 
-/** SparkSessionExtensions hook: enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` — injects the
-  * native vector functions at session build time, the supported path for
-  * cluster-wide deployment (no per-session register() call).
+/** Everything graft adds to a Spark session, in one place: the native
+  * functions (`cosine_similarity`, `dot_product`, `mg_topk`), the top-k
+  * planner strategy and the top-k rewrite rule. `HarnessSession` builds
+  * every session of the harness mains and the tests with it, and every
+  * `newSession()` child inherits it; a library user's session gets the same
+  * with `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -142,8 +126,11 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         MisraGriesTopK(exprs(0), HeavyHitters.resolveK(exprs(1)))))
     // whole-operator extension: the bounded-heap top-k-per-key physical
     // operator (graft.plans.TopKPerKey) planned session-wide, plus the
-    // optimizer rule that rewrites the row_number-window top-k idiom onto it
+    // rule that rewrites the row_number-window top-k idiom onto it. A
+    // pre-CBO rule runs once, after operator optimization has settled
+    // filters and projections (an operator-optimization rule would let
+    // them move across the new node) and before InferWindowGroupLimit
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
+    ext.injectPreCBORule(_ => graft.plans.TopKRewriteRule)
   }
 }

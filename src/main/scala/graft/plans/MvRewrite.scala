@@ -36,9 +36,7 @@ import org.apache.spark.sql.types.DoubleType
   * The rewrite is ALL-OR-NOTHING: one non-derivable aggregate (distinct,
   * filter clause, an unregistered measure), a filter between the
   * aggregate and the scan, or a non-column grouping expression leaves the
-  * plan untouched — correctness never depends on the rule firing
-  * (`spark.experimental.extraOptimizations`, same contract as
-  * [[TopKRewriteRule]]).
+  * plan untouched — correctness never depends on the rule firing.
   *
   * Base-table recognition is by SCAN IDENTITY, not plan-tree equality:
   * the aggregate's child must be a pure column-pruning projection chain
@@ -98,6 +96,13 @@ object MvRewrite extends Rule[LogicalPlan] {
 
   def clear(): Unit = regs.clear()
 
+  /** Turn the rule on for one session, through
+    * `spark.experimental.extraOptimizations`. It stays per-session, unlike
+    * the engine-wide [[graft.functions.GraftExtensions]]: the view registry
+    * is JVM-global, so a rule in every session could answer an unrelated
+    * aggregate over the same base from a view another query registered,
+    * stale or not.
+    */
   def enable(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(MvRewrite))
       spark.experimental.extraOptimizations =

@@ -57,14 +57,24 @@ final case class TopKPerKeyNode(
   * shuffle bytes drop to ≤ k rows per key per input task. This is the
   * heap-based analogue of the optimizer's WindowGroupLimit map-side prune,
   * without the sort the window idiom still pays afterwards.
+  *
+  * A `WindowGroupLimit` directly over a node with the same keys and order
+  * and `k` ≤ its limit keeps every row (each key has at most k rows, all
+  * ranked ≤ k), so it plans as the node alone. InferWindowGroupLimit puts
+  * one there over every rank-carrying rewrite of [[TopKRewriteRule]].
   */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKeyNode(keys, order, k, maxKeys, child) =>
-      TopKPerKeyExec(keys, order, k, maxKeys,
-        TopKPerKeyExec(keys, order, k, maxKeys, planLater(child), partial = true)) :: Nil
+    case n: TopKPerKeyNode => exec(n)
+    case org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit(
+        keys, order, _, limit, n: TopKPerKeyNode)
+        if keys == n.keys && order == n.order && n.k <= limit => exec(n)
     case _ => Nil
   }
+
+  private def exec(n: TopKPerKeyNode): Seq[SparkPlan] =
+    TopKPerKeyExec(n.keys, n.order, n.k, n.maxKeys,
+      TopKPerKeyExec(n.keys, n.order, n.k, n.maxKeys, planLater(n.child), partial = true)) :: Nil
 }
 
 final case class TopKPerKeyExec(
@@ -268,25 +278,27 @@ final case class TopKPerKeyExec(
   * = 1, or the reversed comparisons); the partition spec is non-empty (the
   * global case already plans as TakeOrderedAndProject); and the projection
   * references only the window child's columns (plus the rank, in the
-  * rank-carrying variant). An intervening WindowGroupLimit (inserted by
-  * InferWindowGroupLimit before user rules run) is absorbed — its map-side
-  * prune is subsumed by the partial pass. A child that is already a
-  * TopKPerKeyNode is left alone (the rank-carrying rewrite keeps the
-  * matchable Project/Filter/Window shape, and user rules run to fixpoint).
+  * rank-carrying variant). A child that is already a TopKPerKeyNode is
+  * left alone (the rank-carrying rewrite keeps the matchable
+  * Project/Filter/Window shape).
   *
   * Determinism note: like row_number itself, result SETS are only
   * deterministic when the order gives a total order per key (unique
   * tiebreak); the rewrite neither adds nor removes that requirement.
   *
-  * Enable per session via `TopK.enableRewrite(spark)` (public
-  * `spark.experimental.extraOptimizations` hook) or cluster-wide through
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Runs as a pre-CBO rule of every session built with
+  * [[graft.functions.GraftExtensions]]: once, after operator optimization
+  * and before InferWindowGroupLimit. A rank read only by a Sort that a
+  * later batch (EliminateSorts) removes still counts as carried, so such a
+  * plan keeps a window over the ≤ k survivors per key.
+  * `spark.sql.optimizer.excludedRules` set to its `ruleName` turns it off
+  * for one session.
   */
 object TopKRewriteRule
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
 
   import org.apache.spark.sql.catalyst.expressions._
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, Window, WindowGroupLimit}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, Window}
 
   private def rankLimit(cond: Expression, rk: ExprId): Option[Int] = cond match {
     case LessThanOrEqual(a: AttributeReference, Literal(k: Int, _)) if a.exprId == rk => Some(k)
@@ -305,24 +317,18 @@ object TopKRewriteRule
             WindowSpecDefinition(_, _, SpecifiedWindowFrame(
               org.apache.spark.sql.catalyst.expressions.RowFrame,
               UnboundedPreceding, CurrentRow))), _) =>
-          // absorb the InferWindowGroupLimit prune if one was inserted:
-          // the partial heap pass replaces it
-          val base = w.child match {
-            case wgl: WindowGroupLimit => wgl.child
-            case c => c
-          }
           rankLimit(cond, alias.exprId) match {
-            case Some(k) if k > 0 && !base.isInstanceOf[TopKPerKeyNode] =>
+            case Some(k) if k > 0 && !w.child.isInstanceOf[TopKPerKeyNode] =>
               val rankUsed =
                 projectList.exists(_.references.exists(_.exprId == alias.exprId))
               if (!rankUsed && projectList.forall(_.references.subsetOf(w.child.outputSet)))
                 // rank discarded: the window disappears entirely
                 Project(projectList,
-                  TopKPerKeyNode(w.partitionSpec, w.orderSpec, k, TopK.DefaultMaxKeys, base))
+                  TopKPerKeyNode(w.partitionSpec, w.orderSpec, k, TopK.DefaultMaxKeys, w.child))
               else if (projectList.forall(_.references.subsetOf(w.outputSet)))
                 // rank carried: prune first, re-rank only the survivors
                 Project(projectList, Filter(cond, w.copy(child =
-                  TopKPerKeyNode(w.partitionSpec, w.orderSpec, k, TopK.DefaultMaxKeys, base))))
+                  TopKPerKeyNode(w.partitionSpec, w.orderSpec, k, TopK.DefaultMaxKeys, w.child))))
               else p
             case _ => p
           }
@@ -331,10 +337,8 @@ object TopKRewriteRule
   }
 }
 
-/** User-facing surface. `perKey` works on any session (registers the
-  * strategy via the public `spark.experimental.extraStrategies` hook);
-  * cluster deployments get the same strategy from
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+/** User-facing surface. `perKey` plans through [[TopKStrategy]], which a
+  * session gets from [[graft.functions.GraftExtensions]].
   */
 object TopK {
 
@@ -343,16 +347,6 @@ object TopK {
     * big executors, lower for very wide rows.
     */
   val DefaultMaxKeys: Int = 1 << 20
-
-  /** Opt in to [[TopKRewriteRule]] (and the strategy it needs) for a
-    * session built without GraftExtensions.
-    */
-  def enableRewrite(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
-    if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule))
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ TopKRewriteRule
-  }
 
   /** Top `k` rows per `keyCols` group ordered by `orderCols`
     * ((column, ascending) pairs — give a total order, e.g. a unique
@@ -366,8 +360,6 @@ object TopK {
       k: Int,
       maxKeys: Int = DefaultMaxKeys): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute =
       analyzed.output.find(a => spark.sessionState.conf.resolver(a.name, name)).getOrElse(

@@ -2220,7 +2220,7 @@ object CorpusOps {
     val wD = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("doc_id"))
     val dense = corpus.crossJoin(broadcast(queries))
       .filter(col("doc_id") =!= col("query_id"))
-      .withColumn("cos", Similarity.nativeCosine(spark)(col("q_emb"), col("d_emb")))
+      .withColumn("cos", graft.functions.VectorExpressions.cosineSim(col("q_emb"), col("d_emb")))
       .withColumn("r_dense", row_number().over(wD))
       .select(col("query_id"), col("doc_id"), col("r_dense"))
     val cand = Dedup.minhashCandidates(spark, dir)

@@ -324,12 +324,16 @@ object Dedup {
     * ([[graft.table.StoreMaint.compact]] — q178's next-fit discipline run
     * by the scan's split planner, zero shuffle). Row contents are
     * untouched, so [[pairsFromIncremental]] — and q40's oracle — must
-    * hash-match across a compaction.
+    * hash-match across a compaction, and a servable `pairs/` (derived from
+    * both) is re-stamped so it stays served.
     */
   def compactSigStore(spark: SparkSession, store: String,
       targetBytes: Long = 32L << 20): Unit = {
-    graft.table.StoreMaint.compact(spark, s"$store/sigs", Seq.empty, targetBytes)
-    graft.table.StoreMaint.compact(spark, s"$store/bands", Seq("band"), targetBytes)
+    val pairsServed = graft.table.StoreManifest.servable(store, "pairs").isDefined
+    val rewritten =
+      graft.table.StoreMaint.compact(spark, s"$store/sigs", Seq.empty, targetBytes) +
+        graft.table.StoreMaint.compact(spark, s"$store/bands", Seq("band"), targetBytes)
+    if (pairsServed && rewritten > 0) graft.table.StoreManifest.bump(store, Seq("pairs"))
   }
 
   /** ERASURE PROPAGATION into the signature store (q214's "right to be
@@ -582,7 +586,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       // native codegen'd cosine: float-float inputs, identical doubles to
       // the HOF form (q50's exact oracle pass is the proof) at codegen speed
-      .withColumn("cos", Similarity.nativeCosine(spark)(col("emb_a"), col("emb_b")))
+      .withColumn("cos", graft.functions.VectorExpressions.cosineSim(col("emb_a"), col("emb_b")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
       .select(col("cluster"), col("rk").cast("long").as("rk"),
@@ -1113,7 +1117,7 @@ object Dedup {
     a.join(b, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(Similarity.nativeCosine(spark)(col("e_a"), col("e_b")), 4).as("cosine"))
+        round(graft.functions.VectorExpressions.cosineSim(col("e_a"), col("e_b")), 4).as("cosine"))
       .orderBy(col("cosine").desc, col("id_a"), col("id_b"))
       .limit(50)
   }

@@ -186,18 +186,16 @@ object EventsOps {
       |WHERE rk <= 3 ORDER BY user_id, round(value, 2) DESC, event_id""".stripMargin
 
   /** [[graft.plans.TopKRewriteRule]] exercised END-TO-END as a correctness
-    * row: the plain row_number window idiom runs in a rewrite-enabled child
-    * session, a hard require() proves the optimizer actually retargeted the
-    * plan onto `TopKPerKeyNode` (otherwise this row would silently test the
-    * window idiom it replaces), and the oracle restates the un-rewritten
+    * row: the plain row_number window idiom runs as written, a hard
+    * require() proves the optimizer actually retargeted the plan onto
+    * `TopKPerKeyNode` (otherwise this row would silently test the window
+    * idiom it replaces), and the oracle restates the un-rewritten
     * idiom — the rewrite must be invisible in the result. Complements q87,
     * which drives the operator through the explicit `TopK.perKey` API.
     */
   def q79TopkRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val s2 = spark.newSession()
-    graft.plans.TopK.enableRewrite(s2)
     val w = Window.partitionBy(col("user_id")).orderBy(col("value").asc, col("event_id"))
-    val df = Tables(s2, dir, "events")
+    val df = Tables(spark, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 2)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.VectorExpressions.cosineSim
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`), pure `functions._` arithmetic (zip_with/aggregate are
@@ -29,14 +30,6 @@ object Similarity {
 
   import graft.functions.ColFns.bound
 
-  /** Unit-normalize: vector and its norm are lambda-bound so the norm's dot
-    * product is computed once per row, not once per element.
-    */
-  def unitVec(v: Column): Column =
-    bound(toDouble(v)) { d =>
-      bound(sqrt(dot(d, d))) { n => transform(d, x => x / n) }
-    }
-
   def cosine(a: Column, b: Column): Column =
     bound(toDouble(a)) { da =>
       bound(toDouble(b)) { db => dot(da, db) / (norm(da) * norm(db)) }
@@ -60,15 +53,6 @@ object Similarity {
       when(dot(toDouble(col(vecCol)), plane) >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
     df.withColumn("bucket", bucket)
-  }
-
-  /** Hot-path cosine: the native codegen'd expression (VectorExpressions).
-    * The HOF (`cosine`) variant above is kept for contexts without
-    * registration; both compute identical doubles.
-    */
-  private[queries] def nativeCosine(spark: SparkSession)(a: Column, b: Column): Column = {
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.VectorExpressions.cosineSim(a, b)
   }
 
   private def queriesSet(spark: SparkSession, dir: String, n: Int = 10): DataFrame =
@@ -97,7 +81,7 @@ object Similarity {
     val q = queriesSet(spark, dir)
     rankTop5(corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        nativeCosine(spark)(col("q_emb"), col("embedding")).as("cos")))
+        cosineSim(col("q_emb"), col("embedding")).as("cos")))
   }
 
   val q50Sql: String =
@@ -128,7 +112,7 @@ object Similarity {
     rankTop5(corpus.join(broadcast(q), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        nativeCosine(spark)(col("q_emb"), col("embedding")).as("cos")))
+        cosineSim(col("q_emb"), col("embedding")).as("cos")))
   }
 
   def q51KnnLsh(spark: SparkSession, dir: String): DataFrame =
@@ -1109,7 +1093,7 @@ object Similarity {
     val wTop = Window.partitionBy(col("query_id")).orderBy(col("rel").desc, col("vec_id"))
     val cands = corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("embedding"),
-        nativeCosine(spark)(col("q_emb"), col("embedding")).as("rel"))
+        cosineSim(col("q_emb"), col("embedding")).as("rel"))
       .withColumn("crk", row_number().over(wTop))
       .filter(col("crk") <= 8)
       .select(col("query_id"), col("vec_id"), col("embedding"), col("rel"))
@@ -1127,7 +1111,7 @@ object Similarity {
       val scored = rem.as("r")
         .join(all.select(col("query_id"), col("vec_id").as("s_id"), col("embedding").as("s_emb")), Seq("query_id"))
         .select(col("query_id"), col("r.vec_id").as("vec_id"), col("r.rel").as("rel"),
-          nativeCosine(spark)(col("r.embedding"), col("s_emb")).as("sim"))
+          cosineSim(col("r.embedding"), col("s_emb")).as("sim"))
         .groupBy(col("query_id"), col("vec_id"))
         .agg(first(col("rel")).as("rel"), max(col("sim")).as("max_sim"))
         .withColumn("score", lit(lam) * col("rel") - lit(oneMinusLam) * col("max_sim"))
@@ -1518,7 +1502,7 @@ object Similarity {
     rankTop5(corpus.join(broadcast(probes), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        nativeCosine(spark)(col("q_emb"), col("embedding")).as("cos")))
+        cosineSim(col("q_emb"), col("embedding")).as("cos")))
   }
 
   val q114Sql: String = {
@@ -1553,7 +1537,7 @@ object Similarity {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     corpus.join(broadcast(q), col("label") =!= col("q_label"))
       .select(col("query_id"), col("vec_id"), col("label"),
-        nativeCosine(spark)(col("q_emb"), col("embedding")).as("cos"))
+        cosineSim(col("q_emb"), col("embedding")).as("cos"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select(col("query_id"), col("rk").cast("long").as("rk"),
@@ -1608,7 +1592,7 @@ object Similarity {
     val q = queriesSet(spark, dir)
     rankTop5(corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        nativeCosine(spark)(col("q_emb"), col("embedding")).as("cos")))
+        cosineSim(col("q_emb"), col("embedding")).as("cos")))
   }
 
   val q172Sql: String =

@@ -346,7 +346,6 @@ object TextOps {
     * top tokens over 100 TB without shuffling the token stream.
     */
   def q29HeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HeavyHitters.register(spark)
     val d = Tables(spark, dir, "documents")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("cnt").desc, col("token"))

@@ -95,10 +95,4 @@ object Sinks {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
-
-  /** The reference's BatchStatus/BatchRun audit write restated: append-only
-    * parquet, idempotent per run via the runId column.
-    */
-  def auditAppend(df: DataFrame, path: String, runId: String): Unit =
-    df.withColumn("run_id", lit(runId)).write.mode("append").parquet(path)
 }

@@ -156,37 +156,4 @@ object EventBus {
         ()
       }
       .start()
-
-  /** Run `source` into the exactly-once KEYED UPSERT sink — the
-    * [[sinkToDeltaTable]] seam with the op-aware
-    * [[graft.sources.DeltaLog.mergeInto]] as the commit verb: each
-    * micro-batch is mapped by `toChanges` onto the CDC change shape
-    * ((key, op ∈ upsert|delete, payload)) and merged as one commit that
-    * carries the batch's `txn` action, so redelivered batches are
-    * detected no-ops and the table converges to last-write-wins state per
-    * key whatever the source's delivery guarantee. The table must exist
-    * ([[graft.sources.DeltaLog.create]] it with the payload schema).
-    * `toChanges` MUST reduce each batch to at most one change row per key
-    * with a deterministic rule (e.g. latest event by (ts, event_id)) —
-    * the merge's within-batch tie-break only orders delete before upsert,
-    * not replays of equals.
-    */
-  def upsertToDeltaTable(
-      spark: SparkSession,
-      source: EventSource,
-      root: String,
-      keyCols: Seq[String],
-      checkpointDir: String)(
-      toChanges: DataFrame => DataFrame): StreamingQuery =
-    source.read(spark)
-      .select(EventStream.eventSchema.fieldNames.toIndexedSeq.map(col): _*)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        DeltaLog.mergeInto(spark, root, toChanges(batch.toDF()), keyCols,
-          ops = true, txn = Some((checkpointDir, bid)))
-        ()
-      }
-      .start()
 }

@@ -177,14 +177,6 @@ object EventStream {
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }
 
-  /** Sliding-window variant (1 hour window, 15 min slide). */
-  def slidingAgg(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n_events"))
-
   /** Running per-user session state via mapGroupsWithState: counts sessions
     * split on >30 min gaps — the stateful-processing surface
     * (KeyValueGroupedDataset) with explicit timeout-based eviction.

@@ -130,11 +130,6 @@ object Fs {
     fsOf(p).getFileStatus(p).getModificationTime
   }
 
-  def setMtimeMillis(s: String, t: Long): Unit = {
-    val p = hp(s)
-    fsOf(p).setTimes(p, t, -1L)
-  }
-
   /** Immediate children (files and directories) as full path strings;
     * empty for a missing or non-directory path.
     */

@@ -14,14 +14,6 @@ object GraftPlanBridge {
       plan: LogicalPlan): org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
-  /** The (unresolved) Catalyst expression behind a Column — Spark 4 wraps
-    * a ColumnNode; `ExpressionUtils.expression` is the blessed
-    * `private[sql]` converter. No logic here either.
-    */
-  def expressionOf(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    ExpressionUtils.expression(c)
-
   /** A DataFrame over an RDD of rows already in Catalyst's internal form
     * (the `private[sql]` `internalCreateDataFrame`). No logic.
     */

@@ -134,15 +134,18 @@ class OperatorsSpec extends SparkTestBase {
   test("TopK.perKey equals the window row_number idiom, any partitioning, any k") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val e = Tables(spark, sfDir, "events")
+    def events(s: org.apache.spark.sql.SparkSession) = Tables(s, sfDir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
+    val e = events(spark)
+    val plain = events(idiomSession())
     for (k <- Seq(1, 3, 7); parts <- Seq(3, 16)) {
       val got = graft.plans.TopK
         .perKey(e.repartition(parts), Seq("user_id"), Seq("value" -> false, "event_id" -> true), k)
         .collect().map(_.toSeq).toSet
       val w = Window.partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id"))
-      val want = e.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-        .drop("rk").collect().map(_.toSeq).toSet
+      val idiom = plain.withColumn("rk", row_number().over(w)).filter(col("rk") <= k).drop("rk")
+      assertWindowIdiom(idiom)
+      val want = idiom.collect().map(_.toSeq).toSet
       assert(got == want, s"k=$k parts=$parts: custom operator diverged from window idiom")
     }
     // ascending order and k larger than any group: identity modulo per-key cap
@@ -153,7 +156,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("misra-gries sketch: exact regime matches a full groupBy across partitionings") {
-    graft.functions.HeavyHitters.register(spark)
     val d = Tables(spark, sfDir, "documents")
     val toks = d.select(col("lang"),
       explode(graft.queries.TextOps.wsTokens(
@@ -171,7 +173,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("misra-gries sketch: lossy regime keeps heavy items with bounded undercount") {
-    graft.functions.HeavyHitters.register(spark)
     val s = spark
     import s.implicits._
     // skewed stream: "hot" appears 400 of n=490 times; 30 cold items x3 each
@@ -255,16 +256,18 @@ class OperatorsSpec extends SparkTestBase {
     // ~5000 distinct keys against a 64-key in-memory cap: every partition
     // is forced through many spill passes and must still emit exactly the
     // window idiom's rows
-    val e = Tables(spark, sfDir, "events")
+    def events(s: org.apache.spark.sql.SparkSession) = Tables(s, sfDir, "events")
       .select(col("event_id"), col("user_id"), col("value"))
       .withColumn("k", col("event_id") % 5000)
     val got = graft.plans.TopK
-      .perKey(e.repartition(3), Seq("k"), Seq("value" -> false, "event_id" -> true),
+      .perKey(events(spark).repartition(3), Seq("k"), Seq("value" -> false, "event_id" -> true),
         k = 2, maxKeys = 64)
       .collect().map(_.toSeq).toSet
     val w = Window.partitionBy(col("k")).orderBy(col("value").desc, col("event_id"))
-    val want = e.withColumn("rk", row_number().over(w)).filter(col("rk") <= 2)
-      .drop("rk").collect().map(_.toSeq).toSet
+    val idiom = events(idiomSession())
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 2).drop("rk")
+    assertWindowIdiom(idiom)
+    val want = idiom.collect().map(_.toSeq).toSet
     assert(got == want, "spill path diverged from the window idiom")
   }
 

@@ -99,7 +99,6 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("native cosine_similarity participates in whole-stage codegen") {
-    graft.functions.VectorExpressions.register(spark)
     val e = Tables(spark, sfDir, "embeddings")
     val scored = e.select(graft.functions.VectorExpressions.cosineSim(
       org.apache.spark.sql.functions.col("embedding"),
@@ -113,30 +112,25 @@ class PlanSpec extends SparkTestBase {
     assert(vals.forall(v => math.abs(v - 1.0) < 1e-9), "self-cosine must be 1")
   }
 
-  test("GraftExtensions injects native functions into a session built with withExtensions") {
-    // getOrCreate returns the shared session (ignoring extensions), so
-    // clear active/default first — the new session reuses the SparkContext
-    // but runs the extension injections
-    val shared = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    try {
-      // SQL-text path resolves through the injected registry entry
-      val v = s2.sql("SELECT cosine_similarity(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
-        "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c").collect().head.getDouble(0)
-      assert(math.abs(v - 1.0) < 1e-12)
-      val d = s2.sql("SELECT dot_product(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))) AS d")
-        .collect().head.getDouble(0)
-      assert(math.abs(d - 6.0) < 1e-12)
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
+  test("every session child resolves graft functions and plans the top-k rewrite") {
+    for ((label, s2) <- Seq("newSession" -> spark.newSession(),
+        "replaySession" -> ReplayFixtures.replaySession(spark))) {
+      // SQL text resolves through the registry entries GraftExtensions put
+      // in every session the builder's SparkSessionExtensions produce
+      val r = s2.sql("SELECT cosine_similarity(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
+        "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c, " +
+        "dot_product(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))) AS d").collect().head
+      assert(math.abs(r.getDouble(0) - 1.0) < 1e-12 && math.abs(r.getDouble(1) - 6.0) < 1e-12, label)
+      val hh = s2.sql("SELECT e.token, e.est FROM (SELECT explode(mg_topk(t, 4)) AS e " +
+        "FROM VALUES ('a'), ('b'), ('a') AS v(t))").collect().map(r => r.getString(0) -> r.getLong(1))
+      assert(hh.toSeq == Seq("a" -> 2L, "b" -> 1L), s"$label: $hh")
+      Tables(s2, sfDir, "events").createOrReplaceTempView("ev")
+      val idiom = s2.sql("SELECT user_id, event_id FROM (SELECT user_id, event_id, " +
+        "row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rk FROM ev) " +
+        "WHERE rk <= 2")
+      assert(idiom.queryExecution.optimizedPlan.collectFirst {
+        case n: graft.plans.TopKPerKeyNode => n
+      }.nonEmpty, s"$label: the row_number idiom must plan as TopKPerKeyNode")
     }
   }
 
@@ -205,12 +199,12 @@ class PlanSpec extends SparkTestBase {
       s"exchange must be keyed on (lang, shard), got: $key\n$s")
   }
 
-  test("q108 keywords: vocab join-back broadcasts, per-doc top-k prunes via WindowGroupLimit") {
+  test("q108 keywords: vocab join-back broadcasts, per-doc top-k prunes map-side") {
     val df = TextOps.q108Keywords(spark, sfDir)
     df.collect()
     val s = finalPlan(df)
-    assert(s.contains("WindowGroupLimit"),
-      s"the rk <= k filter must plan as a group limit (map-side prune):\n$s")
+    assert(s.contains("TopKPerKeyPartial"),
+      s"the rk <= k filter must prune map-side through the native top-k:\n$s")
     assert(!s.contains("CartesianProduct"), s"no cartesian (the n_docs frame must broadcast):\n$s")
     assert(s.contains("BroadcastExchange") || s.contains("BroadcastNestedLoopJoin"),
       s"the one-row corpus count must broadcast:\n$s")
@@ -319,12 +313,10 @@ class PlanSpec extends SparkTestBase {
     val s = finalPlan(df)
     assert(s.contains("BroadcastNestedLoopJoin") || s.contains("BroadcastExchange"),
       s"the tiny hour axis must broadcast into the grid cross join:\n$s")
-    assert("Window \\[".r.findAllIn(s).length == 2,
-      s"exactly last-per-hour + forward-fill window passes expected:\n$s")
-    // Spark turns the rn=1 filter into a WindowGroupLimit: per-hour top-1
-    // is pruned partially BEFORE the shuffle — better than a full window
-    assert(s.contains("WindowGroupLimit"),
-      s"the rn=1 pick should plan as a group limit:\n$s")
+    // the rn=1 last-per-hour pick plans as the native top-k, whose partial
+    // pass prunes BEFORE the shuffle; the forward fill is the one window
+    assert("Window \\[".r.findAllIn(s).length == 1 && s.contains("TopKPerKeyPartial"),
+      s"exactly a top-1 pick + one forward-fill window pass expected:\n$s")
     assert(!s.contains("CartesianProduct"), s"no unbroadcast cartesian allowed:\n$s")
   }
 
@@ -459,8 +451,6 @@ class PlanSpec extends SparkTestBase {
 
   test("TopKRewriteRule: the row_number window idiom auto-plans as the native top-k operator") {
     import org.apache.spark.sql.functions._
-    val s2 = spark.newSession()
-    graft.plans.TopK.enableRewrite(s2)
     def idiom(sess: org.apache.spark.sql.SparkSession) = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id"))
@@ -470,7 +460,7 @@ class PlanSpec extends SparkTestBase {
         .filter(col("rk") <= 2)
         .select("user_id", "event_id", "value")
     }
-    val rewritten = idiom(s2)
+    val rewritten = idiom(spark)
     rewritten.collect()
     val s = finalPlan(rewritten)
     assert(s.contains("TopKPerKey"), s"idiom must plan on the native operator:\n$s")
@@ -481,18 +471,18 @@ class PlanSpec extends SparkTestBase {
       && s.indexOf("Exchange hashpartitioning") < s.indexOf("TopKPerKeyPartial"),
       s"expected final / exchange / partial order:\n$s")
     // bit-for-bit the same rows as the un-rewritten idiom (total order)
-    val expected = idiom(spark).collect().map(_.toSeq).sortBy(_.toString)
+    val plain = idiom(idiomSession())
+    assertWindowIdiom(plain)
+    val expected = plain.collect().map(_.toSeq).sortBy(_.toString)
     val actual = rewritten.collect().map(_.toSeq).sortBy(_.toString)
     assert(actual.toSeq == expected.toSeq)
   }
 
   test("TopKRewriteRule leaves a bare Filter(Window) — no projection on top — alone") {
     import org.apache.spark.sql.functions._
-    val s2 = spark.newSession()
-    graft.plans.TopK.enableRewrite(s2)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id"))
-    val df = Tables(s2, sfDir, "events")
+    val df = Tables(spark, sfDir, "events")
       .select(col("user_id"), col("event_id"), col("value"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 2) // no Project above the Filter: out of pattern
@@ -504,8 +494,6 @@ class PlanSpec extends SparkTestBase {
 
   test("TopKRewriteRule with the rank CARRIED: heap prunes below the window, ranks intact") {
     import org.apache.spark.sql.functions._
-    val s2 = spark.newSession()
-    graft.plans.TopK.enableRewrite(s2)
     def idiom(sess: org.apache.spark.sql.SparkSession) = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("value").desc, col("event_id"))
@@ -515,29 +503,32 @@ class PlanSpec extends SparkTestBase {
         .filter(col("rk") <= 2)
         .select("user_id", "event_id", "rk") // rank survives: q05's shape
     }
-    val rewritten = idiom(s2)
+    val rewritten = idiom(spark)
     rewritten.collect()
     val s = finalPlan(rewritten)
     assert(s.contains("TopKPerKey"), s"the heap prune must be inserted:\n$s")
     assert(s.contains("Window"), s"the window must stay to produce the rank:\n$s")
+    // InferWindowGroupLimit puts a group limit over the heap operator; it
+    // keeps every row, so TopKStrategy plans it as the operator alone
+    assert(!s.contains("WindowGroupLimit"), s"no group limit over the heap operator:\n$s")
     // prune BEFORE rank: the window (printed above) consumes the heap output
     assert(s.indexOf("Window") < s.indexOf("TopKPerKey"),
       s"the window must sit above the heap operator:\n$s")
-    val expected = idiom(spark).collect().map(_.toSeq).sortBy(_.toString)
+    val plain = idiom(idiomSession())
+    assertWindowIdiom(plain)
+    val expected = plain.collect().map(_.toSeq).sortBy(_.toString)
     val actual = rewritten.collect().map(_.toSeq).sortBy(_.toString)
     assert(actual.toSeq == expected.toSeq,
       "pruned-then-ranked rows must equal the plain window idiom's")
   }
 
   test("session-wide TopK rewrite (Verify/Bench config) fires on >= 3 registered queries") {
-    val s2 = spark.newSession()
-    graft.plans.TopK.enableRewrite(s2)
     // the window-top-k-shaped registered queries; q216 routes through
     // TopK.perKey explicitly, the others through the optimizer rewrite
     val candidates = Seq("q05_window_topk", "q23_events_top_per_user",
       "q29_heavy_hitters", "q216_link_prediction")
     val fired = candidates.filter { name =>
-      SparkEntry.queries(name)(s2, sfDir).queryExecution.optimizedPlan.collect {
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan.collect {
         case n: graft.plans.TopKPerKeyNode => n
       }.nonEmpty
     }
@@ -836,10 +827,10 @@ class PlanSpec extends SparkTestBase {
     df.collect()
   }
 
-  test("q136 KMV: the per-group k-smallest filter compiles to WindowGroupLimit (map-side top-k)") {
+  test("q136 KMV: the per-group k-smallest filter compiles to a map-side top-k") {
     val s = finalPlan(SketchOps.q136KmvDistinct(spark, sfDir))
-    assert(s.contains("WindowGroupLimit"),
-      s"rn<=k must prune via WindowGroupLimit before the exchange:\n$s")
+    assert(s.contains("TopKPerKeyPartial"),
+      s"rn<=k must prune via the native top-k before the exchange:\n$s")
   }
 
   test("q141 KMV set ops: every pairwise stage joins off a broadcast sketch/pair frame — no sort-merge, no cartesian") {
@@ -981,8 +972,8 @@ class PlanSpec extends SparkTestBase {
     }
     // the reservoir's rank filter must prune map-side
     val s198 = finalPlan(Curation.q198WeightedReservoir(spark, sfDir))
-    assert(s198.contains("WindowGroupLimit"),
-      s"rk <= k must plan as a group limit:\n$s198")
+    assert(s198.contains("TopKPerKeyPartial"),
+      s"rk <= k must prune map-side through the native top-k:\n$s198")
   }
 
   test("q215 bucketed join: both scans bucketed, ZERO shuffle in the join subtree") {

@@ -1,31 +1,35 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (sessions are expensive). */
+/** One shared local session for all suites (sessions are expensive),
+  * built like the benched one.
+  */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static, read once per JVM: the harness's value, whichever session
-      // of the forked test JVM starts first
-      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, HarnessSession.CodegenCacheMaxEntries.toLong)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = HarnessSession.build("4", "4")
   val sfDir = "/root/testdata/sf0.001"
 }
 
 trait SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
   def sfDir: String = SparkTestBase.sfDir
+
+  /** A child session without [[graft.plans.TopKRewriteRule]], for
+    * reference frames that must run the plain row_number window idiom.
+    */
+  def idiomSession(): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules", graft.plans.TopKRewriteRule.ruleName)
+    s
+  }
+
+  /** Fails unless `df` plans the window idiom: a Window, no TopKPerKey. */
+  def assertWindowIdiom(df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("Window") && !plan.contains("TopKPerKey"),
+      s"the reference must run the plain window idiom:\n$plan")
+  }
 
   /** Path of one of the reference's 100-line test fixtures, committed under
     * `src/test/resources/reference/` (see FixtureReplaySpec for how each

@@ -427,6 +427,25 @@ class StoreMaintSpec extends SparkTestBase {
       .orderBy(col("id_a"), col("id_b")).collect().toSeq == cleaned)
   }
 
+  test("sig store compaction keeps a batch-built pairs/ served, with the same rows") {
+    // the corpus copied as a 4-file table: the batch build then writes
+    // several small files per part, which compaction rewrites
+    val dir = Files.createTempDirectory("graft_sigcompact").toString
+    Tables(spark, sfDir, "documents").repartition(4).write.parquet(s"$dir/documents.parquet")
+    val corpus = Some(s"$dir/documents.parquet")
+    Dedup.writeSignatureStore(spark, dir)
+    val store = Dedup.signatureStorePathFor(dir)
+    def servedPairs() = graft.table.StoreManifest.servable(store, "pairs", corpus)
+      .map(spark.read.parquet(_).orderBy(col("id_a"), col("id_b")).collect().toSeq)
+    def files() = StoreMaint.dataFileCount(s"$store/sigs") + StoreMaint.dataFileCount(s"$store/bands")
+    val before = servedPairs()
+    assert(before.exists(_.nonEmpty), "the batch build must serve a non-empty pairs/")
+    val preFiles = files()
+    Dedup.compactSigStore(spark, store)
+    assert(files() < preFiles, "compaction must rewrite sigs/ and bands/")
+    assert(servedPairs() == before, "compacting sigs/ and bands/ must leave pairs/ served as it was")
+  }
+
   test("eraseWhere in a store path containing URI-encodable characters: the " +
       "hit re-read works and the hit files are genuinely deleted") {
     // input_file_name() renders a percent-encoded URI; an undecoded hit

@@ -255,7 +255,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("mg_topk heavy-hitters sketch aggregates incrementally under streaming (exact regime)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    graft.functions.HeavyHitters.register(spark)
     val s = spark
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
