@@ -58,70 +58,6 @@ object RestSink {
   val DefaultCookieHeader: (String, String) =
     "Cookie" -> "Content-Type=application/json; charset=encoding; Accept=application/json"
 
-  /** The reference's `options.ctx` auth shape (`lib/batchProcessing.js:436-525`). */
-  final case class AuthCtx(
-      username: Option[String] = None,
-      password: Option[String] = None,
-      tenantId: Option[String] = None,
-      accessToken: Option[String] = None)
-
-  /** P19 — `getAccessToken` (`lib/batchProcessing.js:436-525`): precedence
-    * env ACCESS_TOKEN > login with ctx credentials > ctx.access_token > none.
-    * Login POSTs `{username, password}` to appBaseURL + login API (env
-    * BATCH_PROCESSING_LOGIN_URL, default `/api/AppUsers/login`) with a 30 s
-    * timeout, the default Cookie header, and a `tenant-id` header when
-    * given; the token is the response body's `id` field. A non-200 or a
-    * token-less body is job-fatal, like the reference. Driver-side only —
-    * runs once per job, never inside a task.
-    */
-  /** The reference's observable abort for absent or rejected credentials
-    * (`lib/batchProcessing.js:272` — in the reference a failed/skipped
-    * login leaves no token and the first authenticated POST 401s into
-    * exactly this message, so the engine throws it at the equivalent
-    * decision points: nothing to authenticate with, or a login the auth
-    * server rejected).
-    */
-  val CheckCredentialsMsg =
-    "Check access_token/credentials. Expired/Wrong/Missing?. Aborting processing."
-
-  def resolveAccessToken(ctx: AuthCtx, appBaseUrl: Option[String],
-      env: Map[String, String] = sys.env, loginTimeoutMillis: Int = 30000): Option[String] =
-    env.get("ACCESS_TOKEN").orElse {
-      if (ctx.username.isEmpty && ctx.accessToken.isEmpty)
-        throw new RuntimeException(CheckCredentialsMsg)
-      if (ctx.username.isDefined) {
-        val base = env.get("APP_BASE_URL").orElse(appBaseUrl).getOrElse(throw new IllegalArgumentException(
-          "appBaseURL is not specified in env variable (APP_BASE_URL) or options. " +
-            "Can't defer this to payload when username is specified. Aborting job."))
-        val api = env.getOrElse("BATCH_PROCESSING_LOGIN_URL", "/api/AppUsers/login")
-        def q(s: String) = s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-        val body = s"""{"username":"${q(ctx.username.get)}","password":"${q(ctx.password.getOrElse(""))}"}"""
-        val client = HttpClient.newBuilder()
-          .connectTimeout(Duration.ofMillis(loginTimeoutMillis)).build()
-        val b = HttpRequest.newBuilder(URI.create(base + api))
-          .timeout(Duration.ofMillis(loginTimeoutMillis))
-          .method("POST", HttpRequest.BodyPublishers.ofString(body))
-        (Map(DefaultCookieHeader) ++ ctx.tenantId.map("tenant-id" -> _))
-          .foreach { case (k, v) => b.header(k, v) }
-        val resp =
-          try client.send(b.build(), HttpResponse.BodyHandlers.ofString())
-          catch { case e: Exception =>
-            throw new RuntimeException(s"Could not post user credentials: ERROR: ${e.getMessage}")
-          }
-        // an auth REJECTION surfaces as the reference's net-observable
-        // credentials abort; any other failure keeps the login-error text
-        // (`lib/batchProcessing.js:485`)
-        if (resp.statusCode() == 401 || resp.statusCode() == 403)
-          throw new RuntimeException(CheckCredentialsMsg)
-        if (resp.statusCode() != 200)
-          throw new RuntimeException(
-            s"Error received after posting user credentials: RESPONSE: ${resp.statusCode()} ${resp.body()}")
-        val token = "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(resp.body()).map(_.group(1))
-        Some(token.getOrElse(throw new RuntimeException(
-          s"Could not get access_token by login: RESPONSE: ${resp.body()}")))
-      } else ctx.accessToken
-    }
-
   /** Driver-side config resolution; throws the reference's fatal messages. */
   def resolveUrl(config: BatchConfig): String = {
     val base = config.appBaseUrl.getOrElse(throw new IllegalArgumentException(

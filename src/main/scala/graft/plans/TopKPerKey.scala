@@ -57,24 +57,14 @@ final case class TopKPerKeyNode(
   * shuffle bytes drop to ≤ k rows per key per input task. This is the
   * heap-based analogue of the optimizer's WindowGroupLimit map-side prune,
   * without the sort the window idiom still pays afterwards.
-  *
-  * A `WindowGroupLimit` directly over a node with the same keys and order
-  * and `k` ≤ its limit keeps every row (each key has at most k rows, all
-  * ranked ≤ k), so it plans as the node alone. InferWindowGroupLimit puts
-  * one there over every rank-carrying rewrite of [[TopKRewriteRule]].
   */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case n: TopKPerKeyNode => exec(n)
-    case org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit(
-        keys, order, _, limit, n: TopKPerKeyNode)
-        if keys == n.keys && order == n.order && n.k <= limit => exec(n)
+    case n: TopKPerKeyNode =>
+      TopKPerKeyExec(n.keys, n.order, n.k, n.maxKeys,
+        TopKPerKeyExec(n.keys, n.order, n.k, n.maxKeys, planLater(n.child), partial = true)) :: Nil
     case _ => Nil
   }
-
-  private def exec(n: TopKPerKeyNode): Seq[SparkPlan] =
-    TopKPerKeyExec(n.keys, n.order, n.k, n.maxKeys,
-      TopKPerKeyExec(n.keys, n.order, n.k, n.maxKeys, planLater(n.child), partial = true)) :: Nil
 }
 
 final case class TopKPerKeyExec(
@@ -264,23 +254,20 @@ final case class TopKPerKeyExec(
   *
   * When the projection DOES carry the rank column (q05's shape — the
   * output wants `rk`), the window cannot be dropped, but the expensive
-  * part still can: the rewrite keeps `Project(Filter(Window(...)))` and
-  * replaces the window's CHILD with the TopKPerKeyNode, so the heap
-  * operator prunes the stream map-side to ≤ k rows per key and the sort
-  * the window still runs touches only the survivors — the discarded
-  * 99.9% is never sorted. Ranks are unchanged: the heap keeps exactly the
-  * rows row_number would rank 1..k under the same order (the same
-  * total-order caveat as row_number itself), and re-ranking k rows
-  * reproduces 1..k.
+  * part still can: the rewrite builds `Project(Window(TopKPerKeyNode))`,
+  * so the heap operator prunes the stream map-side to ≤ k rows per key and
+  * the sort the window still runs touches only the survivors — the
+  * discarded 99.9% is never sorted. The rank filter goes: every survivor
+  * ranks ≤ k. Ranks are unchanged: the heap keeps exactly the rows
+  * row_number would rank 1..k under the same order (the same total-order
+  * caveat as row_number itself), and re-ranking k rows reproduces 1..k.
   *
   * Applies only when: exactly one window expression and it is row_number()
   * with the default RowFrame; the filter is a simple rank bound (<=, <,
   * = 1, or the reversed comparisons); the partition spec is non-empty (the
   * global case already plans as TakeOrderedAndProject); and the projection
   * references only the window child's columns (plus the rank, in the
-  * rank-carrying variant). A child that is already a TopKPerKeyNode is
-  * left alone (the rank-carrying rewrite keeps the matchable
-  * Project/Filter/Window shape).
+  * rank-carrying variant).
   *
   * Determinism note: like row_number itself, result SETS are only
   * deterministic when the order gives a total order per key (unique
@@ -288,9 +275,10 @@ final case class TopKPerKeyExec(
   *
   * Runs as a pre-CBO rule of every session built with
   * [[graft.functions.GraftExtensions]]: once, after operator optimization
-  * and before InferWindowGroupLimit. A rank read only by a Sort that a
-  * later batch (EliminateSorts) removes still counts as carried, so such a
-  * plan keeps a window over the ≤ k survivors per key.
+  * and before InferWindowGroupLimit, which finds no rank filter left to
+  * bound. A rank read only by a Sort that a later batch (EliminateSorts)
+  * removes counts as carried here; once that Sort is gone nothing reads
+  * the rank and column pruning drops the survivors' window.
   * `spark.sql.optimizer.excludedRules` set to its `ruleName` turns it off
   * for one session.
   */
@@ -318,7 +306,7 @@ object TopKRewriteRule
               org.apache.spark.sql.catalyst.expressions.RowFrame,
               UnboundedPreceding, CurrentRow))), _) =>
           rankLimit(cond, alias.exprId) match {
-            case Some(k) if k > 0 && !w.child.isInstanceOf[TopKPerKeyNode] =>
+            case Some(k) if k > 0 =>
               val rankUsed =
                 projectList.exists(_.references.exists(_.exprId == alias.exprId))
               if (!rankUsed && projectList.forall(_.references.subsetOf(w.child.outputSet)))
@@ -327,8 +315,8 @@ object TopKRewriteRule
                   TopKPerKeyNode(w.partitionSpec, w.orderSpec, k, TopK.DefaultMaxKeys, w.child))
               else if (projectList.forall(_.references.subsetOf(w.outputSet)))
                 // rank carried: prune first, re-rank only the survivors
-                Project(projectList, Filter(cond, w.copy(child =
-                  TopKPerKeyNode(w.partitionSpec, w.orderSpec, k, TopK.DefaultMaxKeys, w.child))))
+                Project(projectList, w.copy(child =
+                  TopKPerKeyNode(w.partitionSpec, w.orderSpec, k, TopK.DefaultMaxKeys, w.child)))
               else p
             case _ => p
           }

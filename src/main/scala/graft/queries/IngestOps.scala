@@ -1845,9 +1845,9 @@ object IngestOps {
     * one version per trigger, surfacing typed `_change_type` /
     * `_commit_version` rows — cdc change files read as published
     * (authoritative), cdc-less commits deriving inserts, all through the
-    * same DSv2 micro-batch machinery as q248 (offsets are versions,
-    * executor-side parquet-mr readers, derived deletes honoring the
-    * removed incarnation's deletion vector ON THE EXECUTOR). The
+    * same micro-batch source as q248 (offsets are versions, each batch
+    * the batch feed's own frame, derived deletes honoring the removed
+    * incarnation's deletion vector). The
     * accumulated sink must hash-match q266's batch-feed oracle exactly —
     * streamed and batch consumption of the same feed are provably the
     * same rows. This is the consumer loop a 100 TB deployment actually
@@ -2179,7 +2179,7 @@ object IngestOps {
     * change data feed (no change files exist), and the feed stream must
     * DERIVE the retraction — the {remove(P, oldDv), add(P, newDv)} pair
     * resolves to exactly the rows at positions newDv \ oldDv, decoded
-    * and diffed ON THE EXECUTOR (the keep-only partition reader). Before
+    * and diffed ON THE EXECUTOR (the batch feed's DV-rewrite frame). Before
     * round 17 this commit shape stopped every incremental consumer (the
     * store syncs all ride the feed); now one DELETE on an un-instrumented
     * table feeds downstream state its exact change set. The second
@@ -2282,10 +2282,11 @@ object IngestOps {
       ()
     }
 
-  /** q278 — STREAMING AN 'id'-MODE TABLE: the partition readers bind
-    * each column by the file footer's parquet FIELD ID (the foreign
-    * file's names match nothing — a name bind would null-fill every
-    * row), falling back to physical-name matching on id-less files. Both
+  /** q278 — STREAMING AN 'id'-MODE TABLE: the stream's batches are the
+    * batch read, which binds each column by the file footer's parquet
+    * FIELD ID (the foreign file's names match nothing — a name bind
+    * would null-fill every row), falling back to physical-name matching
+    * on id-less files. Both
     * commits stream; the aggregate restates the two slices. Before
     * round 17 id-mode tables refused to stream; now the stream serves
     * the same rows the batch field-id read does.
@@ -2883,8 +2884,7 @@ object IngestOps {
     * admitted — typed extraction (`variant_get`) over the binary-encoded
     * semi-structured column, no per-row JSON re-parse in the plan.
     * Before round 18 one variant column made the table unreadable here.
-    * (The custom STREAM partition reader still refuses the leaf loudly —
-    * a binary it cannot decode must never pass through silently.)
+    * The stream serves the same frame, so the column streams too.
     */
   def q288VariantRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.DeltaLog
@@ -2965,9 +2965,9 @@ object IngestOps {
 
   /** q248 — DELTA AS A STREAM SOURCE: the q246 commit history consumed
     * through the engine's own micro-batch machinery via
-    * [[graft.streaming.DeltaStream]] (DSv2, offsets = log versions,
-    * executor-side parquet readers, one partition per changed file) into
-    * a checkpointed parquet sink. `maxVersionsPerTrigger = 2` forces the
+    * [[graft.streaming.DeltaStream]] (offsets = log versions, each
+    * micro-batch DeltaLog's batch frame for its version range) into a
+    * checkpointed parquet sink. `maxVersionsPerTrigger = 2` forces the
     * seven versions through four real triggers, two of which straddle the
     * history's `dataChange=false` OPTIMIZE commits — a source that
     * ingested their adds would double-count residues 0..3 and break the

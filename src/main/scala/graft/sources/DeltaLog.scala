@@ -721,10 +721,9 @@ object DeltaLog {
     * implemented in [[readUnderSchema]]: the scan binds physical names
     * and the projection renames back to logical), and protocol 3 ONLY
     * when every declared readerFeature is `columnMapping`,
-    * `deletionVectors`, `timestampNtz` (one more leaf type — batch scan,
-    * partition decode, and the stream reader's INT64 lattice all carry
-    * it) or `v2Checkpoint` (manifest + sidecar layout, read by
-    * [[readCheckpoint]]) (DV'd files are row-filtered through
+    * `deletionVectors`, `timestampNtz` (one more leaf type — the scan and
+    * partition decode carry it) or `v2Checkpoint` (manifest + sidecar
+    * layout, read by [[readCheckpoint]]) (DV'd files are row-filtered through
     * `_metadata.row_index` anti-joins in [[readAdds]]; the adds-only
     * incremental path still refuses DV commits — see [[changedFileAdds]]
     * — while the change feed, batch and streamed, DERIVES their
@@ -776,10 +775,7 @@ object DeltaLog {
   // physical schema and project back to logical names.
   // -----------------------------------------------------------------------
 
-  /** The LATEST metaData's mapping mode — [[latestFieldIds]] keys off it
-    * (the stream's partition readers bind 'id'-mode columns by parquet
-    * field id, physical name elsewhere).
-    */
+  /** The LATEST metaData's mapping mode. */
   private[graft] def latestColumnMappingMode(root: String): String =
     columnMappingMode(latestMetaDataJson(root))
 
@@ -1091,26 +1087,6 @@ object DeltaLog {
     Seq(plainDf, dvDf).flatten.reduce(_.unionByName(_))
   }
 
-  /** Logical → physical field names at the LATEST version (identity map
-    * when mapping is off) — what the streaming source's partition readers
-    * look fields up by. Driver string work.
-    */
-  private[graft] def latestPhysicalNames(root: String): Map[String, String] =
-    latestSchema(root).fields.map(f => f.name -> physicalNameOf(f)).toMap
-
-  /** Logical name → column-mapping FIELD ID at the latest version —
-    * what the streaming source's partition readers bind 'id'-mode files
-    * by (parquet field ids, not names). Empty unless the table's mapping
-    * mode is 'id'. Driver string work.
-    */
-  private[graft] def latestFieldIds(root: String): Map[String, Long] =
-    if (latestColumnMappingMode(root) != "id") Map.empty
-    else latestSchema(root).fields.toSeq.flatMap { f =>
-      if (f.metadata.contains("delta.columnMapping.id"))
-        Some(f.name -> f.metadata.getLong("delta.columnMapping.id"))
-      else None
-    }.toMap
-
   /** Live data-file paths (relative to `root`) at `version` (default:
     * latest): replay from the newest checkpoint at or below the version,
     * then the JSON commit tail. Order is first-add order, stable across
@@ -1119,18 +1095,6 @@ object DeltaLog {
   def snapshotFiles(spark: SparkSession, root: String,
       version: Option[Long] = None): Seq[String] =
     replay(spark, root, version).adds.map(_.path)
-
-  /** The snapshot's live adds at `version` as (relative path,
-    * partitionValues, deletion-vector descriptor) — what the streaming
-    * source's `startingVersion=latest` initial batch fans partitions
-    * over (each file one partition; its DV rides as the reader's skip
-    * set). Driver-side log replay.
-    */
-  private[graft] def snapshotFileEntries(spark: SparkSession, root: String,
-      version: Long): Seq[(String, Map[String, String],
-        Option[DeletionVectors.Descriptor])] =
-    replay(spark, root, Some(version)).adds
-      .map(a => (a.path, a.partitionValues, a.dv))
 
   /** The snapshot exactly as `version` committed it — Delta time travel.
     * A snapshot with no live files returns an EMPTY frame typed by the
@@ -2065,20 +2029,9 @@ object DeltaLog {
       partCols.map(c => physicalNameOf(writeSchema(c))))
   }
 
-  /** The latest metaData's partition columns — what the streaming source
-    * decorates its per-file rows with. Driver string work.
-    */
+  /** The latest metaData's partition columns. Driver string work. */
   private[graft] def latestPartitionColumns(root: String): Seq[String] =
     partitionColumnsOf(latestMetaDataJson(root))
-
-  /** `dataChange=true` adds in (from, to] as (path, partitionValues) —
-    * the stream source's file inventory.
-    */
-  private[graft] def changedFileEntries(root: String,
-      fromVersion: Long, toVersion: Long,
-      skipChangeCommits: Boolean = false): Seq[(String, Map[String, String])] =
-    changedFileAdds(root, fromVersion, toVersion, skipChangeCommits)
-      .map(a => (a.path, a.partitionValues))
 
   /** Create an EMPTY table: a schema-only commit 0 (protocol + metaData,
     * no data files), so the first data commit lands at version 1 and an
@@ -2713,34 +2666,11 @@ object DeltaLog {
         } ++ payload.map(c => col(s"__o_$c").as(s"old_$c")): _*)
   }
 
-  /** One change-feed FILE entry per data/change file in versions
-    * (fromVersion, toVersion] — the STREAMING source's inventory (the
-    * file-level counterpart of [[readChangeFeed]], same
-    * authoritative-cdc / derived / refusal rules). `changeType` None =
-    * a cdc change file whose `_change_type` column rides IN the file;
-    * Some("insert"/"delete") = derived from a cdc-less commit's
-    * dataChange=true adds/removes: an insert's `dv` is a SKIP set (rows
-    * the file's own deletion vector already invalidates never announce);
-    * a full-file delete carries the removed incarnation's dv the same
-    * way; a DV-REWRITE pair {remove(P, oldDv), add(P, newDv)} becomes a
-    * delete entry whose `dvEmitOnly` is the NEW descriptor and `dv` the
-    * OLD — the executor-side reader emits exactly the rows at positions
-    * newDv \ oldDv, the commit's true retraction set. Driver-side string
-    * work; replay only at a derived remove.
-    */
-  private[graft] final case class FeedFileEntry(version: Long, path: String,
-      partitionValues: Map[String, String], changeType: Option[String],
-      dv: Option[DeletionVectors.Descriptor],
-      dvEmitOnly: Option[DeletionVectors.Descriptor] = None)
-
-  /** ONE cdc-less commit's change classification — the single place the
-    * feed's derivation rules live, shared by the batch feed
-    * ([[readChangeFeed]]) and the stream inventory
-    * ([[changeFeedFileEntries]]) so the cdc short-circuit, the DV-rewrite
-    * pairing and the same-path-overwrite rule can never drift between
-    * them (this round's overwrite fix had to land twice before the
-    * extraction). `cdc` non-empty short-circuits everything else — a
-    * commit's change files are its complete, authoritative description.
+  /** ONE commit's change classification — the single place the feed's
+    * derivation rules live; [[readChangeFeed]] (and through it the
+    * streamed feed) is its only consumer. `cdc` non-empty short-circuits
+    * everything else — a commit's change files are its complete,
+    * authoritative description.
     * `dvRewrites` pairs each {remove(P, oldDv), add(P, newDv)} as
     * (the add carrying the NEW descriptor, the OLD descriptor): the
     * commit's retraction is exactly the positions newDv \ oldDv.
@@ -2784,30 +2714,6 @@ object DeltaLog {
       freshAdds,
       removeDvByPath.keySet -- dvRewrites.map(_.path).toSet)
   }
-
-  private[graft] def changeFeedFileEntries(spark: SparkSession, root: String,
-      fromVersion: Long, toVersion: Long): Seq[FeedFileEntry] =
-    ((fromVersion + 1) to toVersion).flatMap { v =>
-      val fc = classifyFeedCommit(
-        readCommitLinesOrRefuse(root, v).map(mapper.readTree))
-      if (fc.cdc.nonEmpty)
-        fc.cdc.map(c =>
-          FeedFileEntry(v, c.path, c.partitionValues, None, None))
-      else {
-        val ins = fc.freshAdds.map(a => FeedFileEntry(v, a.path,
-          a.partitionValues, Some("insert"), a.dv))
-        val rewriteDels = fc.dvRewrites.map { case (a, oldDv) =>
-          FeedFileEntry(v, a.path, a.partitionValues, Some("delete"),
-            oldDv, dvEmitOnly = a.dv)
-        }
-        // pruned reconciliation: only the REMOVED paths' prior
-        // incarnations replay — never the full snapshot's add set
-        val dels = replayForPaths(spark, root, v - 1, fc.fullRemovePaths)
-          .map(a => FeedFileEntry(v, a.path, a.partitionValues,
-            Some("delete"), a.dv))
-        ins ++ rewriteDels ++ dels
-      }
-    }
 
   /** THE CHANGE DATA FEED (delta-spark's `readChangeFeed`): every
     * row-level change committed in versions (fromVersion, toVersion],
@@ -2954,32 +2860,9 @@ object DeltaLog {
     else frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Rows ADDED by `dataChange=true` commits in versions (fromVersion,
-    * toVersion] — the incremental (CDC-read) consumption path of the log.
-    * `dataChange=false` commits (OPTIMIZE rewrites) are SKIPPED ENTIRELY:
-    * their adds re-house rows an incremental consumer already ingested,
-    * so a reader that processed them would double-count every row — the
-    * executable meaning of the protocol flag [[commitOptimize]] writes.
-    * Remove actions are not surfaced (append/rewrite histories only); a
-    * caller needing update/delete semantics keys on its own CDC columns.
-    * Returns an empty typed frame when no qualifying commit exists.
-    *
-    * Scale: reads only the files the qualifying commits added — work is
-    * changes-sized, never snapshot-sized, which is what makes a log-
-    * tailing consumer viable against a 100 TB table.
-    */
-  /** Relative paths of files added by `dataChange=true` actions in
-    * versions (fromVersion, toVersion] — the file-level primitive behind
-    * [[changesSince]] and the [[graft.streaming.DeltaStream]] source.
-    */
-  private[graft] def changedFilePaths(root: String,
-      fromVersion: Long, toVersion: Long): Seq[String] =
-    changedFileAdds(root, fromVersion, toVersion).map(_.path)
-
   /** `dataChange=true` adds in (fromVersion, toVersion], with their
-    * partitionValues — the CDC-read / stream-source file inventory.
-    */
-  /** With `skipChangeCommits` (delta-spark's own stream option) a commit
+    * partitionValues — the file inventory behind [[changesSince]].
+    * With `skipChangeCommits` (delta-spark's own stream option) a commit
     * that RETRACTS rows — any `dataChange=true` remove, or any add
     * carrying a deletion vector — contributes NOTHING instead of
     * refusing: the consumer has declared it only wants appends and
@@ -3039,17 +2922,34 @@ object DeltaLog {
       }
     }
 
+  /** Rows ADDED by `dataChange=true` commits in versions (fromVersion,
+    * toVersion] — the incremental (CDC-read) consumption path of the log.
+    * `dataChange=false` commits (OPTIMIZE rewrites) are SKIPPED ENTIRELY:
+    * their adds re-house rows an incremental consumer already ingested,
+    * so a reader that processed them would double-count every row — the
+    * executable meaning of the protocol flag [[commitOptimize]] writes.
+    * A commit that retracts rows refuses, or with `skipChangeCommits`
+    * contributes nothing ([[changedFileAdds]]); [[readChangeFeed]] is the
+    * read that serves retractions. Returns an empty typed frame when no
+    * qualifying commit exists.
+    *
+    * Scale: reads only the files the qualifying commits added — work is
+    * changes-sized, never snapshot-sized, which is what makes a log-
+    * tailing consumer viable against a 100 TB table.
+    */
   def changesSince(spark: SparkSession, root: String,
-      fromVersion: Long, toVersion: Option[Long] = None): DataFrame = {
-    val cur = currentVersion(root)
-    val hi = toVersion.getOrElse(cur)
-    require(hi <= cur, s"version $hi out of range [0, $cur]")
+      fromVersion: Long, toVersion: Option[Long] = None,
+      skipChangeCommits: Boolean = false): DataFrame = {
+    val log = listLog(root)
+    val hi = versionIn(root, log, toVersion)
     // the range's files may straddle a schema evolution — read under the
     // upper version's metaData schema so early files null-fill; mapped /
-    // partitioned tables decode exactly like the snapshot read
-    val snap = replay(spark, root, Some(hi))
-    readAdds(spark, root, changedFileAdds(root, fromVersion, hi),
-      snap.schemaJson, snap.metaDataJson)
+    // partitioned tables decode exactly like the snapshot read. The
+    // metadata-only snapshot keeps the call changes-sized.
+    val meta = snapshotAt(root, log, hi, None)
+    validateReadable(root, meta.protocolJson, meta.metaDataJson)
+    readAdds(spark, root, changedFileAdds(root, fromVersion, hi, skipChangeCommits),
+      meta.schemaJson, meta.metaDataJson)
   }
 
   /** VACUUM: physically delete data files that are live in NO version ≥

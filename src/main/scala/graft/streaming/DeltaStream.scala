@@ -1,118 +1,64 @@
 package graft.streaming
 
-import java.util.{Map => JMap}
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.classic.GraftPlanBridge
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl,
+  Offset => StreamOffset}
+import org.apache.spark.sql.execution.streaming.{Offset, Source}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.DeltaLog
 
-/** DELTA TABLE AS A STREAM SOURCE — a DataSource-v2 micro-batch format
-  * that tails a [[graft.sources.DeltaLog]] commit log: offsets ARE log
-  * versions, each trigger consumes the next ≤ `maxVersionsPerTrigger`
-  * commits, and `dataChange=false` OPTIMIZE commits contribute NOTHING
-  * (their adds re-house rows a consumer already ingested — the
-  * skip-this-commit decision q245's flag exists for, here wired into the
-  * engine's own replay/checkpoint machinery instead of a hand-rolled
-  * cursor). This is the delta-spark streaming-source contract rebuilt on
-  * the public DSv2 API with no foreign jar.
+/** DELTA TABLE AS A STREAM SOURCE — a micro-batch schedule over the
+  * batch reads of [[graft.sources.DeltaLog]]: offsets ARE log versions,
+  * each trigger consumes the next ≤ `maxVersionsPerTrigger` commits, and
+  * each micro-batch is the frame the batch path already builds for its
+  * version range. `dataChange=false` OPTIMIZE commits contribute NOTHING
+  * (their adds re-house rows a consumer already ingested). This is the
+  * shape of delta-spark's own streaming source: a V1 `Source` whose
+  * `getBatch` returns the batch read over the commit range, so partition
+  * values, column mapping, schema evolution, type widening, timestamp
+  * units, deletion vectors and every leaf type the batch read decodes
+  * stream the same way.
   *
-  * Reader side: `planInputPartitions(start, end]` resolves the versions'
-  * `dataChange=true` add-files from the log (driver-side string work) and
-  * fans ONE partition per data file; executors read their file through
-  * parquet-mr's example Group API and convert to InternalRow — genuinely
-  * distributed, no driver collect of data. Supported leaf types: the
-  * primitive lattice the engine's Delta writer emits (long/int/double/
-  * float/boolean/string/binary) plus date and INT64 timestamps
-  * (millis/micros/nanos units honored; legacy INT96 refuses loudly).
-  * Restart replays exactly the committed
-  * version ranges (offsets come back through `deserializeOffset`), and
-  * content is whatever the immutable data files hold — so a checkpointed
-  * file sink downstream is exactly-once end to end.
+  * Per batch: `readChangeFeed=true` serves [[DeltaLog.readChangeFeed]]
+  * (typed `_change_type`/`_commit_version` rows — cdc files
+  * authoritative, cdc-less commits derived, DV rewrites diffed);
+  * otherwise [[DeltaLog.changesSince]], where a retracting commit refuses
+  * unless `skipChangeCommits` (delta-spark's append-only opt-in) drops
+  * it. Restart replays exactly the committed version ranges and the data
+  * files are immutable, so a checkpointed file sink downstream is
+  * exactly-once end to end. Per-trigger work is changes-sized: a 100 TB
+  * table with small daily appends streams at the cost of the appends.
   *
-  * Scale: per-trigger work is changes-sized (the new commits' files),
-  * never snapshot-sized; a 100 TB table with small daily appends streams
-  * at the cost of the appends. Options: `path` (table root, required),
-  * `maxVersionsPerTrigger` (default 1), `readChangeFeed` (typed
-  * `_change_type`/`_commit_version` rows — cdc files authoritative,
-  * cdc-less commits derived, DV rewrites diffed), `skipChangeCommits`
-  * (delta-spark's append-only opt-in: retracting commits contribute
-  * nothing instead of refusing), `startingVersion` (`<n>` tails from
-  * version n; `latest` serves the pinned current snapshot as batch zero
-  * then tails only new commits — the new-consumer bootstrap that makes
-  * a 500-version table cost one snapshot pass, not 500 micro-batches),
-  * `startingTimestamp` (commits at or after the timestamp deliver,
-  * resolved by commit-file mtime; exclusive with startingVersion).
+  * Options: `path` (table root, required), `maxVersionsPerTrigger`
+  * (default 1), `readChangeFeed`, `skipChangeCommits`, `startingVersion`
+  * (`<n>` tails from version n; `latest` serves the current snapshot as
+  * the first batch, then tails only new commits — the new-consumer
+  * bootstrap that makes a 500-version table cost one snapshot pass, not
+  * 500 micro-batches), `startingTimestamp` (commits at or after the
+  * timestamp deliver, resolved by commit-file mtime; exclusive with
+  * startingVersion).
   */
-class DeltaStream extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DeltaStream.schemaFor(options.get("path"),
-      options.getBoolean("readChangeFeed", false))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new DeltaStreamTable(new CaseInsensitiveStringMap(properties), schema)
-}
+class DeltaStream extends StreamSourceProvider {
+  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
+      providerName: String, parameters: Map[String, String]): (String, StructType) =
+    (providerName, DeltaStream.schemaFor(parameters))
 
-object DeltaStream {
-  /** Driver-side schema resolution — the log's LATEST metaData action via
-    * [[DeltaLog.latestSchema]] (tail scan bounded by the newest
-    * checkpoint, parquet-mr fallback into it), never commit 0's: after
-    * schema evolution the stream must surface the evolved field list
-    * (pre-evolution files null-fill in the reader), and a type-changed
-    * column must dispatch on its CURRENT type. Also runs the protocol
-    * refusal gate, so an unknown-feature table refuses loudly instead of
-    * streaming misread rows; 'name'-mapped tables stream by physical
-    * name, 'id'-mapped tables by parquet field id — both decided per
-    * field in the partition reader. With `readChangeFeed=true` the
-    * schema gains the feed's typed columns (`_change_type`,
-    * `_commit_version`).
-    */
-  private[graft] def schemaFor(root: String, cdf: Boolean): StructType = {
-    require(root != null, "DeltaStream requires option 'path'")
-    // every field reads NULLABLE regardless of the declared schema — a
-    // column added by schema evolution null-fills in pre-evolution files
-    // even when the evolving writer recorded it non-nullable (the same
-    // asNullable contract Spark's own file sources apply on read)
-    val base = StructType(
-      DeltaLog.latestSchema(root).fields.toIndexedSeq.map(_.copy(nullable = true)))
-    if (!cdf) base
-    else StructType(base.fields.toIndexedSeq :+
-      StructField("_change_type", StringType) :+
-      StructField("_commit_version", LongType))
-  }
-}
-
-final class DeltaStreamTable(options: CaseInsensitiveStringMap,
-    schema0: StructType) extends Table with SupportsRead {
-  override def name(): String = s"deltastream(${options.get("path")})"
-  override def schema(): StructType = schema0
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    val root = options.get("path")
-    val maxV = options.getLong("maxVersionsPerTrigger", 1L)
-    val cdf = options.getBoolean("readChangeFeed", false)
-    val skip = options.getBoolean("skipChangeCommits", false)
-    val startV = Option(options.get("startingVersion")).map(_.trim)
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source = {
+    val startV = parameters.get("startingVersion").map(_.trim)
     startV.foreach(s => require(s == "latest" ||
       scala.util.Try(s.toLong).toOption.exists(_ >= 0L),
       s"startingVersion must be a version >= 0 or 'latest', got '$s'"))
-    // startingTimestamp (delta-spark's option): commits at or after the
-    // timestamp deliver; resolved against commit-file mtimes at stream
-    // start. Mutually exclusive with startingVersion. Zone-less forms
+    // startingTimestamp (delta-spark's option): zone-less forms
     // ('yyyy-MM-dd [HH:mm:ss[.S]]') resolve in the SPARK SESSION
-    // timezone — the same clock the batch reader's timestamp partition
-    // values use — never the JVM default (a driver in New York and a
-    // driver in UTC must resolve the same option string to the same
-    // boundary).
-    val startTs = Option(options.get("startingTimestamp")).map(_.trim)
+    // timezone — the clock the batch read's timestamp partition values
+    // use — never the JVM default
+    val startTs = parameters.get("startingTimestamp").map(_.trim)
     require(startV.isEmpty || startTs.isEmpty,
       "startingVersion and startingTimestamp are mutually exclusive")
     val startTsMs = startTs.map { s =>
@@ -129,400 +75,115 @@ final class DeltaStreamTable(options: CaseInsensitiveStringMap,
           s"'yyyy-MM-dd', got '$s'")
       t.get
     }
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = schema0
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new DeltaStreamStream(root, schema0, maxV, cdf, skip, startV,
-            startTsMs)
-      }
-    }
+    new DeltaStreamSource(sqlContext.sparkSession, parameters("path"),
+      DeltaStream.schemaFor(parameters),
+      parameters.get("maxVersionsPerTrigger").fold(1L)(_.toLong),
+      parameters.get("readChangeFeed").exists(_.toBoolean),
+      parameters.get("skipChangeCommits").exists(_.toBoolean),
+      startV, startTsMs)
   }
 }
 
-/** `snapshotPending`: the offset BEFORE the `startingVersion=latest`
-  * initial batch — version v's whole snapshot has not been delivered
-  * yet. The batch (snapshotPending(v) → plain(v)] IS the snapshot;
-  * after it the stream tails commits > v like any other consumer.
-  * Serialized as `snap:<v>` so a restart mid-initial-batch replays the
-  * identical snapshot range.
+object DeltaStream {
+  /** The table's LATEST schema ([[DeltaLog.latestSchema]], which also
+    * runs the protocol refusal gate), every field nullable — a column
+    * added by schema evolution reads null from pre-evolution files even
+    * when the writer recorded it non-nullable — plus the feed's typed
+    * columns with `readChangeFeed=true`.
+    */
+  private def schemaFor(parameters: Map[String, String]): StructType = {
+    val root = parameters.get("path")
+    require(root.isDefined, "DeltaStream requires option 'path'")
+    val base = StructType(
+      DeltaLog.latestSchema(root.get).fields.toIndexedSeq.map(_.copy(nullable = true)))
+    if (!parameters.get("readChangeFeed").exists(_.toBoolean)) base
+    else StructType(base.fields.toIndexedSeq :+
+      StructField("_change_type", StringType) :+
+      StructField("_commit_version", LongType))
+  }
+}
+
+private final case class DeltaStreamOffset(v: Long) extends Offset {
+  override def json(): String = v.toString
+}
+
+/** The V1 contract hands the first batch a `null` start; every later
+  * start is the previous end, a [[DeltaStreamOffset]] or, read back from
+  * the offset log, any offset whose JSON is the version.
   */
-private final case class DeltaStreamOffset(v: Long,
-    snapshotPending: Boolean = false) extends Offset {
-  override def json(): String =
-    if (snapshotPending) s"snap:$v" else v.toString
-}
+private final class DeltaStreamSource(spark: SparkSession, root: String,
+    override val schema: StructType, maxVersionsPerTrigger: Long,
+    cdf: Boolean, skipChangeCommits: Boolean,
+    startingVersion: Option[String], startingTimestampMs: Option[Long])
+  extends Source with SupportsAdmissionControl {
 
-private final case class DeltaFilePartition(path: String,
-    fields: Array[(String, String, Boolean, String, Long)],
-    sessionTz: String,
-    // CHANGE-FEED extras (null/absent on a plain table stream):
-    // changeType — the derived constant, or null when the file is a cdc
-    // change file carrying its own _change_type column; commitVersion —
-    // the feed's _commit_version (null = not a feed partition); tableRoot
-    // + dv — a deletion-vector descriptor (storageType, pathOrInlineDv,
-    // offset|-1, sizeInBytes, cardinality) decoded ON THE EXECUTOR: with
-    // dvEmitOnly null it is a SKIP set (a derived delete/insert never
-    // re-announces already-deleted rows); with dvEmitOnly set the
-    // partition is a DV-REWRITE delete and the reader emits EXACTLY the
-    // rows at positions dvEmitOnly \ dv — the commit's true retraction
-    changeType: String = null,
-    commitVersion: java.lang.Long = null,
-    tableRoot: String = null,
-    dv: (String, String, Long, Int, Long) = null,
-    dvEmitOnly: (String, String, Long, Int, Long) = null) extends InputPartition
-// fields: (physicalName, typeName, isPartitionCol, partitionValue,
-// fieldId|-1) — serializable primitives only, so the partition ships to
-// executors without dragging StructType along. The PHYSICAL name is what
-// the parquet files spell (identical to the logical name except on
-// column-mapped tables); fieldId ≥ 0 ('id'-mode tables) binds the column
-// by the file footer's parquet field id, name as the ignoreMissing
-// fallback; PARTITION columns are absent from the files entirely — their
-// per-file value rides in from the add action's partitionValues (null =
-// null partition value). Output order is the logical schema's, so the
-// engine binds columns positionally.
+  private val snapshotFirst = startingVersion.contains("latest")
 
-final class DeltaStreamStream(root: String, schema: StructType,
-    maxVersionsPerTrigger: Long, cdf: Boolean = false,
-    skipChangeCommits: Boolean = false,
-    startingVersion: Option[String] = None,
-    startingTimestampMs: Option[Long] = None)
-  extends MicroBatchStream with SupportsAdmissionControl {
-
-  /** `startingVersion` semantics (delta-spark's option): absent → replay
-    * the whole history from v0 (the engine's historical default);
-    * `<n>` → deliver commits from version n on (a consumer resuming at a
-    * known cursor pays only the tail); `latest` → pin the CURRENT
-    * version at stream start, serve that snapshot as batch ZERO (each
-    * live file one partition, DVs honored as skip sets), then tail only
-    * NEW commits — the only viable start for a NEW consumer of a
-    * long-history table: replaying a 100 TB table's every commit through
-    * micro-batches is a non-starter when the snapshot read costs one
-    * pass over the live set.
+  /** The version before the first batch's commits: absent options replay
+    * from v0, `<n>` tails from n, and `startingTimestamp` resolves once
+    * per source (an all-older history pins the version current at start,
+    * so later polls do not move it past commits that land meanwhile).
     */
-  override def initialOffset(): Offset = startingVersion match {
-    case Some("latest") =>
-      val cur = DeltaLog.currentVersion(root)
-      if (cur < 0L) DeltaStreamOffset(-1L)
-      else DeltaStreamOffset(cur, snapshotPending = true)
-    case Some(n) => DeltaStreamOffset(n.toLong - 1L)
-    case None => startingTimestampMs match {
-      case Some(ts) =>
-        // commits at or after ts deliver; older history is the
-        // consumer's declared don't-care. One listing resolves both the
-        // first-hit and the all-older fallback (two would race a commit
-        // landing in between — skipped forever).
-        DeltaStreamOffset(DeltaLog.startOffsetForTimestamp(root, ts))
-      case None => DeltaStreamOffset(-1L)
-    }
+  private lazy val firstStart: Long = startingVersion match {
+    case Some(n) if !snapshotFirst => n.toLong - 1L
+    case _ => startingTimestampMs.fold(-1L)(DeltaLog.startOffsetForTimestamp(root, _))
   }
 
-  /** Pacing rides the ENGINE's start offset, not a source-side committed
-    * tracker: a plain `latestOffset()` paced by our own state races the
-    * engine's commit timing (the availability poll for trigger N+1 can
-    * land before `commit(N)` does, and `processAllAvailable` then reads
-    * "no new data" and returns with the log half-consumed — observed).
-    * `SupportsAdmissionControl` hands us the authoritative start on every
-    * poll, so the next end is a pure function of engine state.
+  private def versionOf(o: StreamOffset): Long = o.json.trim.toLong
+
+  /** Pacing rides the ENGINE's start offset, not a source-side tracker:
+    * the next end is a pure function of engine state. `null` means no
+    * first batch yet.
     */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val so = start.asInstanceOf[DeltaStreamOffset]
-    // a pending snapshot is always the next batch, whole — pacing
-    // applies to the commit tail that follows it
-    if (so.snapshotPending) return DeltaStreamOffset(so.v)
-    DeltaStreamOffset(
-      math.min(DeltaLog.currentVersion(root), so.v + maxVersionsPerTrigger))
+  override def latestOffset(start: StreamOffset, limit: ReadLimit): StreamOffset = {
+    val cur = DeltaLog.currentVersion(root)
+    if (start == null) {
+      // the `latest` snapshot is the first batch, whole: pacing applies
+      // to the commit tail that follows it
+      if (snapshotFirst) return if (cur < 0L) null else DeltaStreamOffset(cur)
+      val end = math.min(cur, firstStart + maxVersionsPerTrigger)
+      if (end > firstStart) DeltaStreamOffset(end) else null
+    } else DeltaStreamOffset(math.min(cur, versionOf(start) + maxVersionsPerTrigger))
   }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  override def latestOffset(): Offset =
+  override def getOffset: Option[Offset] =
     throw new UnsupportedOperationException(
-      "DeltaStreamStream paces via latestOffset(start, limit)")
+      "DeltaStream paces via latestOffset(start, limit)")
 
-  override def deserializeOffset(json: String): Offset = {
-    val t = json.trim
-    if (t.startsWith("snap:"))
-      DeltaStreamOffset(t.stripPrefix("snap:").toLong, snapshotPending = true)
-    else DeltaStreamOffset(t.toLong)
-  }
-
-  override def commit(end: Offset): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val so = start.asInstanceOf[DeltaStreamOffset]
-    val s = so.v
-    val e = end.asInstanceOf[DeltaStreamOffset].v
-    // partition readers look fields up by the PHYSICAL name the data
-    // files actually spell — on a column-mapped ('name' mode) table that
-    // differs from the logical name; PARTITION columns are not in the
-    // files at all and take each add's partitionValues entry (keyed by
-    // physical name). Resolution is driver string work.
-    val phys = DeltaLog.latestPhysicalNames(root)
-    val fieldIds = DeltaLog.latestFieldIds(root)
-    val partCols = DeltaLog.latestPartitionColumns(root).toSet
-    // captured DRIVER-side: timestamp partition values are interpreted in
-    // the session timezone (delta-spark's contract), and the batch path
-    // (readAdds) decodes them via lit(str).cast(timestamp) under the same
-    // conf — a hardcoded UTC here would make stream and batch disagree on
-    // the same table whenever spark.sql.session.timeZone is not UTC
-    val sessionTz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
-    // CDF mode synthesizes _change_type/_commit_version — they are never
-    // data-file fields
-    val dataSchema = if (cdf) schema.fields.dropRight(2) else schema.fields
-    def fieldsFor(pv: Map[String, String]) = dataSchema.map { f =>
-      val ph = phys.getOrElse(f.name, f.name)
-      val fid = fieldIds.getOrElse(f.name, -1L)
-      if (partCols(f.name))
-        (ph, f.dataType.typeName, true, pv.get(ph).orNull, fid)
-      else (ph, f.dataType.typeName, false, null: String, fid)
-    }
-    def dvTuple(d: Option[graft.sources.DeletionVectors.Descriptor])
-        : (String, String, Long, Int, Long) =
-      d.map(x => (x.storageType, x.pathOrInlineDv,
-        x.offset.map(_.toLong).getOrElse(-1L), x.sizeInBytes,
-        x.cardinality)).orNull
-    // the pinned-snapshot INITIAL batch: every live file at the pinned
-    // version, DVs as executor-side skip sets — identical rows to the
-    // batch read. In feed mode the snapshot announces as inserts at the
-    // pinned _commit_version (the feed a new consumer bootstraps from).
-    // The pin is the END offset's version, NOT the start's: on a
-    // crash-before-commit restart the engine re-runs batch zero with the
-    // WAL'd end but a RECOMPUTED initialOffset()-derived start — if a
-    // writer committed meanwhile, start.v is newer than the WAL'd pin,
-    // and serving start.v's snapshot would both deliver the new commit's
-    // rows in batch zero AND re-deliver them when the tail reads
-    // (end.v, newV]. The end offset is the replay-stable pin.
-    if (so.snapshotPending)
-      return DeltaLog.snapshotFileEntries(
-        org.apache.spark.sql.SparkSession.active, root, e)
-        .map { case (p, pv, dv) =>
-          DeltaFilePartition(s"$root/$p", fieldsFor(pv), sessionTz,
-            changeType = if (cdf) "insert" else null,
-            commitVersion = if (cdf) java.lang.Long.valueOf(e) else null,
-            tableRoot = root,
-            dv = dvTuple(dv)): InputPartition
-        }
-        .toArray
-    if (cdf)
-      DeltaLog.changeFeedFileEntries(
-        org.apache.spark.sql.SparkSession.active, root, s, e)
-        .map { fe =>
-          DeltaFilePartition(s"$root/${fe.path}", fieldsFor(fe.partitionValues),
-            sessionTz,
-            changeType = fe.changeType.orNull,
-            commitVersion = java.lang.Long.valueOf(fe.version),
-            tableRoot = root,
-            dv = dvTuple(fe.dv),
-            dvEmitOnly = dvTuple(fe.dvEmitOnly)): InputPartition
-        }
-        .toArray
-    else DeltaLog.changedFileEntries(root, s, e, skipChangeCommits)
-      .map { case (p, pv) =>
-        DeltaFilePartition(s"$root/$p", fieldsFor(pv), sessionTz): InputPartition
+  /** Reads only: on restart Spark calls this again for the last
+    * committed batch and discards the result. The `latest` first batch
+    * is the snapshot at the END offset: a crash-before-commit restart
+    * re-runs it with the WAL'd end, and a snapshot newer than that pin
+    * would deliver a later commit's rows twice (here and in the tail).
+    */
+  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+    val e = versionOf(end)
+    val frame =
+      if (start.isEmpty && snapshotFirst) {
+        val snap = DeltaLog.read(spark, root, Some(e))
+        if (!cdf) snap
+        else snap.withColumn("_change_type", lit("insert"))
+          .withColumn("_commit_version", lit(e))
+      } else {
+        val s = start.fold(firstStart)(versionOf)
+        if (cdf) DeltaLog.readChangeFeed(spark, root, s, e)
+        else DeltaLog.changesSince(spark, root, s, Some(e), skipChangeCommits)
       }
-      .toArray
+    // by name onto the declared schema; a column the range's metaData
+    // lacks reads as a typed null
+    val have = frame.columns.toSet
+    val projected = frame.select(schema.fields.toIndexedSeq.map { f =>
+      val c = if (have(f.name)) col(s"`${f.name.replace("`", "``")}`") else lit(null)
+      c.cast(f.dataType).as(f.name)
+    }: _*)
+    // flag the finished batch plan as streaming rather than its leaves:
+    // the feed joins relations, and a join of two streaming leaves would
+    // plan as a stateful stream-stream join
+    GraftPlanBridge.internalCreateDataFrame(spark,
+      projected.queryExecution.toRdd, schema, isStreaming = true)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-        val fp = partition.asInstanceOf[DeltaFilePartition]
-        new PartitionReader[InternalRow] {
-          private val reader = org.apache.parquet.hadoop.ParquetReader
-            .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              new org.apache.hadoop.fs.Path(fp.path))
-            .build()
-          private var group: org.apache.parquet.example.data.Group = _
-          private def dvSet(t: (String, String, Long, Int, Long))
-              : java.util.HashSet[java.lang.Long] = {
-            val (st, p, off, sz, card) = t
-            val d = graft.sources.DeletionVectors.Descriptor(st, p,
-              if (off < 0L) None else Some(off.toInt), sz, card)
-            val set = new java.util.HashSet[java.lang.Long]()
-            graft.sources.DeletionVectors.readPositions(fp.tableRoot, d)
-              .foreach(pos => set.add(pos))
-            set
-          }
-          // DV semantics, decoded HERE on the executor: with keepOnly
-          // set (a DV-rewrite delete) ONLY the rows at positions
-          // newDv \ oldDv emit — the commit's true retraction; otherwise
-          // `deleted` is a skip set and already-deleted row indexes
-          // never (re-)announce
-          private val keepOnly: java.util.HashSet[java.lang.Long] =
-            if (fp.dvEmitOnly == null) null
-            else {
-              val s = dvSet(fp.dvEmitOnly)
-              if (fp.dv != null) s.removeAll(dvSet(fp.dv))
-              s
-            }
-          private val deleted: java.util.HashSet[java.lang.Long] =
-            if (fp.dv == null || keepOnly != null) null else dvSet(fp.dv)
-          private var rowIdx = -1L
-          override def next(): Boolean = {
-            group = reader.read()
-            rowIdx += 1
-            if (keepOnly != null)
-              while (group != null && !keepOnly.contains(rowIdx)) {
-                group = reader.read()
-                rowIdx += 1
-              }
-            else
-              while (group != null && deleted != null &&
-                  deleted.contains(rowIdx)) {
-                group = reader.read()
-                rowIdx += 1
-              }
-            group != null
-          }
-          override def get(): InternalRow = {
-            val extra = if (fp.commitVersion == null) 0 else 2
-            val vals = new Array[Any](fp.fields.length + extra)
-            var i = 0
-            while (i < fp.fields.length) {
-              val (name, tpe, isPart, partValue, fieldId) = fp.fields(i)
-              if (isPart) {
-                // partition columns never live in the data file — decode
-                // the add action's string value under the declared type
-                // (PROTOCOL.md partition-value serialization: ISO date,
-                // "yyyy-MM-dd HH:mm:ss[.S...]" timestamp). TimestampType
-                // values are wall times in the SESSION timezone (matching
-                // the batch path's lit(str).cast(timestamp)); NTZ is
-                // zoneless — its micros encode the wall time itself
-                vals(i) =
-                  if (partValue == null) null
-                  else tpe match {
-                    case "long" => partValue.toLong
-                    case "integer" => partValue.toInt
-                    case "double" => partValue.toDouble
-                    case "float" => partValue.toFloat
-                    case "boolean" => partValue.toBoolean
-                    case "string" => UTF8String.fromString(partValue)
-                    case "date" =>
-                      java.time.LocalDate.parse(partValue).toEpochDay.toInt
-                    case "timestamp" | "timestamp_ntz" =>
-                      val ldt = java.time.LocalDateTime.parse(partValue.replace(' ', 'T'))
-                      val inst =
-                        if (tpe == "timestamp_ntz") ldt.toInstant(java.time.ZoneOffset.UTC)
-                        else ldt.atZone(java.time.ZoneId.of(fp.sessionTz)).toInstant
-                      inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                    case other => throw new UnsupportedOperationException(
-                      s"DeltaStream reader: unsupported partition type $other for $name")
-                  }
-              } else {
-                // a column added by schema evolution is ABSENT from
-                // pre-evolution files entirely (not just null-valued) —
-                // null-fill it, the same contract the batch read's
-                // schema-first parquet scan applies. On 'id'-mode tables
-                // the bind is by the file footer's parquet FIELD ID (the
-                // file's names can be anything); an id-less file falls
-                // back to physical-name matching — the same ignoreMissing
-                // contract the batch reader's flag pair applies
-                val t = group.getType
-                val idx =
-                  if (fieldId >= 0L) {
-                    var j = 0; var found = -1
-                    while (found < 0 && j < t.getFieldCount) {
-                      val id = t.getType(j).getId
-                      if (id != null && id.intValue().toLong == fieldId)
-                        found = j
-                      j += 1
-                    }
-                    if (found >= 0) found
-                    else if (t.containsField(name)) t.getFieldIndex(name)
-                    else -1
-                  } else if (t.containsField(name)) t.getFieldIndex(name)
-                  else -1
-                // typeWidening: a file written BEFORE a widen carries the
-                // NARROWER physical type; the read schema's wide leaf must
-                // accept it (byte/short/int→long, int/float→double,
-                // date→timestampNTZ — the protocol's lossless promotions)
-                def prim = group.getType.getType(idx).asPrimitiveType()
-                  .getPrimitiveTypeName
-                vals(i) =
-                  if (idx < 0 || group.getFieldRepetitionCount(idx) == 0) null
-                  else tpe match {
-                    case "long" =>
-                      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-                      if (prim == PrimitiveTypeName.INT32)
-                        group.getInteger(idx, 0).toLong
-                      else group.getLong(idx, 0)
-                    case "integer" => group.getInteger(idx, 0)
-                    case "double" =>
-                      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-                      prim match {
-                        case PrimitiveTypeName.INT32 =>
-                          group.getInteger(idx, 0).toDouble
-                        case PrimitiveTypeName.FLOAT =>
-                          group.getFloat(idx, 0).toDouble
-                        case _ => group.getDouble(idx, 0)
-                      }
-                    case "float" => group.getFloat(idx, 0)
-                    case "boolean" => group.getBoolean(idx, 0)
-                    case "string" =>
-                      UTF8String.fromBytes(group.getBinary(idx, 0).getBytes)
-                    case "binary" => group.getBinary(idx, 0).getBytes
-                    // Spark DateType is days-since-epoch int = parquet's
-                    // DATE-annotated INT32, no conversion
-                    case "date" => group.getInteger(idx, 0)
-                    // Spark TimestampType is epoch MICROS long; honor the
-                    // file's declared unit (a foreign writer may emit
-                    // millis); INT96 (legacy julian) refuses loudly
-                    case "timestamp" | "timestamp_ntz" =>
-                      import org.apache.parquet.schema.LogicalTypeAnnotation
-                      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-                      val pt = group.getType.getType(idx).asPrimitiveType()
-                      if (tpe == "timestamp_ntz" &&
-                          pt.getPrimitiveTypeName == PrimitiveTypeName.INT32 &&
-                          pt.getLogicalTypeAnnotation.isInstanceOf[
-                            LogicalTypeAnnotation.DateLogicalTypeAnnotation]) {
-                        // date→timestampNTZ widen: days at midnight
-                        group.getInteger(idx, 0).toLong * 86400000000L
-                      } else {
-                        if (pt.getPrimitiveTypeName != PrimitiveTypeName.INT64)
-                          throw new UnsupportedOperationException(
-                            s"DeltaStream reader: unsupported timestamp encoding " +
-                              s"${pt.getPrimitiveTypeName} for $name (INT64 only; " +
-                              "legacy INT96 files are not supported)")
-                        val raw = group.getLong(idx, 0)
-                        pt.getLogicalTypeAnnotation match {
-                          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                            t.getUnit match {
-                              case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-                              case LogicalTypeAnnotation.TimeUnit.MICROS => raw
-                              case LogicalTypeAnnotation.TimeUnit.NANOS => raw / 1000L
-                            }
-                          case _ => raw // unannotated INT64: micros by convention
-                        }
-                      }
-                    case other => throw new UnsupportedOperationException(
-                      s"DeltaStream reader: unsupported leaf type $other for $name")
-                  }
-              }
-              i += 1
-            }
-            if (fp.commitVersion != null) {
-              // _change_type: the derived constant, or the cdc change
-              // file's own column; _commit_version: the partition's
-              vals(fp.fields.length) =
-                if (fp.changeType != null) UTF8String.fromString(fp.changeType)
-                else {
-                  val t = group.getType
-                  if (t.containsField("_change_type") &&
-                      group.getFieldRepetitionCount(
-                        t.getFieldIndex("_change_type")) > 0)
-                    UTF8String.fromBytes(group.getBinary(
-                      t.getFieldIndex("_change_type"), 0).getBytes)
-                  else null
-                }
-              vals(fp.fields.length + 1) = fp.commitVersion.longValue()
-            }
-            new GenericInternalRow(vals)
-          }
-          override def close(): Unit = reader.close()
-        }
-      }
-    }
 
   override def stop(): Unit = ()
 }

@@ -15,11 +15,13 @@ object GraftPlanBridge {
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
   /** A DataFrame over an RDD of rows already in Catalyst's internal form
-    * (the `private[sql]` `internalCreateDataFrame`). No logic.
+    * (the `private[sql]` `internalCreateDataFrame`), flagged as streaming
+    * when a stream source hands it out as a micro-batch. No logic.
     */
   def internalCreateDataFrame(
       spark: org.apache.spark.sql.SparkSession,
       rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[SparkSession].internalCreateDataFrame(rows, schema)
+      schema: org.apache.spark.sql.types.StructType,
+      isStreaming: Boolean = false): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[SparkSession].internalCreateDataFrame(rows, schema, isStreaming)
 }

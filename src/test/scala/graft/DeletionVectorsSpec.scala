@@ -238,8 +238,8 @@ class DeletionVectorsSpec extends SparkTestBase {
     assert((after -- before).nonEmpty, "the DV'd file was rewritten")
     // purge is dataChange=false end-to-end: an incremental consumer
     // skips it (and no longer trips over the DV gate afterwards)
-    val changed = DeltaLog.changedFilePaths(root, cv, pv)
-    assert(changed.isEmpty, s"purge must be invisible to CDC: $changed")
+    val changed = DeltaLog.changesSince(spark, root, cv, Some(pv))
+    assert(changed.isEmpty, s"purge must be invisible to CDC: ${changed.count()} rows")
     // idempotent: nothing left to purge
     assert(DeltaLog.purgeDeletionVectors(spark, root) == pv)
     // vacuum beyond the DV'd history reclaims the orphaned sidecar
@@ -301,7 +301,7 @@ class DeletionVectorsSpec extends SparkTestBase {
     // an incremental consumer would resurrect deleted rows — refuse and
     // point at the consumers that CAN serve it
     val e = intercept[UnsupportedOperationException] {
-      DeltaLog.changedFilePaths(root, 0L, dv)
+      DeltaLog.changesSince(spark, root, 0L, Some(dv))
     }
     assert(e.getMessage.contains("removes data") &&
       e.getMessage.contains("readChangeFeed") &&
@@ -311,7 +311,7 @@ class DeletionVectorsSpec extends SparkTestBase {
     assert(DeltaLog.read(spark, root).filter(col("id") % 2 === 0).count() == 0L)
     // post-optimize snapshot has no DVs → incremental reads work again
     // (from the optimize version on; the optimize itself is dataChange=false)
-    assert(DeltaLog.changedFilePaths(root, dv, ov).isEmpty)
+    assert(DeltaLog.changesSince(spark, root, dv, Some(ov)).isEmpty)
   }
 
   test("DV delete in a table root containing URI-encodable characters " +

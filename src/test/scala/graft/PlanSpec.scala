@@ -508,8 +508,7 @@ class PlanSpec extends SparkTestBase {
     val s = finalPlan(rewritten)
     assert(s.contains("TopKPerKey"), s"the heap prune must be inserted:\n$s")
     assert(s.contains("Window"), s"the window must stay to produce the rank:\n$s")
-    // InferWindowGroupLimit puts a group limit over the heap operator; it
-    // keeps every row, so TopKStrategy plans it as the operator alone
+    // the rewrite leaves no rank filter for InferWindowGroupLimit to bound
     assert(!s.contains("WindowGroupLimit"), s"no group limit over the heap operator:\n$s")
     // prune BEFORE rank: the window (printed above) consumes the heap output
     assert(s.indexOf("Window") < s.indexOf("TopKPerKey"),
@@ -520,6 +519,24 @@ class PlanSpec extends SparkTestBase {
     val actual = rewritten.collect().map(_.toSeq).sortBy(_.toString)
     assert(actual.toSeq == expected.toSeq,
       "pruned-then-ranked rows must equal the plain window idiom's")
+  }
+
+  test("q252 and q257: a Window over TopKPerKey only where the output reads the rank") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import graft.plans.TopKPerKeyNode
+    // q252 joins q247's top-k four times and outputs `rk` from one of
+    // them; q257 reads the rank only through a Sort that EliminateSorts
+    // drops. With no rank filter left, an unread rank's window is pruned.
+    Seq("q252_snippet_spans" -> 1, "q257_fleet_eval" -> 0).foreach { case (name, expected) =>
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
+      assert(plan.exists(_.isInstanceOf[TopKPerKeyNode]),
+        s"$name must prune through the native operator:\n$plan")
+      val over = plan.collect {
+        case w: Window if w.exists(_.isInstanceOf[TopKPerKeyNode]) => w
+      }
+      assert(over.size == expected,
+        s"$name keeps ${over.size} window(s) over TopKPerKey, expected $expected:\n$plan")
+    }
   }
 
   test("session-wide TopK rewrite (Verify/Bench config) fires on >= 3 registered queries") {

@@ -138,62 +138,6 @@ class RestSinkSpec extends SparkTestBase {
     }
   }
 
-  test("auth: env > login > ctx token precedence; login posts creds with tenant header (P19)") {
-    import graft.ingest.RestSink.AuthCtx
-    withServer(_ => false) { (base, state) =>
-      // stub login endpoint lives on the same server; handler already
-      // records method/uri/body. Return {"id": ...} like the reference app.
-      val loginServer = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-      loginServer.createContext("/", (ex: HttpExchange) => {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        state.record(ex, body)
-        val ok = body.contains("\"username\":\"alice\"") && body.contains("\"password\":\"pw\"")
-        val resp = (if (ok) """{"id":"tok-from-login","ttl":1209600}""" else """{"error":{"status":401}}""")
-          .getBytes(StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(if (ok) 200 else 401, resp.length)
-        ex.getResponseBody.write(resp); ex.close()
-      })
-      loginServer.start()
-      val loginBase = s"http://127.0.0.1:${loginServer.getAddress.getPort}"
-      try {
-        // 1. env wins outright, no HTTP call
-        assert(RestSink.resolveAccessToken(AuthCtx(username = Some("alice")), Some(loginBase),
-          env = Map("ACCESS_TOKEN" -> "tok-env")).contains("tok-env"))
-        // 2. username triggers login at the default AppUsers API
-        val before = state.requests.size
-        val tok = RestSink.resolveAccessToken(
-          AuthCtx(username = Some("alice"), password = Some("pw"), tenantId = Some("t1")),
-          Some(loginBase), env = Map.empty)
-        assert(tok.contains("tok-from-login"))
-        val req = state.requests.toArray(Array.empty[(String, String, String, String)]).last
-        assert(state.requests.size == before + 1)
-        assert(req._1 == "POST" && req._2 == "/api/AppUsers/login")
-        assert(req._3 != null, "default Cookie header on the login request too")
-        // 3. BATCH_PROCESSING_LOGIN_URL overrides the login API path
-        RestSink.resolveAccessToken(AuthCtx(username = Some("alice"), password = Some("pw")),
-          Some(loginBase), env = Map("BATCH_PROCESSING_LOGIN_URL" -> "/custom/login"))
-        val req2 = state.requests.toArray(Array.empty[(String, String, String, String)]).last
-        assert(req2._2 == "/custom/login")
-        // 4. bad credentials are job-fatal with the reference's NET-observable
-        // message: a 401 login rejection aborts with the credentials text
-        // (test/test.js:212-225 asserts exactly this substring)
-        val e = intercept[RuntimeException] {
-          RestSink.resolveAccessToken(
-            AuthCtx(username = Some("alice"), password = Some("wrong")), Some(loginBase), env = Map.empty)
-        }
-        assert(e.getMessage.contains("Check access_token/credentials. Expired/Wrong/Missing?."))
-        // 5. no username: plain ctx token pass-through
-        assert(RestSink.resolveAccessToken(AuthCtx(accessToken = Some("tok-ctx")), None, env = Map.empty)
-          .contains("tok-ctx"))
-        // 6. username but no appBaseURL anywhere: the :456 fatal
-        val e2 = intercept[IllegalArgumentException] {
-          RestSink.resolveAccessToken(AuthCtx(username = Some("alice")), None, env = Map.empty)
-        }
-        assert(e2.getMessage.contains("Can't defer this to payload when username is specified"))
-      } finally loginServer.stop(0)
-    }
-  }
-
   test("processFile E2E: batch-100.csv through the REST channel, mixed 200/500 counts") {
     // fail every record whose numeric suffix is even -> 50/50 mix, the same
     // mixed-outcome shape as the reference's 1000-record run (550/450).

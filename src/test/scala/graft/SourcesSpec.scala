@@ -1549,18 +1549,31 @@ class SourcesSpec extends SparkTestBase {
       ("""{"remove":{"path":"f00007.parquet","dataChange":true}}""" + "\n" +
         """{"remove":{"path":"f09998.parquet","dataChange":true}}""" +
         "\n").getBytes("UTF-8"))
-    val entries = DeltaLog.changeFeedFileEntries(spark, root, 0L, 1L)
-    assert(entries.map(e => (e.version, e.path, e.changeType)).toSet ==
-      Set((1L, "f00007.parquet", Some("delete")),
-        (1L, "f09998.parquet", Some("delete"))))
+    // the feed reads the removed incarnations: give them real files
+    def dataFile(name: String, ks: Seq[Long]): Unit = {
+      graft.queries.ReplayFixtures.moveInParquet(
+        spark.createDataFrame(ks.map(Tuple1(_))).toDF("k"), root, name)
+      ()
+    }
+    dataFile("f00007.parquet", 70L until 80L)
+    dataFile("f09998.parquet", 99980L until 99990L)
+    def feedRows(from: Long, to: Long) = {
+      val feed = DeltaLog.readChangeFeed(spark, root, from, to)
+      val collected = DeltaLog.lastFeedReplayCollectedAdds
+      (feed.collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("_change_type"),
+        r.getAs[Long]("_commit_version"))).sorted.toSeq, collected)
+    }
+    val (v1Rows, v1Collected) = feedRows(0L, 1L)
+    assert(v1Rows == ((70L until 80L) ++ (99980L until 99990L)).map((_, "delete", 1L)))
     // the pruned replay collected exactly the removed paths' add rows —
     // a full replay(v0) here would have materialized all 10⁴
-    assert(DeltaLog.lastFeedReplayCollectedAdds == 2L,
-      s"driver materialized ${DeltaLog.lastFeedReplayCollectedAdds} add " +
-        "rows for a 2-path remove derivation — feed replay must prune")
+    assert(v1Collected == 2L,
+      s"driver materialized $v1Collected add rows for a 2-path remove " +
+        "derivation — feed replay must prune")
     // tail reconciliation: a remove of a path RE-ADDED in the tail (with
     // a replacement DV-less add) derives the re-added incarnation, and a
     // remove of a never-lived path derives nothing
+    dataFile("g0.parquet", Seq(5L, 6L))
     java.nio.file.Files.write(logDir.resolve(f"${2L}%020d.json"),
       ("""{"add":{"path":"g0.parquet","partitionValues":{},"size":64,"dataChange":true}}""" +
         "\n").getBytes("UTF-8"))
@@ -1568,10 +1581,9 @@ class SourcesSpec extends SparkTestBase {
       ("""{"remove":{"path":"g0.parquet","dataChange":true}}""" + "\n" +
         """{"remove":{"path":"never-lived.parquet","dataChange":true}}""" +
         "\n").getBytes("UTF-8"))
-    val e3 = DeltaLog.changeFeedFileEntries(spark, root, 2L, 3L)
-    assert(e3.map(e => (e.version, e.path, e.changeType)) ==
-      Seq((3L, "g0.parquet", Some("delete"))))
-    assert(DeltaLog.lastFeedReplayCollectedAdds == 1L)
+    val (v3Rows, v3Collected) = feedRows(2L, 3L)
+    assert(v3Rows == Seq((5L, "delete", 3L), (6L, "delete", 3L)))
+    assert(v3Collected == 1L)
   }
 
   test("snapshot cache: a table DELETED and REBUILT at the same path and " +
@@ -1925,23 +1937,28 @@ class SourcesSpec extends SparkTestBase {
       .select(col("k")).collect().map(_.getLong(0)).sorted.toSeq ==
       (1000L until 1010L),
       "startingVersion=21 must deliver exactly commit 21")
-    // the snapshot-pending offset round-trips its wire form
-    val ss = new graft.streaming.DeltaStreamStream(root,
-      new org.apache.spark.sql.types.StructType(), 1L)
-    assert(ss.deserializeOffset("snap:7").json() == "snap:7")
-    assert(ss.deserializeOffset("7").json() == "7")
-    // CRASH-BEFORE-COMMIT restart: the engine re-runs batch zero with
-    // the WAL'd END offset but a start derived from a RECOMPUTED
-    // initialOffset() — if a writer committed meanwhile, start.v is
-    // NEWER than the WAL'd pin. The snapshot must serve at the END pin:
-    // at start.v it would deliver the new commit's rows in batch zero
-    // AND again when the tail reads past the pin. v20 has 20 live files
-    // (the DV delete rewrites no paths); v21 would have 21.
-    val parts = ss.planInputPartitions(
-      ss.deserializeOffset("snap:21"), ss.deserializeOffset("20"))
-    assert(parts.length == 20,
-      s"batch zero must pin to the WAL'd end version (20 files at v20), " +
-        s"got ${parts.length} partitions")
+    // CRASH-BEFORE-COMMIT restart: the engine re-runs the first batch
+    // with the WAL'd END offset after a writer committed meanwhile. The
+    // snapshot must serve at the END pin: at the newer version it would
+    // deliver the new commit's rows in the first batch AND again when the
+    // tail reads past the pin.
+    import org.apache.spark.sql.execution.streaming.SerializedOffset
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val src = new graft.streaming.DeltaStream().createSource(spark.sqlContext,
+      s"$run/meta", None, "deltastream",
+      Map("path" -> root, "startingVersion" -> "latest"))
+    val first = src.getBatch(None, SerializedOffset("20"))
+    assert(first.isStreaming)
+    val pinned = first.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.map(_.getLong(0)).collect().sorted.toSeq
+    }
+    assert(pinned == expectSnap,
+      "the first batch must be exactly v20's rows, pinned by its end offset")
+    // offsets read back from the offset log parse from their JSON and
+    // pace the tail one version per trigger
+    assert(src.asInstanceOf[org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl]
+      .latestOffset(SerializedOffset("20"), ReadLimit.allAvailable()).json() == "21")
   }
 
   test("DeltaStream startingTimestamp: commits at or after the timestamp " +
@@ -2052,7 +2069,7 @@ class SourcesSpec extends SparkTestBase {
     assert(out.select(col("day")).distinct().collect()
       .map(_.getAs[java.time.LocalDateTime](0)).toSeq ==
       Seq(java.time.LocalDateTime.parse("2024-03-01T00:00")))
-    // stream equals batch (the partition reader's INT64 NTZ lattice)
+    // stream equals batch
     val run = Files.createTempDirectory("graft-ntz-run").toString
     val q = spark.readStream
       .format(classOf[graft.streaming.DeltaStream].getName)
@@ -2150,7 +2167,7 @@ class SourcesSpec extends SparkTestBase {
     // pre-widen DATEs surface as their midnight naive timestamp
     assert(rows(2)._3 == java.time.LocalDateTime.parse("2024-01-03T00:00"))
     assert(rows(6)._3 == java.time.LocalDateTime.parse("2024-02-01T06:00"))
-    // the stream partition reader promotes the same lattice
+    // the stream serves the same promoted frame
     val run = Files.createTempDirectory("graft-widen-run").toString
     val q = spark.readStream
       .format(classOf[graft.streaming.DeltaStream].getName)
@@ -2170,8 +2187,8 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("variantType reader feature: a foreign table's VARIANT column " +
-      "batch-reads with typed extraction; the custom stream reader refuses " +
-      "the leaf loudly instead of passing opaque bytes") {
+      "batch-reads with typed extraction and streams exactly like the " +
+      "batch read") {
     import graft.sources.DeltaLog
     import org.apache.spark.sql.types._
     val jm = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -2203,8 +2220,7 @@ class SourcesSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     assert(got.toSeq == (0L until 6L).map(i => (i, i * 2, s"x$i")),
       got.mkString(","))
-    // the stream's parquet-mr reader cannot decode the leaf — loud
-    // refusal, never silent bytes
+    // the stream serves the batch read's frame: the VARIANT leaf streams
     val run = Files.createTempDirectory("graft-variant-run").toString
     val q = spark.readStream
       .format(classOf[graft.streaming.DeltaStream].getName)
@@ -2212,11 +2228,55 @@ class SourcesSpec extends SparkTestBase {
       .writeStream.format("parquet")
       .option("path", s"$run/sink").option("checkpointLocation", s"$run/ckpt")
       .start()
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try q.processAllAvailable() finally q.stop()
-    }
-    assert(chain(e).exists(_.contains("unsupported leaf type")),
-      chain(e).mkString(" | "))
+    try q.processAllAvailable() finally q.stop()
+    def rendered(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("k"), expr("to_json(v)")).orderBy(col("k")).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+    val streamed = spark.read.parquet(s"$run/sink")
+    assert(streamed.schema("v").dataType == VariantType)
+    assert(rendered(streamed) == rendered(out), "stream must equal batch")
+  }
+
+  test("DeltaStream: a foreign table's INT96 timestamp column streams " +
+      "exactly like the batch read") {
+    import graft.sources.DeltaLog
+    import org.apache.spark.sql.types._
+    val jm = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = Files.createTempDirectory("graft-int96").toString + "/tbl"
+    val logDir = java.nio.file.Paths.get(root, "_delta_log")
+    java.nio.file.Files.createDirectories(logDir)
+    val saved = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+    val sz = try {
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+      graft.queries.ReplayFixtures.moveInParquet(
+        spark.range(0, 5).select(col("id").as("k"),
+          expr("timestamp_micros(1700000000123456 + id * 3600000000)").as("ts")),
+        root, "f1.parquet")
+    } finally saved.fold(spark.conf.unset("spark.sql.parquet.outputTimestampType"))(
+      spark.conf.set("spark.sql.parquet.outputTimestampType", _))
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("ts", TimestampType)))
+    java.nio.file.Files.write(logDir.resolve(f"${0L}%020d.json"), (
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""" + "\n" +
+      """{"metaData":{"id":"int96","format":{"provider":"parquet","options":{}},""" +
+        s""""schemaString":${jm.writeValueAsString(schema.json)},""" +
+        """"partitionColumns":[],"configuration":{}}}""" + "\n" +
+      s"""{"add":{"path":"f1.parquet","partitionValues":{},"size":$sz,""" +
+        """"modificationTime":0,"dataChange":true}}""" + "\n").getBytes("UTF-8"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("k")).collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1).toString)).toSeq
+    val batch = rows(DeltaLog.read(spark, root))
+    assert(batch.size == 5 && batch.head._2.endsWith(".123456"), batch.mkString(","))
+    val run = Files.createTempDirectory("graft-int96-run").toString
+    val q = spark.readStream
+      .format(classOf[graft.streaming.DeltaStream].getName)
+      .option("path", root).load()
+      .writeStream.format("parquet")
+      .option("path", s"$run/sink").option("checkpointLocation", s"$run/ckpt")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(rows(spark.read.parquet(s"$run/sink")) == batch, "stream must equal batch")
   }
 
   /** Author a v2-spec checkpoint — delegates to the shared
